@@ -754,8 +754,33 @@ object RemoverCli {
     * reference's exact rewrite contract, binary in → binary out), or
     * — with `--merge lww` — collapse every generation through the LWW
     * merge and write ONE compacted generation: a major compaction.
-    * Returns rows written (the sink's own per-file manifest). */
+    * Returns rows written (the sink's own per-file manifest).
+    *
+    * A run decodes its input ONCE: the sink gets its source set from
+    * the driver ([[sstableSinkInput]]) instead of a distinct pass over
+    * the data, which would repeat the scan (and, merged, the whole
+    * merge and exchange). Two input shapes still take the distinct
+    * pass, because a superset list is only output-identical when every
+    * name claims its own generation
+    * ([[graft.sources.SSTableBinaryV2.sourceSetViolations]]): a lake
+    * whose basenames share a generation across subdirectories (the
+    * collision resolution depends on which sources carry rows), and
+    * the unmerged `--out-generations N` split, whose `<src>#sK` names
+    * share their source's generation by design. Dump-JSON input
+    * (`--format sstabledump`) has no binary listing and also keeps
+    * the pass. */
   private def runSstableSink(spark: SparkSession, args: CliArgs): Long = {
+    val (frame, sources) = sstableSinkInput(spark, args)
+    graft.sources.SSTableBinaryV2
+      .writeSSTables(frame, args.out, args.keyspace, args.table,
+        args.cqlSchema, args.compress.map(Compressors), sources = sources)
+      .map(_._2).sum
+  }
+
+  /** The frame [[runSstableSink]] writes and the source set it hands
+    * the sink (None = the sink's own distinct pass). */
+  private[graft] def sstableSinkInput(spark: SparkSession, args: CliArgs)
+      : (org.apache.spark.sql.DataFrame, Option[Seq[String]]) = {
     import org.apache.spark.sql.functions._
     val reader: (SparkSession, String) => org.apache.spark.sql.DataFrame =
       if (args.format == "sstable")
@@ -768,27 +793,7 @@ object RemoverCli {
       val merged = graft.sources.SSTableDumpBridge
         .mergeTree(spark, args.in, reader)
       val live = col("row_kind").isin("ROW", "PK_LIVENESS")
-      // `--out-generations N`: a major compaction must not funnel
-      // 100 TB through ONE encoder task. The merged cells partition
-      // into N token-CONTIGUOUS output generations by fixed ring
-      // division (deterministic, zero extra passes; Murmur3 uniformity
-      // balances sizes at scale), so each generation is itself a valid
-      // token-ordered SSTable whose Summary first/last keys support
-      // file-level range elision on the OUTPUT lake — the same
-      // size-bounded multi-file shape a real compaction strategy
-      // produces. N=1 keeps the reference's single-file contract.
-      // The bucket token is the REAL ring position: on a typed table
-      // the key encodes through the declared key type before hashing
-      // (the token the sink itself sorts by) — bucketing by the
-      // rendered-string token would make generations overlap on the
-      // real ring, defeating Summary-range file elision downstream.
-      val genName =
-        if (args.outGenerations <= 1)
-          lit(s"${args.table}/nb-1-big-Data.db")
-        else
-          concat(lit(s"${args.table}/nb-"),
-            (ringBucket(args) + lit(1)).cast("string"),
-            lit("-big-Data.db"))
+      val (genName, names) = mergedGenerations(args)
       val reshaped = merged.select(
         col("partition_key"), col("clustering"), col("row_kind"),
         col("name"),
@@ -797,10 +802,9 @@ object RemoverCli {
           lit(null).cast("long").as("expire_us"))).as("cell"),
         col("deletion_us"),
         genName.as("sstable"))
-      graft.sources.SSTableBinaryV2
-        .writeSSTables(reshaped, args.out, args.keyspace, args.table,
-          args.cqlSchema, args.compress.map(Compressors))
-        .map(_._2).sum
+      // the names are fixed by the arguments: each claims its own
+      // generation, and a bucket no cell lands in writes nothing
+      (reshaped, Some(names))
     } else {
       val stripped = reader(spark, args.in).withColumn("cell",
         graft.model.CellModel.stripCellKeepDeletion(col("cell")))
@@ -814,16 +818,48 @@ object RemoverCli {
       // number and the rest take the next free integers in sorted
       // source order — collision-free and deterministic, interleaved
       // with (not renumbered from) the input numbering.
-      val reshaped =
-        if (args.outGenerations <= 1) stripped
-        else stripped.withColumn("sstable",
+      if (args.outGenerations > 1)
+        (stripped.withColumn("sstable",
           concat(col("sstable"), lit("#s"),
-            ringBucket(args).cast("string")))
-      graft.sources.SSTableBinaryV2
-        .writeSSTables(reshaped, args.out, args.keyspace, args.table,
-          args.cqlSchema, args.compress.map(Compressors))
-        .map(_._2).sum
+            ringBucket(args).cast("string"))), None)
+      else if (args.format != "sstable") (stripped, None)
+      else {
+        // the driver-side listing covers every identity the scan can
+        // emit (one listing function serves both); it stands in for
+        // the distinct pass whenever each name claims its own
+        // generation. A generation scrub skipped entirely is listed
+        // but carries no rows, so it writes nothing either way.
+        val listed = graft.sources.SSTableBinaryV2
+          .dataSourceIdentities(spark, args.in)
+        (stripped, Some(listed).filter(graft.sources.SSTableBinaryV2
+          .sourceSetViolations(_).isEmpty))
+      }
     }
+  }
+
+  /** The merged paths' output identities — the column that assigns
+    * one to each merged cell, and the full list of names it can
+    * produce (the sink's source set): `nb-1` for one generation, the
+    * reference's single-file contract; with `--out-generations N`,
+    * `nb-<b+1>` for ring bucket b. A major compaction must not funnel
+    * 100 TB through ONE encoder task, so the merged cells partition
+    * into N token-CONTIGUOUS output generations by fixed ring division
+    * (deterministic, zero extra passes; Murmur3 uniformity balances
+    * sizes at scale): each generation is itself a valid token-ordered
+    * SSTable whose Summary first/last keys support file-level range
+    * elision on the OUTPUT lake — the same size-bounded multi-file
+    * shape a real compaction strategy produces. */
+  private def mergedGenerations(args: CliArgs)
+      : (org.apache.spark.sql.Column, Seq[String]) = {
+    import org.apache.spark.sql.functions._
+    val prefix = s"${args.table}/nb-"
+    val suffix = "-big-Data.db"
+    val n = math.max(1, args.outGenerations)
+    val column =
+      if (n == 1) lit(s"${prefix}1$suffix")
+      else concat(lit(prefix), (ringBucket(args) + lit(1)).cast("string"),
+        lit(suffix))
+    (column, (1 to n).map(g => s"$prefix$g$suffix"))
   }
 
   /** Ring-division bucket in [0, N) of the REAL partitioner token —

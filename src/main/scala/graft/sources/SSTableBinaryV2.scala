@@ -265,41 +265,8 @@ object SSTableBinaryV2 {
         new ThrottledBytesMetric, new ThrottleWaitNanosMetric,
         new ActivityMarksMetric, new FilesSkippedClusteringMetric)
 
-    /** One recursive listing yields the data files AND their sibling
-      * component sets WITH lengths (no per-file exists()/status RPCs
-      * at plan time — and, because the result ships inside each
-      * [[BinFilePartition]], none in the TASKS either: at a 100k-file
-      * lake, per-reader exists() probes are pure namenode chatter the
-      * planner's listing already answered). */
-    private def listWithMeta(): Seq[(String, SiblingInfo)] = {
-      val fs = FileSystem.get(java.net.URI.create(path), hconf.value)
-      val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      val seen = scala.collection.mutable.Map.empty[String, Long]
-      val it = fs.listFiles(new HPath(path), true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile) {
-          seen(f.getPath.toString) = f.getLen
-          if (f.getPath.getName.endsWith("-Data.db"))
-            files += ((f.getPath.toString, f.getLen))
-        }
-      }
-      files.sortBy(f => generationSortKey(f._1)).toSeq.map {
-        case (p, len) =>
-          val base = p.stripSuffix("-Data.db")
-          (p, SiblingInfo(len,
-            hasIndex = seen.contains(base + "-Index.db"),
-            hasFilter = seen.contains(base + "-Filter.db"),
-            hasSummary = seen.contains(base + "-Summary.db"),
-            hasCompression = seen.contains(base + "-CompressionInfo.db"),
-            indexLen = seen.getOrElse(base + "-Index.db", -1L),
-            hasDigest = seen.contains(base + "-Digest.crc32"),
-            hasStats = seen.contains(base + "-Statistics.db")))
-      }
-    }
-
     private[sources] def listDataFiles(): Seq[(String, SiblingInfo)] =
-      listWithMeta()
+      listLake(path, hconf.value)
 
     /** Parallelism units. Default: one InputPartition per `*-Data.db`
       * (sorted for deterministic partition ids; sibling components are
@@ -319,7 +286,7 @@ object SSTableBinaryV2 {
       * framing parses in [[SSTableComponents.indexEntries2x]]); an
       * index-less file stays one task. */
     override def planInputPartitions(): Array[InputPartition] =
-      listWithMeta().flatMap { case (f, info) =>
+      listDataFiles().flatMap { case (f, info) =>
         val splittable = splitBytes > 0 && info.hasIndex &&
           info.dataLen > splitBytes
         if (!splittable)
@@ -424,6 +391,49 @@ object SSTableBinaryV2 {
     (dir, gen, name)
   }
 
+  /** One recursive listing yields the data files AND their sibling
+    * component sets WITH lengths (no per-file exists()/status RPCs
+    * at plan time — and, because the result ships inside each
+    * [[BinFilePartition]], none in the TASKS either: at a 100k-file
+    * lake, per-reader exists() probes are pure namenode chatter the
+    * planner's listing already answered). The scan plans its
+    * partitions from this listing and [[dataSourceIdentities]]
+    * renders the sink's source set from it, so the two cannot drift
+    * apart. */
+  private[sources] def listLake(root: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : Seq[(String, SiblingInfo)] = {
+    val fs = FileSystem.get(java.net.URI.create(root), conf)
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val seen = scala.collection.mutable.Map.empty[String, Long]
+    val it = fs.listFiles(new HPath(root), true)
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.isFile) {
+        seen(f.getPath.toString) = f.getLen
+        if (f.getPath.getName.endsWith("-Data.db"))
+          files += ((f.getPath.toString, f.getLen))
+      }
+    }
+    files.sortBy(f => generationSortKey(f._1)).toSeq.map {
+      case (p, len) =>
+        val base = p.stripSuffix("-Data.db")
+        (p, SiblingInfo(len,
+          hasIndex = seen.contains(base + "-Index.db"),
+          hasFilter = seen.contains(base + "-Filter.db"),
+          hasSummary = seen.contains(base + "-Summary.db"),
+          hasCompression = seen.contains(base + "-CompressionInfo.db"),
+          indexLen = seen.getOrElse(base + "-Index.db", -1L),
+          hasDigest = seen.contains(base + "-Digest.crc32"),
+          hasStats = seen.contains(base + "-Statistics.db")))
+    }
+  }
+
+  /** The `sstable` column's rendering of a Data.db path: its last two
+    * components, `<table dir>/<basename>`. */
+  private[graft] def sstableIdentity(path: String): String =
+    path.split('/').takeRight(2).mkString("/")
+
   /** The planner-listed sibling component set of one Data.db, shipped
     * inside its [[BinFilePartition]] so tasks never re-probe the
     * filesystem for components the driver's single recursive listing
@@ -487,7 +497,7 @@ object SSTableBinaryV2 {
       * the file disjointly, so every partition has exactly one owner
       * regardless of alignment. */
     private val ranged = rangeStart != 0L || rangeEnd != Long.MaxValue
-    private val sstable = file.split('/').takeRight(2).mkString("/")
+    private val sstable = sstableIdentity(file)
     private val fs = FileSystem.get(java.net.URI.create(file), conf)
     /** S11 literal — the scanner's RateLimiter
       * (`NoTTLReader.getScanner(RateLimiter)` /
@@ -3057,27 +3067,37 @@ object SSTableBinaryV2 {
         .collect { case (n, t) if isStaticDecl(t) => n }.toSet)
   }
 
-  /** The sstable identities (the reader's rendering: the last two
-    * path components) of every `*-Data.db` under `root` — a
-    * DRIVER-side listing, no Spark job. For a [[writeSSTables]] call
-    * whose input frame is an unfiltered [[readBinary]] of `root`,
-    * this equals the frame's distinct `sstable` set (every fixture
-    * file carries rows), so passing it as `sources` spares the sink
-    * its generation-assignment pass over the data (guide §1.2:
-    * don't recompute what the caller already knows — that pass was a
-    * SECOND full decode of the input per sink call). */
+  /** The sstable identities ([[sstableIdentity]]) of every
+    * `*-Data.db` under `root`: a DRIVER-side listing, no Spark job,
+    * taken by the same [[listLake]] the scan plans its partitions
+    * from. For a [[writeSSTables]] call whose input frame is a
+    * [[readBinary]] of `root` (filtered or not, scrubbed or not) this
+    * is a superset of the frame's distinct `sstable` set, so passing
+    * it as `sources` spares the sink its generation-assignment pass
+    * over the data, a SECOND full decode of the input per sink call,
+    * whenever [[sourceSetViolations]] finds nothing in it. */
   private[graft] def dataSourceIdentities(spark: SparkSession,
-      root: String): Seq[String] = {
-    val fs = FileSystem.get(java.net.URI.create(root),
-      spark.sessionState.newHadoopConf())
-    val out = Seq.newBuilder[String]
-    val it = fs.listFiles(new HPath(root), true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith("-Data.db"))
-        out += f.getPath.toString.split('/').takeRight(2).mkString("/")
-    }
-    out.result()
+      root: String): Seq[String] =
+    listLake(root, spark.sessionState.newHadoopConf())
+      .map { case (p, _) => sstableIdentity(p) }
+
+  /** The output generation a source identity claims: the first integer
+    * of its basename (`nb-3-big-Data.db` → 3,
+    * `ks-t-ka-7-Data.db` → 7), None when the basename has none. */
+  private[graft] def claimedGeneration(src: String): Option[Int] =
+    "\\d+".r.findFirstIn(src.split('/').last).map(_.toInt)
+
+  /** The entries of a source set that break the premise under which a
+    * SUPERSET of a frame's distinct sstables assigns the same output
+    * generations as the exact set: every entry claims a generation and
+    * no two claim the same one. Empty when the premise holds; else the
+    * offending entries, sorted. */
+  private[graft] def sourceSetViolations(sources: Seq[String]): Seq[String] = {
+    val claims = sources.distinct.map(s => s -> claimedGeneration(s))
+    val unclaimed = claims.collect { case (s, None) => s }
+    val shared = claims.collect { case (s, Some(g)) => g -> s }
+      .groupBy(_._1).values.filter(_.size > 1).flatMap(_.map(_._2))
+    (unclaimed ++ shared).sorted
   }
 
   def writeSSTables(cells: DataFrame, outDir: String, keyspace: String,
@@ -3113,22 +3133,29 @@ object SSTableBinaryV2 {
     // generation = input generation, `Cassandra3TTLRemover.java:57-61`);
     // a collision — or a nameless source — deterministically takes the
     // smallest unused generation above the maximum parsed one.
-    // `sources`, when given, replaces the distinct job: callers whose
-    // frame is an unfiltered connector read (or built with a known
-    // identity set) already hold the distinct set, and the job was a
-    // full second decode of the input. The contract is exact equality
-    // with the frame's distinct set: a source present in the data but
-    // missing from the list fails loudly below (generation lookup),
-    // and duplicates are collapsed here so a careless caller cannot
-    // double-assign.
+    // `sources`, when given, replaces the distinct job (a full second
+    // decode of the input). It may be a SUPERSET of the frame's
+    // distinct set (a driver-side listing of a filtered or scrubbed
+    // read, or every name a bucketing scheme can produce), because
+    // the premise below is required: each entry claims its own
+    // generation, so every source keeps its claim and the entries the
+    // data never mentions change nothing; they write no file. A
+    // source in the data but missing from the list fails loudly at
+    // its generation lookup, and duplicates collapse here.
+    sources.foreach { s =>
+      val bad = sourceSetViolations(s)
+      require(bad.isEmpty,
+        "writeSSTables: every entry of `sources` must claim a distinct " +
+          "generation (the first integer of its basename); offending: " +
+          bad.mkString(", "))
+    }
     val genOf: Map[String, Int] = {
       val srcs = sources match {
         case Some(s) => s.distinct.sorted.toArray
         case None => selected.select(col("sstable")).distinct()
           .as[String].collect().sorted
       }
-      val parsed = srcs.map(s =>
-        s -> "\\d+".r.findFirstIn(s.split('/').last).map(_.toInt))
+      val parsed = srcs.map(s => s -> claimedGeneration(s))
       var next = parsed.flatMap(_._2).foldLeft(0)(math.max) + 1
       val used = scala.collection.mutable.Set.empty[Int]
       parsed.map { case (src, g) =>
@@ -3147,7 +3174,7 @@ object SSTableBinaryV2 {
         val gen = genOf.getOrElse(src, throw new IllegalArgumentException(
           s"writeSSTables: source '$src' appears in the data but not " +
             "in the caller-provided source set — the explicit `sources` " +
-            "list must equal the frame's distinct sstable identities"))
+            "list must cover the frame's distinct sstable identities"))
         val unknown = rows.iterator.map(_.row_kind).find(k =>
           !Set("ROW", "PK_LIVENESS", "ROW_DELETION", "CELL_DELETION",
             "COMPLEX_DELETION", "PARTITION_DELETION",

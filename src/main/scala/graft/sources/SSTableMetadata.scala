@@ -270,7 +270,7 @@ object SSTableMetadata {
       statsModern.map(_.maxClusteringValues)
         .orElse(stats2x.map(_.maxColumnNames)).getOrElse(Nil))
     GenerationMeta(
-      sstable = dataPath.split('/').takeRight(2).mkString("/"),
+      sstable = SSTableBinaryV2.sstableIdentity(dataPath),
       n_partitions = nPartitions,
       min_writetime_us =
         header.map(_.minTimestampUs).orElse(stats2x.map(_.minTimestampUs)),
@@ -437,7 +437,7 @@ object SSTableMetadata {
           .map { s0 =>
             val s = SSTableComponents.downsampleSummary(s0, downsample)
             RangeEstimate(
-              dataPath.split('/').takeRight(2).mkString("/"),
+              SSTableBinaryV2.sstableIdentity(dataPath),
               SSTableComponents.estimatedKeysForRanges(s, ranges),
               s.sampled.size)
           }
@@ -484,7 +484,7 @@ object SSTableMetadata {
         require(mid >= beforeAll && mid <= afterAll,
           s"$dataPath: histogram sum not monotone " +
             s"($beforeAll, $mid, $afterAll)")
-        (dataPath.split('/').takeRight(2).mkString("/"),
+        (SSTableBinaryV2.sstableIdentity(dataPath),
           beforeAll, afterAll, s.estColumnsTotal,
           OldFormat.estimatedDroppableTombstoneRatio(
             s, s.maxLocalDeletionTimeS + 1.0))
@@ -537,7 +537,7 @@ object SSTableMetadata {
             new java.io.BufferedInputStream(idx, 64 * 1024)),
           oldEra = false, dataPath)
         finally idx.close()
-        (dataPath.split('/').takeRight(2).mkString("/"),
+        (SSTableBinaryV2.sstableIdentity(dataPath),
           SSTableComponents.writeSummary(s.sampled,
             s.sizeAtFullSampling.toLong * s.minIndexInterval,
             s.firstKey, s.lastKey, s.minIndexInterval))
@@ -647,7 +647,7 @@ object SSTableMetadata {
             new java.io.BufferedInputStream(idx, 64 * 1024)),
           oldEra = false, dataPath)
         finally idx.close()
-        (dataPath.split('/').takeRight(2).mkString("/"),
+        (SSTableBinaryV2.sstableIdentity(dataPath),
           s.sampled.size)
       }
       .collect().toSeq.sortBy(_._1)
@@ -936,7 +936,7 @@ object SSTableMetadata {
           }.mkString(":"))
         BigFormat.readStatsModern(statsBytes, version)
           .map { s =>
-          val key = dataPath.split('/').takeRight(2).mkString("/")
+          val key = SSTableBinaryV2.sstableIdentity(dataPath)
           bcSizes.value.get(key).foreach { dataLen =>
             val compressed = comps.contains(base + "-CompressionInfo.db")
             if (compressed) {
@@ -1030,7 +1030,7 @@ object SSTableMetadata {
             else SSTableComponents.readSummary(readAll(fs, p))
           }.toOption
         }
-        (dataPath.split('/').takeRight(2).mkString("/"),
+        (SSTableBinaryV2.sstableIdentity(dataPath),
           sum.map(s => BigFormat.murmur3Token(s.firstKey)),
           sum.map(s => BigFormat.murmur3Token(s.lastKey)))
       }
@@ -1251,7 +1251,7 @@ object SSTableMetadata {
       s"summary redistribution targets ONE table directory; $root " +
         s"spans ${parents.size} (run per directory): " +
         parents.sorted.take(3).mkString(", "))
-    def keyOf(p: String): String = p.split('/').takeRight(2).mkString("/")
+    def keyOf(p: String): String = SSTableBinaryV2.sstableIdentity(p)
     // duplicate sstable rows (an activity table appended over time)
     // collapse by MAX — deterministic, and "was recently hot" is the
     // conservative rank for a summary-degrading decision

@@ -1862,6 +1862,169 @@ class SSTableBinarySpec extends SparkSpec {
     }
   }
 
+  /** Input rows the scan tasks decode while `op` runs: one full pass
+    * over a lake reads each of its rows exactly once. */
+  private def rowsDecoded(op: => Unit): Long = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          n.addAndGet(m.inputMetrics.recordsRead))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftbridge.ListenerFlush.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      op
+      org.apache.spark.sql.graftbridge.ListenerFlush.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  private def sinkArgs(in: String, out: String, extra: String*)
+      : RemoverCli.CliArgs =
+    RemoverCli.parse(Array("--in", in, "--out", out,
+      "--table", "documents", "--format", "sstable",
+      "--sink", "sstable") ++ extra)
+      .fold(e => fail(s"parse failed: $e"), identity)
+
+  /** The CLI's output against `writeSSTables` run on the same frame
+    * WITHOUT a source set (its own distinct pass): byte-identical. */
+  private def assertSameAsDistinctPass(args: RemoverCli.CliArgs,
+      compression: Option[String], shape: String): Unit = {
+    val ref = Scratch.dir("graft-cli-ref-")
+    try {
+      val (frame, _) = RemoverCli.sstableSinkInput(spark, args)
+      SSTableBinaryV2.writeSSTables(frame, ref.toString, args.keyspace,
+        args.table, compression = compression)
+      val got = filesUnder(java.nio.file.Paths.get(args.out))
+      val want = filesUnder(ref)
+      assert(got.keySet === want.keySet, shape)
+      assert(got.keys.filterNot(k => got(k) == want(k)).isEmpty, shape)
+    } finally Scratch.delete(ref)
+  }
+
+  test("RemoverCli --sink sstable decodes its input once; output equals the distinct-pass sink") {
+    val in = SSTableBinaryV2.writeBinaryFixture(spark, sfDir)
+    try {
+      val lakeRows = SSTableBinaryV2.readBinary(spark, in.toString).count()
+      assert(lakeRows > 0)
+      Seq(
+        ("rewrite", Seq.empty[String], None),
+        ("rewrite lz4", Seq("--compress", "lz4"),
+          Some(graft.sources.CompressedData.Lz4)),
+        ("merge lww", Seq("--merge", "lww"), None),
+        ("merge lww, 4 generations",
+          Seq("--merge", "lww", "--out-generations", "4"), None)
+      ).foreach { case (shape, extra, compression) =>
+        val out = Scratch.dir("graft-cli-once-")
+        try {
+          val args = sinkArgs(in.toString, s"$out/o", extra: _*)
+          assert(RemoverCli.sstableSinkInput(spark, args)._2.nonEmpty,
+            shape)
+          assert(rowsDecoded(RemoverCli.run(spark, args)) === lakeRows,
+            s"$shape: the input must be decoded exactly once")
+          assertSameAsDistinctPass(args, compression, shape)
+        } finally Scratch.delete(out)
+      }
+      // the unmerged split keeps the distinct pass: its "<src>#sK"
+      // names share their source's generation by design
+      val out = Scratch.dir("graft-cli-split-once-")
+      try {
+        val split = sinkArgs(in.toString, s"$out/o",
+          "--out-generations", "3")
+        assert(RemoverCli.sstableSinkInput(spark, split)._2.isEmpty)
+        assert(rowsDecoded(RemoverCli.run(spark, split)) === 2 * lakeRows)
+      } finally Scratch.delete(out)
+    } finally Scratch.delete(in)
+  }
+
+  test("RemoverCli --sink sstable keeps the distinct pass when basenames collide across subdirectories") {
+    import spark.implicits._
+    val wt = 1609459200L * 1000000L
+    val lake = Scratch.dir("graft-cli-collide-")
+    val out = Scratch.dir("graft-cli-collide-out-")
+    try {
+      // t1/nb-1 and t2/nb-1 under one root: which one keeps
+      // generation 1 depends on which sources carry rows
+      Seq("t1" -> "p1", "t2" -> "p2").foreach { case (t, pk) =>
+        val frame = Seq((pk, Seq("c"), "ROW", Some("v"),
+          Some(("x", wt, Some(60), Some(wt + 60000000L))),
+          None: Option[Long], s"$t/nb-1-big-Data.db"))
+          .toDF("partition_key", "clustering", "row_kind", "name",
+            "cell_t", "deletion_us", "sstable")
+          .withColumn("cell", struct(col("cell_t._1").as("value"),
+            col("cell_t._2").as("writetime_us"),
+            col("cell_t._3").as("ttl_s"), col("cell_t._4").as("expire_us")))
+          .drop("cell_t")
+        SSTableBinaryV2.writeSSTables(frame, lake.toString, "ks", t)
+      }
+      val args = sinkArgs(lake.toString, s"$out/o")
+      assert(SSTableBinaryV2.sourceSetViolations(SSTableBinaryV2
+        .dataSourceIdentities(spark, lake.toString)).nonEmpty)
+      assert(RemoverCli.sstableSinkInput(spark, args)._2.isEmpty)
+      assert(RemoverCli.run(spark, args) === 2L)
+      assertSameAsDistinctPass(args, None, "colliding basenames")
+      val back = SSTableBinaryV2.readBinary(spark, s"$out/o")
+      assert(back.select("sstable").distinct().count() === 2)
+      assert(back.filter(col("cell.ttl_s").isNotNull).count() === 0)
+    } finally { Scratch.delete(lake); Scratch.delete(out) }
+  }
+
+  test("RemoverCli --scrub: a generation scrub skips entirely writes nothing; survivors keep their generations") {
+    import spark.implicits._
+    val wt = 1609459200000000L
+    val lake = Scratch.dir("graft-cli-scrubedge-")
+    val out = Scratch.dir("graft-cli-scrubedge-out-")
+    try {
+      // four single-partition generations; nb-3's one partition is
+      // poisoned, so scrub serves nothing of it
+      val frame = (1 to 4).map { g =>
+        (s"k$g", Seq("c"), "ROW", Some("v"),
+          Some((s"val$g", wt, Some(60), Some(wt + 60000000L))),
+          None: Option[Long], s"t/nb-$g-big-Data.db")
+      }.toDF("partition_key", "clustering", "row_kind", "name",
+        "cell_t", "deletion_us", "sstable")
+        .withColumn("cell", struct(col("cell_t._1").as("value"),
+          col("cell_t._2").as("writetime_us"),
+          col("cell_t._3").as("ttl_s"), col("cell_t._4").as("expire_us")))
+        .drop("cell_t")
+      SSTableBinaryV2.writeSSTables(frame, lake.toString, "graft",
+        "documents")
+      val dir = lake.resolve("graft").resolve("documents")
+      val dataP = dir.resolve("nb-3-big-Data.db")
+      val idxP = dir.resolve("nb-3-big-Index.db")
+      val pos = graft.sources.SSTableComponents.indexEntries(
+        new java.io.DataInputStream(new ByteArrayInputStream(
+          java.nio.file.Files.readAllBytes(idxP))), idxP.toString)
+        .map(_._2).next()
+      val ch = java.nio.channels.FileChannel.open(dataP,
+        java.nio.file.StandardOpenOption.WRITE)
+      try {
+        ch.position(pos)
+        ch.write(java.nio.ByteBuffer.wrap(Array(0xff.toByte, 0xff.toByte)))
+      } finally ch.close()
+      java.nio.file.Files.deleteIfExists(dir.resolve(".nb-3-big-Data.db.crc"))
+
+      val args = sinkArgs(lake.toString, s"$out/o", "--scrub", "true")
+      // the listing names the skipped generation, the data does not
+      val (scrubbed, sources) = RemoverCli.sstableSinkInput(spark, args)
+      assert(sources.map(_.size) === Some(4))
+      assert(scrubbed.select("sstable").distinct().count() === 3)
+      assert(rowsDecoded(RemoverCli.run(spark, args)) === 3L)
+      assertSameAsDistinctPass(args, None, "scrub skips a generation")
+      val written = java.nio.file.Paths.get(args.out, "graft", "documents")
+        .toFile.list().filter(_.endsWith("-Data.db")).sorted.toSeq
+      assert(written === Seq("nb-1-big-Data.db", "nb-2-big-Data.db",
+        "nb-4-big-Data.db"))
+      val back = SSTableBinaryV2.readBinary(spark, args.out)
+      assert(back.select("partition_key").as[String].collect().toSet ===
+        Set("k1", "k2", "k4"))
+      assert(back.filter(col("cell.ttl_s").isNotNull).count() === 0)
+    } finally { Scratch.delete(lake); Scratch.delete(out) }
+  }
+
   test("scrub mode salvages damaged generations; without an index the intact prefix survives") {
     import spark.implicits._
     def freshGen(): java.nio.file.Path = {

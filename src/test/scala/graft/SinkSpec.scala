@@ -195,4 +195,53 @@ class SinkSpec extends SparkSpec {
       graft.Scratch.delete(outB)
     }
   }
+
+  test("binary sink: a superset source list is accepted only when every entry claims its own generation") {
+    import graft.sources.SSTableBinaryV2
+    val in = SSTableBinaryV2.writeBinaryFixture(spark, sfDir)
+    val outA = graft.Scratch.dir("graft-supersink-a-")
+    val outB = graft.Scratch.dir("graft-supersink-b-")
+    val outC = graft.Scratch.dir("graft-supersink-c-")
+    try {
+      val listed = SSTableBinaryV2.dataSourceIdentities(spark, in.toString)
+      assert(SSTableBinaryV2.sourceSetViolations(listed).isEmpty)
+      // one generation loses every row: the listing is now a strict
+      // superset of the frame's distinct sstable set
+      val dropped = listed.max
+      val frame = SSTableBinaryV2.readBinary(spark, in.toString)
+        .filter(col("sstable") =!= dropped).localCheckpoint()
+      val mA = SSTableBinaryV2.writeSSTables(frame, outA.toString,
+        "graft", "documents")
+      val mB = SSTableBinaryV2.writeSSTables(frame, outB.toString,
+        "graft", "documents", sources = Some(listed))
+      assert(mA === mB)
+      assert(mB.size === listed.size - 1)
+      val (fA, fB) = (filesUnder(outA), filesUnder(outB))
+      assert(fA.keySet === fB.keySet)
+      assert(fA.keys.filterNot(k => fA(k) == fB(k)).isEmpty)
+      // the premise broken either way refuses on the driver, naming
+      // the offending entries: a name that claims no generation…
+      val nameless = "documents/manifest-Data.db"
+      val e1 = intercept[IllegalArgumentException] {
+        SSTableBinaryV2.writeSSTables(frame, outC.toString,
+          "graft", "documents", sources = Some(listed :+ nameless))
+      }
+      assert(e1.getMessage.contains(nameless), e1.getMessage)
+      // …and two names claiming the same one
+      val twin = "other/" + listed.head.split('/').last
+      val e2 = intercept[IllegalArgumentException] {
+        SSTableBinaryV2.writeSSTables(frame, outC.toString,
+          "graft", "documents", sources = Some(listed :+ twin))
+      }
+      assert(e2.getMessage.contains(twin), e2.getMessage)
+      assert(e2.getMessage.contains(listed.head), e2.getMessage)
+      assert(SSTableBinaryV2.sourceSetViolations(listed :+ twin :+ nameless)
+        === Seq(listed.head, nameless, twin).sorted)
+      // a repeated entry is one source, not a shared claim
+      assert(SSTableBinaryV2.sourceSetViolations(listed :+ listed.head)
+        .isEmpty)
+    } finally {
+      Seq(in, outA, outB, outC).foreach(graft.Scratch.delete)
+    }
+  }
 }

@@ -28,4 +28,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Formatted physical plan of a query's DataFrame. */
   def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString()
+
+  /** Every file under `dir`, keyed by its path relative to `dir`, with
+    * its bytes (the local filesystem's `.crc` checksum files excluded):
+    * two sink outputs are byte-identical iff these maps are equal. */
+  def filesUnder(dir: java.nio.file.Path): Map[String, Seq[Byte]] = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !p.getFileName.toString.endsWith(".crc"))
+      .map(p => dir.relativize(p).toString ->
+        Files.readAllBytes(p).toSeq)
+      .toMap
+    finally walk.close()
+  }
 }
