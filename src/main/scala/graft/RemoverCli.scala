@@ -748,34 +748,61 @@ object RemoverCli {
     written.get("rows").asInstanceOf[Long]
   }
 
-  /** The `--sink sstable` execution paths: read the dump-family
-    * input through its sstable-identity-carrying reader, then either
-    * strip TTLs and rewrite ONE output SSTable per input SSTable (the
-    * reference's exact rewrite contract, binary in → binary out), or
-    * — with `--merge lww` — collapse every generation through the LWW
-    * merge and write ONE compacted generation: a major compaction.
-    * Returns rows written (the sink's own per-file manifest).
+  /** The `--sink sstable` execution paths: strip TTLs and rewrite ONE
+    * output SSTable per input SSTable (the reference's exact rewrite
+    * contract, binary in → binary out), or — with `--merge lww` —
+    * collapse every generation through the LWW merge and write ONE
+    * compacted generation: a major compaction. Returns rows written,
+    * counted as bridge rows (the sink's own per-file manifest).
     *
-    * A run decodes its input ONCE: the sink gets its source set from
-    * the driver ([[sstableSinkInput]]) instead of a distinct pass over
-    * the data, which would repeat the scan (and, merged, the whole
-    * merge and exchange). Two input shapes still take the distinct
-    * pass, because a superset list is only output-identical when every
-    * name claims its own generation
-    * ([[graft.sources.SSTableBinaryV2.sourceSetViolations]]): a lake
-    * whose basenames share a generation across subdirectories (the
-    * collision resolution depends on which sources carry rows), and
-    * the unmerged `--out-generations N` split, whose `<src>#sK` names
-    * share their source's generation by design. Dump-JSON input
-    * (`--format sstabledump`) has no binary listing and also keeps
-    * the pass. */
-  private def runSstableSink(spark: SparkSession, args: CliArgs): Long = {
-    val (frame, sources) = sstableSinkInput(spark, args)
-    graft.sources.SSTableBinaryV2
-      .writeSSTables(frame, args.out, args.keyspace, args.table,
-        args.cqlSchema, args.compress.map(Compressors), sources = sources)
-      .map(_._2).sum
-  }
+    * Two routes, picked from the arguments and the lake listing, write
+    * the same bytes:
+    *  - the FILE route ([[graft.sources.SSTableBinaryV2.rewriteGenerations]])
+    *    is the reference's own shape: one task per `*-Data.db` decodes
+    *    the generation, strips TTLs on its decoded partitions and
+    *    encodes the output generation — no bridge rows, no shuffle, no
+    *    regrouping. It takes the plain rewrite of a binary lake
+    *    ([[fileRouteLake]]): no `--merge`, one output generation per
+    *    input, no `--scrub` (salvage needs the reader's index-paced
+    *    walk), no `--cql`, every generation modern-era (3.x/4.x), and
+    *    every basename claiming its own generation, so each input keeps
+    *    its generation number exactly as the frame route assigns it.
+    *    `--verify` runs the reader's own digest check per file;
+    *  - every other shape takes the FRAME route: the bridge-row frame
+    *    ([[sstableSinkInput]]) through `writeSSTables`. It decodes its
+    *    input once: the sink gets its source set from the driver instead
+    *    of a distinct pass over the data, which would repeat the scan
+    *    (and, merged, the whole merge and exchange). Two input shapes
+    *    still take the distinct pass, because a superset list is only
+    *    output-identical when every name claims its own generation
+    *    ([[graft.sources.SSTableBinaryV2.sourceSetViolations]]): a lake
+    *    whose basenames share a generation across subdirectories (the
+    *    collision resolution depends on which sources carry rows), and
+    *    the unmerged `--out-generations N` split, whose `<src>#sK` names
+    *    share their source's generation by design. Dump-JSON input
+    *    (`--format sstabledump`) has no binary listing and also keeps
+    *    the pass. */
+  private def runSstableSink(spark: SparkSession, args: CliArgs): Long =
+    (fileRouteLake(spark, args) match {
+      case Some(lake) => graft.sources.SSTableBinaryV2.rewriteGenerations(
+        spark, lake, args.out, args.keyspace, args.table,
+        args.compress.map(Compressors), args.verify)
+      case None =>
+        val (frame, sources) = sstableSinkInput(spark, args)
+        graft.sources.SSTableBinaryV2.writeSSTables(frame, args.out,
+          args.keyspace, args.table, args.cqlSchema,
+          args.compress.map(Compressors), sources = sources)
+    }).map(_._2).sum
+
+  /** The lake listing [[runSstableSink]]'s file route rewrites, or None
+    * when the arguments or the lake call for the frame route. */
+  private[graft] def fileRouteLake(spark: SparkSession, args: CliArgs)
+      : Option[Seq[(String, graft.sources.SSTableBinaryV2.SiblingInfo)]] =
+    if (args.format == "sstable" && args.sink == "sstable" &&
+      args.merge.isEmpty && args.outGenerations == 1 && !args.scrub &&
+      args.cqlText.isEmpty && args.cqlSchema.isEmpty)
+      graft.sources.SSTableBinaryV2.rewritableLake(spark, args.in)
+    else None
 
   /** The frame [[runSstableSink]] writes and the source set it hands
     * the sink (None = the sink's own distinct pass). */

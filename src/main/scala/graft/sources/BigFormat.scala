@@ -2335,12 +2335,26 @@ object BigFormat {
     * `IndexWriter` records as it appends. */
   def writeDataFileIndexed(partitions: Seq[PartitionData], h: Header,
       columnIndexSize: Int = ColumnIndexSize)
+      : (Array[Byte], Seq[IndexEntry]) =
+    writeSortedDataFile(tokenOrder(partitions, h.keyType), h,
+      columnIndexSize)
+
+  /** Partitions in on-disk order: by Murmur3 token of the key encoded
+    * under `keyType`, ties by key. Each token is computed once. */
+  def tokenOrder(partitions: Seq[PartitionData],
+      keyType: String): Seq[PartitionData] =
+    partitions.map(p => (murmur3Token(encodeValue(keyType, p.key)), p))
+      .sortBy(t => (t._1, t._2.key)).map(_._2)
+
+  /** [[writeDataFileIndexed]] over partitions already in
+    * [[tokenOrder]]. */
+  def writeSortedDataFile(partitions: Seq[PartitionData], h: Header,
+      columnIndexSize: Int = ColumnIndexSize)
       : (Array[Byte], Seq[IndexEntry]) = {
     val out = new ByteArrayOutputStream()
     val d = new DataOutputStream(out)
     val index = Seq.newBuilder[IndexEntry]
     partitions
-      .sortBy(p => (murmur3Token(encodeValue(h.keyType, p.key)), p.key))
       .foreach { p =>
         val pos = d.size().toLong
         val (atomOffs, atomsEnd) = writePartitionIndexed(p, h, d)

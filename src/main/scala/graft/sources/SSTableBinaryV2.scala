@@ -438,7 +438,7 @@ object SSTableBinaryV2 {
     * inside its [[BinFilePartition]] so tasks never re-probe the
     * filesystem for components the driver's single recursive listing
     * already saw. `indexLen` is -1 when no Index.db exists. */
-  private[sources] case class SiblingInfo(dataLen: Long, hasIndex: Boolean,
+  private[graft] case class SiblingInfo(dataLen: Long, hasIndex: Boolean,
       hasFilter: Boolean, hasSummary: Boolean, hasCompression: Boolean,
       indexLen: Long, hasDigest: Boolean = false,
       hasStats: Boolean = true)
@@ -451,6 +451,176 @@ object SSTableBinaryV2 {
   private case class BinFilePartition(file: String, start: Long = 0L,
       end: Long = Long.MaxValue, info: Option[SiblingInfo] = None)
       extends InputPartition
+
+  /** Opening one generation, shared by the DSv2 reader and the
+    * file-per-task rewrite ([[rewriteGenerations]]): sibling presence
+    * from the planner's listing, sidecar reads through the
+    * [[ComponentCache]], the Statistics.db header with its declared-
+    * ring check, the CompressionInfo.db chunk map (per-chunk
+    * checksums) and the digest check. Construction reads sidecars
+    * only; Data.db opens through [[openData]] when a caller asks for a
+    * stream. */
+  private[sources] class SSTableOpen(file: String,
+      conf: org.apache.hadoop.conf.Configuration,
+      info: Option[SiblingInfo]) {
+    protected val fs: FileSystem =
+      FileSystem.get(java.net.URI.create(file), conf)
+    /** Every Data.db byte stream opens here (the reader meters and
+      * throttles it). Never called during construction, so an
+      * override may use its own class's fields. */
+    protected def openData(p: HPath): org.apache.hadoop.fs.FSDataInputStream =
+      fs.open(p)
+    // format version from the filename prefix (nb-1-big-Data.db →
+    // "nb"): the n-series (4.x) metadata carries checksums and the
+    // maxCompressedSize word, the m-series (3.x) does not — the row
+    // codec itself is the same 3.0 storage engine either way, so one
+    // decoder serves both eras
+    protected val version = versionOf(file.split('/').last)
+    protected def sibling(suffix: String): HPath =
+      new HPath(file.stripSuffix("-Data.db") + suffix)
+    /** Component presence, answered from the planner-shipped listing
+      * when available — the reader's hot construction path issues NO
+      * per-file exists() RPCs under the DSv2 scan (the fallback
+      * serves foreign/spec callers constructing readers directly). */
+    protected def hasSibling(suffix: String): Boolean = info match {
+      case Some(i) => suffix match {
+        case "-Index.db" => i.hasIndex
+        case "-Filter.db" => i.hasFilter
+        case "-Summary.db" => i.hasSummary
+        case "-CompressionInfo.db" => i.hasCompression
+        case "-Digest.crc32" => i.hasDigest
+        case "-Statistics.db" => i.hasStats
+        case _ => fs.exists(sibling(suffix))
+      }
+      case None => fs.exists(sibling(suffix))
+    }
+    protected var cacheHits = 0L
+    protected var cacheMisses = 0L
+    protected def readSibling(path: HPath): Array[Byte] = {
+      val st = fs.getFileStatus(path)
+      val (bytes, hit) = SSTableBinaryV2.ComponentCache
+        .getFlagged(path.toString, st.getLen, st.getModificationTime) {
+          val buf = new Array[Byte](st.getLen.toInt)
+          val in = fs.open(path)
+          try in.readFully(0, buf) finally in.close()
+          buf
+        }
+      if (hit) cacheHits += 1 else cacheMisses += 1
+      bytes
+    }
+    /** Pre-3.0 eras ("ka"/"la"/"jb"…): a different storage engine
+      * entirely — the [[OldFormat]] codec, with the schema DECLARED
+      * via the `cql` option (2.x files carry no serialization
+      * header; the reference's cassandra-2 module loads live system
+      * tables instead, `Cassandra2TTLRemover.java:48`). */
+    protected val oldEra = version.nonEmpty && version.charAt(0) < 'm'
+    /** Open-time ring validation (`SSTableReader.open` refuses a
+      * file whose Statistics.db declares a foreign partitioner — the
+      * C2 fork keeps the check, `NoTTLReader.java:357-408`): serving
+      * rows under the wrong ring would silently mis-route every
+      * token predicate, so a declared mismatch refuses loudly, scrub
+      * or not (it is mis-configuration, not corruption). An ABSENT
+      * or unparseable VALIDATION component passes — nothing declared
+      * or readable, nothing to contradict (the sketch reader's own
+      * degrade posture; a truncated component must not kill a scan
+      * the way a genuine mismatch must). */
+    private def validateDeclaredRing(statsBytes: Array[Byte],
+        checksummed: Boolean): Unit =
+      (try BigFormat.readValidation(statsBytes, checksummed)
+      catch { case scala.util.control.NonFatal(_) => None })
+        .foreach { case (fqcn, _) =>
+          if (fqcn != BigFormat.Murmur3PartitionerClass)
+            throw new IllegalStateException(
+              s"$file: Statistics.db declares partitioner $fqcn; " +
+                "this engine serves Murmur3Partitioner rings only")
+        }
+
+    val header: BigFormat.Header =
+      if (oldEra) {
+        // the 2.x path reads no header, but a ka/la generation's
+        // Statistics.db carries the SAME VALIDATION declaration (no
+        // checksums) — a foreign-ring 2.x file must refuse exactly
+        // like a modern one
+        if (hasSibling("-Statistics.db"))
+          validateDeclaredRing(
+            readSibling(sibling("-Statistics.db")), checksummed = false)
+        null
+      } else {
+        val statsBytes = readSibling(sibling("-Statistics.db"))
+        val checksummed = BigFormat.versionHasMetadataChecksum(version)
+        validateDeclaredRing(statsBytes, checksummed)
+        BigFormat.readStats(statsBytes, checksummed)
+      }
+
+    /** A CompressionInfo.db sibling means the Data.db is chunk-
+      * compressed (Cassandra's DEFAULT) — decompress on the fly;
+      * absent, the bytes are the plain partition stream. Detection is
+      * by component presence, exactly how Cassandra itself decides
+      * (`Descriptor`'s component set), so a compressed table can
+      * never reach the row decoder as garbage. */
+    protected lazy val onDiskLen: Long = info.map(_.dataLen)
+      .getOrElse(fs.getFileStatus(new HPath(file)).getLen)
+
+    /** The decoded CompressionInfo.db sibling, once per file — the
+      * chunk map every compressed access path (full scan, point seek,
+      * split alignment) resolves logical offsets through. The
+      * checksum era follows the format version: 2.x ("ka"/"la")
+      * chunks carry Adler32, 3.0+ CRC32 — both verified on every
+      * chunk ([[CompressedData.versionUsesAdler32]]; the reference
+      * reads both natively, `NoTTLReader.java:343,623`). */
+    protected lazy val compressionMeta: Option[CompressedData.Meta] = {
+      val ci = sibling("-CompressionInfo.db")
+      if (!hasSibling("-CompressionInfo.db")) None
+      else Some(CompressedData.readMeta(readSibling(ci),
+        CompressedData.versionHasMaxCompressedSize(version), file,
+        CompressedData.versionUsesAdler32(version)))
+    }
+
+    def openFullStream(): java.io.InputStream = {
+      val raw = openData(new HPath(file))
+      compressionMeta match {
+        case Some(meta) =>
+          CompressedData.decompressingStream(raw, onDiskLen, meta, file)
+        case None => raw
+      }
+    }
+
+    /** Read-side data-integrity pass (`.option("verify", "true")` /
+      * the CLI's `--verify`): CRC32 the AS-ON-DISK Data.db bytes and
+      * compare with the `Digest.crc32` sibling —
+      * `o.a.c.io.util.DataIntegrityMetadata.FileDigestValidator`'s
+      * check, the first pass of Cassandra's standalone verifier.
+      * Callers run it at most ONCE per file (a split scan's
+      * zero-offset range owns it), and a missing digest under an
+      * explicit verify request refuses loudly rather than silently
+      * verifying nothing. The digest covers on-disk bytes, so
+      * compressed files verify without decompressing (chunk CRCs
+      * separately guard the decompression path). */
+    def verifyDigest(): Unit = {
+      require(hasSibling("-Digest.crc32"),
+        s"$file: verify requested but no Digest.crc32 sibling exists")
+      val expected = new String(readSibling(sibling("-Digest.crc32")),
+        java.nio.charset.StandardCharsets.US_ASCII).trim
+      val crc = new java.util.zip.CRC32()
+      // through the throttle like every other Data.db byte — a
+      // verify pass at full disk bandwidth would defeat the rate cap
+      // exactly when a co-resident workload is the reason it is set
+      val din = openData(new HPath(file))
+      try {
+        val buf = new Array[Byte](64 * 1024)
+        var n = din.read(buf)
+        while (n >= 0) {
+          if (n > 0) crc.update(buf, 0, n)
+          n = din.read(buf)
+        }
+      } finally din.close()
+      val actual = java.lang.Long.toString(crc.getValue)
+      if (actual != expected)
+        throw new IllegalStateException(
+          s"$file: Digest.crc32 mismatch — stored $expected, computed " +
+            s"$actual (corrupt or truncated Data.db); refusing to serve")
+    }
+  }
 
   private class BinReaderFactory(cols: Array[String],
       hconf: SerializableConfiguration, cql: Option[String],
@@ -491,14 +661,14 @@ object SSTableBinaryV2 {
       scrub: Boolean = false,
       maxBytesPerSec: Option[Double] = None,
       activity: Option[(String, Option[Long])] = None)
-      extends PartitionReader[InternalRow] {
+      extends SSTableOpen(file, conf, info)
+      with PartitionReader[InternalRow] {
     /** A split task owns the partitions whose Data.db start offset
       * falls in its BLIND [rangeStart, rangeEnd) — blind ranges tile
       * the file disjointly, so every partition has exactly one owner
       * regardless of alignment. */
     private val ranged = rangeStart != 0L || rangeEnd != Long.MaxValue
     private val sstable = sstableIdentity(file)
-    private val fs = FileSystem.get(java.net.URI.create(file), conf)
     /** S11 literal — the scanner's RateLimiter
       * (`NoTTLReader.getScanner(RateLimiter)` /
       * `openDataReader(limiter)`, `NoTTLReader.java:1791-1794,
@@ -527,7 +697,8 @@ object SSTableBinaryV2 {
             clk.getOrElse(System.nanoTime()))
         }
     }
-    private def openData(p: HPath): org.apache.hadoop.fs.FSDataInputStream = {
+    override protected def openData(
+        p: HPath): org.apache.hadoop.fs.FSDataInputStream = {
       markActivity()
       val raw = fs.open(p)
       maxBytesPerSec match {
@@ -535,32 +706,6 @@ object SSTableBinaryV2 {
         case None => raw
       }
     }
-    // format version from the filename prefix (nb-1-big-Data.db →
-    // "nb"): the n-series (4.x) metadata carries checksums and the
-    // maxCompressedSize word, the m-series (3.x) does not — the row
-    // codec itself is the same 3.0 storage engine either way, so one
-    // decoder serves both eras
-    private val version = versionOf(file.split('/').last)
-    private def sibling(suffix: String): HPath =
-      new HPath(file.stripSuffix("-Data.db") + suffix)
-    /** Component presence, answered from the planner-shipped listing
-      * when available — the reader's hot construction path issues NO
-      * per-file exists() RPCs under the DSv2 scan (the fallback
-      * serves foreign/spec callers constructing readers directly). */
-    private def hasSibling(suffix: String): Boolean = info match {
-      case Some(i) => suffix match {
-        case "-Index.db" => i.hasIndex
-        case "-Filter.db" => i.hasFilter
-        case "-Summary.db" => i.hasSummary
-        case "-CompressionInfo.db" => i.hasCompression
-        case "-Digest.crc32" => i.hasDigest
-        case "-Statistics.db" => i.hasStats
-        case _ => fs.exists(sibling(suffix))
-      }
-      case None => fs.exists(sibling(suffix))
-    }
-    private var cacheHits = 0L
-    private var cacheMisses = 0L
     /** The generation's index summary: Summary.db when present (modern
       * era — the 2.x IndexSummary layout predates the 3.0 serializer,
       * so a foreign 2.x summary is never parsed), else REBUILT from
@@ -622,61 +767,6 @@ object SSTableBinaryV2 {
         if (hit) cacheHits += 1 else cacheMisses += 1
         Some(SSTableComponents.readSummary(bytes))
       }
-    private def readSibling(path: HPath): Array[Byte] = {
-      val st = fs.getFileStatus(path)
-      val (bytes, hit) = SSTableBinaryV2.ComponentCache
-        .getFlagged(path.toString, st.getLen, st.getModificationTime) {
-          val buf = new Array[Byte](st.getLen.toInt)
-          val in = fs.open(path)
-          try in.readFully(0, buf) finally in.close()
-          buf
-        }
-      if (hit) cacheHits += 1 else cacheMisses += 1
-      bytes
-    }
-    /** Pre-3.0 eras ("ka"/"la"/"jb"…): a different storage engine
-      * entirely — the [[OldFormat]] codec, with the schema DECLARED
-      * via the `cql` option (2.x files carry no serialization
-      * header; the reference's cassandra-2 module loads live system
-      * tables instead, `Cassandra2TTLRemover.java:48`). */
-    private val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-    /** Open-time ring validation (`SSTableReader.open` refuses a
-      * file whose Statistics.db declares a foreign partitioner — the
-      * C2 fork keeps the check, `NoTTLReader.java:357-408`): serving
-      * rows under the wrong ring would silently mis-route every
-      * token predicate, so a declared mismatch refuses loudly, scrub
-      * or not (it is mis-configuration, not corruption). An ABSENT
-      * or unparseable VALIDATION component passes — nothing declared
-      * or readable, nothing to contradict (the sketch reader's own
-      * degrade posture; a truncated component must not kill a scan
-      * the way a genuine mismatch must). */
-    private def validateDeclaredRing(statsBytes: Array[Byte],
-        checksummed: Boolean): Unit =
-      (try BigFormat.readValidation(statsBytes, checksummed)
-      catch { case scala.util.control.NonFatal(_) => None })
-        .foreach { case (fqcn, _) =>
-          if (fqcn != BigFormat.Murmur3PartitionerClass)
-            throw new IllegalStateException(
-              s"$file: Statistics.db declares partitioner $fqcn; " +
-                "this engine serves Murmur3Partitioner rings only")
-        }
-
-    private val header: BigFormat.Header =
-      if (oldEra) {
-        // the 2.x path reads no header, but a ka/la generation's
-        // Statistics.db carries the SAME VALIDATION declaration (no
-        // checksums) — a foreign-ring 2.x file must refuse exactly
-        // like a modern one
-        if (hasSibling("-Statistics.db"))
-          validateDeclaredRing(
-            readSibling(sibling("-Statistics.db")), checksummed = false)
-        null
-      } else {
-        val statsBytes = readSibling(sibling("-Statistics.db"))
-        val checksummed = BigFormat.versionHasMetadataChecksum(version)
-        validateDeclaredRing(statsBytes, checksummed)
-        BigFormat.readStats(statsBytes, checksummed)
-      }
     private val oldSchema: OldFormat.Schema =
       if (!oldEra) null
       else OldFormat.schemaOfCql(
@@ -715,39 +805,6 @@ object SSTableBinaryV2 {
           else kt == space
         if (compatible) tokenRangeOpt else None
     }
-    /** A CompressionInfo.db sibling means the Data.db is chunk-
-      * compressed (Cassandra's DEFAULT) — decompress on the fly;
-      * absent, the bytes are the plain partition stream. Detection is
-      * by component presence, exactly how Cassandra itself decides
-      * (`Descriptor`'s component set), so a compressed table can
-      * never reach the row decoder as garbage. */
-    private lazy val onDiskLen: Long = info.map(_.dataLen)
-      .getOrElse(fs.getFileStatus(new HPath(file)).getLen)
-
-    /** The decoded CompressionInfo.db sibling, once per file — the
-      * chunk map every compressed access path (full scan, point seek,
-      * split alignment) resolves logical offsets through. The
-      * checksum era follows the format version: 2.x ("ka"/"la")
-      * chunks carry Adler32, 3.0+ CRC32 — both verified on every
-      * chunk ([[CompressedData.versionUsesAdler32]]; the reference
-      * reads both natively, `NoTTLReader.java:343,623`). */
-    private lazy val compressionMeta: Option[CompressedData.Meta] = {
-      val ci = sibling("-CompressionInfo.db")
-      if (!hasSibling("-CompressionInfo.db")) None
-      else Some(CompressedData.readMeta(readSibling(ci),
-        CompressedData.versionHasMaxCompressedSize(version), file,
-        CompressedData.versionUsesAdler32(version)))
-    }
-
-    private def openFullStream(): java.io.InputStream = {
-      val raw = openData(new HPath(file))
-      compressionMeta match {
-        case Some(meta) =>
-          CompressedData.decompressingStream(raw, onDiskLen, meta, file)
-        case None => raw
-      }
-    }
-
     /** The point-lookup plan for this file when partition-key
       * predicates were pushed: None = full scan (no components or
       * the 2.x era); Some(positions) = consult
@@ -1076,41 +1133,7 @@ object SSTableBinaryV2 {
       override def close(): Unit = in.close()
     }
 
-    /** Read-side data-integrity pass (`.option("verify", "true")` /
-      * the CLI's `--verify`): CRC32 the AS-ON-DISK Data.db bytes and
-      * compare with the `Digest.crc32` sibling —
-      * `o.a.c.io.util.DataIntegrityMetadata.FileDigestValidator`'s
-      * check, the first pass of Cassandra's standalone verifier. Runs
-      * at most ONCE per file (a split scan's zero-offset range owns
-      * it), and a missing digest under an explicit verify request
-      * refuses loudly rather than silently verifying nothing. The
-      * digest covers on-disk bytes, so compressed files verify
-      * without decompressing (chunk CRCs separately guard the
-      * decompression path). */
-    if (verify && rangeStart == 0L) {
-      require(hasSibling("-Digest.crc32"),
-        s"$file: verify requested but no Digest.crc32 sibling exists")
-      val expected = new String(readSibling(sibling("-Digest.crc32")),
-        java.nio.charset.StandardCharsets.US_ASCII).trim
-      val crc = new java.util.zip.CRC32()
-      // through the throttle like every other Data.db byte — a
-      // verify pass at full disk bandwidth would defeat the rate cap
-      // exactly when a co-resident workload is the reason it is set
-      val din = openData(new HPath(file))
-      try {
-        val buf = new Array[Byte](64 * 1024)
-        var n = din.read(buf)
-        while (n >= 0) {
-          if (n > 0) crc.update(buf, 0, n)
-          n = din.read(buf)
-        }
-      } finally din.close()
-      val actual = java.lang.Long.toString(crc.getValue)
-      if (actual != expected)
-        throw new IllegalStateException(
-          s"$file: Digest.crc32 mismatch — stored $expected, computed " +
-            s"$actual (corrupt or truncated Data.db); refusing to serve")
-    }
+    if (verify && rangeStart == 0L) verifyDigest()
 
     private var fullStream: java.io.InputStream = null
     private var seekStream: org.apache.hadoop.fs.FSDataInputStream = null
@@ -1478,22 +1501,6 @@ object SSTableBinaryV2 {
       })
     }
 
-    private def boundName(kind: Int, side: Int): String = {
-      import BigFormat.Kind._
-      kind match {
-        case InclStartBound => "start:inclusive"
-        case ExclStartBound => "start:exclusive"
-        case InclEndBound => "end:inclusive"
-        case ExclEndBound => "end:exclusive"
-        case ExclEndInclStartBoundary =>
-          if (side == 0) "end:exclusive" else "start:inclusive"
-        case InclEndExclStartBoundary =>
-          if (side == 0) "end:inclusive" else "start:exclusive"
-        case other => throw new UnsupportedOperationException(
-          s"$file: unexpected bound kind $other")
-      }
-    }
-
     private def expand(p: BigFormat.PartitionData): Iterator[InternalRow] = {
       val out = Seq.newBuilder[InternalRow]
       p.deletionUs.foreach(del =>
@@ -1544,7 +1551,7 @@ object SSTableBinaryV2 {
         case m: BigFormat.MarkerAtom =>
           m.deletions.zipWithIndex.foreach { case (del, side) =>
             out += project(p.key, m.clustering, "RANGE_TOMBSTONE_BOUND",
-              boundName(m.kind, side), null, del)
+              boundName(m.kind, side, file), null, del)
           }
       }
       out.result().iterator
@@ -1701,28 +1708,8 @@ object SSTableBinaryV2 {
                     rowTtl.map(t => (wtSec + 10 + t).toInt),
                     Some(source), deleted = false)))))
         }
-        // per-file EncodingStats minima over what will be written
-        val allTs = parts.flatMap(p =>
-          p.deletionUs.toSeq ++ p.atoms.flatMap {
-            case r: BigFormat.RowAtom =>
-              r.livenessTsUs.toSeq ++ r.deletionUs.toSeq ++
-                r.cells.map(_.tsUs)
-            case m: BigFormat.MarkerAtom => m.deletions
-          })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = fixtureHeader(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min)
+        val (minTs, minLdt, minTtl) = encodingMinima(parts.toSeq)
+        val header = fixtureHeader(minTs, minLdt, minTtl)
         val gen = fileId + 1
         val fs = FileSystem.get(
           java.net.URI.create(outStr), hconf.value.value)
@@ -2991,6 +2978,25 @@ object SSTableBinaryV2 {
     else (name, None)
   }
 
+  /** The bridge name of a range-tombstone marker's bound: a bound
+    * marker has one, a boundary two (`side` 0 closes the range before
+    * it, 1 opens the one after). */
+  private def boundName(kind: Int, side: Int, file: String): String = {
+    import BigFormat.Kind._
+    kind match {
+      case InclStartBound => "start:inclusive"
+      case ExclStartBound => "start:exclusive"
+      case InclEndBound => "end:inclusive"
+      case ExclEndBound => "end:exclusive"
+      case ExclEndInclStartBoundary =>
+        if (side == 0) "end:exclusive" else "start:inclusive"
+      case InclEndExclStartBoundary =>
+        if (side == 0) "end:inclusive" else "start:exclusive"
+      case other => throw new UnsupportedOperationException(
+        s"$file: unexpected bound kind $other")
+    }
+  }
+
   private def boundKind(name: String): Int = name match {
     case "start:inclusive" => BigFormat.Kind.InclStartBound
     case "start:exclusive" => BigFormat.Kind.ExclStartBound
@@ -3000,34 +3006,6 @@ object SSTableBinaryV2 {
       s"unknown range-tombstone bound name '$other'")
   }
 
-  /** Write bridge-row cells back out as big-format SSTables under
-    * `out/<ks>/<table>/` — the reference's OUTPUT contract
-    * (`Cassandra4TTLRemover.java:85-87` builds an `SSTableWriter` per
-    * input table and re-serializes every partition): one output
-    * `nb-<gen>-big-Data.db` + `-Statistics.db` pair per SOURCE
-    * sstable (the reference rewrites file-per-file), partitions in
-    * Murmur3 token order (the partitioner the reference pins,
-    * `Cassandra4TTLRemover.java:63`), per-file EncodingStats minima
-    * computed from what is actually written.
-    *
-    * Scale shape: ONE shuffle keyed on the source sstable, then each
-    * task encodes and writes its own file pair through the session
-    * Hadoop FS — file-per-task, the write-side mirror of the read
-    * connector's file-per-task scans, with [[BigFormat]] as the same
-    * honest codec boundary (`mapGroups`) the fixture writer uses. A
-    * task buffers one output SSTable (the reference's own rewrite
-    * unit); tables whose per-SSTable volume outgrows a task split
-    * generations upstream, not here. Returns (sstable, rows written)
-    * per output file.
-    *
-    * Cell-model mapping (the read connector's, inverted): ROW cells
-    * group per (partition, clustering) into one row atom with
-    * explicit per-cell liveness (expiry second = expire_us/1e6);
-    * PK_LIVENESS becomes row liveness with no cells; ROW_DELETION /
-    * PARTITION_DELETION / RANGE_TOMBSTONE_BOUND become their marker
-    * forms. Clustering arity must be uniform per table (heterogeneous
-    * arity fails loudly — it would mean two different table schemas
-    * in one write). */
   /** Resolved CQL typing for the sink: marshal types for the key,
     * clustering and each declared column, plus the static set. */
   private[graft] final case class SinkTyping(
@@ -3100,6 +3078,32 @@ object SSTableBinaryV2 {
     (unclaimed ++ shared).sorted
   }
 
+  /** Write bridge-row cells back out as big-format SSTables under
+    * `out/<ks>/<table>/` — the reference's OUTPUT contract
+    * (`Cassandra4TTLRemover.java:85-87` builds an `SSTableWriter` per
+    * input table and re-serializes every partition): one output
+    * generation per SOURCE sstable (the reference rewrites
+    * file-per-file), partitions in Murmur3 token order (the
+    * partitioner the reference pins, `Cassandra4TTLRemover.java:63`),
+    * per-file EncodingStats minima computed from what is actually
+    * written.
+    *
+    * Scale shape: ONE shuffle keyed on the source sstable, then each
+    * task encodes and writes its own generation through the session
+    * Hadoop FS ([[writeGeneration]], the encoder the file route
+    * [[rewriteGenerations]] shares). A task buffers one output SSTable
+    * (the reference's own rewrite unit); tables whose per-SSTable
+    * volume outgrows a task split generations upstream, not here.
+    * Returns (sstable, rows written) per output file.
+    *
+    * Cell-model mapping (the read connector's, inverted): ROW cells
+    * group per (partition, clustering) into one row atom with
+    * explicit per-cell liveness (expiry second = expire_us/1e6);
+    * PK_LIVENESS becomes row liveness; ROW_DELETION /
+    * PARTITION_DELETION / RANGE_TOMBSTONE_BOUND become their marker
+    * forms. Clustering arity must be uniform per table (heterogeneous
+    * arity fails loudly — it would mean two different table schemas
+    * in one write). */
   def writeSSTables(cells: DataFrame, outDir: String, keyspace: String,
       table: String,
       schema: Option[graft.model.CqlSchema.Parsed] = None,
@@ -3112,27 +3116,14 @@ object SSTableBinaryV2 {
     // CQL typing resolves (and rejects) ON THE DRIVER, before any
     // task runs; None = the value-opaque default (text everywhere).
     // Compression likewise validates up front.
-    val typing: Option[SinkTyping] = schema.map(resolveTyping)
-    compression.foreach(c => require(CompressedData.Supported(c),
-      s"unsupported sink compressor '$c' (supported: " +
-        s"${CompressedData.Supported.toSeq.sorted.mkString(", ")})"))
+    val target = SinkTarget(s"$outDir/$keyspace/$table",
+      schema.map(resolveTyping), compression, columnIndexSize)
     val hconf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val selected = cells
       .select(col("partition_key"), col("clustering"), col("row_kind"),
         col("name"), col("cell"), col("deletion_us"), col("sstable"))
       .as[SinkRow]
-    // Output generations assigned ON THE DRIVER over the distinct
-    // source identities (catalog-sized: one row per source file), so
-    // two sources in different subdirectories that share a basename
-    // generation (t1/nb-1-big-Data.db and t2/nb-1-big-Data.db under
-    // one load root) can never map to the same output path and
-    // silently clobber each other. Rule: in sorted source order, a
-    // source keeps the first integer of its basename if still free
-    // (the reference's identity-partitioning contract, output
-    // generation = input generation, `Cassandra3TTLRemover.java:57-61`);
-    // a collision — or a nameless source — deterministically takes the
-    // smallest unused generation above the maximum parsed one.
     // `sources`, when given, replaces the distinct job (a full second
     // decode of the input). It may be a SUPERSET of the frame's
     // distinct set (a driver-side listing of a filtered or scrubbed
@@ -3149,24 +3140,9 @@ object SSTableBinaryV2 {
           "generation (the first integer of its basename); offending: " +
           bad.mkString(", "))
     }
-    val genOf: Map[String, Int] = {
-      val srcs = sources match {
-        case Some(s) => s.distinct.sorted.toArray
-        case None => selected.select(col("sstable")).distinct()
-          .as[String].collect().sorted
-      }
-      val parsed = srcs.map(s => s -> claimedGeneration(s))
-      var next = parsed.flatMap(_._2).foldLeft(0)(math.max) + 1
-      val used = scala.collection.mutable.Set.empty[Int]
-      parsed.map { case (src, g) =>
-        val gen = g.filterNot(used) match {
-          case Some(free) => free
-          case None => val n = next; next += 1; n
-        }
-        used += gen
-        src -> gen
-      }.toMap
-    }
+    val genOf = assignGenerations(sources.getOrElse(
+      selected.select(col("sstable")).distinct().as[String].collect()
+        .toSeq))
     selected
       .groupByKey(_.sstable)
       .mapGroups { (src, it) =>
@@ -3175,355 +3151,566 @@ object SSTableBinaryV2 {
           s"writeSSTables: source '$src' appears in the data but not " +
             "in the caller-provided source set — the explicit `sources` " +
             "list must cover the frame's distinct sstable identities"))
-        val unknown = rows.iterator.map(_.row_kind).find(k =>
-          !Set("ROW", "PK_LIVENESS", "ROW_DELETION", "CELL_DELETION",
-            "COMPLEX_DELETION", "PARTITION_DELETION",
-            "RANGE_TOMBSTONE_BOUND")(k))
         // a kind this sink cannot re-encode must refuse the whole
         // write: dropping it would un-delete data on a later merge
-        unknown.foreach(k => throw new UnsupportedOperationException(
-          s"$src: row_kind '$k' not encodable by the binary sink"))
-        val arity = rows.flatMap(_.clustering).map(_.size).distinct
-        require(arity.length <= 1,
-          s"$src: heterogeneous clustering arity ${arity.mkString(",")}")
-        val nClust = arity.headOption.getOrElse(0)
+        rows.iterator.map(_.row_kind).find(k => !SinkRowKinds(k))
+          .foreach(k => throw new UnsupportedOperationException(
+            s"$src: row_kind '$k' not encodable by the binary sink"))
+        val nClust = clusteringArity(src,
+          rows.iterator.flatMap(_.clustering).map(_.size))
         // Column inventory, tombstone-only columns included. A
         // bracketed name ("attrs[k1]") is a complex column's
-        // path-bearing cell; a COMPLEX_DELETION names its column
-        // bare. Complex columns re-encode as map<text,text> — the
-        // value-opaque string carry of the whole cell model. Header
-        // order is Cassandra's: simple columns first, then complex,
-        // each sorted by name.
-        // A NULL clustering on a cell-bearing kind marks a STATIC row
-        // (the reader's sentinel); its columns form the header's
-        // static set, disjoint from the regular set.
-        def isStaticRow(r: SinkRow): Boolean =
-          r.clustering.isEmpty && (r.row_kind == "ROW" ||
-            r.row_kind == "CELL_DELETION" ||
-            r.row_kind == "COMPLEX_DELETION")
-        def inventory(rs: Array[SinkRow]): Seq[(String, String)] = {
-          val cellNames = rs
-            .filter(r => r.row_kind == "ROW" || r.row_kind == "CELL_DELETION")
-            .flatMap(_.name).map(splitPath).distinct
-          val complexCols = (cellNames.collect { case (c, Some(_)) => c } ++
-            rs.filter(_.row_kind == "COMPLEX_DELETION").flatMap(_.name))
-            .distinct.sorted
-          val bareNames = cellNames.collect { case (c, None) => c }
-          val clash = bareNames.toSet.intersect(complexCols.toSet)
-          require(clash.isEmpty,
-            s"$src: columns used both simple and complex: " +
-              clash.toSeq.sorted.mkString(","))
-          def resolve(nm: String, complex: Boolean): String =
-            typing match {
-              case None =>
-                if (complex)
-                  BigFormat.mapType(BigFormat.Utf8Type, BigFormat.Utf8Type)
-                else BigFormat.Utf8Type
-              case Some(ty) =>
-                val t = ty.columnTypes.getOrElse(nm,
-                  throw new IllegalArgumentException(
-                    s"$src: column '$nm' is not declared in the CQL schema"))
-                require(BigFormat.complexOf(t).isDefined == complex,
-                  s"$src: column '$nm' is ${if (complex) "" else "not "}" +
-                    s"a collection in the data but declared '$t'")
-                t
+        // path-bearing cell; a COMPLEX_DELETION names its column bare.
+        val uses = rows.iterator.flatMap { r =>
+          r.row_kind match {
+            case "ROW" | "CELL_DELETION" => r.name.map { n =>
+              val (c, pth) = splitPath(n)
+              (isStaticRow(r), c, pth.isDefined)
             }
-          bareNames.distinct.sorted.toSeq.map(n => n -> resolve(n, false)) ++
-            complexCols.toSeq.map(n => n -> resolve(n, true))
+            case "COMPLEX_DELETION" => r.name.map((isStaticRow(r), _, true))
+            case _ => None
+          }
         }
-        val statics = inventory(rows.filter(isStaticRow))
-        val regulars = inventory(rows.filterNot(isStaticRow))
-        val dupCols = statics.map(_._1).toSet
-          .intersect(regulars.map(_._1).toSet)
-        require(dupCols.isEmpty,
-          s"$src: columns used both static and regular: " +
-            dupCols.toSeq.sorted.mkString(","))
-        typing.foreach { ty =>
-          // the frame's static/regular split must agree with the
-          // schema's declared static modifiers
-          statics.map(_._1).find(!ty.staticCols(_)).foreach(c =>
-            throw new IllegalArgumentException(
-              s"$src: column '$c' is static in the data but not " +
-                "declared STATIC in the CQL schema"))
-          regulars.map(_._1).find(ty.staticCols).foreach(c =>
-            throw new IllegalArgumentException(
-              s"$src: column '$c' is declared STATIC but appears on " +
-                "clustered rows"))
-          require(ty.clusteringTypes.size == nClust || nClust == 0,
-            s"$src: data has $nClust clustering values but the CQL " +
-              s"schema declares ${ty.clusteringTypes.size}")
-        }
-        val clTypes = typing.map(_.clusteringTypes.take(nClust))
-          .getOrElse(Seq.fill(nClust)(BigFormat.Utf8Type))
         val parts = rows.groupBy(_.partition_key).toSeq.map {
-          case (pk, prs) =>
-            val partDel = prs.filter(_.row_kind == "PARTITION_DELETION")
-              .flatMap(_.deletion_us).maxOption
-            val atoms = Seq.newBuilder[BigFormat.Atom]
-            // the 3.0 format requires unfiltereds (rows AND range-
-            // tombstone markers, INTERLEAVED) in clustering-comparator
-            // order — component-wise under the declared types, kinds
-            // resolving ties — not a rendered-string order (which
-            // would misorder numeric/negative clusterings and park
-            // every marker at the front). Cassandra refuses anything
-            // else on load, and the promoted index assumes it.
-            val unfiltereds = Seq.newBuilder[
-              (Seq[Option[Array[Byte]]], Int, BigFormat.Atom)]
-            def encPrefix(cl: Seq[Option[String]]): Seq[Option[Array[Byte]]] =
-              cl.zipWithIndex.map { case (v, i) =>
-                v.map(BigFormat.encodeValue(clTypes(i), _))
-              }
-            prs.filter(_.row_kind == "RANGE_TOMBSTONE_BOUND")
-              .sortBy(r => (r.clustering.map(_.mkString("\u0000"))
-                .getOrElse(""), r.name.getOrElse("")))
-              .foreach { r =>
-                val kind = boundKind(r.name.get)
-                val cl = r.clustering.getOrElse(Nil).map(Option(_))
-                unfiltereds += ((encPrefix(cl), kind,
-                  BigFormat.MarkerAtom(kind, cl, Seq(r.deletion_us.get))))
-              }
-            // build atoms for one (static or clustered) row group
-            def rowPieces(crs: Array[SinkRow],
-                cols: Seq[(String, String)])
-                : (Seq[BigFormat.CellAtom], Seq[(String, Long)]) = {
-              // a nameless cell kind would silently fall out of
-              // pathsOf below — and a dropped cell tombstone can
-              // RESURRECT deleted data on a later merge, so refuse
-              // loudly (same pattern as the unknown-row_kind guard)
-              crs.find(r => r.name.isEmpty &&
-                (r.row_kind == "ROW" || r.row_kind == "CELL_DELETION"))
-                .foreach(r => throw new IllegalArgumentException(
-                  s"$src: ${r.row_kind} without a column name is not " +
-                    "encodable by the binary sink"))
-              val complexDels = crs
-                .filter(_.row_kind == "COMPLEX_DELETION")
-                .map(r => (r.name.getOrElse(
-                  throw new IllegalArgumentException(
-                    s"$src: COMPLEX_DELETION without a column name")),
-                  r.deletion_us.get))
-                .groupBy(_._1).map { case (c, ds) =>
-                  (c, ds.map(_._2).max)
-                }.toSeq.sortBy(_._1)
-              val cellAtoms = cols.flatMap { case (nm, _) =>
-                def pathsOf(r: SinkRow): Option[Option[String]] =
-                  r.name.map(splitPath).collect {
-                    case (c, p) if c == nm => p
-                  }
-                val dels = crs.filter(_.row_kind == "CELL_DELETION")
-                  .flatMap { r =>
-                    pathsOf(r).map { pth =>
-                      val ts = r.cell.flatMap(_.writetime_us)
-                        .orElse(r.deletion_us).getOrElse(
-                          throw new IllegalArgumentException(
-                            s"$src: CELL_DELETION of '$nm' carries no timestamp"))
-                      val ldt = r.cell.flatMap(_.expire_us)
-                        .map(e => (e / 1000000L).toInt)
-                        .getOrElse((ts / 1000000L).toInt)
-                      BigFormat.CellAtom(nm, ts, None, Some(ldt), None,
-                        deleted = true, path = pth)
-                    }
-                  }
-                val lives = crs.filter(_.row_kind == "ROW")
-                  .flatMap { r =>
-                    pathsOf(r).flatMap { pth =>
-                      r.cell.map { c =>
-                        BigFormat.CellAtom(nm, c.writetime_us.get,
-                          c.ttl_s,
-                          c.expire_us.map(e => (e / 1000000L).toInt),
-                          c.value, deleted = false, path = pth)
-                      }
-                    }
-                  }
-                dels ++ lives
-              }
-              (cellAtoms, complexDels)
-            }
-            // the static row precedes every clustered row on disk
-            val staticPrs = prs.filter(isStaticRow)
-            if (staticPrs.nonEmpty) {
-              val (cellAtoms, complexDels) = rowPieces(staticPrs, statics)
-              if (cellAtoms.nonEmpty || complexDels.nonEmpty)
-                atoms += BigFormat.RowAtom(Nil, None, None, None, None,
-                  cellAtoms, complexDels, static = true)
-            }
-            prs.filterNot(isStaticRow)
-              .filter(r => r.row_kind == "ROW" ||
-              r.row_kind == "PK_LIVENESS" || r.row_kind == "ROW_DELETION" ||
-              r.row_kind == "CELL_DELETION" ||
-              r.row_kind == "COMPLEX_DELETION")
-              .groupBy(_.clustering.map(_.map(Option(_))).getOrElse(Nil))
-              .toSeq.sortBy(_._1.map(_.getOrElse("")).mkString("\u0000"))
-              .foreach { case (cl, crs) =>
-                val rowDel = crs.filter(_.row_kind == "ROW_DELETION")
-                  .flatMap(_.deletion_us).maxOption
-                val pkLive = crs.find(_.row_kind == "PK_LIVENESS")
-                  .flatMap(_.cell)
-                val (cellAtoms, complexDels) = rowPieces(crs, regulars)
-                if (rowDel.isDefined || pkLive.isDefined ||
-                  cellAtoms.nonEmpty || complexDels.nonEmpty)
-                  unfiltereds += ((encPrefix(cl), BigFormat.Kind.Clustering,
-                    BigFormat.RowAtom(cl,
-                      pkLive.flatMap(_.writetime_us),
-                      pkLive.flatMap(_.ttl_s),
-                      pkLive.flatMap(_.expire_us)
-                        .map(e => (e / 1000000L).toInt),
-                      rowDel, cellAtoms.toSeq, complexDels)))
-              }
-            // comparator-sort rows + markers together (stable, so the
-            // deterministic pre-sorts above break exact-kind ties)
-            atoms ++= unfiltereds.result()
-              .sorted(new Ordering[
-                (Seq[Option[Array[Byte]]], Int, BigFormat.Atom)] {
-                def compare(x: (Seq[Option[Array[Byte]]], Int, BigFormat.Atom),
-                    y: (Seq[Option[Array[Byte]]], Int, BigFormat.Atom)): Int =
-                  BigFormat.compareClusterable(
-                    clTypes, x._1, x._2, y._1, y._2)
-              })
-              .map(_._3)
-            BigFormat.PartitionData(pk, partDel, atoms.result())
+          case (pk, prs) => framePartition(src, pk, prs)
         }
-        // per-file EncodingStats minima over what will be written
-        val allTs = parts.flatMap(p => p.deletionUs.toSeq ++ p.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTsUs.toSeq ++ r.deletionUs.toSeq ++
-              r.cells.map(_.tsUs) ++ r.complexDeletions.map(_._2)
-          case m: BigFormat.MarkerAtom => m.deletions
-        })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = BigFormat.Header(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min,
-          keyType = typing.map(_.keyType).getOrElse(BigFormat.Utf8Type),
-          clusteringTypes = clTypes,
-          staticColumns = statics,
-          regularColumns = regulars)
-        // MetadataCollector role (single pass, O(1) state beyond the
-        // drop-time histogram's bounded bins): every cell/liveness
-        // updates the TTL bound with its ttl — 0 when non-expiring —
-        // and the deletion-time bound with its localDeletionTime —
-        // Int.MaxValue (NO_DELETION_TIME) when live; deletions of
-        // every granularity update timestamp + deletion-time bounds;
-        // only FINITE deletion times feed the droppability histogram
-        var cMinTs = Long.MaxValue; var cMaxTs = Long.MinValue
-        var cMinLdt = Int.MaxValue; var cMaxLdt = Int.MinValue
-        var cMinTtl = Int.MaxValue; var cMaxTtl = Int.MinValue
-        var nRows = 0L; var nCells = 0L
-        var drop = OldFormat.TombstoneHistogram.empty
-        // MetadataCollector.updateClusteringValues' accounting: per
-        // clustering column, the min/max ENCODED value under that
-        // column's own comparator, fed by every clustered row AND
-        // range-tombstone marker (static rows excluded — Cassandra
-        // never feeds STATIC_CLUSTERING to the collector). The
-        // serialized form keeps the contiguous defined prefix.
-        val clMin = Array.fill[Option[Array[Byte]]](clTypes.size)(None)
-        val clMax = Array.fill[Option[Array[Byte]]](clTypes.size)(None)
-        def upClustering(cl: Seq[Option[String]]): Unit = {
-          var i = 0
-          val n = math.min(cl.size, clTypes.size)
-          while (i < n) {
-            cl(i) match {
-              case Some(v) =>
-                val enc = BigFormat.encodeValue(clTypes(i), v)
-                if (clMin(i).forall(cur =>
-                  BigFormat.compareEncoded(clTypes(i), enc, cur) < 0))
-                  clMin(i) = Some(enc)
-                if (clMax(i).forall(cur =>
-                  BigFormat.compareEncoded(clTypes(i), enc, cur) > 0))
-                  clMax(i) = Some(enc)
-              case None =>
-            }
-            i += 1
-          }
-        }
-        def upTs(v: Long): Unit = {
-          if (v < cMinTs) cMinTs = v; if (v > cMaxTs) cMaxTs = v
-        }
-        def upLdt(v: Int): Unit = {
-          if (v < cMinLdt) cMinLdt = v; if (v > cMaxLdt) cMaxLdt = v
-          if (v != Int.MaxValue) drop = drop.update(v.toDouble)
-        }
-        def upTtl(v: Int): Unit = {
-          if (v < cMinTtl) cMinTtl = v; if (v > cMaxTtl) cMaxTtl = v
-        }
-        def upDeletion(markedUs: Long): Unit = {
-          upTs(markedUs); upLdt((markedUs / 1000000L).toInt)
-        }
-        parts.foreach { p =>
-          p.deletionUs.foreach(upDeletion)
-          p.atoms.foreach {
-            case r: BigFormat.RowAtom =>
-              nRows += 1
-              if (!r.static) upClustering(r.clustering)
-              r.livenessTsUs.foreach { t =>
-                upTs(t)
-                upTtl(r.livenessTtlS.getOrElse(0))
-                upLdt(r.livenessLdtS.getOrElse(Int.MaxValue))
-              }
-              r.deletionUs.foreach(upDeletion)
-              r.complexDeletions.foreach { case (_, d) => upDeletion(d) }
-              r.cells.foreach { c =>
-                nCells += 1
-                upTs(c.tsUs)
-                upTtl(c.ttlS.getOrElse(0))
-                upLdt(c.ldtS.getOrElse(Int.MaxValue))
-              }
-            case m: BigFormat.MarkerAtom =>
-              upClustering(m.clustering)
-              m.deletions.foreach(upDeletion)
-          }
-        }
-        val collected = BigFormat.StatsCollected(
-          minTimestampUs =
-            if (cMinTs == Long.MaxValue) BigFormat.TimestampEpochUs
-            else cMinTs,
-          maxTimestampUs =
-            if (cMaxTs == Long.MinValue) BigFormat.TimestampEpochUs
-            else cMaxTs,
-          minLdtS = cMinLdt,
-          maxLdtS = if (cMaxLdt == Int.MinValue) Int.MaxValue else cMaxLdt,
-          minTtlS = if (cMinTtl == Int.MaxValue) 0 else cMinTtl,
-          maxTtlS = if (cMaxTtl == Int.MinValue) 0 else cMaxTtl,
-          tombstoneDropTime = drop,
-          totalColumnsSet = nCells,
-          totalRows = nRows,
-          // the contiguous defined prefix: clustering prefixes are
-          // dense, so a gap can only come from mid-prefix nulls —
-          // truncate there rather than serialize a hole
-          minClusteringValues = clMin.takeWhile(_.isDefined)
-            .flatten.map(_.toIndexedSeq: Seq[Byte]).toSeq,
-          maxClusteringValues = clMax.takeWhile(_.isDefined)
-            .flatten.map(_.toIndexedSeq: Seq[Byte]).toSeq)
-        val fs = FileSystem.get(
-          java.net.URI.create(outDir), hconf.value.value)
-        val dir = new HPath(s"$outDir/$keyspace/$table")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        // the FULL loadable component set — primary index, bloom
-        // filter, sampled summary, digest and TOC alongside
-        // Data/Statistics (the reference's bulk-load-back contract,
-        // `Cassandra3TTLRemoverTest.java:168-176`)
-        val (dataBytes, index) =
-          BigFormat.writeDataFileIndexed(parts, header, columnIndexSize)
-        SSTableComponents.buildAll(dataBytes, index, header,
-          compression = compression, stats = Some(collected))
-          .foreach { case (comp, bytes) =>
-            write(s"nb-$gen-big-$comp", bytes)
-          }
+        writeGeneration(target, hconf.value.value, src, gen, parts, nClust,
+          uses)
         (s"$table/nb-$gen-big-Data.db", rows.length.toLong)
       }
       .collect().toSeq.sortBy(_._1)
+  }
+
+  /** Where and how a sink writes its generations: the output table
+    * directory, the resolved CQL typing (None = text everywhere), the
+    * compressor and the column-index block size. */
+  private final case class SinkTarget(dir: String,
+      typing: Option[SinkTyping], compression: Option[String],
+      columnIndexSize: Int) {
+    compression.foreach(c => require(CompressedData.Supported(c),
+      s"unsupported sink compressor '$c' (supported: " +
+        s"${CompressedData.Supported.toSeq.sorted.mkString(", ")})"))
+  }
+
+  /** The bridge row kinds the binary sink encodes. */
+  private val SinkRowKinds = Set("ROW", "PK_LIVENESS", "ROW_DELETION",
+    "CELL_DELETION", "COMPLEX_DELETION", "PARTITION_DELETION",
+    "RANGE_TOMBSTONE_BOUND")
+
+  /** A NULL clustering on a cell-bearing kind marks a STATIC row (the
+    * reader's sentinel); its columns form the header's static set,
+    * disjoint from the regular set. */
+  private def isStaticRow(r: SinkRow): Boolean =
+    r.clustering.isEmpty && (r.row_kind == "ROW" ||
+      r.row_kind == "CELL_DELETION" || r.row_kind == "COMPLEX_DELETION")
+
+  /** Output generations for a set of source identities, assigned on the
+    * driver (catalog-sized: one entry per source file), so two sources
+    * in different subdirectories that share a basename generation
+    * (t1/nb-1-big-Data.db and t2/nb-1-big-Data.db under one load root)
+    * can never map to the same output path and silently clobber each
+    * other. Rule: in sorted source order, a source keeps the first
+    * integer of its basename if still free (the reference's
+    * identity-partitioning contract, output generation = input
+    * generation, `Cassandra3TTLRemover.java:57-61`); a collision — or a
+    * nameless source — deterministically takes the smallest unused
+    * generation above the maximum parsed one. */
+  private def assignGenerations(sources: Seq[String]): Map[String, Int] = {
+    val parsed = sources.distinct.sorted.map(s => s -> claimedGeneration(s))
+    var next = parsed.flatMap(_._2).foldLeft(0)(math.max) + 1
+    val used = scala.collection.mutable.Set.empty[Int]
+    parsed.map { case (src, g) =>
+      val gen = g.filterNot(used) match {
+        case Some(free) => free
+        case None => val n = next; next += 1; n
+      }
+      used += gen
+      src -> gen
+    }.toMap
+  }
+
+  /** The one clustering arity of a generation's clustered atoms. */
+  private def clusteringArity(src: String, sizes: Iterator[Int]): Int = {
+    val arity = sizes.distinct.toSeq
+    require(arity.length <= 1,
+      s"$src: heterogeneous clustering arity ${arity.mkString(",")}")
+    arity.headOption.getOrElse(0)
+  }
+
+  /** One partition's bridge rows as the atoms they stand for, in frame
+    * order; [[writeGeneration]] orders them. */
+  private def framePartition(src: String, pk: String,
+      prs: Array[SinkRow]): BigFormat.PartitionData = {
+    val partDel = prs.filter(_.row_kind == "PARTITION_DELETION")
+      .flatMap(_.deletion_us).maxOption
+    val atoms = Seq.newBuilder[BigFormat.Atom]
+    prs.filter(_.row_kind == "RANGE_TOMBSTONE_BOUND").foreach { r =>
+      atoms += BigFormat.MarkerAtom(boundKind(r.name.get),
+        r.clustering.getOrElse(Nil).map(Option(_)), Seq(r.deletion_us.get))
+    }
+    val staticPrs = prs.filter(isStaticRow)
+    if (staticPrs.nonEmpty) {
+      val (cells, complexDels) = rowPieces(src, staticPrs)
+      if (cells.nonEmpty || complexDels.nonEmpty)
+        atoms += BigFormat.RowAtom(Nil, None, None, None, None, cells,
+          complexDels, static = true)
+    }
+    prs.filterNot(isStaticRow)
+      .filter(r => r.row_kind == "ROW" ||
+        r.row_kind == "PK_LIVENESS" || r.row_kind == "ROW_DELETION" ||
+        r.row_kind == "CELL_DELETION" ||
+        r.row_kind == "COMPLEX_DELETION")
+      .groupBy(_.clustering.map(_.map(Option(_))).getOrElse(Nil))
+      .foreach { case (cl, crs) =>
+        val rowDel = crs.filter(_.row_kind == "ROW_DELETION")
+          .flatMap(_.deletion_us).maxOption
+        val pkLive = crs.find(_.row_kind == "PK_LIVENESS").flatMap(_.cell)
+        val (cells, complexDels) = rowPieces(src, crs)
+        if (rowDel.isDefined || pkLive.isDefined || cells.nonEmpty ||
+          complexDels.nonEmpty)
+          atoms += BigFormat.RowAtom(cl,
+            pkLive.flatMap(_.writetime_us),
+            pkLive.flatMap(_.ttl_s),
+            pkLive.flatMap(_.expire_us).map(e => (e / 1000000L).toInt),
+            rowDel, cells, complexDels)
+      }
+    BigFormat.PartitionData(pk, partDel, atoms.result())
+  }
+
+  /** The cells and whole-collection tombstones of one (static or
+    * clustered) row group, in frame order. */
+  private def rowPieces(src: String, crs: Array[SinkRow])
+      : (Seq[BigFormat.CellAtom], Seq[(String, Long)]) = {
+    // a nameless cell kind has no column to land in — and a dropped
+    // cell tombstone can RESURRECT deleted data on a later merge, so
+    // refuse loudly (same pattern as the unknown-row_kind guard)
+    crs.find(r => r.name.isEmpty &&
+      (r.row_kind == "ROW" || r.row_kind == "CELL_DELETION"))
+      .foreach(r => throw new IllegalArgumentException(
+        s"$src: ${r.row_kind} without a column name is not " +
+          "encodable by the binary sink"))
+    val complexDels = crs.toSeq
+      .filter(_.row_kind == "COMPLEX_DELETION")
+      .map(r => (r.name.getOrElse(throw new IllegalArgumentException(
+        s"$src: COMPLEX_DELETION without a column name")),
+        r.deletion_us.get))
+    val cells = crs.toSeq.flatMap { r =>
+      r.row_kind match {
+        case "CELL_DELETION" =>
+          val (nm, pth) = splitPath(r.name.get)
+          val ts = r.cell.flatMap(_.writetime_us).orElse(r.deletion_us)
+            .getOrElse(throw new IllegalArgumentException(
+              s"$src: CELL_DELETION of '$nm' carries no timestamp"))
+          val ldt = r.cell.flatMap(_.expire_us)
+            .map(e => (e / 1000000L).toInt)
+            .getOrElse((ts / 1000000L).toInt)
+          Some(BigFormat.CellAtom(nm, ts, None, Some(ldt), None,
+            deleted = true, path = pth))
+        case "ROW" => r.cell.map { c =>
+          val (nm, pth) = splitPath(r.name.get)
+          BigFormat.CellAtom(nm, c.writetime_us.get, c.ttl_s,
+            c.expire_us.map(e => (e / 1000000L).toInt), c.value,
+            deleted = false, path = pth)
+        }
+        case _ => None
+      }
+    }
+    (cells, complexDels)
+  }
+
+  /** The per-file EncodingStats minima (timestamp, local deletion
+    * second, TTL) over what will be written, as Cassandra's
+    * EncodingStats collector computes them. */
+  private def encodingMinima(parts: Seq[BigFormat.PartitionData])
+      : (Long, Int, Int) = {
+    var ts = Long.MaxValue; var ldt = Int.MaxValue; var ttl = Int.MaxValue
+    def upTs(v: Long): Unit = if (v < ts) ts = v
+    parts.foreach { p =>
+      p.deletionUs.foreach(upTs)
+      p.atoms.foreach {
+        case r: BigFormat.RowAtom =>
+          r.livenessTsUs.foreach(upTs)
+          r.deletionUs.foreach(upTs)
+          r.complexDeletions.foreach(d => upTs(d._2))
+          r.livenessLdtS.foreach(v => if (v < ldt) ldt = v)
+          r.livenessTtlS.foreach(v => if (v < ttl) ttl = v)
+          r.cells.foreach { c =>
+            upTs(c.tsUs)
+            c.ldtS.foreach(v => if (v < ldt) ldt = v)
+            c.ttlS.foreach(v => if (v < ttl) ttl = v)
+          }
+        case m: BigFormat.MarkerAtom => m.deletions.foreach(upTs)
+      }
+    }
+    (if (ts == Long.MaxValue) BigFormat.TimestampEpochUs else ts,
+      if (ldt == Int.MaxValue) BigFormat.DeletionTimeEpochS else ldt,
+      if (ttl == Int.MaxValue) BigFormat.TtlEpoch else ttl)
+  }
+
+  /** MetadataCollector role over the partitions in on-disk (token)
+    * order — single pass, O(1) state beyond the drop-time histogram's
+    * bounded bins. The histogram merges bins as it goes, so the order
+    * it sees points in is part of its bytes: iterating the written
+    * order makes them depend on the data alone. Every cell/liveness
+    * updates the TTL bound with its ttl — 0 when non-expiring — and
+    * the deletion-time bound with its localDeletionTime —
+    * Int.MaxValue (NO_DELETION_TIME) when live; deletions of every
+    * granularity update timestamp + deletion-time bounds; only FINITE
+    * deletion times feed the droppability histogram. */
+  private def collectStats(sorted: Seq[BigFormat.PartitionData],
+      clTypes: Seq[String]): BigFormat.StatsCollected = {
+    var cMinTs = Long.MaxValue; var cMaxTs = Long.MinValue
+    var cMinLdt = Int.MaxValue; var cMaxLdt = Int.MinValue
+    var cMinTtl = Int.MaxValue; var cMaxTtl = Int.MinValue
+    var nRows = 0L; var nCells = 0L
+    var drop = OldFormat.TombstoneHistogram.empty
+    // MetadataCollector.updateClusteringValues' accounting: per
+    // clustering column, the min/max ENCODED value under that
+    // column's own comparator, fed by every clustered row AND
+    // range-tombstone marker (static rows excluded — Cassandra
+    // never feeds STATIC_CLUSTERING to the collector). The
+    // serialized form keeps the contiguous defined prefix.
+    val clMin = Array.fill[Option[Array[Byte]]](clTypes.size)(None)
+    val clMax = Array.fill[Option[Array[Byte]]](clTypes.size)(None)
+    def upClustering(cl: Seq[Option[String]]): Unit = {
+      var i = 0
+      val n = math.min(cl.size, clTypes.size)
+      while (i < n) {
+        cl(i) match {
+          case Some(v) =>
+            val enc = BigFormat.encodeValue(clTypes(i), v)
+            if (clMin(i).forall(cur =>
+              BigFormat.compareEncoded(clTypes(i), enc, cur) < 0))
+              clMin(i) = Some(enc)
+            if (clMax(i).forall(cur =>
+              BigFormat.compareEncoded(clTypes(i), enc, cur) > 0))
+              clMax(i) = Some(enc)
+          case None =>
+        }
+        i += 1
+      }
+    }
+    def upTs(v: Long): Unit = {
+      if (v < cMinTs) cMinTs = v; if (v > cMaxTs) cMaxTs = v
+    }
+    def upLdt(v: Int): Unit = {
+      if (v < cMinLdt) cMinLdt = v; if (v > cMaxLdt) cMaxLdt = v
+      if (v != Int.MaxValue) drop = drop.update(v.toDouble)
+    }
+    def upTtl(v: Int): Unit = {
+      if (v < cMinTtl) cMinTtl = v; if (v > cMaxTtl) cMaxTtl = v
+    }
+    def upDeletion(markedUs: Long): Unit = {
+      upTs(markedUs); upLdt((markedUs / 1000000L).toInt)
+    }
+    sorted.foreach { p =>
+      p.deletionUs.foreach(upDeletion)
+      p.atoms.foreach {
+        case r: BigFormat.RowAtom =>
+          nRows += 1
+          if (!r.static) upClustering(r.clustering)
+          r.livenessTsUs.foreach { t =>
+            upTs(t)
+            upTtl(r.livenessTtlS.getOrElse(0))
+            upLdt(r.livenessLdtS.getOrElse(Int.MaxValue))
+          }
+          r.deletionUs.foreach(upDeletion)
+          r.complexDeletions.foreach { case (_, d) => upDeletion(d) }
+          r.cells.foreach { c =>
+            nCells += 1
+            upTs(c.tsUs)
+            upTtl(c.ttlS.getOrElse(0))
+            upLdt(c.ldtS.getOrElse(Int.MaxValue))
+          }
+        case m: BigFormat.MarkerAtom =>
+          upClustering(m.clustering)
+          m.deletions.foreach(upDeletion)
+      }
+    }
+    BigFormat.StatsCollected(
+      minTimestampUs =
+        if (cMinTs == Long.MaxValue) BigFormat.TimestampEpochUs
+        else cMinTs,
+      maxTimestampUs =
+        if (cMaxTs == Long.MinValue) BigFormat.TimestampEpochUs
+        else cMaxTs,
+      minLdtS = cMinLdt,
+      maxLdtS = if (cMaxLdt == Int.MinValue) Int.MaxValue else cMaxLdt,
+      minTtlS = if (cMinTtl == Int.MaxValue) 0 else cMinTtl,
+      maxTtlS = if (cMaxTtl == Int.MinValue) 0 else cMaxTtl,
+      tombstoneDropTime = drop,
+      totalColumnsSet = nCells,
+      totalRows = nRows,
+      // the contiguous defined prefix: clustering prefixes are
+      // dense, so a gap can only come from mid-prefix nulls —
+      // truncate there rather than serialize a hole
+      minClusteringValues = clMin.takeWhile(_.isDefined)
+        .flatten.map(_.toIndexedSeq: Seq[Byte]).toSeq,
+      maxClusteringValues = clMax.takeWhile(_.isDefined)
+        .flatten.map(_.toIndexedSeq: Seq[Byte]).toSeq)
+  }
+
+  /** Encodes and writes ONE output generation `nb-<gen>` — the encoder
+    * both sink routes share, so the header and ordering rules live in
+    * one place. `parts` are the generation's partitions as atoms in any
+    * order; `nClust` and `uses` (static?, column, complex?) describe
+    * the source's clustering arity and every column its cells and
+    * collection tombstones name, from which the serialization header is
+    * rebuilt: simple columns first, then complex, each sorted by name
+    * (complex columns re-encode as map<text,text> without typing, the
+    * value-opaque string carry of the whole cell model). Then, under
+    * the output types: cells ordered by header column (a cell
+    * tombstone before a live cell of the same column), collection
+    * tombstones merged per column, the static row first and every
+    * other unfiltered in clustering-comparator order, partitions in
+    * token order; stats, Data/Index and the other components follow
+    * from that one order. */
+  private def writeGeneration(target: SinkTarget,
+      conf: org.apache.hadoop.conf.Configuration, src: String, gen: Int,
+      parts: Seq[BigFormat.PartitionData], nClust: Int,
+      uses: Iterator[(Boolean, String, Boolean)]): Unit = {
+    val typing = target.typing
+    val used = uses.toSet
+    def inventory(static: Boolean): Seq[(String, String)] = {
+      val side = used.toSeq.filter(_._1 == static)
+      val complexCols = side.collect { case (_, c, true) => c }.distinct.sorted
+      val bareNames = side.collect { case (_, c, false) => c }.distinct.sorted
+      val clash = bareNames.toSet.intersect(complexCols.toSet)
+      require(clash.isEmpty,
+        s"$src: columns used both simple and complex: " +
+          clash.toSeq.sorted.mkString(","))
+      def resolve(nm: String, complex: Boolean): String =
+        typing match {
+          case None =>
+            if (complex)
+              BigFormat.mapType(BigFormat.Utf8Type, BigFormat.Utf8Type)
+            else BigFormat.Utf8Type
+          case Some(ty) =>
+            val t = ty.columnTypes.getOrElse(nm,
+              throw new IllegalArgumentException(
+                s"$src: column '$nm' is not declared in the CQL schema"))
+            require(BigFormat.complexOf(t).isDefined == complex,
+              s"$src: column '$nm' is ${if (complex) "" else "not "}" +
+                s"a collection in the data but declared '$t'")
+            t
+        }
+      bareNames.map(n => n -> resolve(n, false)) ++
+        complexCols.map(n => n -> resolve(n, true))
+    }
+    val statics = inventory(static = true)
+    val regulars = inventory(static = false)
+    val dupCols = statics.map(_._1).toSet.intersect(regulars.map(_._1).toSet)
+    require(dupCols.isEmpty,
+      s"$src: columns used both static and regular: " +
+        dupCols.toSeq.sorted.mkString(","))
+    typing.foreach { ty =>
+      // the frame's static/regular split must agree with the
+      // schema's declared static modifiers
+      statics.map(_._1).find(!ty.staticCols(_)).foreach(c =>
+        throw new IllegalArgumentException(
+          s"$src: column '$c' is static in the data but not " +
+            "declared STATIC in the CQL schema"))
+      regulars.map(_._1).find(ty.staticCols).foreach(c =>
+        throw new IllegalArgumentException(
+          s"$src: column '$c' is declared STATIC but appears on " +
+            "clustered rows"))
+      require(ty.clusteringTypes.size == nClust || nClust == 0,
+        s"$src: data has $nClust clustering values but the CQL " +
+          s"schema declares ${ty.clusteringTypes.size}")
+    }
+    val clTypes = typing.map(_.clusteringTypes.take(nClust))
+      .getOrElse(Seq.fill(nClust)(BigFormat.Utf8Type))
+    val keyType = typing.map(_.keyType).getOrElse(BigFormat.Utf8Type)
+    val staticOrder = statics.map(_._1).zipWithIndex.toMap
+    val regularOrder = regulars.map(_._1).zipWithIndex.toMap
+    def ordered(r: BigFormat.RowAtom): BigFormat.RowAtom = {
+      val order = if (r.static) staticOrder else regularOrder
+      r.copy(
+        cells = r.cells.sortBy(c =>
+          2 * order(c.name) + (if (c.deleted) 0 else 1)),
+        complexDeletions =
+          if (r.complexDeletions.size < 2) r.complexDeletions
+          else r.complexDeletions.groupBy(_._1)
+            .map { case (c, ds) => (c, ds.map(_._2).max) }
+            .toSeq.sortBy(_._1))
+    }
+    def encPrefix(cl: Seq[Option[String]]): Seq[Option[Array[Byte]]] =
+      cl.zipWithIndex.map { case (v, i) =>
+        v.map(BigFormat.encodeValue(clTypes(i), _))
+      }
+    // the 3.0 format requires unfiltereds (rows AND range-tombstone
+    // markers, INTERLEAVED) in clustering-comparator order —
+    // component-wise under the declared types, kinds resolving ties —
+    // not a rendered-string order (which would misorder
+    // numeric/negative clusterings and park every marker at the
+    // front). Cassandra refuses anything else on load, and the
+    // promoted index assumes it. The sort is stable, so the rendered
+    // pre-sorts break exact-kind ties deterministically.
+    val comparator = new Ordering[
+        (Seq[Option[Array[Byte]]], Int, BigFormat.Atom)] {
+      def compare(x: (Seq[Option[Array[Byte]]], Int, BigFormat.Atom),
+          y: (Seq[Option[Array[Byte]]], Int, BigFormat.Atom)): Int =
+        BigFormat.compareClusterable(clTypes, x._1, x._2, y._1, y._2)
+    }
+    def normalized(p: BigFormat.PartitionData): BigFormat.PartitionData = {
+      val markers = p.atoms.collect { case m: BigFormat.MarkerAtom => m }
+        .sortBy(m => (m.clustering.map(_.orNull).mkString("\u0000"),
+          boundName(m.kind, 0, src)))
+        .map(m => (encPrefix(m.clustering), m.kind, m: BigFormat.Atom))
+      val rows = p.atoms
+        .collect { case r: BigFormat.RowAtom if !r.static => r }
+        .sortBy(_.clustering.map(_.getOrElse("")).mkString("\u0000"))
+        .map(r => (encPrefix(r.clustering), BigFormat.Kind.Clustering,
+          ordered(r): BigFormat.Atom))
+      val static = p.atoms
+        .collect { case r: BigFormat.RowAtom if r.static => ordered(r) }
+      p.copy(atoms = static ++ (markers ++ rows).sorted(comparator).map(_._3))
+    }
+    val sorted = BigFormat.tokenOrder(parts.map(normalized), keyType)
+    val (minTs, minLdt, minTtl) = encodingMinima(sorted)
+    val header = BigFormat.Header(minTs, minLdt, minTtl, keyType = keyType,
+      clusteringTypes = clTypes, staticColumns = statics,
+      regularColumns = regulars)
+    val fs = FileSystem.get(java.net.URI.create(target.dir), conf)
+    // the FULL loadable component set — primary index, bloom filter,
+    // sampled summary, digest and TOC alongside Data/Statistics (the
+    // reference's bulk-load-back contract,
+    // `Cassandra3TTLRemoverTest.java:168-176`)
+    val (dataBytes, index) = BigFormat.writeSortedDataFile(sorted, header,
+      target.columnIndexSize)
+    SSTableComponents.buildAll(dataBytes, index, header,
+      compression = target.compression,
+      stats = Some(collectStats(sorted, clTypes)))
+      .foreach { case (comp, bytes) =>
+        val os = fs.create(new HPath(s"${target.dir}/nb-$gen-big-$comp"), true)
+        try os.write(bytes) finally os.close()
+      }
+  }
+
+  /** Modern-era (3.x `m*` / 4.x `n*`) generations decode through
+    * [[BigFormat]] with their own serialization header. */
+  private def modernEra(dataPath: String): Boolean = {
+    val v = versionOf(dataPath.split('/').last)
+    v.startsWith("m") || v.startsWith("n")
+  }
+
+  /** The listing of `root` when the file route ([[rewriteGenerations]])
+    * can rewrite it: at least one Data.db, all of them modern-era, and
+    * every identity claiming its own generation
+    * ([[sourceSetViolations]]) — then each input keeps its generation
+    * whether or not it carries rows, exactly as the frame route
+    * assigns. None otherwise. */
+  private[graft] def rewritableLake(spark: SparkSession, root: String)
+      : Option[Seq[(String, SiblingInfo)]] =
+    Some(listLake(root, spark.sessionState.newHadoopConf())).filter(l =>
+      l.nonEmpty && l.forall(f => modernEra(f._1)) &&
+        sourceSetViolations(l.map(f => sstableIdentity(f._1))).isEmpty)
+
+  /** A decoded partition as the frame route writes it after the TTL
+    * strip — the bridge model's view, which [[BinPartitionReader]]'s
+    * `expand` and the sink's row grouping produce together: TTL and
+    * expiry stripped from cells and row liveness; row liveness kept
+    * only on a row with neither cells nor a row deletion (expand emits
+    * PK_LIVENESS for no other row); a cell tombstone keeps timestamp and
+    * local deletion second, no value; range-tombstone boundaries split
+    * into their two bounds; rows with nothing left dropped. Also
+    * returns the bridge rows `expand` emits for it, the count the sink
+    * reports; a partition with none writes nothing. A static row has
+    * no bridge form for a row deletion or primary-key liveness (neither
+    * exists in Cassandra), so one refuses loudly. */
+  private def bridgePartition(src: String, p: BigFormat.PartitionData)
+      : (BigFormat.PartitionData, Long) = {
+    var rows = p.deletionUs.size.toLong
+    val atoms = Seq.newBuilder[BigFormat.Atom]
+    p.atoms.foreach {
+      case r: BigFormat.RowAtom =>
+        if (r.static && (r.deletionUs.isDefined || r.livenessTsUs.isDefined))
+          throw new IllegalStateException(s"$src: partition ${p.key}: a " +
+            "static row with a row deletion or primary-key liveness has no " +
+            "bridge-row form")
+        val cells = r.cells.map(c =>
+          if (c.deleted) c.copy(ttlS = None, value = None,
+            ldtS = Some(c.ldtS.getOrElse((c.tsUs / 1000000L).toInt)))
+          else c.copy(ttlS = None, ldtS = None))
+        val live =
+          if (r.cells.isEmpty && r.deletionUs.isEmpty) r.livenessTsUs
+          else None
+        rows += r.deletionUs.size + r.complexDeletions.size + cells.size +
+          live.size
+        if (live.isDefined || r.deletionUs.isDefined || cells.nonEmpty ||
+          r.complexDeletions.nonEmpty)
+          atoms += r.copy(livenessTsUs = live, livenessTtlS = None,
+            livenessLdtS = None, cells = cells)
+      case m: BigFormat.MarkerAtom =>
+        rows += m.deletions.size
+        m.deletions.zipWithIndex.foreach { case (d, side) =>
+          atoms += BigFormat.MarkerAtom(boundKind(boundName(m.kind, side, src)),
+            m.clustering, Seq(d))
+        }
+    }
+    (p.copy(atoms = atoms.result()), rows)
+  }
+
+  /** The FILE route of the unmerged binary rewrite — the reference's
+    * own shape (`Cassandra4TTLRemover.java:74-91`): one Spark task per
+    * listed `*-Data.db` opens the generation ([[SSTableOpen]]: header,
+    * ring check, chunk map, and the digest check when `verify`),
+    * decodes its partitions, strips TTLs on them ([[bridgePartition]])
+    * and writes output generation `nb-<g>` through [[writeGeneration]],
+    * where g is the generation the frame route assigns. No DSv2 scan,
+    * no bridge rows, no shuffle: one job, one task per generation, and
+    * the same bytes as [[writeSSTables]] over the stripped
+    * [[readBinary]] frame. `listing` comes from [[rewritableLake]].
+    * Decoded partitions count into the `partitionsServed` accumulator.
+    * Returns (sstable, bridge rows written) per output file. */
+  private[graft] def rewriteGenerations(spark: SparkSession,
+      listing: Seq[(String, SiblingInfo)], outDir: String,
+      keyspace: String, table: String, compression: Option[String],
+      verify: Boolean): Seq[(String, Long)] = {
+    val identities = listing.map(f => sstableIdentity(f._1))
+    require(listing.forall(f => modernEra(f._1)) &&
+      sourceSetViolations(identities).isEmpty,
+      "rewriteGenerations: the listing must come from rewritableLake")
+    val target = SinkTarget(s"$outDir/$keyspace/$table", None,
+      compression, BigFormat.ColumnIndexSize)
+    val genOf = assignGenerations(identities)
+    val hconf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val served = spark.sparkContext.longAccumulator(MetricPartitionsServed)
+    val tasks = listing.map { case (path, info) =>
+      (path, info, genOf(sstableIdentity(path)))
+    }
+    spark.sparkContext.parallelize(tasks, math.max(1, tasks.size))
+      .map { case (path, info, gen) =>
+        val src = sstableIdentity(path)
+        val open = new SSTableOpen(path, hconf.value.value, Some(info))
+        if (verify) open.verifyDigest()
+        val in = open.openFullStream()
+        val parts =
+          try BigFormat.partitions(open.header, in, path).map { p =>
+            served.add(1)
+            bridgePartition(src, p)
+          }.filter(_._2 > 0).toVector
+          finally in.close()
+        if (parts.nonEmpty) {
+          val bridged = parts.map(_._1)
+          def atoms = bridged.iterator.flatMap(_.atoms)
+          writeGeneration(target, hconf.value.value, src, gen, bridged,
+            clusteringArity(src, atoms.collect {
+              case r: BigFormat.RowAtom if !r.static => r.clustering.size
+              case m: BigFormat.MarkerAtom => m.clustering.size
+            }),
+            atoms.flatMap {
+              case r: BigFormat.RowAtom =>
+                r.cells.iterator
+                  .map(c => (r.static, c.name, c.path.isDefined)) ++
+                  r.complexDeletions.iterator.map(d => (r.static, d._1, true))
+              case _ => Iterator.empty
+            })
+        }
+        (s"$table/nb-$gen-big-Data.db", parts.map(_._2).sum)
+      }
+      .collect().filter(_._2 > 0).toSeq.sortBy(_._1)
   }
 
   /** Registered `src_sstable_roundtrip` — the reference's WHOLE
