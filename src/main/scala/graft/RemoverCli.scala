@@ -755,8 +755,8 @@ object RemoverCli {
     * compacted generation: a major compaction. Returns rows written,
     * counted as bridge rows (the sink's own per-file manifest).
     *
-    * Two routes, picked from the arguments and the lake listing, write
-    * the same bytes:
+    * Three routes, picked from the arguments and the lake listing,
+    * write the same bytes:
     *  - the FILE route ([[graft.sources.SSTableBinaryV2.rewriteGenerations]])
     *    is the reference's own shape: one task per `*-Data.db` decodes
     *    the generation, strips TTLs on its decoded partitions and
@@ -768,6 +768,15 @@ object RemoverCli {
     *    every basename claiming its own generation, so each input keeps
     *    its generation number exactly as the frame route assigns it.
     *    `--verify` runs the reader's own digest check per file;
+    *  - the MERGE route ([[graft.sources.SSTableBinaryV2.mergeGenerations]])
+    *    is Cassandra's compaction shape: one task per output generation
+    *    reads every input at its ring bucket through Index.db, merges
+    *    each key's versions under the LWW rules and encodes the bucket
+    *    — no bridge rows, no shuffle, no window plan. It takes
+    *    `--merge lww` with any `--out-generations` ([[mergeRouteLake]])
+    *    under the same argument rules (no `--scrub`, no `--cql`) over a
+    *    lake whose generations are all modern-era and all indexed.
+    *    `--verify` checks each input's digest once;
     *  - every other shape takes the FRAME route: the bridge-row frame
     *    ([[sstableSinkInput]]) through `writeSSTables`. It decodes its
     *    input once: the sink gets its source set from the driver instead
@@ -781,27 +790,47 @@ object RemoverCli {
     *    the unmerged `--out-generations N` split, whose `<src>#sK` names
     *    share their source's generation by design. Dump-JSON input
     *    (`--format sstabledump`) has no binary listing and also keeps
-    *    the pass. */
+    *    the pass. The frame route still merges dump input, `--scrub`,
+    *    `--cql`, 2.x lakes and index-less generations. */
   private def runSstableSink(spark: SparkSession, args: CliArgs): Long =
-    (fileRouteLake(spark, args) match {
-      case Some(lake) => graft.sources.SSTableBinaryV2.rewriteGenerations(
-        spark, lake, args.out, args.keyspace, args.table,
-        args.compress.map(Compressors), args.verify)
-      case None =>
+    mergeRouteLake(spark, args).map(lake =>
+      graft.sources.SSTableBinaryV2.mergeGenerations(spark, lake,
+        args.out, args.keyspace, args.table,
+        args.compress.map(Compressors), args.verify, args.outGenerations))
+      .orElse(fileRouteLake(spark, args).map(lake =>
+        graft.sources.SSTableBinaryV2.rewriteGenerations(spark, lake,
+          args.out, args.keyspace, args.table,
+          args.compress.map(Compressors), args.verify)))
+      .getOrElse {
         val (frame, sources) = sstableSinkInput(spark, args)
         graft.sources.SSTableBinaryV2.writeSSTables(frame, args.out,
           args.keyspace, args.table, args.cqlSchema,
           args.compress.map(Compressors), sources = sources)
-    }).map(_._2).sum
+      }.map(_._2).sum
 
-  /** The lake listing [[runSstableSink]]'s file route rewrites, or None
-    * when the arguments or the lake call for the frame route. */
+  /** The binary-to-binary shapes either file route can take: no
+    * `--scrub` (salvage needs the reader's index-paced walk) and no
+    * `--cql` (it types the output). */
+  private def fileRouteArgs(args: CliArgs): Boolean =
+    args.format == "sstable" && args.sink == "sstable" && !args.scrub &&
+      args.cqlText.isEmpty && args.cqlSchema.isEmpty
+
+  /** The lake listing [[runSstableSink]]'s rewrite file route rewrites,
+    * or None when the arguments or the lake call for another route. */
   private[graft] def fileRouteLake(spark: SparkSession, args: CliArgs)
       : Option[Seq[(String, graft.sources.SSTableBinaryV2.SiblingInfo)]] =
-    if (args.format == "sstable" && args.sink == "sstable" &&
-      args.merge.isEmpty && args.outGenerations == 1 && !args.scrub &&
-      args.cqlText.isEmpty && args.cqlSchema.isEmpty)
+    if (fileRouteArgs(args) && args.merge.isEmpty &&
+      args.outGenerations == 1)
       graft.sources.SSTableBinaryV2.rewritableLake(spark, args.in)
+    else None
+
+  /** The lake listing [[runSstableSink]]'s merge file route compacts
+    * (`--merge lww`, any `--out-generations`), or None when the
+    * arguments or the lake call for another route. */
+  private[graft] def mergeRouteLake(spark: SparkSession, args: CliArgs)
+      : Option[Seq[(String, graft.sources.SSTableBinaryV2.SiblingInfo)]] =
+    if (fileRouteArgs(args) && args.merge.contains("lww"))
+      graft.sources.SSTableBinaryV2.mergeableLake(spark, args.in)
     else None
 
   /** The frame [[runSstableSink]] writes and the source set it hands
@@ -821,12 +850,18 @@ object RemoverCli {
         .mergeTree(spark, args.in, reader)
       val live = col("row_kind").isin("ROW", "PK_LIVENESS")
       val (genName, names) = mergedGenerations(args)
+      // a surviving cell tombstone keeps its timestamp and its own
+      // local deletion second, as the unmerged rewrite does
       val reshaped = merged.select(
         col("partition_key"), col("clustering"), col("row_kind"),
         col("name"),
         when(live, struct(col("value"), col("writetime_us"),
           lit(null).cast("int").as("ttl_s"),
-          lit(null).cast("long").as("expire_us"))).as("cell"),
+          lit(null).cast("long").as("expire_us")))
+          .when(col("row_kind") === "CELL_DELETION",
+            struct(lit(null).cast("string").as("value"),
+              col("writetime_us"), lit(null).cast("int").as("ttl_s"),
+              col("expire_us"))).as("cell"),
         col("deletion_us"),
         genName.as("sstable"))
       // the names are fixed by the arguments: each claims its own
@@ -894,8 +929,10 @@ object RemoverCli {
     * token the sink itself sorts by; a rendered-string token would
     * put typed tables' generations off the real ring). Deterministic,
     * zero extra passes; Murmur3 uniformity balances bucket sizes at
-    * any scale. */
-  private def ringBucket(args: CliArgs)
+    * any scale. The merge route buckets with
+    * [[graft.sources.SSTableBinaryV2.ringBucket]], the same arithmetic
+    * over the same rendered-key token. */
+  private[graft] def ringBucket(args: CliArgs)
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
     val n = args.outGenerations
@@ -909,8 +946,8 @@ object RemoverCli {
     // ring position in [0,1): token/2^64 + 0.5; double rounding only
     // nudges bucket BOUNDARIES (still deterministic and
     // token-contiguous — the write path sorts within each)
-    val ringPos = tok.cast("double") / lit(1.8446744073709552E19) +
-      lit(0.5)
+    val ringPos = tok.cast("double") /
+      lit(graft.sources.SSTableBinaryV2.RingSpan) + lit(0.5)
     least(lit(n - 1), floor(ringPos * lit(n)).cast("int"))
   }
 

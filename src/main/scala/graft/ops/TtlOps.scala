@@ -322,8 +322,19 @@ object TtlOps {
     *     `writetime_us <= deletion_us` (deletions cover everything at
     *     or before their timestamp; a later re-insert survives);
     *   - among surviving versions of one (partition, clustering, name)
-    *     cell, the highest writetime wins, ties broken by the greater
-    *     value (Cassandra's timestamp-then-value reconciliation).
+    *     cell, the highest writetime wins; a CELL_DELETION contends like
+    *     a write and wins a tie, then the greater value, then (between
+    *     tombstones) the later local deletion second (`expire_us`, when
+    *     the frame carries it) — Cassandra's `Cells.reconcile`. Only the
+    *     winner survives, so a newer write outlives an older cell
+    *     tombstone and a newer tombstone deletes an older write;
+    *   - range bounds pair index-wise after sorting, so the paired
+    *     ranges of a partition must come out ordered and disjoint
+    *     (adjacent ranges may share a clustering with complementary
+    *     inclusivity). Overlapping ranges, which only different
+    *     generations can hold, fail by name — partition key and, when
+    *     the frame has a `sstable` column, the generations — instead of
+    *     mis-pairing and deleting live data.
     *
     * Scale shape: ONE hash exchange on `partition_key` serves the
     * whole merge — the partition-deletion window (pk), the
@@ -337,11 +348,13 @@ object TtlOps {
     * distributed at cell granularity.
     */
   /** With `keepMarkers = true` the output ALSO carries every deletion
-    * marker verbatim (row_kind + deletion_us columns appear): the
+    * marker verbatim (row_kind + deletion_us columns appear), and every
+    * input column passes through: the
     * Cassandra rule that tombstones outlive the data they shadowed
     * (they may still shadow cells in SSTables outside this run, so a
     * merge that dropped them would resurrect data downstream —
-    * gc_grace is an explicit, separate decision). Both modes are ONE
+    * gc_grace is an explicit, separate decision). A cell tombstone is
+    * a contender, kept only when it wins its cell. Both modes are ONE
     * single-pass plan: live rows rank within their cell group ordered
     * unshadowed-first, so no filter-then-rank second pass exists to
     * re-run. */
@@ -351,8 +364,11 @@ object TtlOps {
     val rowW = Window.partitionBy("partition_key", "clustering")
     val noDel = lit(Long.MinValue)
     val nvW = Window.partitionBy("partition_key", "clustering", "name")
+    val tombstone = col("row_kind") === "CELL_DELETION"
     val lwwW = Window.partitionBy("partition_key", "clustering", "name")
-      .orderBy(col("ok").desc, col("writetime_us").desc, col("value").desc)
+      .orderBy(Seq(col("ok").desc, col("writetime_us").desc,
+        tombstone.desc, col("value").desc) ++
+        cells.columns.find(_ == "expire_us").map(col(_).desc): _*)
     // RANGE tombstones ("start:<type>" / "end:<type>" bound rows, the
     // bridge's encoding) shadow every clustering inside their bound
     // pair. Bounds reach each row via pk-window collect_lists — no
@@ -364,9 +380,14 @@ object TtlOps {
     // ranges-per-partition sized — small in practice; a partition
     // with pathologically many ranges is the same hazard its read
     // path has.
+    val src = sourceOf(cells)
     def bounds(side: String) = array_sort(collect_list(
       when(isRtBound && substring_index(col("name"), ":", 1) === side,
-        rtBoundStruct)).over(pkW))
+        rtBoundStruct(src))).over(pkW))
+    // contenders: writes, primary-key liveness (primary-key-only
+    // inserts reconcile exactly like cells: they carry a writetime and
+    // can be shadowed or win) and cell tombstones
+    val contender = col("row_kind").isin("ROW", "PK_LIVENESS", "CELL_DELETION")
     val scored = byPk
       .withColumn("part_del",
         max(when(col("row_kind") === "PARTITION_DELETION",
@@ -377,27 +398,25 @@ object TtlOps {
       .withColumn("rt_starts", bounds("start"))
       .withColumn("rt_ends", bounds("end"))
       .withColumn("rt_del", rtDelExpr)
-      // PK_LIVENESS rows (primary-key-only inserts from the dump
-      // bridge) reconcile exactly like cells: they carry a writetime
-      // and can be shadowed or win
       .withColumn("live", col("row_kind").isin("ROW", "PK_LIVENESS"))
-      .withColumn("ok", col("live") &&
+      .withColumn("ok", contender &&
         col("writetime_us") > coalesce(col("part_del"), noDel) &&
         col("writetime_us") > coalesce(col("row_del"), noDel) &&
         col("writetime_us") > coalesce(col("rt_del"), noDel))
       .withColumn("rk", row_number().over(lwwW))
       .withColumn("n_versions",
-        sum(when(col("ok"), 1L).otherwise(0L)).over(nvW))
+        sum(when(col("ok") && col("live"), 1L).otherwise(0L)).over(nvW))
     val winner = col("ok") && col("rk") === 1
+    // the range check guards EVERY row: as a conjunct of `ok` it would
+    // only run for contenders, and a partition of markers alone must
+    // fail the same way
     if (keepMarkers)
-      scored.filter(winner || !col("live"))
-        .select(col("partition_key"), col("clustering"), col("row_kind"),
-          col("name"), col("value"), col("writetime_us"),
-          col("deletion_us"),
+      scored.filter(rtChecked && (winner || !contender))
+        .select(cells.columns.map(col) :+
           when(col("live"), col("n_versions").cast("long"))
-            .as("n_versions"))
+            .as("n_versions"): _*)
     else
-      scored.filter(winner)
+      scored.filter(rtChecked && winner && col("live"))
         .select(col("partition_key"), col("clustering"), col("name"),
           col("value"), col("writetime_us"),
           col("n_versions").cast("long").as("n_versions"))
@@ -406,10 +425,16 @@ object TtlOps {
   // --- shared range-tombstone machinery (lwwMerge + skew-safe form) ---
   private def isRtBound = col("row_kind") === "RANGE_TOMBSTONE_BOUND"
 
-  private def rtBoundStruct =
+  /** The frame's generation column for error messages, NULL when it
+    * has none. */
+  private def sourceOf(cells: DataFrame): Column =
+    if (cells.columns.contains("sstable")) col("sstable")
+    else lit(null).cast("string")
+
+  private def rtBoundStruct(src: Column) =
     struct(col("clustering").as("cl"),
       (substring_index(col("name"), ":", -1) === "inclusive").as("inc"),
-      col("deletion_us").as("del"))
+      col("deletion_us").as("del"), src.as("src"))
 
   /** Sorted start/end bound lists paired index-wise — the well-formed
     * non-overlapping contract Cassandra SSTables guarantee and
@@ -427,15 +452,40 @@ object TtlOps {
       when(r.getField("einc"), col("clustering") <= r.getField("ecl"))
         .otherwise(col("clustering") < r.getField("ecl"))
 
-  /** Max deletion time of any range covering this row's clustering;
-    * an unbalanced bound set (starts ≠ ends) fails LOUDLY rather than
-    * half-applying a range. */
+  /** Max deletion time of any range covering this row's clustering. */
   private def rtDelExpr: Column =
-    when(size(col("rt_starts")) =!= size(col("rt_ends")),
+    array_max(transform(filter(rtRanges, rtCovered(_)),
+      r => r.getField("del")))
+
+  /** TRUE, or a named failure when the partition's bounds cannot pair
+    * into ranges: unbalanced (starts ≠ ends), or paired ranges that are
+    * not ordered and disjoint. Consecutive ranges may touch at one
+    * clustering when at most one side includes it. Expects `rt_starts`
+    * / `rt_ends` columns. */
+  private def rtChecked: Column = {
+    val r = rtRanges
+    val n = size(col("rt_starts"))
+    val pairs = zip_with(slice(r, lit(1), greatest(n - 1, lit(0))),
+      slice(r, lit(2), greatest(n - 1, lit(0))), (a, b) =>
+        a.getField("ecl") > b.getField("scl") ||
+          (a.getField("ecl") === b.getField("scl") &&
+            a.getField("einc") && b.getField("sinc")))
+    val overlapping = exists(r, x => x.getField("scl") > x.getField("ecl")) ||
+      exists(pairs, identity)
+    val gens = array_join(array_sort(array_distinct(
+      transform(concat(col("rt_starts"), col("rt_ends")),
+        b => b.getField("src")))), ", ")
+    when(n =!= size(col("rt_ends")),
       raise_error(concat(lit("unbalanced range-tombstone bounds in "
         + "partition "), col("partition_key"))))
-      .otherwise(array_max(transform(filter(rtRanges, rtCovered(_)),
-        r => r.getField("del"))))
+      .when(overlapping,
+        raise_error(concat(lit("overlapping range tombstones in partition "),
+          col("partition_key"), lit(" (generations: "), gens,
+          lit("): paired bounds are not ordered and disjoint, and " +
+            "merging boundary markers across generations is not " +
+            "supported"))))
+      .otherwise(lit(true))
+  }
 
   /** Skew-safe form of [[lwwMerge]] (winners only): the same merge
     * rules distributed at CELL granularity instead of one coarse pk
@@ -463,12 +513,21 @@ object TtlOps {
     val rowDel = cells.filter(col("row_kind") === "ROW_DELETION")
       .groupBy(col("partition_key"), col("clustering"))
       .agg(max(col("deletion_us")).as("row_del"))
+    val src = sourceOf(cells)
     def bounds(side: String) = array_sort(collect_list(
-      when(substring_index(col("name"), ":", 1) === side, rtBoundStruct)))
+      when(substring_index(col("name"), ":", 1) === side,
+        rtBoundStruct(src))))
     val rt = cells.filter(isRtBound)
       .groupBy(col("partition_key"))
       .agg(bounds("start").as("rt_starts"), bounds("end").as("rt_ends"))
-    cells.filter(col("row_kind").isin("ROW", "PK_LIVENESS"))
+      .filter(rtChecked)
+    val tombstone = col("row_kind") === "CELL_DELETION"
+    // the winner's order: writetime, then a tombstone over a write,
+    // then the value, then (between tombstones) the deletion second
+    val expire =
+      if (cells.columns.contains("expire_us")) col("expire_us")
+      else lit(null).cast("long")
+    cells.filter(col("row_kind").isin("ROW", "PK_LIVENESS", "CELL_DELETION"))
       .join(partDel.hint("broadcast"), Seq("partition_key"), "left")
       .join(rowDel, Seq("partition_key", "clustering"), "left")
       .join(rt.hint("broadcast"), Seq("partition_key"), "left")
@@ -479,8 +538,10 @@ object TtlOps {
         col("writetime_us") > coalesce(col("row_del"), noDel) &&
         col("writetime_us") > coalesce(col("rt_del"), noDel))
       .groupBy(col("partition_key"), col("clustering"), col("name"))
-      .agg(max(struct(col("writetime_us"), col("value"))).as("w"),
-        count(lit(1)).as("n_versions"))
+      .agg(max(struct(col("writetime_us"), tombstone.as("tomb"),
+          col("value"), expire.as("expire"))).as("w"),
+        sum(when(tombstone, 0L).otherwise(1L)).as("n_versions"))
+      .filter(!col("w.tomb"))
       .select(col("partition_key"), col("clustering"), col("name"),
         col("w.value").as("value"),
         col("w.writetime_us").as("writetime_us"),

@@ -452,14 +452,14 @@ object SSTableBinaryV2 {
       end: Long = Long.MaxValue, info: Option[SiblingInfo] = None)
       extends InputPartition
 
-  /** Opening one generation, shared by the DSv2 reader and the
-    * file-per-task rewrite ([[rewriteGenerations]]): sibling presence
+  /** Opening one generation, shared by the DSv2 reader and the file
+    * routes ([[rewriteGenerations]], [[mergeGenerations]]): sibling presence
     * from the planner's listing, sidecar reads through the
     * [[ComponentCache]], the Statistics.db header with its declared-
     * ring check, the CompressionInfo.db chunk map (per-chunk
-    * checksums) and the digest check. Construction reads sidecars
-    * only; Data.db opens through [[openData]] when a caller asks for a
-    * stream. */
+    * checksums), the digest check and positioned opens. Construction
+    * reads sidecars only; Data.db opens through [[openData]] when a
+    * caller asks for a stream. */
   private[sources] class SSTableOpen(file: String,
       conf: org.apache.hadoop.conf.Configuration,
       info: Option[SiblingInfo]) {
@@ -584,6 +584,34 @@ object SSTableBinaryV2 {
         case None => raw
       }
     }
+
+    private var seekStream: org.apache.hadoop.fs.FSDataInputStream = null
+    /** The partition stream at logical Data.db offset `p` (an Index.db
+      * position): a plain seek, or a chunk-map seek on a compressed
+      * file (CompressionMetadata.chunkFor's role). Every call wraps ONE
+      * shared seekable handle, so a stream is valid until the next
+      * call; [[close]] releases the handle. */
+    def openDataAt(p: Long): java.io.InputStream = {
+      if (seekStream == null) seekStream = openData(new HPath(file))
+      compressionMeta match {
+        case Some(m) =>
+          CompressedData.seekableStream(seekStream, onDiskLen, m,
+            file, p)
+        case None => seekStream.seek(p); seekStream
+      }
+    }
+
+    /** Streams this generation's Index.db entries (key, Data.db
+      * position, promoted payload) in on-disk order through `body`,
+      * then closes the component. Modern-era framing. */
+    def withIndexEntries[A](body: Iterator[BigFormat.IndexEntry] => A): A = {
+      val in = fs.open(sibling("-Index.db"))
+      try body(SSTableComponents.indexEntries(new java.io.DataInputStream(
+        new java.io.BufferedInputStream(in, 64 * 1024)), file))
+      finally in.close()
+    }
+
+    def close(): Unit = if (seekStream != null) seekStream.close()
 
     /** Read-side data-integrity pass (`.option("verify", "true")` /
       * the CLI's `--verify`): CRC32 the AS-ON-DISK Data.db bytes and
@@ -1136,21 +1164,7 @@ object SSTableBinaryV2 {
     if (verify && rangeStart == 0L) verifyDigest()
 
     private var fullStream: java.io.InputStream = null
-    private var seekStream: org.apache.hadoop.fs.FSDataInputStream = null
     private var indexStream: org.apache.hadoop.fs.FSDataInputStream = null
-    /** One shared seekable Data.db handle for position-serving modes;
-      * every per-position stream wraps it at a fresh logical offset
-      * (plain seek or chunk-map seek — CompressionMetadata.chunkFor's
-      * role). */
-    private def openDataAt(p: Long): java.io.InputStream = {
-      if (seekStream == null) seekStream = openData(new HPath(file))
-      compressionMeta match {
-        case Some(m) =>
-          CompressedData.seekableStream(seekStream, onDiskLen, m,
-            file, p)
-        case None => seekStream.seek(p); seekStream
-      }
-    }
 
     /** Serve one indexed partition: sliced (promoted blocks consumed)
       * when slice bounds are engaged and the entry promoted, whole
@@ -1622,7 +1636,7 @@ object SSTableBinaryV2 {
 
     override def close(): Unit = {
       if (fullStream != null) fullStream.close()
-      if (seekStream != null) seekStream.close()
+      super[SSTableOpen].close()
       if (indexStream != null) indexStream.close()
     }
   }
@@ -3571,7 +3585,13 @@ object SSTableBinaryV2 {
     val header = BigFormat.Header(minTs, minLdt, minTtl, keyType = keyType,
       clusteringTypes = clTypes, staticColumns = statics,
       regularColumns = regulars)
-    val fs = FileSystem.get(java.net.URI.create(target.dir), conf)
+    // the local FS's raw layer (the cached checksummed instance stays
+    // as it is): Cassandra components only, no `.crc` side files, and
+    // each byte is CRC'd once, by the components that carry checksums
+    val fs = FileSystem.get(java.net.URI.create(target.dir), conf) match {
+      case local: org.apache.hadoop.fs.LocalFileSystem => local.getRawFileSystem
+      case other => other
+    }
     // the FULL loadable component set — primary index, bloom filter,
     // sampled summary, digest and TOC alongside Data/Statistics (the
     // reference's bulk-load-back contract,
@@ -3692,25 +3712,304 @@ object SSTableBinaryV2 {
             bridgePartition(src, p)
           }.filter(_._2 > 0).toVector
           finally in.close()
-        if (parts.nonEmpty) {
-          val bridged = parts.map(_._1)
-          def atoms = bridged.iterator.flatMap(_.atoms)
-          writeGeneration(target, hconf.value.value, src, gen, bridged,
-            clusteringArity(src, atoms.collect {
-              case r: BigFormat.RowAtom if !r.static => r.clustering.size
-              case m: BigFormat.MarkerAtom => m.clustering.size
-            }),
-            atoms.flatMap {
-              case r: BigFormat.RowAtom =>
-                r.cells.iterator
-                  .map(c => (r.static, c.name, c.path.isDefined)) ++
-                  r.complexDeletions.iterator.map(d => (r.static, d._1, true))
-              case _ => Iterator.empty
-            })
-        }
+        writeParts(target, hconf.value.value, src, gen, parts.map(_._1))
         (s"$table/nb-$gen-big-Data.db", parts.map(_._2).sum)
       }
       .collect().filter(_._2 > 0).toSeq.sortBy(_._1)
+  }
+
+  /** [[writeGeneration]] over bridged partitions, with the clustering
+    * arity and column inventory read off their atoms (what the frame
+    * route reads off its bridge rows); no partitions write nothing. */
+  private def writeParts(target: SinkTarget,
+      conf: org.apache.hadoop.conf.Configuration, src: String, gen: Int,
+      parts: Seq[BigFormat.PartitionData]): Unit =
+    if (parts.nonEmpty) {
+      def atoms = parts.iterator.flatMap(_.atoms)
+      writeGeneration(target, conf, src, gen, parts,
+        clusteringArity(src, atoms.collect {
+          case r: BigFormat.RowAtom if !r.static => r.clustering.size
+          case m: BigFormat.MarkerAtom => m.clustering.size
+        }),
+        atoms.flatMap {
+          case r: BigFormat.RowAtom =>
+            r.cells.iterator
+              .map(c => (r.static, c.name, c.path.isDefined)) ++
+              r.complexDeletions.iterator.map(d => (r.static, d._1, true))
+          case _ => Iterator.empty
+        })
+    }
+
+  /** The ring span 2^64 as a double: a token's ring position is
+    * `token / RingSpan + 0.5`, in [0, 1]. */
+  private[graft] val RingSpan: Double = 1.8446744073709552E19
+
+  /** Output bucket in [0, n) of a Murmur3 token by fixed ring division:
+    * the ring position times n, floored, capped at n - 1. The same
+    * double arithmetic as `RemoverCli.ringBucket`'s Column, so a merged
+    * partition lands in the same output generation on either route. */
+  private[graft] def ringBucket(token: Long, n: Int): Int =
+    math.min(n - 1, math.floor((token.toDouble / RingSpan + 0.5) * n)
+      .toLong.toInt)
+
+  /** The listing of `root` when the merge route ([[mergeGenerations]])
+    * can compact it: at least one Data.db, every one modern-era and
+    * with an Index.db to seek its bucket by. None otherwise. */
+  private[graft] def mergeableLake(spark: SparkSession, root: String)
+      : Option[Seq[(String, SiblingInfo)]] =
+    Some(listLake(root, spark.sessionState.newHadoopConf())).filter(l =>
+      l.nonEmpty && l.forall(f => modernEra(f._1) && f._2.hasIndex))
+
+  /** The FILE route of the LWW compaction (`--merge lww
+    * [--out-generations N]`), shaped like Cassandra's own compaction:
+    * one Spark job of N tasks, where task b reads every input at ring
+    * bucket b ([[bucketPartitions]]), merges each key's versions
+    * ([[mergePartition]]) and writes output generation `nb-<b+1>`
+    * through [[writeGeneration]]. No bridge rows, no shuffle, no window
+    * plan; a task holds one bucket's partitions. The bytes equal the
+    * frame route's (`writeSSTables` over the merged bridge-row frame)
+    * whenever range tombstones from different generations do not
+    * overlap within a partition; overlapping ones fail by name on both
+    * routes. With `verify`, task `i mod N` checks input i's digest, so
+    * each input is verified once. `listing` comes from
+    * [[mergeableLake]]. Decoded partitions count into the
+    * `partitionsServed` accumulator. Returns (sstable, bridge rows the
+    * frame route would write) per output file. */
+  private[graft] def mergeGenerations(spark: SparkSession,
+      listing: Seq[(String, SiblingInfo)], outDir: String,
+      keyspace: String, table: String, compression: Option[String],
+      verify: Boolean, outGenerations: Int): Seq[(String, Long)] = {
+    require(listing.nonEmpty &&
+      listing.forall(f => modernEra(f._1) && f._2.hasIndex),
+      "mergeGenerations: the listing must come from mergeableLake")
+    val n = math.max(1, outGenerations)
+    val target = SinkTarget(s"$outDir/$keyspace/$table", None,
+      compression, BigFormat.ColumnIndexSize)
+    val hconf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val served = spark.sparkContext.longAccumulator(MetricPartitionsServed)
+    spark.sparkContext.parallelize(0 until n, n)
+      .map { b =>
+        val conf = hconf.value.value
+        val name = s"$table/nb-${b + 1}-big-Data.db"
+        // each key's bridged versions, in input order
+        val versions = scala.collection.mutable.LinkedHashMap
+          .empty[String, Vector[(String, BigFormat.PartitionData)]]
+        listing.zipWithIndex.foreach { case ((path, info), i) =>
+          val src = sstableIdentity(path)
+          val open = new SSTableOpen(path, conf, Some(info))
+          try {
+            if (verify && i % n == b) open.verifyDigest()
+            bucketPartitions(open, path, b, n).foreach { p =>
+              served.add(1)
+              val (bridged, rows) = bridgePartition(src, p)
+              if (rows > 0) versions(p.key) =
+                versions.getOrElse(p.key, Vector.empty) :+ ((src, bridged))
+            }
+          } finally open.close()
+        }
+        val merged = versions.iterator
+          .map { case (key, vs) => mergePartition(key, vs) }.toVector
+        writeParts(target, conf, name, b + 1, merged.map(_._1))
+        (name, merged.map(_._2).sum)
+      }
+      .collect().filter(_._2 > 0).toSeq.sortBy(_._1)
+  }
+
+  /** The partitions of one input whose rendered key falls in ring
+    * bucket b of n, decoded at their Index.db positions: each run of
+    * consecutive bucket entries is one positioned stream. On UTF8/Ascii
+    * keys the index token is the rendered key's token, so the bucket is
+    * one contiguous run and the walk stops past it; other key types
+    * walk the whole index. A decoded key must match its index entry. */
+  private def bucketPartitions(open: SSTableOpen, path: String, b: Int,
+      n: Int): Iterator[BigFormat.PartitionData] = {
+    val keyType = open.header.keyType
+    val textKeys = keyType == BigFormat.Utf8Type ||
+      keyType == BigFormat.AsciiType
+    // (Data.db position, rendered keys) of each run
+    val runs = open.withIndexEntries { entries =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, scala.collection.mutable.ArrayBuffer[String])]
+      var inRun = false
+      var past = false
+      while (!past && entries.hasNext) {
+        val (keyBytes, pos, _) = entries.next()
+        val key = BigFormat.renderValue(keyType, keyBytes)
+        val kb = if (n == 1) 0 else ringBucket(BigFormat.murmur3Token(
+          key.getBytes(java.nio.charset.StandardCharsets.UTF_8)), n)
+        if (kb == b) {
+          if (!inRun) out += ((pos, scala.collection.mutable.ArrayBuffer.empty))
+          out.last._2 += key
+          inRun = true
+        } else {
+          inRun = false
+          past = textKeys && kb > b
+        }
+      }
+      out.toSeq
+    }
+    // one run at a time: every run's stream wraps the one seekable
+    // handle, so a run is drained before the next one opens
+    runs.iterator.flatMap { case (pos, keys) =>
+      val decoded = BigFormat.partitions(open.header, open.openDataAt(pos),
+        path)
+      keys.iterator.map { k =>
+        if (!decoded.hasNext) throw new java.io.EOFException(
+          s"$path: Data.db ends before the partition of key '$k'")
+        val p = decoded.next()
+        if (p.key != k) throw new IllegalStateException(
+          s"$path: the Index.db entry of key '$k' points at partition " +
+            s"'${p.key}'")
+        p
+      }
+    }
+  }
+
+  /** Spark's string order (unsigned UTF-8 bytes) — the order the frame
+    * route's merge compares values and clusterings in. */
+  private def compareText(a: String, b: String): Int =
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  /** Spark's `array<string>` order over rendered clusterings: element
+    * by element, NULL first, then the shorter prefix first. */
+  private def compareRendered(a: Seq[Option[String]],
+      b: Seq[Option[String]]): Int = {
+    val it = a.iterator.zip(b.iterator)
+    while (it.hasNext) {
+      val c = it.next() match {
+        case (None, None) => 0
+        case (None, _) => -1
+        case (_, None) => 1
+        case (Some(x), Some(y)) => compareText(x, y)
+      }
+      if (c != 0) return c
+    }
+    Integer.compare(a.size, b.size)
+  }
+
+  /** A range tombstone paired from one start and one end bound. */
+  private final case class PairedRange(scl: Seq[Option[String]],
+      sinc: Boolean, ecl: Seq[Option[String]], einc: Boolean, del: Long) {
+    def covers(cl: Seq[Option[String]]): Boolean = {
+      val s = compareRendered(cl, scl)
+      val e = compareRendered(cl, ecl)
+      (if (sinc) s >= 0 else s > 0) && (if (einc) e <= 0 else e < 0)
+    }
+  }
+
+  /** A partition's bound markers (src, bound) paired into ranges as the
+    * frame route's merge pairs them: starts and ends each sorted by
+    * (clustering, inclusive, deletion), then zipped, each range deleted
+    * at the later of its bounds. Unbalanced bounds, and paired ranges
+    * that are not ordered and disjoint, fail with the frame route's
+    * messages. */
+  private def pairRanges(key: String,
+      bounds: Seq[(String, BigFormat.MarkerAtom)]): Seq[PairedRange] = {
+    if (bounds.isEmpty) return Nil
+    val order = new Ordering[(Seq[Option[String]], Boolean, Long)] {
+      def compare(x: (Seq[Option[String]], Boolean, Long),
+          y: (Seq[Option[String]], Boolean, Long)): Int = {
+        val c = compareRendered(x._1, y._1)
+        if (c != 0) c
+        else if (x._2 != y._2) java.lang.Boolean.compare(x._2, y._2)
+        else java.lang.Long.compare(x._3, y._3)
+      }
+    }
+    // (side, clustering, inclusive, deletion) of each bound
+    val named = bounds.map { case (src, m) =>
+      val Array(side, inclusivity) = boundName(m.kind, 0, src).split(':')
+      (side, (m.clustering, inclusivity == "inclusive", m.deletions.head))
+    }
+    val starts = named.collect { case ("start", b) => b }.sorted(order)
+    val ends = named.collect { case ("end", b) => b }.sorted(order)
+    if (starts.size != ends.size) throw new IllegalStateException(
+      s"unbalanced range-tombstone bounds in partition $key")
+    val ranges = starts.lazyZip(ends).map { (s, e) =>
+      PairedRange(s._1, s._2, e._1, e._2, math.max(s._3, e._3))
+    }
+    val overlapping = ranges.exists(r => compareRendered(r.scl, r.ecl) > 0) ||
+      ranges.lazyZip(ranges.drop(1)).exists { (a, b) =>
+        val c = compareRendered(a.ecl, b.scl)
+        c > 0 || (c == 0 && a.einc && b.sinc)
+      }
+    if (overlapping) throw new IllegalStateException(
+      s"overlapping range tombstones in partition $key (generations: " +
+        bounds.map(_._1).distinct.sorted.mkString(", ") + "): paired " +
+        "bounds are not ordered and disjoint, and merging boundary " +
+        "markers across generations is not supported")
+    ranges
+  }
+
+  /** Cassandra's `Cells.reconcile` as the frame route's merge ranks a
+    * cell's versions: the later writetime, then a tombstone over a
+    * write, then the greater value, then the later deletion second.
+    * True when `x` beats or ties `y`. */
+  private def reconcilesOver(x: BigFormat.CellAtom,
+      y: BigFormat.CellAtom): Boolean = {
+    def opt[A](a: Option[A], b: Option[A])(cmp: (A, A) => Int): Int =
+      (a, b) match {
+        case (Some(p), Some(q)) => cmp(p, q)
+        case (Some(_), None) => 1
+        case (None, Some(_)) => -1
+        case _ => 0
+      }
+    val c =
+      if (x.tsUs != y.tsUs) java.lang.Long.compare(x.tsUs, y.tsUs)
+      else if (x.deleted != y.deleted) java.lang.Boolean.compare(x.deleted,
+        y.deleted)
+      else {
+        val v = opt(x.value, y.value)(compareText)
+        if (v != 0) v else opt(x.ldtS, y.ldtS)(Integer.compare)
+      }
+    c >= 0
+  }
+
+  /** One key's bridged versions (src, partition), merged under the
+    * frame route's LWW rules ([[graft.ops.TtlOps.lwwMerge]] with
+    * markers kept): the greatest partition and row deletion; every
+    * range-tombstone bound kept, paired into ranges; each cell (a
+    * column, or a collection path) and the primary-key liveness keep
+    * only their winning version, and only when it is newer than every
+    * deletion covering it (a static row answers to the partition
+    * deletion only); every other deletion marker kept. Returns the
+    * merged partition and its bridge-row count. */
+  private def mergePartition(key: String,
+      versions: Seq[(String, BigFormat.PartitionData)])
+      : (BigFormat.PartitionData, Long) = {
+    val partDel = versions.flatMap(_._2.deletionUs).maxOption
+    val bounds = versions.flatMap { case (src, p) =>
+      p.atoms.collect { case m: BigFormat.MarkerAtom => (src, m) }
+    }
+    val ranges = pairRanges(key, bounds)
+    var rows = versions.map(_._2.deletionUs.size.toLong).sum + bounds.size
+    val groups = versions.flatMap(_._2.atoms.collect {
+      case r: BigFormat.RowAtom => r
+    }).groupBy(r => (r.static, r.clustering))
+    val rowAtoms = groups.toSeq.flatMap { case ((static, cl), rs) =>
+      val rowDel = rs.flatMap(_.deletionUs).maxOption
+      val complexDels = rs.flatMap(_.complexDeletions)
+      val shadow = (partDel.toSeq ++ rowDel ++ (
+        if (static) Nil
+        else ranges.filter(_.covers(cl)).map(_.del))).maxOption
+      def ok(ts: Long): Boolean = shadow.forall(ts > _)
+      val live = rs.flatMap(_.livenessTsUs).filter(ok).maxOption
+      val cells = rs.flatMap(_.cells).filter(c => ok(c.tsUs))
+        .groupBy(c => (c.name, c.path)).values
+        .map(_.reduce((x, y) => if (reconcilesOver(x, y)) x else y)).toSeq
+      rows += rs.count(_.deletionUs.isDefined) + complexDels.size +
+        cells.size + live.size
+      if (static) {
+        if (cells.isEmpty && complexDels.isEmpty) None
+        else Some(BigFormat.RowAtom(Nil, None, None, None, None, cells,
+          complexDels, static = true))
+      } else if (rowDel.isEmpty && live.isEmpty && cells.isEmpty &&
+        complexDels.isEmpty) None
+      else Some(BigFormat.RowAtom(cl, live, None, None, rowDel, cells,
+        complexDels))
+    }
+    (BigFormat.PartitionData(key, partDel, bounds.map(_._2) ++ rowAtoms),
+      rows)
   }
 
   /** Registered `src_sstable_roundtrip` — the reference's WHOLE

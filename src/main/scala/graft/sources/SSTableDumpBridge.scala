@@ -422,14 +422,19 @@ object SSTableDumpBridge {
     * and leaves reconciliation to the Cassandra server; here a
     * directory of generations collapses to the table's effective
     * state in one shuffle. TTL metadata does not survive (value +
-    * writetime only) — the merge IS the strip. */
+    * writetime only) — the merge IS the strip. A cell tombstone keeps
+    * its local deletion second (`expire_us`, micros), and `sstable`
+    * names the generation each surviving row came from. */
   def mergeTree(spark: SparkSession, root: String,
       reader: (SparkSession, String) => DataFrame = readTree): DataFrame =
     graft.ops.TtlOps.lwwMerge(
       reader(spark, root).select(
         col("partition_key"), col("clustering"), col("row_kind"),
         col("name"), col("cell.value").as("value"),
-        col("cell.writetime_us").as("writetime_us"), col("deletion_us")),
+        col("cell.writetime_us").as("writetime_us"), col("deletion_us"),
+        when(col("row_kind") === "CELL_DELETION", col("cell.expire_us"))
+          .as("expire_us"),
+        col("sstable")),
       keepMarkers = true)
 
   /** [[mergeTree]] → sorted `out/<ks>/<table>/` layout — the CLI's
@@ -443,7 +448,7 @@ object SSTableDumpBridge {
     // no repartition here: lwwMerge's output is already
     // hash-partitioned on partition_key (its one exchange), so the
     // sorted-sink shape only needs the within-partition sort
-    mergeTree(spark, dumpPath, reader)
+    mergeTree(spark, dumpPath, reader).drop("expire_us", "sstable")
       .sortWithinPartitions(col("partition_key"), col("clustering"),
         col("name"))
       .withColumn("keyspace", lit(keyspace))

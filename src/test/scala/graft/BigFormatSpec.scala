@@ -1874,7 +1874,11 @@ class SSTableBinarySpec extends SparkSpec {
 
   test("RemoverCli --sink sstable decodes its input once; output equals the distinct-pass sink") {
     val in = SSTableBinaryV2.writeBinaryFixture(spark, sfDir)
+    // the merge route seeks by Index.db, which the fixture lacks
+    val indexed = indexedFixture()
     try {
+      val indexedPartitions = SSTableBinaryV2.readBinary(spark,
+        indexed.toString).select("sstable", "partition_key").distinct().count()
       val lake = SSTableBinaryV2.readBinary(spark, in.toString)
       val lakeRows = lake.count()
       val lakePartitions =
@@ -1887,12 +1891,25 @@ class SSTableBinarySpec extends SparkSpec {
           Some(graft.sources.CompressedData.Lz4)),
         ("merge lww", Seq("--merge", "lww"), None),
         ("merge lww, 4 generations",
-          Seq("--merge", "lww", "--out-generations", "4"), None)
+          Seq("--merge", "lww", "--out-generations", "4"), None),
+        ("merge lww, 3 generations, zstd",
+          Seq("--merge", "lww", "--out-generations", "3", "--compress",
+            "zstd"), Some(graft.sources.CompressedData.Zstd))
       ).foreach { case (shape, extra, compression) =>
         val out = Scratch.dir("graft-cli-once-")
         try {
-          val args = sinkArgs(in.toString, s"$out/o", extra: _*)
-          if (RemoverCli.fileRouteLake(spark, args).isDefined) {
+          val lake = if (extra.contains("--merge")) indexed else in
+          val args = sinkArgs(lake.toString, s"$out/o", extra: _*)
+          if (RemoverCli.mergeRouteLake(spark, args).isDefined) {
+            // the merge route: one job of one task per output
+            // generation; the tasks' index seeks decode each input
+            // partition once between them, nothing shuffled
+            val p = profile(RemoverCli.run(spark, args))
+            assert(p === JobProfile(1, args.outGenerations, 0L,
+              indexedPartitions),
+              s"$shape: one job, one task per output generation, no " +
+                "shuffle, every partition decoded once")
+          } else if (RemoverCli.fileRouteLake(spark, args).isDefined) {
             // the file route: one job of one task per generation, each
             // decoding its partitions once, nothing shuffled
             val p = profile(RemoverCli.run(spark, args))
@@ -1917,7 +1934,7 @@ class SSTableBinarySpec extends SparkSpec {
         assert(RemoverCli.sstableSinkInput(spark, split)._2.isEmpty)
         assert(rowsDecoded(RemoverCli.run(spark, split)) === 2 * lakeRows)
       } finally Scratch.delete(out)
-    } finally Scratch.delete(in)
+    } finally { Scratch.delete(in); Scratch.delete(indexed) }
   }
 
   test("RemoverCli --sink sstable takes the file route only for the plain rewrite of a modern lake") {
@@ -1975,13 +1992,14 @@ class SSTableBinarySpec extends SparkSpec {
     }
   }
 
-  /** Runs `args` (which must take the file route) and the frame route
-    * over the same input (`writeSSTables` on the stripped `readBinary`
-    * frame, with the driver's source set): same bytes in every file,
-    * same row count. */
+  /** Runs `args` (which must take a file route) and the frame route
+    * over the same input (`writeSSTables` on the stripped or merged
+    * `readBinary` frame, with the driver's source set): same bytes in
+    * every file, same row count. */
   private def assertRoutesAgree(args: RemoverCli.CliArgs,
       compression: Option[String], shape: String): Unit = {
-    assert(RemoverCli.fileRouteLake(spark, args).isDefined, shape)
+    assert(RemoverCli.fileRouteLake(spark, args).isDefined ||
+      RemoverCli.mergeRouteLake(spark, args).isDefined, shape)
     val ref = Scratch.dir("graft-frame-route-")
     try {
       val rows = RemoverCli.run(spark, args)
@@ -2103,6 +2121,295 @@ class SSTableBinarySpec extends SparkSpec {
       assert(back.flatMap(_.atoms).collect {
         case r: BigFormat.RowAtom => r.livenessTsUs } === Seq(None))
     } finally { Scratch.delete(lake); Scratch.delete(out) }
+  }
+
+  /** The partitions of output generation `gen` under a sink's `out`. */
+  private def outputPartitions(out: String, gen: Int)
+      : Seq[BigFormat.PartitionData] = {
+    val dir = java.nio.file.Paths.get(out, "graft", "documents")
+    val hdr = BigFormat.readStats(java.nio.file.Files.readAllBytes(
+      dir.resolve(s"nb-$gen-big-Statistics.db")))
+    BigFormat.partitions(hdr, new ByteArrayInputStream(
+      java.nio.file.Files.readAllBytes(dir.resolve(s"nb-$gen-big-Data.db"))),
+      s"nb-$gen").toSeq
+  }
+
+  /** Every message along `op`'s failure and its causes. */
+  private def failure(op: => Any): String = {
+    val e = intercept[Exception](op)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+  }
+
+  /** The binary fixture rewritten by the plain rewrite: the same
+    * partitions, with the sink's full component set (Index.db and
+    * Digest.crc32 included) the merge route reads by. Delete it with
+    * `Scratch.delete`. */
+  private def indexedFixture(): java.nio.file.Path = {
+    val in = SSTableBinaryV2.writeBinaryFixture(spark, sfDir)
+    val out = Scratch.dir("graft-indexed-fixture-")
+    try RemoverCli.run(spark, sinkArgs(in.toString, out.toString))
+    finally Scratch.delete(in)
+    out
+  }
+
+  /** One text clustering and one simple text column `v`. */
+  private val mergeHdr = BigFormatGen.header.copy(minTimestampUs = 0L,
+    clusteringTypes = Seq(BigFormat.Utf8Type),
+    regularColumns = Seq("v" -> BigFormat.Utf8Type))
+
+  test("--merge lww routes: the merge route for modern indexed lakes, the frame route otherwise") {
+    val in = indexedFixture()
+    val ka = SSTableBinaryV2.writeOldFixture(spark, sfDir)
+    val bare = Scratch.dir("graft-route-indexless-")
+    try {
+      writeGeneration(bare, 1, Seq(BigFormat.PartitionData("k", None, Seq(
+        BigFormat.RowAtom(Seq(Some("c")), None, None, None, None, Seq(
+          BigFormat.CellAtom("v", 1L, None, None, Some("x"), false)))))),
+        mergeHdr)
+      java.nio.file.Files.delete(
+        bare.resolve("graft/documents/nb-1-big-Index.db"))
+      def merges(in: java.nio.file.Path, extra: String*): Boolean =
+        RemoverCli.mergeRouteLake(spark,
+          sinkArgs(in.toString, s"$in-unused", extra: _*)).isDefined
+      assert(merges(in, "--merge", "lww"))
+      assert(merges(in, "--merge", "lww", "--out-generations", "3"))
+      assert(merges(in, "--merge", "lww", "--compress", "lz4",
+        "--verify", "true"))
+      assert(!merges(in, "--merge", "lww", "--scrub", "true"))
+      assert(!merges(in, "--merge", "lww", "--cql", SSTableBinaryV2.Cql2x))
+      assert(!merges(ka, "--merge", "lww"))
+      assert(!merges(bare, "--merge", "lww"))
+      assert(!merges(in))
+      assert(!merges(in, "--out-generations", "3"))
+      // the unmerged split takes neither file route
+      assert(RemoverCli.fileRouteLake(spark, sinkArgs(in.toString,
+        s"$in-unused", "--out-generations", "3")).isEmpty)
+      val dump = RemoverCli.parse(Array("--in", in.toString,
+        "--out", s"$in-unused", "--table", "documents",
+        "--format", "sstabledump", "--sink", "sstable", "--merge", "lww"))
+        .fold(e => fail(e), identity)
+      assert(RemoverCli.mergeRouteLake(spark, dump).isEmpty)
+    } finally {
+      Scratch.delete(in); Scratch.delete(ka); Scratch.delete(bare)
+    }
+  }
+
+  test("the merge route's ring bucket agrees bit for bit with the frame route's bucket column") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(6)
+    val alphabet = "az09-_ :éß→雪∅😀".codePoints().toArray
+    val keys = Seq.fill(12000) {
+      val n = rnd.nextInt(24)
+      new String(Array.fill(n)(alphabet(rnd.nextInt(alphabet.length))), 0, n)
+    }.distinct
+    assert(keys.size >= 10000)
+    val frame = keys.toDF("partition_key")
+    Seq(2, 3, 4, 7, 64, 1000).foreach { n =>
+      val args = sinkArgs("a", "b", "--merge", "lww",
+        "--out-generations", n.toString)
+      val got = frame.select(col("partition_key"),
+        RemoverCli.ringBucket(args).as("b")).collect()
+      assert(got.length === keys.size)
+      got.foreach { r =>
+        val tok = BigFormat.murmur3Token(r.getString(0)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        assert(SSTableBinaryV2.ringBucket(tok, n) === r.getInt(1),
+          s"key '${r.getString(0)}', $n buckets")
+      }
+      assert(SSTableBinaryV2.ringBucket(Long.MinValue, n) === 0)
+      assert(SSTableBinaryV2.ringBucket(Long.MaxValue, n) === n - 1)
+    }
+  }
+
+  test("FOUND (fixed): --merge lww ranks a cell tombstone with the writes of its cell, on both routes") {
+    val c0 = Seq(Some("c0"))
+    def tomb(ts: Long, ldt: Int) =
+      BigFormat.CellAtom("v", ts, None, Some(ldt), None, deleted = true)
+    def live(ts: Long, v: String) =
+      BigFormat.CellAtom("v", ts, None, None, Some(v), deleted = false)
+    def part(c: BigFormat.CellAtom) = BigFormat.PartitionData("k", None,
+      Seq(BigFormat.RowAtom(c0, None, None, None, None, Seq(c))))
+    val t1 = BigFormatGen.epoch + 1000L
+    val t2 = BigFormatGen.epoch + 2000L
+    // a deletion second apart from the tombstone's timestamp: the merge
+    // must carry the tombstone's own
+    val ldt = (BigFormatGen.epoch / 1000000L).toInt + 77
+    Seq(
+      ("older tombstone, newer write", tomb(t1, ldt), live(t2, "new"),
+        live(t2, "new")),
+      ("older write, newer tombstone", live(t1, "old"), tomb(t2, ldt),
+        tomb(t2, ldt)),
+      ("a tie goes to the tombstone", live(t2, "w"), tomb(t2, ldt),
+        tomb(t2, ldt))
+    ).foreach { case (shape, first, second, want) =>
+      Seq("1", "3").foreach { n =>
+        val lake = Scratch.dir("graft-merge-tomb-")
+        val out = Scratch.dir("graft-merge-tomb-out-")
+        try {
+          writeGeneration(lake, 1, Seq(part(first)), mergeHdr)
+          writeGeneration(lake, 2, Seq(part(second)), mergeHdr)
+          val args = sinkArgs(lake.toString, s"$out/o", "--merge", "lww",
+            "--out-generations", n)
+          assertRoutesAgree(args, None, s"$shape, $n generations")
+          val gen = 1 + SSTableBinaryV2.ringBucket(BigFormat.murmur3Token(
+            "k".getBytes("UTF-8")), n.toInt)
+          assert(outputPartitions(args.out, gen).flatMap(_.atoms).collect {
+            case r: BigFormat.RowAtom => r.cells
+          } === Seq(Seq(want)), shape)
+        } finally { Scratch.delete(lake); Scratch.delete(out) }
+      }
+    }
+  }
+
+  test("FOUND (fixed): overlapping range tombstones from different generations fail by name on both routes") {
+    import BigFormat.Kind._
+    val e = BigFormatGen.epoch
+    def bound(kind: Int, c: String, d: Long) =
+      BigFormat.MarkerAtom(kind, Seq(Some(c)), Seq(e + d))
+    def cell(c: String, ts: Long) = BigFormat.RowAtom(Seq(Some(c)), None,
+      None, None, None, Seq(BigFormat.CellAtom("v", e + ts, None, None,
+        Some(c), false)))
+    /** One generation per range pair, then one with cells at c2 and c4
+      * written at 15. */
+    def lakeOf(ranges: Seq[BigFormat.Atom]*): java.nio.file.Path = {
+      val lake = Scratch.dir("graft-merge-rt-")
+      ranges.zipWithIndex.foreach { case (ms, i) =>
+        writeGeneration(lake, i + 1,
+          Seq(BigFormat.PartitionData("k", None, ms)), mergeHdr)
+      }
+      writeGeneration(lake, ranges.size + 1, Seq(BigFormat.PartitionData(
+        "k", None, Seq(cell("c2", 15), cell("c4", 15)))), mergeHdr)
+      lake
+    }
+    // the repro: [c1, c5] at 10 and [c2, c3] at 20 would pair as
+    // (c1, c3) and (c2, c5) and delete the c4 cell written at 15
+    val overlapping = lakeOf(
+      Seq(bound(InclStartBound, "c1", 10), bound(InclEndBound, "c5", 10)),
+      Seq(bound(InclStartBound, "c2", 20), bound(InclEndBound, "c3", 20)))
+    // adjacent: [c1, c3] at 20 and (c3, c5] at 10 share c3 with
+    // complementary inclusivity — c2 dies, c4 (15 > 10) lives
+    val adjacent = lakeOf(
+      Seq(bound(InclStartBound, "c1", 20), bound(InclEndBound, "c3", 20)),
+      Seq(bound(ExclStartBound, "c3", 10), bound(InclEndBound, "c5", 10)))
+    val out = Scratch.dir("graft-merge-rt-out-")
+    try {
+      Seq("1", "3").foreach { n =>
+        val args = sinkArgs(overlapping.toString, s"$out/o$n", "--merge",
+          "lww", "--out-generations", n)
+        assert(RemoverCli.mergeRouteLake(spark, args).isDefined)
+        val viaRoute = failure(RemoverCli.run(spark, args))
+        val viaFrame = failure {
+          val (frame, sources) = RemoverCli.sstableSinkInput(spark, args)
+          SSTableBinaryV2.writeSSTables(frame, s"$out/f$n", args.keyspace,
+            args.table, sources = sources)
+        }
+        Seq(viaRoute, viaFrame).foreach { m =>
+          assert(m.contains("overlapping range tombstones in partition k " +
+            "(generations: documents/nb-1-big-Data.db, " +
+            "documents/nb-2-big-Data.db)"), m)
+        }
+        val ok = sinkArgs(adjacent.toString, s"$out/a$n", "--merge", "lww",
+          "--out-generations", n)
+        assertRoutesAgree(ok, None, s"adjacent ranges, $n generations")
+        val gen = 1 + SSTableBinaryV2.ringBucket(BigFormat.murmur3Token(
+          "k".getBytes("UTF-8")), n.toInt)
+        val atoms = outputPartitions(ok.out, gen).flatMap(_.atoms)
+        assert(atoms.collect { case r: BigFormat.RowAtom =>
+          r.clustering } === Seq(Seq(Some("c4"))))
+        assert(atoms.count(_.isInstanceOf[BigFormat.MarkerAtom]) === 4)
+      }
+    } finally {
+      Scratch.delete(overlapping); Scratch.delete(adjacent)
+      Scratch.delete(out)
+    }
+  }
+
+  test("sink output directories hold Cassandra components only, no checksum side files") {
+    import scala.jdk.CollectionConverters._
+    val in = indexedFixture()
+    val component = ("nb-\\d+-big-(Data\\.db|Index\\.db|Filter\\.db|" +
+      "Summary\\.db|Statistics\\.db|Digest\\.crc32|TOC\\.txt|" +
+      "CompressionInfo\\.db)").r
+    try {
+      Seq(Seq.empty[String], Seq("--compress", "lz4"),
+        Seq("--merge", "lww", "--out-generations", "2"),
+        Seq("--out-generations", "2")).foreach { extra =>
+        val out = Scratch.dir("graft-sink-files-")
+        try {
+          val args = sinkArgs(in.toString, s"$out/o", extra: _*)
+          RemoverCli.run(spark, args)
+          val dir = java.nio.file.Paths.get(args.out, "graft", "documents")
+          val listing = java.nio.file.Files.list(dir)
+          val names = try listing.iterator().asScala
+            .map(_.getFileName.toString).toSeq finally listing.close()
+          assert(names.exists(_.endsWith("-Data.db")), extra)
+          assert(names.filterNot(component.matches) === Nil, extra)
+        } finally Scratch.delete(out)
+      }
+    } finally Scratch.delete(in)
+  }
+
+  test("--verify on the merge route checks every input's digest; a corrupt one fails by name") {
+    import scala.jdk.CollectionConverters._
+    val in = indexedFixture()
+    val out = Scratch.dir("graft-merge-verify-")
+    try {
+      def args(o: String) = sinkArgs(in.toString, s"$out/$o", "--merge",
+        "lww", "--out-generations", "3", "--verify", "true")
+      assert(RemoverCli.mergeRouteLake(spark, args("a")).isDefined)
+      assert(RemoverCli.run(spark, args("a")) > 0)
+      val digests = {
+        val walk = java.nio.file.Files.walk(in)
+        try walk.iterator().asScala
+          .filter(_.getFileName.toString.endsWith("-Digest.crc32")).toSeq
+          .sortBy(_.toString)
+        finally walk.close()
+      }
+      assert(digests.size === SSTableDumpBridge.TreeFiles)
+      // the fourth input: inputs outnumber tasks, so task 0 verifies it
+      // beside the first
+      val bad = digests.last
+      java.nio.file.Files.write(bad, "12345".getBytes("US-ASCII"))
+      val m = failure(RemoverCli.run(spark, args("b")))
+      assert(m.contains(bad.getFileName.toString.stripSuffix("-Digest.crc32") +
+        "-Data.db: Digest.crc32 mismatch"), m)
+    } finally { Scratch.delete(in); Scratch.delete(out) }
+  }
+
+  test("property: the merge route writes the frame route's bytes over overlapping generations, 1 and 3 output generations (ScalaCheck)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.sources.CompressedData
+    val compressors = None +: Seq(CompressedData.Lz4, CompressedData.Snappy,
+      CompressedData.Deflate, CompressedData.Zstd).map(Some(_))
+    var sharedKeys = 0
+    var ranges = 0
+    (1 to 10).foreach { seed =>
+      val gens = BigFormatGen.mergeLake
+        .apply(Gen.Parameters.default, Seed(seed.toLong))
+        .getOrElse(sys.error("gen failed"))
+      assert(gens.size >= 2 && gens.size <= 5)
+      sharedKeys += gens.flatMap(_.map(_.key)).groupBy(identity)
+        .count(_._2.size > 1)
+      ranges += gens.flatten.flatMap(_.atoms).count(_.isInstanceOf[BigFormat.MarkerAtom])
+      val lake = Scratch.dir("graft-merge-prop-")
+      try {
+        gens.zipWithIndex.foreach { case (parts, g) =>
+          writeGeneration(lake, g + 1, parts, BigFormatGen.mergeHeader,
+            compressors((seed + g) % compressors.size))
+        }
+        Seq("1", "3").foreach { n =>
+          val out = Scratch.dir("graft-merge-prop-out-")
+          try assertRoutesAgree(sinkArgs(lake.toString, s"$out/o", "--merge",
+            "lww", "--out-generations", n), None,
+            s"seed $seed, ${gens.size} inputs, $n output generations")
+          finally Scratch.delete(out)
+        }
+      } finally Scratch.delete(lake)
+    }
+    // the lakes exercise what the property is about
+    assert(sharedKeys >= 30 && ranges >= 10, (sharedKeys, ranges))
   }
 
   test("the generation encoder's bytes do not depend on the order its partitions arrive in") {

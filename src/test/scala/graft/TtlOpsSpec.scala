@@ -4,6 +4,13 @@ import graft.model.CellModel
 import graft.ops.TtlOps
 import org.apache.spark.sql.functions._
 
+/** One bridge row of an LWW merge input, with the generation it came
+  * from. */
+final case class LwwRow(partition_key: String, clustering: Seq[String],
+    row_kind: String, name: String, value: Option[String],
+    writetime_us: Option[Long], deletion_us: Option[Long],
+    expire_us: Option[Long], sstable: String)
+
 /** Round-trip invariants translated from the reference's integration
   * tests (SURVEY §5; `Cassandra3TTLRemoverTest.java:70-192`): expired
   * rows are invisible before the strip, everything is visible after,
@@ -194,6 +201,56 @@ class TtlOpsSpec extends SparkSpec {
     // aggregate must match the window-collected form
     same(TtlOps.lwwRangeAudit(spark, sfDir),
       TtlOps.lwwMergeSkewSafe(TtlOps.lwwRangeFixture(spark, sfDir)))
+  }
+
+  test("lwwMerge: a cell tombstone contends for its cell in both strategies; overlapping ranges fail by name") {
+    import spark.implicits._
+    def frame(rows: LwwRow*) = rows.toDF()
+    def w(pk: String, v: String, ts: Long, src: String): LwwRow =
+      LwwRow(pk, Seq("c0"), "ROW", "v", Some(v), Some(ts), None, None, src)
+    def t(pk: String, ts: Long, ldtUs: Long, src: String): LwwRow =
+      LwwRow(pk, Seq("c0"), "CELL_DELETION", "v", None, Some(ts), Some(ts),
+        Some(ldtUs), src)
+    val cells = frame(
+      t("newer-write", 1000L, 7000000L, "g1"), w("newer-write", "new", 2000L, "g2"),
+      w("newer-tomb", "old", 1000L, "g1"), t("newer-tomb", 2000L, 7000000L, "g2"),
+      w("tie", "w", 2000L, "g1"), t("tie", 2000L, 7000000L, "g2"),
+      t("two-tombs", 2000L, 5000000L, "g1"), t("two-tombs", 2000L, 9000000L, "g2"))
+    // winners only: a write survives iff no tombstone of its cell is as
+    // new; both strategies agree
+    val winners = TtlOps.lwwMerge(cells)
+    assert(winners.select("partition_key", "value").as[(String, String)]
+      .collect().toSeq === Seq("newer-write" -> "new"))
+    assert(winners.exceptAll(TtlOps.lwwMergeSkewSafe(cells)).isEmpty &&
+      TtlOps.lwwMergeSkewSafe(cells).exceptAll(winners).isEmpty)
+    // markers kept: each cell keeps exactly its winner, a tombstone
+    // with its own deletion second (the later one of a tie)
+    val kept = TtlOps.lwwMerge(cells, keepMarkers = true)
+      .select("partition_key", "row_kind", "expire_us", "sstable")
+      .as[(String, String, Option[Long], String)].collect().sortBy(_._1).toSeq
+    assert(kept === Seq(
+      ("newer-tomb", "CELL_DELETION", Some(7000000L), "g2"),
+      ("newer-write", "ROW", None, "g2"),
+      ("tie", "CELL_DELETION", Some(7000000L), "g2"),
+      ("two-tombs", "CELL_DELETION", Some(9000000L), "g2")))
+    // [c1, c5] from g1 and [c2, c3] from g2 overlap: both strategies fail
+    // naming the partition and the generations, even with no write
+    def rt(cl: String, bound: String, del: Long, src: String): LwwRow =
+      LwwRow("k", Seq(cl), "RANGE_TOMBSTONE_BOUND", bound, None, None,
+        Some(del), None, src)
+    val overlapping = frame(
+      rt("c1", "start:inclusive", 10L, "g1"), rt("c5", "end:inclusive", 10L, "g1"),
+      rt("c2", "start:inclusive", 20L, "g2"), rt("c3", "end:inclusive", 20L, "g2"))
+    Seq[() => Any](
+      () => TtlOps.lwwMerge(overlapping, keepMarkers = true).collect(),
+      () => TtlOps.lwwMergeSkewSafe(overlapping.union(
+        frame(w("k", "x", 15L, "g3")))).collect()).foreach { run =>
+      val e = intercept[Exception](run())
+      val m = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(m.contains(
+        "overlapping range tombstones in partition k (generations: g1, g2)"), m)
+    }
   }
 
   test("lwwAsOf: tombstones in the future of the cut do not shadow yet") {
