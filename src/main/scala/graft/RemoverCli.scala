@@ -773,10 +773,12 @@ object RemoverCli {
     *    reads every input at its ring bucket through Index.db, merges
     *    each key's versions under the LWW rules and encodes the bucket
     *    — no bridge rows, no shuffle, no window plan. It takes
-    *    `--merge lww` with any `--out-generations` ([[mergeRouteLake]])
-    *    under the same argument rules (no `--scrub`, no `--cql`) over a
-    *    lake whose generations are all modern-era and all indexed.
-    *    `--verify` checks each input's digest once;
+    *    `--merge lww` ([[mergeRouteLake]]) under the same argument
+    *    rules (no `--scrub`, no `--cql`) over a lake whose generations
+    *    are all modern-era. One output generation streams each input
+    *    whole. Several need every input indexed with a UTF8/Ascii
+    *    partition key, so each bucket is one contiguous run of each
+    *    file. `--verify` checks each input's digest once;
     *  - every other shape takes the FRAME route: the bridge-row frame
     *    ([[sstableSinkInput]]) through `writeSSTables`. It decodes its
     *    input once: the sink gets its source set from the driver instead
@@ -791,7 +793,8 @@ object RemoverCli {
     *    share their source's generation by design. Dump-JSON input
     *    (`--format sstabledump`) has no binary listing and also keeps
     *    the pass. The frame route still merges dump input, `--scrub`,
-    *    `--cql`, 2.x lakes and index-less generations. */
+    *    `--cql` and 2.x lakes, and, into several output generations,
+    *    lakes with an index-less generation or a non-text key. */
   private def runSstableSink(spark: SparkSession, args: CliArgs): Long =
     mergeRouteLake(spark, args).map(lake =>
       graft.sources.SSTableBinaryV2.mergeGenerations(spark, lake,
@@ -830,7 +833,8 @@ object RemoverCli {
   private[graft] def mergeRouteLake(spark: SparkSession, args: CliArgs)
       : Option[Seq[(String, graft.sources.SSTableBinaryV2.SiblingInfo)]] =
     if (fileRouteArgs(args) && args.merge.contains("lww"))
-      graft.sources.SSTableBinaryV2.mergeableLake(spark, args.in)
+      graft.sources.SSTableBinaryV2.mergeableLake(spark, args.in,
+        args.outGenerations)
     else None
 
   /** The frame [[runSstableSink]] writes and the source set it hands

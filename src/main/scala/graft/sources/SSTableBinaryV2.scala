@@ -3587,11 +3587,16 @@ object SSTableBinaryV2 {
       regularColumns = regulars)
     // the local FS's raw layer (the cached checksummed instance stays
     // as it is): Cassandra components only, no `.crc` side files, and
-    // each byte is CRC'd once, by the components that carry checksums
-    val fs = FileSystem.get(java.net.URI.create(target.dir), conf) match {
-      case local: org.apache.hadoop.fs.LocalFileSystem => local.getRawFileSystem
-      case other => other
-    }
+    // each byte is CRC'd once, by the components that carry checksums.
+    // Readers still open through the checksummed instance, so a stale
+    // `.crc` an earlier checksummed writer left beside a component is
+    // deleted before the component is rewritten: it would fail the read
+    val (fs, checksums) =
+      FileSystem.get(java.net.URI.create(target.dir), conf) match {
+        case local: org.apache.hadoop.fs.LocalFileSystem =>
+          (local.getRawFileSystem, Some(local))
+        case other => (other, None)
+      }
     // the FULL loadable component set — primary index, bloom filter,
     // sampled summary, digest and TOC alongside Data/Statistics (the
     // reference's bulk-load-back contract,
@@ -3602,7 +3607,9 @@ object SSTableBinaryV2 {
       compression = target.compression,
       stats = Some(collectStats(sorted, clTypes)))
       .foreach { case (comp, bytes) =>
-        val os = fs.create(new HPath(s"${target.dir}/nb-$gen-big-$comp"), true)
+        val path = new HPath(s"${target.dir}/nb-$gen-big-$comp")
+        checksums.foreach(local => fs.delete(local.getChecksumFile(path), false))
+        val os = fs.create(path, true)
         try os.write(bytes) finally os.close()
       }
   }
@@ -3753,12 +3760,30 @@ object SSTableBinaryV2 {
       .toLong.toInt)
 
   /** The listing of `root` when the merge route ([[mergeGenerations]])
-    * can compact it: at least one Data.db, every one modern-era and
-    * with an Index.db to seek its bucket by. None otherwise. */
-  private[graft] def mergeableLake(spark: SparkSession, root: String)
-      : Option[Seq[(String, SiblingInfo)]] =
-    Some(listLake(root, spark.sessionState.newHadoopConf())).filter(l =>
-      l.nonEmpty && l.forall(f => modernEra(f._1) && f._2.hasIndex))
+    * compacts it into `outGenerations` buckets: at least one Data.db,
+    * every one modern-era. One bucket streams each input whole. Several
+    * buckets seek each input's bucket by its Index.db, which stays one
+    * contiguous run only where the index token is the rendered key's
+    * token: so every input must carry an Index.db and a UTF8/Ascii
+    * partition key (read off its Statistics.db header). On other keys a
+    * bucket is scattered over the file, one positioned open (and, when
+    * compressed, one chunk decompressed) per partition, so those lakes
+    * keep the frame route. None otherwise. */
+  private[graft] def mergeableLake(spark: SparkSession, root: String,
+      outGenerations: Int): Option[Seq[(String, SiblingInfo)]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    Some(listLake(root, conf)).filter(l =>
+      l.nonEmpty && l.forall(f => modernEra(f._1)) &&
+        (outGenerations <= 1 || l.forall { case (path, info) =>
+          info.hasIndex && info.hasStats &&
+            textKey(new SSTableOpen(path, conf, Some(info)).header.keyType)
+        }))
+  }
+
+  /** UTF8/Ascii partition keys render to their own bytes, so the
+    * index's token order is the rendered key's token order. */
+  private def textKey(keyType: String): Boolean =
+    keyType == BigFormat.Utf8Type || keyType == BigFormat.AsciiType
 
   /** The FILE route of the LWW compaction (`--merge lww
     * [--out-generations N]`), shaped like Cassandra's own compaction:
@@ -3779,10 +3804,10 @@ object SSTableBinaryV2 {
       listing: Seq[(String, SiblingInfo)], outDir: String,
       keyspace: String, table: String, compression: Option[String],
       verify: Boolean, outGenerations: Int): Seq[(String, Long)] = {
-    require(listing.nonEmpty &&
-      listing.forall(f => modernEra(f._1) && f._2.hasIndex),
-      "mergeGenerations: the listing must come from mergeableLake")
     val n = math.max(1, outGenerations)
+    require(listing.nonEmpty && listing.forall(f =>
+      modernEra(f._1) && (n == 1 || f._2.hasIndex)),
+      "mergeGenerations: the listing must come from mergeableLake")
     val target = SinkTarget(s"$outDir/$keyspace/$table", None,
       compression, BigFormat.ColumnIndexSize)
     val hconf = spark.sparkContext.broadcast(
@@ -3817,16 +3842,24 @@ object SSTableBinaryV2 {
   }
 
   /** The partitions of one input whose rendered key falls in ring
-    * bucket b of n, decoded at their Index.db positions: each run of
-    * consecutive bucket entries is one positioned stream. On UTF8/Ascii
-    * keys the index token is the rendered key's token, so the bucket is
-    * one contiguous run and the walk stops past it; other key types
-    * walk the whole index. A decoded key must match its index entry. */
+    * bucket b of n. One bucket is the whole file, streamed from offset
+    * 0 through the open's positioned handle (which its `close`
+    * releases), with no index read. Otherwise they are decoded at
+    * their Index.db positions. The keys are UTF8/Ascii
+    * ([[mergeableLake]]), whose index token is the rendered key's
+    * token, so the bucket is one contiguous run of entries and the walk
+    * stops past it. Each run of bucket entries is one positioned
+    * stream. A decoded key must match its index entry. */
   private def bucketPartitions(open: SSTableOpen, path: String, b: Int,
+      n: Int): Iterator[BigFormat.PartitionData] =
+    if (n == 1) BigFormat.partitions(open.header, open.openDataAt(0L), path)
+    else seekBucket(open, path, b, n)
+
+  private def seekBucket(open: SSTableOpen, path: String, b: Int,
       n: Int): Iterator[BigFormat.PartitionData] = {
     val keyType = open.header.keyType
-    val textKeys = keyType == BigFormat.Utf8Type ||
-      keyType == BigFormat.AsciiType
+    require(textKey(keyType), s"$path: the merge route seeks a bucket " +
+      s"by Index.db only on UTF8/Ascii keys, not $keyType")
     // (Data.db position, rendered keys) of each run
     val runs = open.withIndexEntries { entries =>
       val out = scala.collection.mutable.ArrayBuffer
@@ -3836,7 +3869,7 @@ object SSTableBinaryV2 {
       while (!past && entries.hasNext) {
         val (keyBytes, pos, _) = entries.next()
         val key = BigFormat.renderValue(keyType, keyBytes)
-        val kb = if (n == 1) 0 else ringBucket(BigFormat.murmur3Token(
+        val kb = ringBucket(BigFormat.murmur3Token(
           key.getBytes(java.nio.charset.StandardCharsets.UTF_8)), n)
         if (kb == b) {
           if (!inRun) out += ((pos, scala.collection.mutable.ArrayBuffer.empty))
@@ -3844,7 +3877,7 @@ object SSTableBinaryV2 {
           inRun = true
         } else {
           inRun = false
-          past = textKeys && kb > b
+          past = kb > b
         }
       }
       out.toSeq

@@ -1874,16 +1874,21 @@ class SSTableBinarySpec extends SparkSpec {
 
   test("RemoverCli --sink sstable decodes its input once; output equals the distinct-pass sink") {
     val in = SSTableBinaryV2.writeBinaryFixture(spark, sfDir)
-    // the merge route seeks by Index.db, which the fixture lacks
+    // several output generations seek by Index.db, which the fixture
+    // lacks: over it they take the frame route, over its indexed
+    // rewrite the merge route
     val indexed = indexedFixture()
     try {
-      val indexedPartitions = SSTableBinaryV2.readBinary(spark,
-        indexed.toString).select("sstable", "partition_key").distinct().count()
-      val lake = SSTableBinaryV2.readBinary(spark, in.toString)
-      val lakeRows = lake.count()
-      val lakePartitions =
-        lake.select("sstable", "partition_key").distinct().count()
-      val generations = lake.select("sstable").distinct().count()
+      /** (rows, partitions per sstable) of a lake's decoded frame. */
+      def sizes(dir: java.nio.file.Path): (Long, Long) = {
+        val lake = SSTableBinaryV2.readBinary(spark, dir.toString)
+        (lake.count(),
+          lake.select("sstable", "partition_key").distinct().count())
+      }
+      val lakeSizes = Map(in -> sizes(in), indexed -> sizes(indexed))
+      val (lakeRows, _) = lakeSizes(in)
+      val generations = SSTableBinaryV2.readBinary(spark, in.toString)
+        .select("sstable").distinct().count()
       assert(lakeRows > 0)
       Seq(
         ("rewrite", Seq.empty[String], None),
@@ -1895,36 +1900,44 @@ class SSTableBinarySpec extends SparkSpec {
         ("merge lww, 3 generations, zstd",
           Seq("--merge", "lww", "--out-generations", "3", "--compress",
             "zstd"), Some(graft.sources.CompressedData.Zstd))
-      ).foreach { case (shape, extra, compression) =>
+      ).flatMap { case (shape, extra, compression) =>
+        val lakes = if (extra.contains("--merge")) Seq(in, indexed) else Seq(in)
+        lakes.map(lake => (shape, extra, compression, lake))
+      }.foreach { case (shape0, extra, compression, lake) =>
+        val shape = if (lake == indexed) s"$shape0, indexed" else shape0
+        val (rows, partitions) = lakeSizes(lake)
         val out = Scratch.dir("graft-cli-once-")
         try {
-          val lake = if (extra.contains("--merge")) indexed else in
           val args = sinkArgs(lake.toString, s"$out/o", extra: _*)
           if (RemoverCli.mergeRouteLake(spark, args).isDefined) {
             // the merge route: one job of one task per output
-            // generation; the tasks' index seeks decode each input
-            // partition once between them, nothing shuffled
+            // generation; the tasks decode each input partition once
+            // between them, nothing shuffled
             val p = profile(RemoverCli.run(spark, args))
-            assert(p === JobProfile(1, args.outGenerations, 0L,
-              indexedPartitions),
+            assert(p === JobProfile(1, args.outGenerations, 0L, partitions),
               s"$shape: one job, one task per output generation, no " +
                 "shuffle, every partition decoded once")
           } else if (RemoverCli.fileRouteLake(spark, args).isDefined) {
             // the file route: one job of one task per generation, each
             // decoding its partitions once, nothing shuffled
             val p = profile(RemoverCli.run(spark, args))
-            assert(p === JobProfile(1, generations.toInt, 0L, lakePartitions),
+            assert(p === JobProfile(1, generations.toInt, 0L, partitions),
               s"$shape: one job, one task per generation, no shuffle, " +
                 "every partition decoded once")
           } else {
             assert(RemoverCli.sstableSinkInput(spark, args)._2.nonEmpty,
               shape)
-            assert(rowsDecoded(RemoverCli.run(spark, args)) === lakeRows,
+            assert(rowsDecoded(RemoverCli.run(spark, args)) === rows,
               s"$shape: the input must be decoded exactly once")
           }
           assertSameAsDistinctPass(args, compression, shape)
         } finally Scratch.delete(out)
       }
+      // so the merge shapes above ran on both routes
+      assert(RemoverCli.mergeRouteLake(spark, sinkArgs(indexed.toString,
+        "unused", "--merge", "lww", "--out-generations", "4")).isDefined)
+      assert(RemoverCli.mergeRouteLake(spark, sinkArgs(in.toString,
+        "unused", "--merge", "lww", "--out-generations", "4")).isEmpty)
       // the unmerged split keeps the distinct pass: its "<src>#sK"
       // names share their source's generation by design
       val out = Scratch.dir("graft-cli-split-once-")
@@ -2162,13 +2175,24 @@ class SSTableBinarySpec extends SparkSpec {
     val in = indexedFixture()
     val ka = SSTableBinaryV2.writeOldFixture(spark, sfDir)
     val bare = Scratch.dir("graft-route-indexless-")
+    val typed = Scratch.dir("graft-route-intkey-")
+    val out = Scratch.dir("graft-route-merge-out-")
+    def row(v: String, ts: Long) = Seq(BigFormat.RowAtom(Seq(Some("c")),
+      None, None, None, None, Seq(
+        BigFormat.CellAtom("v", BigFormatGen.epoch + ts, None, None, Some(v),
+          false))))
     try {
-      writeGeneration(bare, 1, Seq(BigFormat.PartitionData("k", None, Seq(
-        BigFormat.RowAtom(Seq(Some("c")), None, None, None, None, Seq(
-          BigFormat.CellAtom("v", 1L, None, None, Some("x"), false)))))),
-        mergeHdr)
-      java.nio.file.Files.delete(
-        bare.resolve("graft/documents/nb-1-big-Index.db"))
+      (1 to 2).foreach { g =>
+        writeGeneration(bare, g, Seq(
+          BigFormat.PartitionData("k", None, row(s"x$g", g)),
+          BigFormat.PartitionData(s"k$g", None, row("y", g))), mergeHdr)
+        java.nio.file.Files.delete(
+          bare.resolve(s"graft/documents/nb-$g-big-Index.db"))
+        // int keys: the index's token order is not the rendered key's
+        writeGeneration(typed, g, (0 until 20).map(k =>
+          BigFormat.PartitionData((k * g).toString, None, row(s"z$g", g))),
+          mergeHdr.copy(keyType = BigFormat.Int32Type))
+      }
       def merges(in: java.nio.file.Path, extra: String*): Boolean =
         RemoverCli.mergeRouteLake(spark,
           sinkArgs(in.toString, s"$in-unused", extra: _*)).isDefined
@@ -2179,7 +2203,16 @@ class SSTableBinarySpec extends SparkSpec {
       assert(!merges(in, "--merge", "lww", "--scrub", "true"))
       assert(!merges(in, "--merge", "lww", "--cql", SSTableBinaryV2.Cql2x))
       assert(!merges(ka, "--merge", "lww"))
-      assert(!merges(bare, "--merge", "lww"))
+      // one output generation streams each input whole, index or not,
+      // whatever its key type; several seek text-keyed indexes only
+      assert(merges(bare, "--merge", "lww"))
+      assert(!merges(bare, "--merge", "lww", "--out-generations", "3"))
+      assert(merges(typed, "--merge", "lww"))
+      assert(!merges(typed, "--merge", "lww", "--out-generations", "3"))
+      Seq(bare, typed).foreach { lake =>
+        assertRoutesAgree(sinkArgs(lake.toString, s"$out/${lake.getFileName}",
+          "--merge", "lww"), None, s"one output generation over $lake")
+      }
       assert(!merges(in))
       assert(!merges(in, "--out-generations", "3"))
       // the unmerged split takes neither file route
@@ -2192,6 +2225,7 @@ class SSTableBinarySpec extends SparkSpec {
       assert(RemoverCli.mergeRouteLake(spark, dump).isEmpty)
     } finally {
       Scratch.delete(in); Scratch.delete(ka); Scratch.delete(bare)
+      Scratch.delete(typed); Scratch.delete(out)
     }
   }
 
@@ -2338,13 +2372,33 @@ class SSTableBinarySpec extends SparkSpec {
         val out = Scratch.dir("graft-sink-files-")
         try {
           val args = sinkArgs(in.toString, s"$out/o", extra: _*)
-          RemoverCli.run(spark, args)
+          val rows = RemoverCli.run(spark, args)
           val dir = java.nio.file.Paths.get(args.out, "graft", "documents")
-          val listing = java.nio.file.Files.list(dir)
-          val names = try listing.iterator().asScala
-            .map(_.getFileName.toString).toSeq finally listing.close()
-          assert(names.exists(_.endsWith("-Data.db")), extra)
-          assert(names.filterNot(component.matches) === Nil, extra)
+          def names(): Seq[String] = {
+            val listing = java.nio.file.Files.list(dir)
+            try listing.iterator().asScala.map(_.getFileName.toString)
+              .toSeq.sorted
+            finally listing.close()
+          }
+          val written = names()
+          assert(written.exists(_.endsWith("-Data.db")), extra)
+          assert(written.filterNot(component.matches) === Nil, extra)
+          val readBack = SSTableBinaryV2.readBinary(spark, args.out).count()
+          // an earlier checksummed writer's components, each with its
+          // `.crc`: rewriting them must not leave a `.crc` that no
+          // longer matches the bytes beside it
+          val local = org.apache.hadoop.fs.FileSystem.getLocal(
+            spark.sessionState.newHadoopConf())
+          written.foreach { n =>
+            val os = local.create(new org.apache.hadoop.fs.Path(
+              dir.resolve(n).toString), true)
+            try os.write("stale".getBytes("US-ASCII")) finally os.close()
+          }
+          assert(names().count(_.endsWith(".crc")) === written.size, extra)
+          assert(RemoverCli.run(spark, args) === rows, extra)
+          assert(SSTableBinaryV2.readBinary(spark, args.out).count() ===
+            readBack, extra)
+          assert(names() === written, extra)
         } finally Scratch.delete(out)
       }
     } finally Scratch.delete(in)
