@@ -35,19 +35,28 @@ import org.apache.spark.sql.SparkSession
   * [[graft.sources.SSTableDumpBridge]] — liveness comes from the dump
   * itself, so no cell-model flags apply.
   *
-  * Usage:
-  * `--merge lww` (sstabledump only) reconciles ALL input generations
-  * through [[graft.ops.TtlOps.lwwMerge]] before writing — a directory
-  * of SSTable dumps collapses to the table's effective state
-  * (highest-writetime cells, tombstone shadowing applied, markers
-  * preserved), the step the reference leaves to the Cassandra server.
+  * `--merge lww` (sstabledump or binary input) reconciles ALL input
+  * generations before writing — a directory of SSTables collapses to
+  * the table's effective state (highest-writetime cells, tombstone
+  * shadowing applied, markers preserved), the step the reference
+  * leaves to the Cassandra server. A modern binary lake bound for
+  * `--sink sstable` merges on the merge route
+  * ([[graft.sources.SSTableBinaryV2.mergeGenerations]];
+  * [[mergeRouteLake]] says when); everything else merges through
+  * [[graft.ops.TtlOps.lwwMerge]].
   *
   * Usage:
   *   graft.RemoverCli --in <dir> --out <dir> --table <name>
   *     [--keyspace <ks>] [--cpus <n>]
   *     [--format parquet|sstabledump|sstable]
-  *     [--merge lww] [--reader json|v2] [--sink parquet|sstable]
+  *     [--merge lww] [--reader json|v2]
+  *     [--sink parquet|sstable|sstabledump]
   *     [--compress lz4|snappy|deflate|zstd]   (sstable sink output)
+  *     [--out-generations <n>]  (sstable sink: token-bucketed output
+  *       generations — the compacted output's count under --merge lww,
+  *       else a split of each input generation)
+  *     [--verify true | --scrub true]  (binary input: check each
+  *       Digest.crc32, or salvage damaged generations)
   *     [--cql "CREATE TABLE ..."]  (parquet cell model; 2.x binary
   *       input schema; typed binary sink output)
   *     [--pk <cols> --ck <cols> --cells <cols> --writetime <col>
@@ -474,11 +483,6 @@ object RemoverCli {
       case other => Left(s"unknown --reader '$other' (expected json or v2)")
     }
 
-  /** `--sink sstable` writes the output back as big-format SSTABLES
-    * (one rewritten generation per input SSTable; with `--merge lww`,
-    * ONE compacted generation — a major compaction) instead of the
-    * parquet lake layout. Only the dump-family formats carry the
-    * cell model the binary writer serializes. */
   /** CLI compressor names → Cassandra compressor class simple names
     * (the table-schema `compression.class` values). */
   private val Compressors = Map(
@@ -487,6 +491,13 @@ object RemoverCli {
     "deflate" -> graft.sources.CompressedData.Deflate,
     "zstd" -> graft.sources.CompressedData.Zstd)
 
+  /** `--sink sstable` writes the output back as big-format SSTABLES
+    * (one rewritten generation per input SSTable; with `--merge lww`,
+    * ONE compacted generation — a major compaction — or
+    * `--out-generations` of them) instead of the parquet lake layout;
+    * `--sink sstabledump` exports sstabledump JSON. Only the
+    * dump-family formats carry the cell model either writer
+    * serializes. */
   private def validateSink(a: CliArgs): Either[String, CliArgs] =
     a.sink match {
       case "parquet" =>
@@ -976,20 +987,22 @@ object RemoverCli {
       System.err.println(
         "usage: graft.RemoverCli --in <dir> --out <dir> --table <name>" +
           " [--keyspace <ks>] [--cpus <n>]" +
-          " | --inventory true --in <dir> [--stats true] [--out <dir>]" +
-          " [--cpus <n>]" +
-          " | --set-level <n> [--set-repaired-at <ms>] --in <dir>" +
-          " --out <dir>" +
-          " | --summary-budget <marks> --in <dir> --out <dir>" +
-          " [--activity <parquet>]" +
-          " | --track-activity <parquet> --in <dir>" +
-          " [--cql \"CREATE TABLE ...\"]" +
           " [--format parquet|sstabledump|sstable]" +
-          " [--merge lww] [--reader json|v2] [--sink parquet|sstable]" +
-          " [--compress lz4|snappy|deflate|zstd]" +
-          " [--cql \"CREATE TABLE ...\" --writetime <col>]" +
-          " [--pk <cols> --ck <cols> --cells <cols> --writetime <col>" +
-          " --ttl-key <col>]")
+          " [--merge lww] [--reader json|v2]" +
+          " [--sink parquet|sstable|sstabledump]" +
+          " [--compress lz4|snappy|deflate|zstd] [--out-generations <n>]" +
+          " [--verify true | --scrub true]" +
+          " [--cql \"CREATE TABLE ...\" [--writetime <col>]" +
+          " | --pk <cols> --ck <cols> --cells <cols> --writetime <col>" +
+          " --ttl-key <col>]" +
+          "\n   | --inventory true --in <dir> [--stats true] [--out <dir>]" +
+          " [--cpus <n>]" +
+          "\n   | --set-level <n> [--set-repaired-at <ms>] --in <dir>" +
+          " --out <dir>" +
+          "\n   | --summary-budget <marks> --in <dir> --out <dir>" +
+          " [--activity <parquet>]" +
+          "\n   | --track-activity <parquet> --in <dir>" +
+          " [--cql \"CREATE TABLE ...\"]")
       sys.exit(2)
     case Right(args) =>
       val spark = SparkSession.builder()

@@ -1645,18 +1645,212 @@ object SSTableBinaryV2 {
   // fixture + registered audit
   // =====================================================================
 
-  /** The fixture's serialization header shape (documents-table dump:
-    * string key, one string clustering column, `len`/`src` text
-    * cells). Stats minima are computed per file from the actual
-    * encoded values, as Cassandra's EncodingStats collector does. */
-  private def fixtureHeader(minTsUs: Long, minLdtS: Int,
-      minTtlS: Int): BigFormat.Header =
-    BigFormat.Header(minTsUs, minLdtS, minTtlS,
-      keyType = BigFormat.Utf8Type,
-      clusteringTypes = Seq(BigFormat.Utf8Type),
-      staticColumns = Nil,
-      regularColumns = Seq(
-        "len" -> BigFormat.Utf8Type, "src" -> BigFormat.Utf8Type))
+  /** One `documents` row as the fixtures read it, with what every
+    * fixture derives from it: the write time `TreeBase + doc_id` (in
+    * seconds and micros) and the even-doc TTL rule — even doc_ids
+    * except multiples of 100 carry TTL `doc_id % 100`. */
+  private final case class FixtureDoc(docId: Long, source: String,
+      nChars: Long) {
+    def wtSec: Long = SSTableDumpBridge.TreeBase + docId
+    def wtUs: Long = wtSec * 1000000L
+    def ttl: Option[Int] =
+      if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
+      else None
+    /** The expiry second of a TTL'd cell written `offS` s after the doc. */
+    def ldt(offS: Long = 0L): Option[Int] =
+      ttl.map(t => (wtSec + offS + t).toInt)
+  }
+
+  /** The scaffold every fixture writer shares: loads `documents`,
+    * groups the docs by `doc_id % files` into one Spark task per output
+    * file (the codec is the honest `mapGroups` boundary, the same place
+    * the multimodal ops draw it), and hands `task` the file id, that
+    * file's docs in doc_id order and a writer of `<dir>/documents/
+    * <name>` through the session Hadoop FS. Returns the directory
+    * (the caller owns its deletion) and each task's result — a
+    * fixture-sized manifest; the data never leaves the executors. */
+  private def buildFixture(spark: SparkSession, sfDir: String,
+      prefix: String, files: Int = SSTableDumpBridge.TreeFiles)(
+      task: (Int, Seq[FixtureDoc], (String, Array[Byte]) => Unit) => Int)
+      : (java.nio.file.Path, Seq[Int]) = {
+    import spark.implicits._
+    val out = graft.Scratch.dir(prefix)
+    val outStr = out.toString
+    val hconf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val results = graft.Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id").cast("long"), col("source"),
+        col("n_chars").cast("long"))
+      .as[(Long, String, Long)]
+      .groupByKey { case (docId, _, _) => (docId % files).toInt }
+      .mapGroups { (fileId, docs) =>
+        val fs = FileSystem.get(
+          java.net.URI.create(outStr), hconf.value.value)
+        def write(name: String, bytes: Array[Byte]): Unit = {
+          val os = fs.create(new HPath(s"$outStr/documents/$name"), true)
+          try os.write(bytes) finally os.close()
+        }
+        task(fileId, docs.map(FixtureDoc.tupled).toSeq.sortBy(_.docId), write)
+      }
+      .collect()
+    (out, results.toSeq)
+  }
+
+  /** A fixture file's Data.db; with `compression`, chunked the
+    * default-config Cassandra way (16 KiB chunks, the 4.1 default
+    * chunk_length_in_kb; ADLER32 chunk checksums under `adler`, the
+    * pre-3.0 era) beside its CompressionInfo.db. */
+  private def writeFixtureData(write: (String, Array[Byte]) => Unit,
+      prefix: String, version: String, data: Array[Byte],
+      compression: Option[String], adler: Boolean = false): Unit =
+    compression match {
+      case Some(comp) =>
+        val (cbytes, meta) =
+          CompressedData.compress(data, 16 * 1024, comp, adler)
+        write(s"${prefix}Data.db", cbytes)
+        write(s"${prefix}CompressionInfo.db", CompressedData.writeMeta(meta,
+          CompressedData.versionHasMaxCompressedSize(version)))
+      case None => write(s"${prefix}Data.db", data)
+    }
+
+  /** The modern-era encoder of fixture file `<version>-<fileId + 1>`:
+    * Data.db (see [[writeFixtureData]]) and Statistics.db. The
+    * serialization header declares `keyType`, one text clustering
+    * column and the `static`/`regular` columns; its EncodingStats
+    * minima come from the encoded values ([[encodingMinima]], as
+    * Cassandra's collector computes them), and the key-cardinality
+    * sketch rides along. Returns the partition count. */
+  private def encodeModernFixture(write: (String, Array[Byte]) => Unit,
+      fileId: Int, parts: Seq[BigFormat.PartitionData],
+      regular: Seq[(String, String)], static: Seq[(String, String)] = Nil,
+      keyType: String = BigFormat.Utf8Type, version: String = "nb",
+      compression: Option[String] = None): Int = {
+    val (minTs, minLdt, minTtl) = encodingMinima(parts)
+    val header = BigFormat.Header(minTs, minLdt, minTtl, keyType,
+      clusteringTypes = Seq(BigFormat.Utf8Type), staticColumns = static,
+      regularColumns = regular)
+    val prefix = s"$version-${fileId + 1}-big-"
+    writeFixtureData(write, prefix, version,
+      BigFormat.writeDataFile(parts, header), compression)
+    write(s"${prefix}Statistics.db", BigFormat.writeStats(header, version,
+      compaction = Some(KeyCardinality.writeComponent(
+        KeyCardinality.sketchOf(parts.iterator.map(p =>
+          BigFormat.encodeValue(keyType, p.key)))))))
+    parts.size
+  }
+
+  /** Every sidecar a 2.x fixture file can carry beside its Data.db. */
+  private val Sidecars2x =
+    Set("Index.db", "Summary.db", "Filter.db", "Statistics.db")
+
+  /** The 2.x-era encoder of fixture file `graft-documents-ka-<fileId +
+    * 1>`: the [[OldFormat]] Data.db under the `cql` declaration (LZ4
+    * chunks with ADLER32 checksums under `compress`; a positive
+    * `columnIndexSize` promotes wide partitions' Index.db entries),
+    * then exactly the `sidecars` named — several readers are tested
+    * against index-less 2.x files. Returns the Index.db entries. */
+  private def encode2xFixture(write: (String, Array[Byte]) => Unit,
+      fileId: Int, parts: Seq[OldFormat.Partition2], cql: String,
+      sidecars: Set[String] = Set.empty, compress: Boolean = false,
+      columnIndexSize: Int = 0): Seq[(Array[Byte], Long, Array[Byte])] = {
+    val gen = fileId + 1
+    val prefix = s"graft-documents-ka-$gen-"
+    val schema = OldFormat.schemaOfCql(graft.model.CqlSchema.parse(cql)
+      .fold(e => throw new IllegalArgumentException(e), identity))
+    val (dataBytes, index) =
+      OldFormat.writeDataFileIndexed(parts, schema, columnIndexSize)
+    writeFixtureData(write, prefix, "ka", dataBytes,
+      if (compress) Some(CompressedData.Lz4) else None, adler = true)
+    // the 2.x sidecars the reference's own getPosition path
+    // consults: fixed-width Index.db entries (logical offsets —
+    // valid under compression too) and the Murmur3 bloom in the
+    // PRE-3.0 hash-word order a real ka/la generation carries
+    // (oldBfHashOrder — a fixture written with the modern order
+    // would mask reader-side order bugs)
+    if (sidecars("Index.db"))
+      write(s"${prefix}Index.db", SSTableComponents.writeIndex2x(index))
+    // the era's Summary.db in its literal layout (sampled marks
+    // carry Index.db offsets)
+    if (sidecars("Summary.db") && index.nonEmpty)
+      write(s"${prefix}Summary.db", SSTableComponents.writeSummary2x(
+        SSTableComponents.sampleIndex2x(index), index.size.toLong,
+        index.head._1, index.last._1))
+    if (sidecars("Filter.db")) {
+      val bloom = SSTableComponents
+        .newBloom(index.size.toLong, oldHashOrder = true)
+      index.foreach { case (k, _, _) => bloom.add(k) }
+      write(s"${prefix}Filter.db", SSTableComponents.writeFilter(bloom))
+    }
+    if (sidecars("Statistics.db"))
+      write(s"${prefix}Statistics.db", fixtureStats2x(parts, index, gen))
+    index
+  }
+
+  /** The pre-3.0 StatsMetadata sidecar of a 2.x fixture file (min/max
+    * timestamp over every atom, max local-deletion second) — what the
+    * sidecar inventory reports for ka/la generations instead of
+    * NULLs. */
+  private def fixtureStats2x(parts: Seq[OldFormat.Partition2],
+      index: Seq[(Array[Byte], Long, Array[Byte])], gen: Int)
+      : Array[Byte] = {
+    val allTs = parts.iterator.flatMap(p =>
+      p.deletionUs.iterator ++ p.atoms.iterator.map {
+        case c: OldFormat.Cell2 => c.tsUs
+        case t: OldFormat.Tombstone2 => t.deletionUs
+      }).toSeq
+    val maxLdt = parts.iterator.flatMap(_.atoms.iterator).map {
+      case c: OldFormat.Cell2 => c.ldtS.getOrElse(Int.MaxValue)
+      case t: OldFormat.Tombstone2 => (t.deletionUs / 1000000L).toInt
+    }.foldLeft(Int.MinValue)(_ max _)
+    // the tombstone drop-time histogram + column-count total the
+    // droppability estimates read back, collected from the atoms
+    // actually written (MetadataCollector's role): EVERY atom
+    // with a finite local-deletion time contributes — partition
+    // deletions, range tombstones AND expiring/deleted cells
+    // (Cassandra 2.x's updateLocalDeletionTime skips only the
+    // live sentinel; TTL'd data counting as droppable is the
+    // whole point of the ratio)
+    val dropTimes = parts.iterator.flatMap(p =>
+      p.deletionUs.iterator.map(_ / 1000000L) ++
+        p.atoms.iterator.flatMap {
+          case t: OldFormat.Tombstone2 =>
+            Iterator.single(t.deletionUs / 1000000L)
+          case c: OldFormat.Cell2 =>
+            c.ldtS.iterator.map(_.toLong)
+        }).map(_.toDouble).toSeq
+    val nCells = parts.iterator.map(_.atoms.count {
+      case _: OldFormat.Cell2 => true
+      case _ => false
+    }.toLong).sum
+    // 2.1's min/maxColumnNames: per-clustering-component bounds
+    // over every cell's composite name AND both range-tombstone
+    // bounds (ColumnFamily.getColumnStats feeds the collector
+    // from cells and deletionInfo alike); the fixture's declared
+    // clustering is text, so the comparator is byte-lexicographic
+    val clNames = parts.iterator.flatMap(_.atoms.iterator.flatMap {
+      case c: OldFormat.Cell2 => Iterator.single(c.clustering)
+      case t: OldFormat.Tombstone2 => Iterator(t.start, t.end)
+    }).toSeq
+    def nameBound(worse: (String, String) => Boolean): Seq[Seq[Byte]] =
+      if (clNames.isEmpty) Nil
+      else (0 until clNames.map(_.size).min).map { i =>
+        clNames.map(_(i)).reduce((a, b) => if (worse(a, b)) b else a)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          .toIndexedSeq: Seq[Byte]
+      }
+    OldFormat.writeStats2x(
+      OldFormat.Stats2x(allTs.min, allTs.max, maxLdt,
+        sstableLevel = 0, repairedAt = 0L,
+        tombstoneDropTime = OldFormat.TombstoneHistogram.of(dropTimes),
+        estColumnsTotal = nCells,
+        minColumnNames = nameBound(_ > _),
+        maxColumnNames = nameBound(_ < _)), index.size.toLong,
+      compaction = Some(KeyCardinality.writeComponent2x(
+        KeyCardinality.sketchOf(index.iterator.map(_._1)),
+        // a designed compacted-from lineage (2.x CompactionMetadata
+        // ancestors — gen arithmetic the oracle replays)
+        ancestors = Seq(gen * 2, gen * 2 + 1))))
+  }
 
   /** Binary twin of [[SSTableDumpBridge.writeTreeFixture]]: the SAME
     * logical content (each document one partition in file
@@ -1670,93 +1864,35 @@ object SSTableBinaryV2 {
     * cell with ttl=0), so `doc_id % 100 == 0` rows decode ttl as NULL
     * where the JSON path reads 0 — identical under SUM.
     *
-    * Encoding runs DISTRIBUTEDLY: one task per output SSTable
-    * (groupByKey on file id), the [[BigFormat]] codec being the
-    * honest `mapGroups` boundary — the same place the multimodal ops
-    * draw it — and each task writes its two files through the session
-    * Hadoop FS. Caller owns the returned dir's deletion. */
+    * Encoding runs DISTRIBUTEDLY, one task per output SSTable
+    * ([[buildFixture]]). Caller owns the returned dir's deletion. */
   def writeBinaryFixture(spark: SparkSession, sfDir: String,
       version: String = "nb",
-      compression: Option[String] = None): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-bintable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val sorted = docs.toArray.sortBy(_._1)
-        val parts = sorted.map { case (docId, source, nChars) =>
-          val kind = docId % 10
-          val wtSec = base + docId
-          val wtUs = wtSec * 1000000L
-          val rowTtl =
-            if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
-            else None
-          val rowLdt = rowTtl.map(t => (wtSec + t).toInt)
-          val clustering = Seq(Some(s"c$docId"))
-          val key = docId.toString
-          if (kind == 3)
-            BigFormat.PartitionData(key, Some(wtUs), Seq.empty)
-          else if (kind == 7)
-            BigFormat.PartitionData(key, None, Seq(
-              BigFormat.RowAtom(clustering, None, None, None,
-                Some(wtUs), Nil)))
-          else if (kind == 5)
-            BigFormat.PartitionData(key, None, Seq(
-              BigFormat.RowAtom(clustering, Some(wtUs), rowTtl, rowLdt,
-                None, Nil)))
-          else
-            BigFormat.PartitionData(key, None, Seq(
-              BigFormat.RowAtom(clustering, Some(wtUs), rowTtl, rowLdt,
-                None, Seq(
-                  BigFormat.CellAtom("len", wtUs, rowTtl, rowLdt,
-                    Some(nChars.toString), deleted = false),
-                  BigFormat.CellAtom("src", wtUs + 10000000L, rowTtl,
-                    rowTtl.map(t => (wtSec + 10 + t).toInt),
-                    Some(source), deleted = false)))))
+      compression: Option[String] = None): java.nio.file.Path =
+    buildFixture(spark, sfDir, "graft-bintable-") { (fileId, docs, write) =>
+      val parts = docs.map { d =>
+        val clustering = Seq(Some(s"c${d.docId}"))
+        val key = d.docId.toString
+        (d.docId % 10).toInt match {
+          case 3 => BigFormat.PartitionData(key, Some(d.wtUs), Seq.empty)
+          case 7 => BigFormat.PartitionData(key, None, Seq(
+            BigFormat.RowAtom(clustering, None, None, None, Some(d.wtUs), Nil)))
+          case 5 => BigFormat.PartitionData(key, None, Seq(
+            BigFormat.RowAtom(clustering, Some(d.wtUs), d.ttl, d.ldt(), None,
+              Nil)))
+          case _ => BigFormat.PartitionData(key, None, Seq(
+            BigFormat.RowAtom(clustering, Some(d.wtUs), d.ttl, d.ldt(), None,
+              Seq(
+                BigFormat.CellAtom("len", d.wtUs, d.ttl, d.ldt(),
+                  Some(d.nChars.toString), deleted = false),
+                BigFormat.CellAtom("src", d.wtUs + 10000000L, d.ttl,
+                  d.ldt(10), Some(d.source), deleted = false)))))
         }
-        val (minTs, minLdt, minTtl) = encodingMinima(parts.toSeq)
-        val header = fixtureHeader(minTs, minLdt, minTtl)
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val dir = new HPath(s"$outStr/documents")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        val dataBytes = BigFormat.writeDataFile(parts.toSeq, header)
-        compression match {
-          case Some(comp) =>
-            // the default-config Cassandra shape: chunked LZ4 with a
-            // CompressionInfo.db sibling (16 KiB chunks, the 4.1
-            // default chunk_length_in_kb)
-            val (cbytes, meta) =
-              CompressedData.compress(dataBytes, 16 * 1024, comp)
-            write(s"$version-$gen-big-Data.db", cbytes)
-            write(s"$version-$gen-big-CompressionInfo.db",
-              CompressedData.writeMeta(meta,
-                CompressedData.versionHasMaxCompressedSize(version)))
-          case None =>
-            write(s"$version-$gen-big-Data.db", dataBytes)
-        }
-        write(s"$version-$gen-big-Statistics.db",
-          BigFormat.writeStats(header, version,
-            compaction = Some(KeyCardinality.writeComponent(
-              KeyCardinality.sketchOf(parts.iterator.map(p =>
-                BigFormat.encodeValue(header.keyType, p.key)))))))
-        (fileId, parts.length)
       }
-      .collect() // 4-row fixture manifest; the data never leaves executors
-    out
-  }
+      encodeModernFixture(write, fileId, parts,
+        Seq("len" -> BigFormat.Utf8Type, "src" -> BigFormat.Utf8Type),
+        version = version, compression = compression)
+    }._1
 
   /** The bridge-row frame off a big-format data directory — the
     * binary sibling of `readTree`/`readTreeV2`. A declared CQL schema
@@ -1941,169 +2077,30 @@ object SSTableBinaryV2 {
     * CompressionInfo.db sibling without the maxCompressedSize word
     * (the era the reference reads at `NoTTLReader.java:343,623`). */
   def writeOldFixture(spark: SparkSession,
-      sfDir: String, compress: Boolean = false): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-katable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    val schema = OldFormat.schemaOfCql(
-      graft.model.CqlSchema.parse(Cql2x)
-        .fold(e => throw new IllegalArgumentException(e), identity))
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val parts = docs.toArray.sortBy(_._1).map {
-          case (docId, source, nChars) =>
-            val kind = docId % 10
-            val wtSec = base + docId
-            val wtUs = wtSec * 1000000L
-            val ttl =
-              if (docId % 2 == 0 && docId % 100 != 0)
-                Some((docId % 100).toInt)
-              else None
-            val cl = Seq(s"c$docId")
-            val key = docId.toString
-            def marker = OldFormat.Cell2(cl, "", wtUs, ttl,
-              ttl.map(t => (wtSec + t).toInt), Some(""), deleted = false,
-              counter = false)
-            if (kind == 3)
-              OldFormat.Partition2(key, Some(wtUs), Nil)
-            else if (kind == 7)
-              OldFormat.Partition2(key, None, Seq(
-                OldFormat.Tombstone2(cl, startInclusive = true,
-                  cl, endInclusive = true, wtUs)))
-            else if (kind == 5)
-              OldFormat.Partition2(key, None, Seq(marker))
-            else
-              OldFormat.Partition2(key, None, Seq(
-                marker,
-                OldFormat.Cell2(cl, "len", wtUs, ttl,
-                  ttl.map(t => (wtSec + t).toInt), Some(nChars.toString),
-                  deleted = false, counter = false),
-                OldFormat.Cell2(cl, "src", wtUs + 10000000L, ttl,
-                  ttl.map(t => (wtSec + 10 + t).toInt), Some(source),
-                  deleted = false, counter = false)))
+      sfDir: String, compress: Boolean = false): java.nio.file.Path =
+    buildFixture(spark, sfDir, "graft-katable-") { (fileId, docs, write) =>
+      val parts = docs.map { d =>
+        val cl = Seq(s"c${d.docId}")
+        val key = d.docId.toString
+        def marker = OldFormat.Cell2(cl, "", d.wtUs, d.ttl, d.ldt(),
+          Some(""), deleted = false, counter = false)
+        (d.docId % 10).toInt match {
+          case 3 => OldFormat.Partition2(key, Some(d.wtUs), Nil)
+          case 7 => OldFormat.Partition2(key, None, Seq(
+            OldFormat.Tombstone2(cl, startInclusive = true,
+              cl, endInclusive = true, d.wtUs)))
+          case 5 => OldFormat.Partition2(key, None, Seq(marker))
+          case _ => OldFormat.Partition2(key, None, Seq(
+            marker,
+            OldFormat.Cell2(cl, "len", d.wtUs, d.ttl, d.ldt(),
+              Some(d.nChars.toString), deleted = false, counter = false),
+            OldFormat.Cell2(cl, "src", d.wtUs + 10000000L, d.ttl,
+              d.ldt(10), Some(d.source), deleted = false, counter = false)))
         }
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(
-            new HPath(s"$outStr/documents/graft-documents-ka-$gen-$name"),
-            true)
-          try os.write(bytes) finally os.close()
-        }
-        val (dataBytes, index) =
-          OldFormat.writeDataFileIndexed(parts.toSeq, schema)
-        if (compress) {
-          val (cbytes, meta) = CompressedData.compress(
-            dataBytes, 16 * 1024, CompressedData.Lz4, adler = true)
-          write("Data.db", cbytes)
-          write("CompressionInfo.db", CompressedData.writeMeta(meta,
-            CompressedData.versionHasMaxCompressedSize("ka")))
-        } else write("Data.db", dataBytes)
-        // the 2.x sidecars the reference's own getPosition path
-        // consults: fixed-width Index.db entries (logical offsets —
-        // valid under compression too) and the Murmur3 bloom in the
-        // PRE-3.0 hash-word order a real ka/la generation carries
-        // (oldBfHashOrder — a fixture written with the modern order
-        // would mask reader-side order bugs)
-        write("Index.db", SSTableComponents.writeIndex2x(index))
-        // the era's Summary.db in its literal layout (sampled marks
-        // carry Index.db offsets — fixed-width 2.x entry framing:
-        // short keyLen + key + long position + int promoted size)
-        val idxPositions2x = {
-          var pos = 0L
-          index.map { case (k, _, prom) =>
-            val here = pos
-            pos += 2L + k.length + 8 + 4 + prom.length
-            here
-          }
-        }
-        val sampled2x = index.zip(idxPositions2x).zipWithIndex.collect {
-          case (((k, _, _), ip), i)
-            if i % SSTableComponents.MinIndexInterval == 0 => (k, ip)
-        }
-        if (index.nonEmpty)
-          write("Summary.db", SSTableComponents.writeSummary2x(
-            sampled2x, index.size.toLong, index.head._1, index.last._1))
-        val bloom = SSTableComponents
-          .newBloom(index.size.toLong, oldHashOrder = true)
-        index.foreach { case (k, _, _) => bloom.add(k) }
-        write("Filter.db", SSTableComponents.writeFilter(bloom))
-        // the pre-3.0 StatsMetadata sidecar (min/max timestamp over
-        // every atom, max local-deletion second) — what the sidecar
-        // inventory reports for ka/la generations instead of NULLs
-        val allTs = parts.iterator.flatMap(p =>
-          p.deletionUs.iterator ++ p.atoms.iterator.map {
-            case c: OldFormat.Cell2 => c.tsUs
-            case t: OldFormat.Tombstone2 => t.deletionUs
-          }).toSeq
-        val maxLdt = parts.iterator.flatMap(_.atoms.iterator).map {
-          case c: OldFormat.Cell2 => c.ldtS.getOrElse(Int.MaxValue)
-          case t: OldFormat.Tombstone2 => (t.deletionUs / 1000000L).toInt
-        }.foldLeft(Int.MinValue)(_ max _)
-        // the tombstone drop-time histogram + column-count total the
-        // droppability estimates read back, collected from the atoms
-        // actually written (MetadataCollector's role): EVERY atom
-        // with a finite local-deletion time contributes — partition
-        // deletions, range tombstones AND expiring/deleted cells
-        // (Cassandra 2.x's updateLocalDeletionTime skips only the
-        // live sentinel; TTL'd data counting as droppable is the
-        // whole point of the ratio)
-        val dropTimes = parts.iterator.flatMap(p =>
-          p.deletionUs.iterator.map(_ / 1000000L) ++
-            p.atoms.iterator.flatMap {
-              case t: OldFormat.Tombstone2 =>
-                Iterator.single(t.deletionUs / 1000000L)
-              case c: OldFormat.Cell2 =>
-                c.ldtS.iterator.map(_.toLong)
-            }).map(_.toDouble).toSeq
-        val nCells = parts.iterator.map(_.atoms.count {
-          case _: OldFormat.Cell2 => true
-          case _ => false
-        }.toLong).sum
-        // 2.1's min/maxColumnNames: per-clustering-component bounds
-        // over every cell's composite name AND both range-tombstone
-        // bounds (ColumnFamily.getColumnStats feeds the collector
-        // from cells and deletionInfo alike); the fixture's declared
-        // clustering is text, so the comparator is byte-lexicographic
-        val clNames = parts.iterator.flatMap(_.atoms.iterator.flatMap {
-          case c: OldFormat.Cell2 => Iterator.single(c.clustering)
-          case t: OldFormat.Tombstone2 => Iterator(t.start, t.end)
-        }).toSeq
-        def nameBound(worse: (String, String) => Boolean)
-            : Seq[Seq[Byte]] =
-          if (clNames.isEmpty) Nil
-          else (0 until clNames.map(_.size).min).map { i =>
-            clNames.map(_(i)).reduce((a, b) =>
-              if (worse(a, b)) b else a)
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              .toIndexedSeq: Seq[Byte]
-          }
-        write("Statistics.db", OldFormat.writeStats2x(
-          OldFormat.Stats2x(allTs.min, allTs.max, maxLdt,
-            sstableLevel = 0, repairedAt = 0L,
-            tombstoneDropTime = OldFormat.TombstoneHistogram.of(dropTimes),
-            estColumnsTotal = nCells,
-            minColumnNames = nameBound(_ > _),
-            maxColumnNames = nameBound(_ < _)), index.size.toLong,
-          compaction = Some(KeyCardinality.writeComponent2x(
-            KeyCardinality.sketchOf(index.iterator.map(_._1)),
-            // a designed compacted-from lineage (2.x CompactionMetadata
-            // ancestors — gen arithmetic the oracle replays)
-            ancestors = Seq(gen * 2, gen * 2 + 1)))))
-        (fileId, parts.length)
       }
-      .collect()
-    out
-  }
+      encode2xFixture(write, fileId, parts, Cql2x, Sidecars2x,
+        compress).size
+    }._1
 
   /** Registered `src_sstable_2x`: the pre-3.0 decode path — the
     * reference's whole cassandra-2 module re-expressed — under the
@@ -2183,56 +2180,26 @@ object SSTableBinaryV2 {
     * not liveness math). */
   def writeWideOldFixture(spark: SparkSession,
       sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-ka-wide-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val base = SSTableDumpBridge.TreeBase
-    val schema = OldFormat.schemaOfCql(
-      graft.model.CqlSchema.parse(Cql2x)
-        .fold(e => throw new IllegalArgumentException(e), identity))
-    val promotedCount = graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey(_ => 0)
-      .mapGroups { (_, docs) =>
-        val rows = docs.toArray.sortBy(_._1)
-        val parts = rows.groupBy(_._1 % 4).toSeq.map { case (pk, ds) =>
-          val atoms = ds.sortBy(_._1).toSeq.flatMap {
-            case (docId, source, nChars) =>
-              val wtUs = (base + docId) * 1000000L
-              val cl = Seq(f"c$docId%09d")
-              Seq(
-                OldFormat.Cell2(cl, "", wtUs, None, None, Some(""),
-                  deleted = false, counter = false),
-                OldFormat.Cell2(cl, "len", wtUs, None, None,
-                  Some(nChars.toString), deleted = false,
-                  counter = false),
-                OldFormat.Cell2(cl, "src", wtUs + 10000000L, None, None,
-                  Some(source), deleted = false, counter = false))
-          }
-          OldFormat.Partition2(pk.toString, None, atoms)
-        }
-        val (dataBytes, index) =
-          OldFormat.writeDataFileIndexed(parts, schema,
-            columnIndexSize = 512)
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(
-            new HPath(s"$outStr/documents/graft-documents-ka-1-$name"),
-            true)
-          try os.write(bytes) finally os.close()
-        }
-        write("Data.db", dataBytes)
-        write("Index.db", SSTableComponents.writeIndex2x(index))
-        index.count(_._3.nonEmpty)
-      }.collect().head
-    require(promotedCount == 4,
+    val (out, promoted) = buildFixture(spark, sfDir, "graft-ka-wide-",
+        files = 1) { (fileId, docs, write) =>
+      val parts = docs.groupBy(_.docId % 4).toSeq.map { case (pk, ds) =>
+        OldFormat.Partition2(pk.toString, None, ds.flatMap { d =>
+          val cl = Seq(f"c${d.docId}%09d")
+          Seq(
+            OldFormat.Cell2(cl, "", d.wtUs, None, None, Some(""),
+              deleted = false, counter = false),
+            OldFormat.Cell2(cl, "len", d.wtUs, None, None,
+              Some(d.nChars.toString), deleted = false, counter = false),
+            OldFormat.Cell2(cl, "src", d.wtUs + 10000000L, None, None,
+              Some(d.source), deleted = false, counter = false))
+        })
+      }
+      encode2xFixture(write, fileId, parts, Cql2x, Set("Index.db"),
+        columnIndexSize = 512).count(_._3.nonEmpty)
+    }
+    require(promoted == Seq(4),
       s"wide 2.x fixture: designed 4 promoted partitions, got " +
-        s"$promotedCount")
+        promoted.mkString(","))
     out
   }
 
@@ -2331,64 +2298,28 @@ object SSTableBinaryV2 {
     * tables predate the CQL3 marker), row deletes are raw-bound
     * inclusive range tombstones. */
   def writeCompactFixture(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-compacttable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    val schema = OldFormat.schemaOfCql(
-      graft.model.CqlSchema.parse(CqlCompact2x)
-        .fold(e => throw new IllegalArgumentException(e), identity))
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val parts = docs.toArray.sortBy(_._1).map {
-          case (docId, source, nChars) =>
-            val kind = docId % 10
-            val wtSec = base + docId
-            val wtUs = wtSec * 1000000L
-            val ttl =
-              if (docId % 2 == 0 && docId % 100 != 0)
-                Some((docId % 100).toInt)
-              else None
-            val key = docId.toString
-            if (kind == 3)
-              OldFormat.Partition2(key, Some(wtUs), Nil)
-            else if (kind == 7)
-              OldFormat.Partition2(key, None, Seq(
-                OldFormat.Tombstone2(Seq(s"c$docId"),
-                  startInclusive = true, Seq(s"c$docId"),
-                  endInclusive = true, wtUs)))
-            else
-              OldFormat.Partition2(key, None, Seq(
-                OldFormat.Cell2(Seq(s"c$docId"), "value", wtUs, ttl,
-                  ttl.map(t => (wtSec + t).toInt),
-                  Some(nChars.toString), deleted = false,
-                  counter = false),
-                OldFormat.Cell2(Seq(s"d$docId"), "value",
-                  wtUs + 10000000L, ttl,
-                  ttl.map(t => (wtSec + 10 + t).toInt), Some(source),
-                  deleted = false, counter = false)))
+      sfDir: String): java.nio.file.Path =
+    buildFixture(spark, sfDir, "graft-compacttable-") {
+        (fileId, docs, write) =>
+      val parts = docs.map { d =>
+        val key = d.docId.toString
+        (d.docId % 10).toInt match {
+          case 3 => OldFormat.Partition2(key, Some(d.wtUs), Nil)
+          case 7 => OldFormat.Partition2(key, None, Seq(
+            OldFormat.Tombstone2(Seq(s"c${d.docId}"),
+              startInclusive = true, Seq(s"c${d.docId}"),
+              endInclusive = true, d.wtUs)))
+          case _ => OldFormat.Partition2(key, None, Seq(
+            OldFormat.Cell2(Seq(s"c${d.docId}"), "value", d.wtUs, d.ttl,
+              d.ldt(), Some(d.nChars.toString), deleted = false,
+              counter = false),
+            OldFormat.Cell2(Seq(s"d${d.docId}"), "value",
+              d.wtUs + 10000000L, d.ttl, d.ldt(10), Some(d.source),
+              deleted = false, counter = false)))
         }
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val os = fs.create(
-          new HPath(s"$outStr/documents/graft-documents-ka-$gen-Data.db"),
-          true)
-        try os.write(OldFormat.writeDataFile(parts.toSeq, schema))
-        finally os.close()
-        (fileId, parts.length)
       }
-      .collect()
-    out
-  }
+      encode2xFixture(write, fileId, parts, CqlCompact2x).size
+    }._1
 
   /** Registered `src_sstable_compact`: the thrift dynamic-CF decode
     * path — raw-comparator cell names, single value column, no
@@ -2480,62 +2411,28 @@ object SSTableBinaryV2 {
     * doc_ids (except %100==0) TTL every live cell — the strip must
     * erase exactly that. */
   def writeOld2xCollFixture(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-kacoll-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    val schema = OldFormat.schemaOfCql(
-      graft.model.CqlSchema.parse(Cql2xColl)
-        .fold(e => throw new IllegalArgumentException(e), identity))
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val parts = docs.toArray.sortBy(_._1).map {
-          case (docId, source, nChars) =>
-            val wtSec = base + docId
-            val wtUs = wtSec * 1000000L
-            val ttl =
-              if (docId % 2 == 0 && docId % 100 != 0)
-                Some((docId % 100).toInt)
-              else None
-            val ldt = ttl.map(t => (wtSec + t).toInt)
-            val cl = Seq(s"c$docId")
-            def live(name: String, v: String, dUs: Long) =
-              OldFormat.Cell2(cl, name, wtUs + dUs, ttl,
-                ldt, Some(v), deleted = false, counter = false)
-            val listPos = f"$docId%032x"
-            val cells = Seq(
-              live("tags[k0]", source, 0L),
-              live("tags[k1]", nChars.toString, 1000000L),
-              live(s"labels[s${docId % 5}]", "", 0L),
-              live(s"seq[$listPos]", source, 0L)) ++
-              (if (docId % 10 == 6)
-                Seq(OldFormat.Cell2(cl, "tags[gone]", wtUs + 2000000L,
-                  None, Some((wtSec + 2).toInt), None, deleted = true,
-                  counter = false))
-              else Nil)
-            OldFormat.Partition2(docId.toString, None, cells)
-        }
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val os = fs.create(
-          new HPath(s"$outStr/documents/graft-documents-ka-$gen-Data.db"),
-          true)
-        try os.write(OldFormat.writeDataFile(parts.toSeq, schema))
-        finally os.close()
-        (fileId, parts.length)
+      sfDir: String): java.nio.file.Path =
+    buildFixture(spark, sfDir, "graft-kacoll-") { (fileId, docs, write) =>
+      val parts = docs.map { d =>
+        val cl = Seq(s"c${d.docId}")
+        def live(name: String, v: String, dUs: Long) =
+          OldFormat.Cell2(cl, name, d.wtUs + dUs, d.ttl, d.ldt(), Some(v),
+            deleted = false, counter = false)
+        val listPos = f"${d.docId}%032x"
+        val cells = Seq(
+          live("tags[k0]", d.source, 0L),
+          live("tags[k1]", d.nChars.toString, 1000000L),
+          live(s"labels[s${d.docId % 5}]", "", 0L),
+          live(s"seq[$listPos]", d.source, 0L)) ++
+          (if (d.docId % 10 == 6)
+            Seq(OldFormat.Cell2(cl, "tags[gone]", d.wtUs + 2000000L,
+              None, Some((d.wtSec + 2).toInt), None, deleted = true,
+              counter = false))
+          else Nil)
+        OldFormat.Partition2(d.docId.toString, None, cells)
       }
-      .collect()
-    out
-  }
+      encode2xFixture(write, fileId, parts, Cql2xColl).size
+    }._1
 
   /** Registered `src_sstable_2x_coll`: the cassandra-2 module's
     * lifecycle over COLLECTION columns — ka cells with
@@ -2581,99 +2478,37 @@ object SSTableBinaryV2 {
     * live cell. All deterministic from the documents table, so the
     * DuckDB oracle replays every aggregate bit-for-bit. */
   def writeComplexFixture(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-cplxtable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val sorted = docs.toArray.sortBy(_._1)
-        val parts = sorted.map { case (docId, source, nChars) =>
-          val kind = docId % 10
-          val wtSec = base + docId
-          val wtUs = wtSec * 1000000L
-          val ttl =
-            if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
-            else None
-          def cell(name: String, tsOff: Long, value: String,
-              path: Option[String]): BigFormat.CellAtom =
-            BigFormat.CellAtom(name, wtUs + tsOff, ttl,
-              ttl.map(t => (wtSec + tsOff / 1000000L + t).toInt),
-              Some(value), deleted = false, path)
-          val len = cell("len", 0L, nChars.toString, None)
-          val (attrsCells, complexDels) =
-            if (kind == 4)
-              (Seq(cell("attrs", 0L, source, Some("k0"))),
-                Seq("attrs" -> (wtUs - 1)))
-            else if (kind == 6)
-              (Seq(
-                BigFormat.CellAtom("attrs", wtUs, None, Some(wtSec.toInt),
-                  None, deleted = true, path = Some("k0")),
-                cell("attrs", 1000000L, nChars.toString, Some("k1"))),
-                Nil)
-            else
-              (Seq(cell("attrs", 0L, source, Some("k0")),
-                cell("attrs", 1000000L, nChars.toString, Some("k1"))),
-                Nil)
-          BigFormat.PartitionData(docId.toString, None, Seq(
-            BigFormat.RowAtom(Seq(Some(s"c$docId")), Some(wtUs), ttl,
-              ttl.map(t => (wtSec + t).toInt), None,
-              len +: attrsCells, complexDels)))
+      sfDir: String): java.nio.file.Path =
+    buildFixture(spark, sfDir, "graft-cplxtable-") { (fileId, docs, write) =>
+      val parts = docs.map { d =>
+        def cell(name: String, tsOff: Long, value: String,
+            path: Option[String]): BigFormat.CellAtom =
+          BigFormat.CellAtom(name, d.wtUs + tsOff, d.ttl,
+            d.ldt(tsOff / 1000000L), Some(value), deleted = false, path)
+        val len = cell("len", 0L, d.nChars.toString, None)
+        val (attrsCells, complexDels) = (d.docId % 10).toInt match {
+          case 4 =>
+            (Seq(cell("attrs", 0L, d.source, Some("k0"))),
+              Seq("attrs" -> (d.wtUs - 1)))
+          case 6 =>
+            (Seq(
+              BigFormat.CellAtom("attrs", d.wtUs, None, Some(d.wtSec.toInt),
+                None, deleted = true, path = Some("k0")),
+              cell("attrs", 1000000L, d.nChars.toString, Some("k1"))),
+              Nil)
+          case _ =>
+            (Seq(cell("attrs", 0L, d.source, Some("k0")),
+              cell("attrs", 1000000L, d.nChars.toString, Some("k1"))),
+              Nil)
         }
-        val allTs = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTsUs.toSeq ++ r.cells.map(_.tsUs) ++
-              r.complexDeletions.map(_._2)
-          case _ => Nil
-        })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = BigFormat.Header(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min,
-          keyType = BigFormat.Utf8Type,
-          clusteringTypes = Seq(BigFormat.Utf8Type),
-          staticColumns = Nil,
-          regularColumns = Seq(
-            "len" -> BigFormat.Utf8Type,
-            "attrs" -> BigFormat.mapType(
-              BigFormat.Utf8Type, BigFormat.Utf8Type)))
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val dir = new HPath(s"$outStr/documents")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        write(s"nb-$gen-big-Data.db",
-          BigFormat.writeDataFile(parts.toSeq, header))
-        write(s"nb-$gen-big-Statistics.db", BigFormat.writeStats(header,
-          compaction = Some(KeyCardinality.writeComponent(
-            KeyCardinality.sketchOf(parts.iterator.map(p =>
-              BigFormat.encodeValue(header.keyType, p.key)))))))
-        (fileId, parts.length)
+        BigFormat.PartitionData(d.docId.toString, None, Seq(
+          BigFormat.RowAtom(Seq(Some(s"c${d.docId}")), Some(d.wtUs), d.ttl,
+            d.ldt(), None, len +: attrsCells, complexDels)))
       }
-      .collect()
-    out
-  }
+      encodeModernFixture(write, fileId, parts, Seq(
+        "len" -> BigFormat.Utf8Type,
+        "attrs" -> BigFormat.mapType(BigFormat.Utf8Type, BigFormat.Utf8Type)))
+    }._1
 
   /** Big-format fixture with a STATIC column and a COUNTER column —
     * the two remaining cell kinds of the reference's P2 dispatch
@@ -2690,85 +2525,28 @@ object SSTableBinaryV2 {
     *     counters carry NO TTL (they cannot expire) and must survive
     *     the strip bit-identically. */
   def writeStaticFixture(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-statictable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val sorted = docs.toArray.sortBy(_._1)
-        val parts = sorted.map { case (docId, source, nChars) =>
-          val wtSec = base + docId
-          val wtUs = wtSec * 1000000L
-          val ttl =
-            if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
-            else None
-          val staticRow = BigFormat.RowAtom(Nil, None, None, None, None,
-            Seq(BigFormat.CellAtom("stitle", wtUs, ttl,
-              ttl.map(t => (wtSec + t).toInt), Some(source), false)),
-            static = true)
-          val clustered = BigFormat.RowAtom(Seq(Some(s"c$docId")),
-            Some(wtUs), ttl, ttl.map(t => (wtSec + t).toInt), None, Seq(
-              BigFormat.CellAtom("len", wtUs, ttl,
-                ttl.map(t => (wtSec + t).toInt), Some(nChars.toString),
-                false),
-              BigFormat.CellAtom("hits", wtUs + 1000000L, None, None,
-                Some("%016x".format(nChars)), false)))
-          BigFormat.PartitionData(docId.toString, None,
-            Seq(staticRow, clustered))
-        }
-        val allTs = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTsUs.toSeq ++ r.cells.map(_.tsUs)
-          case _ => Nil
-        })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = BigFormat.Header(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min,
-          keyType = BigFormat.Utf8Type,
-          clusteringTypes = Seq(BigFormat.Utf8Type),
-          staticColumns = Seq("stitle" -> BigFormat.Utf8Type),
-          regularColumns = Seq(
-            "hits" -> BigFormat.CounterColumnType,
-            "len" -> BigFormat.Utf8Type))
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val dir = new HPath(s"$outStr/documents")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        write(s"nb-$gen-big-Data.db",
-          BigFormat.writeDataFile(parts.toSeq, header))
-        write(s"nb-$gen-big-Statistics.db", BigFormat.writeStats(header,
-          compaction = Some(KeyCardinality.writeComponent(
-            KeyCardinality.sketchOf(parts.iterator.map(p =>
-              BigFormat.encodeValue(header.keyType, p.key)))))))
-        (fileId, parts.length)
+      sfDir: String): java.nio.file.Path =
+    buildFixture(spark, sfDir, "graft-statictable-") {
+        (fileId, docs, write) =>
+      val parts = docs.map { d =>
+        val staticRow = BigFormat.RowAtom(Nil, None, None, None, None,
+          Seq(BigFormat.CellAtom("stitle", d.wtUs, d.ttl, d.ldt(),
+            Some(d.source), false)),
+          static = true)
+        val clustered = BigFormat.RowAtom(Seq(Some(s"c${d.docId}")),
+          Some(d.wtUs), d.ttl, d.ldt(), None, Seq(
+            BigFormat.CellAtom("len", d.wtUs, d.ttl, d.ldt(),
+              Some(d.nChars.toString), false),
+            BigFormat.CellAtom("hits", d.wtUs + 1000000L, None, None,
+              Some("%016x".format(d.nChars)), false)))
+        BigFormat.PartitionData(d.docId.toString, None,
+          Seq(staticRow, clustered))
       }
-      .collect()
-    out
-  }
+      encodeModernFixture(write, fileId, parts,
+        regular = Seq("hits" -> BigFormat.CounterColumnType,
+          "len" -> BigFormat.Utf8Type),
+        static = Seq("stitle" -> BigFormat.Utf8Type))
+    }._1
 
   /** Registered `src_sstable_static`: the lifecycle over the
     * static+counter fixture — read (static rows surface with NULL
@@ -2851,84 +2629,24 @@ object SSTableBinaryV2 {
     * rule. The Statistics.db header carries the real
     * `CompositeType(UTF8Type,LongType)` key type. */
   def writeCompositeFixture(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-comptable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    val keyType = BigFormat.compositeType(
-      Seq(BigFormat.Utf8Type, BigFormat.LongType))
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val sorted = docs.toArray.sortBy(_._1)
-        val parts = sorted.map { case (docId, source, nChars) =>
-          val wtSec = base + docId
-          val wtUs = wtSec * 1000000L
-          val ttl =
-            if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
-            else None
-          val row = BigFormat.RowAtom(Seq(Some(s"c$docId")),
-            Some(wtUs), ttl, ttl.map(t => (wtSec + t).toInt), None, Seq(
-              BigFormat.CellAtom("len", wtUs, ttl,
-                ttl.map(t => (wtSec + t).toInt), Some(nChars.toString),
-                false),
-              BigFormat.CellAtom("origin", wtUs, ttl,
-                ttl.map(t => (wtSec + t).toInt), Some(source), false)))
-          // the ':'-joined rendering encodeValue re-splits into the
-          // declared component types
-          BigFormat.PartitionData(s"$source:$docId", None, Seq(row))
-        }
-        val allTs = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTsUs.toSeq ++ r.cells.map(_.tsUs)
-          case _ => Nil
-        })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = BigFormat.Header(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min,
-          keyType = keyType,
-          clusteringTypes = Seq(BigFormat.Utf8Type),
-          staticColumns = Nil,
-          regularColumns = Seq(
-            "len" -> BigFormat.Utf8Type,
-            "origin" -> BigFormat.Utf8Type))
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val dir = new HPath(s"$outStr/documents")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        write(s"nb-$gen-big-Data.db",
-          BigFormat.writeDataFile(parts.toSeq, header))
-        write(s"nb-$gen-big-Statistics.db", BigFormat.writeStats(header,
-          compaction = Some(KeyCardinality.writeComponent(
-            KeyCardinality.sketchOf(parts.iterator.map(p =>
-              BigFormat.encodeValue(header.keyType, p.key)))))))
-        (fileId, parts.length)
+      sfDir: String): java.nio.file.Path =
+    buildFixture(spark, sfDir, "graft-comptable-") { (fileId, docs, write) =>
+      val parts = docs.map { d =>
+        val row = BigFormat.RowAtom(Seq(Some(s"c${d.docId}")),
+          Some(d.wtUs), d.ttl, d.ldt(), None, Seq(
+            BigFormat.CellAtom("len", d.wtUs, d.ttl, d.ldt(),
+              Some(d.nChars.toString), false),
+            BigFormat.CellAtom("origin", d.wtUs, d.ttl, d.ldt(),
+              Some(d.source), false)))
+        // the ':'-joined rendering encodeValue re-splits into the
+        // declared component types
+        BigFormat.PartitionData(s"${d.source}:${d.docId}", None, Seq(row))
       }
-      .collect()
-    out
-  }
+      encodeModernFixture(write, fileId, parts,
+        Seq("len" -> BigFormat.Utf8Type, "origin" -> BigFormat.Utf8Type),
+        keyType = BigFormat.compositeType(
+          Seq(BigFormat.Utf8Type, BigFormat.LongType)))
+    }._1
 
   /** Registered `src_sstable_composite` — the whole lifecycle over a
     * composite-partition-key table: fixture → [[readBinary]] (keys
@@ -3103,9 +2821,9 @@ object SSTableBinaryV2 {
     * written.
     *
     * Scale shape: ONE shuffle keyed on the source sstable, then each
-    * task encodes and writes its own generation through the session
-    * Hadoop FS ([[writeGeneration]], the encoder the file route
-    * [[rewriteGenerations]] shares). A task buffers one output SSTable
+    * task encodes and writes its own generation through the raw local
+    * FS, with no `.crc` side files ([[writeGeneration]], the encoder the
+    * file and merge routes share). A task buffers one output SSTable
     * (the reference's own rewrite unit); tables whose per-SSTable
     * volume outgrows a task split generations upstream, not here.
     * Returns (sstable, rows written) per output file.
@@ -3465,7 +3183,7 @@ object SSTableBinaryV2 {
   }
 
   /** Encodes and writes ONE output generation `nb-<gen>` — the encoder
-    * both sink routes share, so the header and ordering rules live in
+    * every sink route shares, so the header and ordering rules live in
     * one place. `parts` are the generation's partitions as atoms in any
     * order; `nClust` and `uses` (static?, column, complex?) describe
     * the source's clustering arity and every column its cells and
@@ -3558,24 +3276,30 @@ object SSTableBinaryV2 {
     // not a rendered-string order (which would misorder
     // numeric/negative clusterings and park every marker at the
     // front). Cassandra refuses anything else on load, and the
-    // promoted index assumes it. The sort is stable, so the rendered
-    // pre-sorts break exact-kind ties deterministically.
+    // promoted index assumes it. The comparator leaves one kind of tie
+    // on canonically rendered input: two bounds at one clustering
+    // whose kinds share a `kindComparison` class (an exclusive end
+    // meeting an inclusive start, an inclusive end meeting an
+    // exclusive start). Cassandra's ordinals order each such pair
+    // end-first (0 < 1, 6 < 7), so they break it; the sort is stable
+    // for whatever is left (identical kinds at one clustering).
     val comparator = new Ordering[
         (Seq[Option[Array[Byte]]], Int, BigFormat.Atom)] {
       def compare(x: (Seq[Option[Array[Byte]]], Int, BigFormat.Atom),
-          y: (Seq[Option[Array[Byte]]], Int, BigFormat.Atom)): Int =
-        BigFormat.compareClusterable(clTypes, x._1, x._2, y._1, y._2)
+          y: (Seq[Option[Array[Byte]]], Int, BigFormat.Atom)): Int = {
+        val c = BigFormat.compareClusterable(clTypes, x._1, x._2, y._1, y._2)
+        if (c != 0) c else Integer.compare(x._2, y._2)
+      }
     }
     def normalized(p: BigFormat.PartitionData): BigFormat.PartitionData = {
-      val markers = p.atoms.collect { case m: BigFormat.MarkerAtom => m }
-        .sortBy(m => (m.clustering.map(_.orNull).mkString("\u0000"),
-          boundName(m.kind, 0, src)))
-        .map(m => (encPrefix(m.clustering), m.kind, m: BigFormat.Atom))
+      val markers = p.atoms.collect { case m: BigFormat.MarkerAtom =>
+        (encPrefix(m.clustering), m.kind, m: BigFormat.Atom)
+      }
       val rows = p.atoms
-        .collect { case r: BigFormat.RowAtom if !r.static => r }
-        .sortBy(_.clustering.map(_.getOrElse("")).mkString("\u0000"))
-        .map(r => (encPrefix(r.clustering), BigFormat.Kind.Clustering,
-          ordered(r): BigFormat.Atom))
+        .collect { case r: BigFormat.RowAtom if !r.static =>
+          (encPrefix(r.clustering), BigFormat.Kind.Clustering,
+            ordered(r): BigFormat.Atom)
+        }
       val static = p.atoms
         .collect { case r: BigFormat.RowAtom if r.static => ordered(r) }
       p.copy(atoms = static ++ (markers ++ rows).sorted(comparator).map(_._3))

@@ -343,6 +343,22 @@ object SSTableComponents {
     bos.toByteArray
   }
 
+  /** The summary marks of a PRE-3.0 Index.db written from `index` (the
+    * entries of [[OldFormat.writeDataFileIndexed]]): every
+    * [[MinIndexInterval]]-th key with its Index.db offset under the
+    * fixed-width 2.x entry framing (short keyLen + key + long position
+    * + int promoted size + promoted bytes) — what [[writeSummary2x]]
+    * takes as `sampled`. */
+  def sampleIndex2x(index: Seq[(Array[Byte], Long, Array[Byte])])
+      : Seq[(Array[Byte], Long)] = {
+    var pos = 0L
+    index.zipWithIndex.flatMap { case ((k, _, prom), i) =>
+      val here = pos
+      pos += 2L + k.length + 8 + 4 + prom.length
+      if (i % MinIndexInterval == 0) Some((k, here)) else None
+    }
+  }
+
   /** Parse a pre-3.0 Summary.db back into [[Summary]] — the LITERAL
     * read the reference performs at open, closing the one component
     * this engine previously always regenerated from Index.db. A

@@ -1518,18 +1518,7 @@ object SSTableMetadata {
         val gen = genId + 1
         val (dataBytes, index) =
           OldFormat.writeDataFileIndexed(parts, schema)
-        val idxPositions = {
-          var pos = 0L
-          index.map { case (k, _, prom) =>
-            val here = pos
-            pos += 2L + k.length + 8 + 4 + prom.length
-            here
-          }
-        }
-        val sampled = index.zip(idxPositions).zipWithIndex.collect {
-          case (((k, _, _), ip), i)
-            if i % SSTableComponents.MinIndexInterval == 0 => (k, ip)
-        }
+        val sampled = SSTableComponents.sampleIndex2x(index)
         val fs = FileSystem.get(
           java.net.URI.create(srcStr), bc.value.value)
         def write(name: String, bytes: Array[Byte]): Unit = {

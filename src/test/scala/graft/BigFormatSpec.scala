@@ -4160,41 +4160,64 @@ class SSTableBinarySpec extends SparkSpec {
       ("pk", Seq(ck.toString), "RANGE_TOMBSTONE_BOUND", Some(bound),
         None: Option[(String, Long, Option[Int], Option[Long])],
         Some(wt - 1), "t/nb-1-big-Data.db")
-    // string order would park the markers first and sort rows
-    // -5 < 10 < 2; comparator order is -5, 2, [3 .. 9], 10
-    val rows = Seq(row(2), row(10), row(-5),
-      marker(3, "start:inclusive"), marker(9, "end:inclusive"))
-      .toDF("partition_key", "clustering", "row_kind", "name",
-        "cell_t", "deletion_us", "sstable")
-      .withColumn("cell", struct(
-        col("cell_t._1").as("value"), col("cell_t._2").as("writetime_us"),
-        col("cell_t._3").as("ttl_s"), col("cell_t._4").as("expire_us")))
-      .drop("cell_t")
     val parsed = graft.model.CqlSchema.parse(
       "CREATE TABLE ks.t (pk text, ck bigint, v text, " +
         "PRIMARY KEY (pk, ck))").fold(e => fail(e), identity)
-    val out = Scratch.dir("graft-clorder-")
-    try {
-      SSTableBinaryV2.writeSSTables(rows, out.toString, "ks", "t",
-        Some(parsed))
-      val dir = out.resolve("ks").resolve("t")
-      val h = BigFormat.readStats(java.nio.file.Files.readAllBytes(
-        dir.resolve("nb-1-big-Statistics.db")))
-      val atoms = BigFormat.partitions(h,
-        new java.io.ByteArrayInputStream(
-          java.nio.file.Files.readAllBytes(dir.resolve("nb-1-big-Data.db"))),
-        "clorder-test").toSeq.head.atoms
-      val shape = atoms.map {
-        case r: BigFormat.RowAtom => ("row", r.clustering.head.get)
-        case m: BigFormat.MarkerAtom =>
-          (s"marker${m.kind}", m.clustering.head.get)
-      }
-      assert(shape === Seq(
-        ("row", "-5"), ("row", "2"),
-        (s"marker${BigFormat.Kind.InclStartBound}", "3"),
-        (s"marker${BigFormat.Kind.InclEndBound}", "9"),
-        ("row", "10")))
-    } finally Scratch.delete(out)
+    // one partition's unfiltereds as written, in input order (one input
+    // partition, so the sink's task sees the rows as listed)
+    def written(input: Seq[(String, Seq[String], String, Option[String],
+        Option[(String, Long, Option[Int], Option[Long])], Option[Long],
+        String)]): Seq[(String, String)] = {
+      val rows = input
+        .toDF("partition_key", "clustering", "row_kind", "name",
+          "cell_t", "deletion_us", "sstable")
+        .coalesce(1)
+        .withColumn("cell", struct(
+          col("cell_t._1").as("value"), col("cell_t._2").as("writetime_us"),
+          col("cell_t._3").as("ttl_s"), col("cell_t._4").as("expire_us")))
+        .drop("cell_t")
+      val out = Scratch.dir("graft-clorder-")
+      try {
+        SSTableBinaryV2.writeSSTables(rows, out.toString, "ks", "t",
+          Some(parsed))
+        val dir = out.resolve("ks").resolve("t")
+        val h = BigFormat.readStats(java.nio.file.Files.readAllBytes(
+          dir.resolve("nb-1-big-Statistics.db")))
+        BigFormat.partitions(h,
+          new java.io.ByteArrayInputStream(
+            java.nio.file.Files.readAllBytes(dir.resolve("nb-1-big-Data.db"))),
+          "clorder-test").toSeq.head.atoms.map {
+          case r: BigFormat.RowAtom => ("row", r.clustering.head.get)
+          case m: BigFormat.MarkerAtom =>
+            (s"marker${m.kind}", m.clustering.head.get)
+        }
+      } finally Scratch.delete(out)
+    }
+    import BigFormat.Kind._
+    // string order would park the markers first and sort rows
+    // -5 < 10 < 2; comparator order is -5, 2, [3 .. 9], 10
+    assert(written(Seq(row(2), row(10), row(-5),
+      marker(3, "start:inclusive"), marker(9, "end:inclusive"))) === Seq(
+      ("row", "-5"), ("row", "2"),
+      (s"marker$InclStartBound", "3"),
+      (s"marker$InclEndBound", "9"),
+      ("row", "10")))
+    // ranges meeting at one clustering, each pair fed start-first:
+    // [3, 5) + [5, 9] (exclusive end / inclusive start) and
+    // [11, 13] + (13, 15] (inclusive end / exclusive start). Each pair's
+    // kinds compare equal, so only the kind tiebreak writes the end
+    // before the start it meets
+    assert(written(Seq(
+      marker(5, "start:inclusive"), marker(5, "end:exclusive"),
+      marker(13, "start:exclusive"), marker(13, "end:inclusive"),
+      marker(3, "start:inclusive"), marker(9, "end:inclusive"),
+      marker(11, "start:inclusive"), marker(15, "end:inclusive"))) === Seq(
+      (s"marker$InclStartBound", "3"),
+      (s"marker$ExclEndBound", "5"), (s"marker$InclStartBound", "5"),
+      (s"marker$InclEndBound", "9"),
+      (s"marker$InclStartBound", "11"),
+      (s"marker$InclEndBound", "13"), (s"marker$ExclStartBound", "13"),
+      (s"marker$InclEndBound", "15")))
   }
 
   test("chunk-map seeks: point lookups and split scans serve a COMPRESSED generation exactly like the full scan") {
