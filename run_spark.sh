@@ -1,6 +1,11 @@
 #!/bin/bash
-# Run a graft main class directly against /opt/spark/jars (fast iteration,
-# no sbt startup). Usage: ./run_spark.sh graft.Verify <args...>
+# Run a graft main class directly against the Spark jars ($SPARK_HOME, or
+# the installation `spark-submit` belongs to) and this checkout's compiled
+# classes and resources (fast iteration, no sbt startup; the
+# DataSourceRegister entry lives in src/main/resources).
+# Usage: ./run_spark.sh graft.Verify <args...>
+ROOT="$(cd "$(dirname "$0")" && pwd)"
+SPARK_JARS="${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}/jars"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
@@ -10,4 +15,4 @@ done
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:$SPARK_JARS/*" "$@"

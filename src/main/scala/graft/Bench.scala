@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -30,18 +29,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val deadlineSec = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_DEADLINE_SEC", "640").toInt
     def elapsedSec: Double = (System.currentTimeMillis() - jvmStartMs) / 1e3
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.mainSession(defaultCpus = 32)
     // Untimed warmup: absorb one-time JVM costs (Janino codegen compiler
     // init, parquet footer reads, shuffle infrastructure) so they don't
     // all land on whichever query happens to run first.

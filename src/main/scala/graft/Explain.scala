@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-capture tool (not part of the driver contract): writes
@@ -23,15 +22,7 @@ object Explain {
       if (args.nonEmpty) args(0) else "plans/r15")
     val filter = args.lift(1).map(_.r)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.mainSession(defaultCpus = 32)
     java.nio.file.Files.createDirectories(outDir)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => filter.forall(_.matches(n)))

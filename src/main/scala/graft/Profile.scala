@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job profiler (not part of the driver contract): runs the
   * named queries exactly like Bench (noop sink) under a listener that
@@ -16,15 +15,7 @@ object Profile {
     val filter = args.headOption.map(_.r)
     val repeat = args.lift(1).map(_.toInt).getOrElse(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.mainSession(defaultCpus = 32)
 
     val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     // (jobId, nanos, call site) — the call site is the last stage's

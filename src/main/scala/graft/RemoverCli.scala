@@ -39,11 +39,12 @@ import org.apache.spark.sql.SparkSession
   * generations before writing — a directory of SSTables collapses to
   * the table's effective state (highest-writetime cells, tombstone
   * shadowing applied, markers preserved), the step the reference
-  * leaves to the Cassandra server. A modern binary lake bound for
-  * `--sink sstable` merges on the merge route
-  * ([[graft.sources.SSTableBinaryV2.mergeGenerations]];
-  * [[mergeRouteLake]] says when); everything else merges through
-  * [[graft.ops.TtlOps.lwwMerge]].
+  * leaves to the Cassandra server. Bound for `--sink sstable`, every
+  * input merges under one rule set,
+  * `graft.sources.SSTableBinaryV2.mergePartition`, on either route:
+  * the file route for a modern binary lake ([[fileRoute]] says when),
+  * the frame route for the rest. The parquet and `--sink sstabledump`
+  * sinks merge through [[graft.ops.TtlOps.lwwMerge]].
   *
   * Usage:
   *   graft.RemoverCli --in <dir> --out <dir> --table <name>
@@ -762,94 +763,83 @@ object RemoverCli {
   /** The `--sink sstable` execution paths: strip TTLs and rewrite ONE
     * output SSTable per input SSTable (the reference's exact rewrite
     * contract, binary in → binary out), or — with `--merge lww` —
-    * collapse every generation through the LWW merge and write ONE
-    * compacted generation: a major compaction. Returns rows written,
+    * collapse every generation through the LWW merge and write the
+    * compacted generations: a major compaction. Returns rows written,
     * counted as bridge rows (the sink's own per-file manifest).
     *
-    * Three routes, picked from the arguments and the lake listing,
+    * Every route runs one step per output generation: partitions, then
+    * the TTL strip, then (under `--merge lww` only) each key's versions
+    * merged by `SSTableBinaryV2.mergePartition`, then the encoder. Two
+    * routes feed it, picked from the arguments and the lake listing, and
     * write the same bytes:
-    *  - the FILE route ([[graft.sources.SSTableBinaryV2.rewriteGenerations]])
-    *    is the reference's own shape: one task per `*-Data.db` decodes
-    *    the generation, strips TTLs on its decoded partitions and
-    *    encodes the output generation — no bridge rows, no shuffle, no
-    *    regrouping. It takes the plain rewrite of a binary lake
-    *    ([[fileRouteLake]]): no `--merge`, one output generation per
-    *    input, no `--scrub` (salvage needs the reader's index-paced
-    *    walk), no `--cql`, every generation modern-era (3.x/4.x), and
-    *    every basename claiming its own generation, so each input keeps
-    *    its generation number exactly as the frame route assigns it.
-    *    `--verify` runs the reader's own digest check per file;
-    *  - the MERGE route ([[graft.sources.SSTableBinaryV2.mergeGenerations]])
-    *    is Cassandra's compaction shape: one task per output generation
-    *    reads every input at its ring bucket through Index.db, merges
-    *    each key's versions under the LWW rules and encodes the bucket
-    *    — no bridge rows, no shuffle, no window plan. It takes
-    *    `--merge lww` ([[mergeRouteLake]]) under the same argument
-    *    rules (no `--scrub`, no `--cql`) over a lake whose generations
-    *    are all modern-era. One output generation streams each input
-    *    whole. Several need every input indexed with a UTF8/Ascii
-    *    partition key, so each bucket is one contiguous run of each
-    *    file. `--verify` checks each input's digest once;
-    *  - every other shape takes the FRAME route: the bridge-row frame
-    *    ([[sstableSinkInput]]) through `writeSSTables`. It decodes its
-    *    input once: the sink gets its source set from the driver instead
-    *    of a distinct pass over the data, which would repeat the scan
-    *    (and, merged, the whole merge and exchange). Two input shapes
-    *    still take the distinct pass, because a superset list is only
-    *    output-identical when every name claims its own generation
+    *  - the FILE route ([[graft.sources.SSTableBinaryV2.writeFileRoute]],
+    *    taken when [[fileRoute]] plans it) is the reference's rewrite
+    *    and Cassandra's compaction shape: one task per output generation
+    *    decodes its inputs straight from their files — no bridge rows,
+    *    no shuffle. The plain rewrite is one task per `*-Data.db`, each
+    *    keeping its generation number exactly as the frame route assigns
+    *    it. The merge is one task per output generation, reading every
+    *    input at its ring bucket. The route needs no `--scrub` (salvage
+    *    needs the reader's index-paced walk), no `--cql` (it types the
+    *    output) and a lake of modern-era (3.x/4.x) generations only. The
+    *    rewrite also needs every basename to claim its own generation
+    *    and one output generation per input; a merge into several needs
+    *    every input indexed with a UTF8/Ascii partition key, so each
+    *    bucket is one contiguous run of each file. `--verify` checks
+    *    each input's digest once;
+    *  - every other shape takes the FRAME route: the reader's bridge-row
+    *    frame ([[sstableSinkInput]]) through one shuffle to
+    *    `writeSSTables`, or, merged, to `mergeSSTables`, which keys the
+    *    shuffle on the output generation and merges there. It decodes
+    *    its input once: the sink gets its source set from the driver
+    *    instead of a distinct pass over the data, which would repeat the
+    *    scan. Two input shapes still take the distinct pass, because a
+    *    superset list is only output-identical when every name claims
+    *    its own generation
     *    ([[graft.sources.SSTableBinaryV2.sourceSetViolations]]): a lake
     *    whose basenames share a generation across subdirectories (the
     *    collision resolution depends on which sources carry rows), and
     *    the unmerged `--out-generations N` split, whose `<src>#sK` names
-    *    share their source's generation by design. Dump-JSON input
-    *    (`--format sstabledump`) has no binary listing and also keeps
-    *    the pass. The frame route still merges dump input, `--scrub`,
-    *    `--cql` and 2.x lakes, and, into several output generations,
-    *    lakes with an index-less generation or a non-text key. */
-  private def runSstableSink(spark: SparkSession, args: CliArgs): Long =
-    mergeRouteLake(spark, args).map(lake =>
-      graft.sources.SSTableBinaryV2.mergeGenerations(spark, lake,
-        args.out, args.keyspace, args.table,
-        args.compress.map(Compressors), args.verify, args.outGenerations))
-      .orElse(fileRouteLake(spark, args).map(lake =>
-        graft.sources.SSTableBinaryV2.rewriteGenerations(spark, lake,
-          args.out, args.keyspace, args.table,
-          args.compress.map(Compressors), args.verify)))
+    *    share their source's generation by design. Unmerged dump-JSON
+    *    input (`--format sstabledump`) has no binary listing and also
+    *    keeps the pass. */
+  private def runSstableSink(spark: SparkSession, args: CliArgs): Long = {
+    val compression = args.compress.map(Compressors)
+    fileRoute(spark, args).map(plan =>
+      graft.sources.SSTableBinaryV2.writeFileRoute(spark, plan, args.out,
+        args.keyspace, args.table, compression, args.verify))
       .getOrElse {
         val (frame, sources) = sstableSinkInput(spark, args)
-        graft.sources.SSTableBinaryV2.writeSSTables(frame, args.out,
-          args.keyspace, args.table, args.cqlSchema,
-          args.compress.map(Compressors), sources = sources)
+        if (args.merge.contains("lww"))
+          graft.sources.SSTableBinaryV2.mergeSSTables(frame, args.out,
+            args.keyspace, args.table, args.cqlSchema, compression, sources)
+        else graft.sources.SSTableBinaryV2.writeSSTables(frame, args.out,
+          args.keyspace, args.table, args.cqlSchema, compression,
+          sources = sources)
       }.map(_._2).sum
+  }
 
-  /** The binary-to-binary shapes either file route can take: no
-    * `--scrub` (salvage needs the reader's index-paced walk) and no
-    * `--cql` (it types the output). */
-  private def fileRouteArgs(args: CliArgs): Boolean =
-    args.format == "sstable" && args.sink == "sstable" && !args.scrub &&
-      args.cqlText.isEmpty && args.cqlSchema.isEmpty
-
-  /** The lake listing [[runSstableSink]]'s rewrite file route rewrites,
-    * or None when the arguments or the lake call for another route. */
-  private[graft] def fileRouteLake(spark: SparkSession, args: CliArgs)
-      : Option[Seq[(String, graft.sources.SSTableBinaryV2.SiblingInfo)]] =
-    if (fileRouteArgs(args) && args.merge.isEmpty &&
-      args.outGenerations == 1)
-      graft.sources.SSTableBinaryV2.rewritableLake(spark, args.in)
+  /** The file route's plan for [[runSstableSink]], or None when the
+    * arguments or the lake call for the frame route: binary in and out,
+    * no `--scrub` and no `--cql`, and either `--merge lww` (any
+    * `--out-generations`) or the plain rewrite into one output
+    * generation per input. */
+  private[graft] def fileRoute(spark: SparkSession, args: CliArgs)
+      : Option[graft.sources.SSTableBinaryV2.FilePlan] = {
+    val merge = args.merge.contains("lww")
+    if (args.format == "sstable" && args.sink == "sstable" && !args.scrub &&
+      args.cqlText.isEmpty && args.cqlSchema.isEmpty &&
+      (merge || args.merge.isEmpty && args.outGenerations == 1))
+      graft.sources.SSTableBinaryV2.fileRoutePlan(spark, args.in,
+        args.table, merge, args.outGenerations)
     else None
+  }
 
-  /** The lake listing [[runSstableSink]]'s merge file route compacts
-    * (`--merge lww`, any `--out-generations`), or None when the
-    * arguments or the lake call for another route. */
-  private[graft] def mergeRouteLake(spark: SparkSession, args: CliArgs)
-      : Option[Seq[(String, graft.sources.SSTableBinaryV2.SiblingInfo)]] =
-    if (fileRouteArgs(args) && args.merge.contains("lww"))
-      graft.sources.SSTableBinaryV2.mergeableLake(spark, args.in,
-        args.outGenerations)
-    else None
-
-  /** The frame [[runSstableSink]] writes and the source set it hands
-    * the sink (None = the sink's own distinct pass). */
+  /** The frame [[runSstableSink]] writes: the reader's bridge rows with
+    * TTLs stripped, and the source set it hands the sink (None = the
+    * sink's own distinct pass). Merged, each row also carries its output
+    * generation in a `generation` column, and the source set is every
+    * name that column can hold ([[mergedGenerations]]). */
   private[graft] def sstableSinkInput(spark: SparkSession, args: CliArgs)
       : (org.apache.spark.sql.DataFrame, Option[Seq[String]]) = {
     import org.apache.spark.sql.functions._
@@ -860,31 +850,14 @@ object RemoverCli {
       else if (args.reader == "v2")
         graft.sources.SSTableDumpBridge.readTreeV2
       else graft.sources.SSTableDumpBridge.readTree
+    val stripped = reader(spark, args.in).withColumn("cell",
+      graft.model.CellModel.stripCellKeepDeletion(col("cell")))
     if (args.merge.contains("lww")) {
-      val merged = graft.sources.SSTableDumpBridge
-        .mergeTree(spark, args.in, reader)
-      val live = col("row_kind").isin("ROW", "PK_LIVENESS")
-      val (genName, names) = mergedGenerations(args)
-      // a surviving cell tombstone keeps its timestamp and its own
-      // local deletion second, as the unmerged rewrite does
-      val reshaped = merged.select(
-        col("partition_key"), col("clustering"), col("row_kind"),
-        col("name"),
-        when(live, struct(col("value"), col("writetime_us"),
-          lit(null).cast("int").as("ttl_s"),
-          lit(null).cast("long").as("expire_us")))
-          .when(col("row_kind") === "CELL_DELETION",
-            struct(lit(null).cast("string").as("value"),
-              col("writetime_us"), lit(null).cast("int").as("ttl_s"),
-              col("expire_us"))).as("cell"),
-        col("deletion_us"),
-        genName.as("sstable"))
       // the names are fixed by the arguments: each claims its own
       // generation, and a bucket no cell lands in writes nothing
-      (reshaped, Some(names))
+      val (genName, names) = mergedGenerations(args)
+      (stripped.withColumn("generation", genName), Some(names))
     } else {
-      val stripped = reader(spark, args.in).withColumn("cell",
-        graft.model.CellModel.stripCellKeepDeletion(col("cell")))
       // UNMERGED `--out-generations N` = sstablesplit's role: each
       // input generation splits into N token-contiguous outputs (one
       // oversized SSTable stops serializing its own rewrite — N
@@ -926,7 +899,7 @@ object RemoverCli {
     * SSTable whose Summary first/last keys support file-level range
     * elision on the OUTPUT lake — the same size-bounded multi-file
     * shape a real compaction strategy produces. */
-  private def mergedGenerations(args: CliArgs)
+  private[graft] def mergedGenerations(args: CliArgs)
       : (org.apache.spark.sql.Column, Seq[String]) = {
     import org.apache.spark.sql.functions._
     val prefix = s"${args.table}/nb-"
@@ -944,7 +917,7 @@ object RemoverCli {
     * token the sink itself sorts by; a rendered-string token would
     * put typed tables' generations off the real ring). Deterministic,
     * zero extra passes; Murmur3 uniformity balances bucket sizes at
-    * any scale. The merge route buckets with
+    * any scale. The file route buckets with
     * [[graft.sources.SSTableBinaryV2.ringBucket]], the same arithmetic
     * over the same rendered-key token. */
   private[graft] def ringBucket(args: CliArgs)

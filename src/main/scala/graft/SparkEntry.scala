@@ -20,6 +20,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TtlOps.ttlStrip(spark, "/root/testdata/sf0.001")
 
+  /** The session the query mains (Bench, Profile, Explain, Verify) run
+    * the registry on: `local[SPARK_GRAFT_CPUS]` (default `defaultCpus`)
+    * with as many shuffle partitions, UTC, adaptive execution, no UI,
+    * WARN logging. */
+  def mainSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- TTL / cell model (SURVEY §2.1-2.2, §2.5) ---

@@ -453,7 +453,7 @@ object SSTableBinaryV2 {
       extends InputPartition
 
   /** Opening one generation, shared by the DSv2 reader and the file
-    * routes ([[rewriteGenerations]], [[mergeGenerations]]): sibling presence
+    * route ([[writeFileRoute]]): sibling presence
     * from the planner's listing, sidecar reads through the
     * [[ComponentCache]], the Statistics.db header with its declared-
     * ring check, the CompressionInfo.db chunk map (per-chunk
@@ -1649,7 +1649,7 @@ object SSTableBinaryV2 {
     * fixture derives from it: the write time `TreeBase + doc_id` (in
     * seconds and micros) and the even-doc TTL rule — even doc_ids
     * except multiples of 100 carry TTL `doc_id % 100`. */
-  private final case class FixtureDoc(docId: Long, source: String,
+  private[sources] final case class FixtureDoc(docId: Long, source: String,
       nChars: Long) {
     def wtSec: Long = SSTableDumpBridge.TreeBase + docId
     def wtUs: Long = wtSec * 1000000L
@@ -1669,7 +1669,7 @@ object SSTableBinaryV2 {
     * <name>` through the session Hadoop FS. Returns the directory
     * (the caller owns its deletion) and each task's result — a
     * fixture-sized manifest; the data never leaves the executors. */
-  private def buildFixture(spark: SparkSession, sfDir: String,
+  private[sources] def buildFixture(spark: SparkSession, sfDir: String,
       prefix: String, files: Int = SSTableDumpBridge.TreeFiles)(
       task: (Int, Seq[FixtureDoc], (String, Array[Byte]) => Unit) => Int)
       : (java.nio.file.Path, Seq[Int]) = {
@@ -1749,7 +1749,7 @@ object SSTableBinaryV2 {
     * `columnIndexSize` promotes wide partitions' Index.db entries),
     * then exactly the `sidecars` named — several readers are tested
     * against index-less 2.x files. Returns the Index.db entries. */
-  private def encode2xFixture(write: (String, Array[Byte]) => Unit,
+  private[sources] def encode2xFixture(write: (String, Array[Byte]) => Unit,
       fileId: Int, parts: Seq[OldFormat.Partition2], cql: String,
       sidecars: Set[String] = Set.empty, compress: Boolean = false,
       columnIndexSize: Int = 0): Seq[(Array[Byte], Long, Array[Byte])] = {
@@ -2822,8 +2822,8 @@ object SSTableBinaryV2 {
     *
     * Scale shape: ONE shuffle keyed on the source sstable, then each
     * task encodes and writes its own generation through the raw local
-    * FS, with no `.crc` side files ([[writeGeneration]], the encoder the
-    * file and merge routes share). A task buffers one output SSTable
+    * FS, with no `.crc` side files ([[writeGeneration]], the encoder
+    * every sink route shares). A task buffers one output SSTable
     * (the reference's own rewrite unit); tables whose per-SSTable
     * volume outgrows a task split generations upstream, not here.
     * Returns (sstable, rows written) per output file.
@@ -2842,20 +2842,46 @@ object SSTableBinaryV2 {
       compression: Option[String] = None,
       columnIndexSize: Int = BigFormat.ColumnIndexSize,
       sources: Option[Seq[String]] = None)
-      : Seq[(String, Long)] = {
+      : Seq[(String, Long)] =
+    sinkFrame(cells, col("sstable"), sources, merge = false,
+      SinkTarget(s"$outDir/$keyspace/$table", schema.map(resolveTyping),
+        compression, columnIndexSize), table)
+
+  /** The frame route of the LWW compaction: [[writeSSTables]] with its
+    * shuffle keyed on each row's output generation (the `generation`
+    * column; `sources`, when given, lists every value it can hold)
+    * instead of its source, then per key the versions of each input
+    * sstable (its `sstable`) rebuilt as partitions and merged by
+    * [[mergePartition]], the rule set the file route runs. `cells` are
+    * stripped bridge rows. Returns (sstable, merged bridge rows written)
+    * per output file. */
+  private[graft] def mergeSSTables(cells: DataFrame, outDir: String,
+      keyspace: String, table: String,
+      schema: Option[graft.model.CqlSchema.Parsed],
+      compression: Option[String], sources: Option[Seq[String]])
+      : Seq[(String, Long)] =
+    sinkFrame(cells, col("generation"), sources, merge = true,
+      SinkTarget(s"$outDir/$keyspace/$table", schema.map(resolveTyping),
+        compression, BigFormat.ColumnIndexSize), table)
+
+  /** The frame routes' sink: rows grouped by `key` (an output
+    * generation identity) in one shuffle, each group's partitions
+    * rebuilt from its bridge rows ([[framePartition]]), merged per key
+    * across input sstables when `merge`, and written by
+    * [[writeGeneration]]. CQL typing and the compressor resolve (and reject) on the driver,
+    * before any task runs, in `target`. */
+  private def sinkFrame(cells: DataFrame, key: org.apache.spark.sql.Column,
+      sources: Option[Seq[String]], merge: Boolean, target: SinkTarget,
+      table: String): Seq[(String, Long)] = {
     val spark = cells.sparkSession
     import spark.implicits._
-    // CQL typing resolves (and rejects) ON THE DRIVER, before any
-    // task runs; None = the value-opaque default (text everywhere).
-    // Compression likewise validates up front.
-    val target = SinkTarget(s"$outDir/$keyspace/$table",
-      schema.map(resolveTyping), compression, columnIndexSize)
     val hconf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val selected = cells
-      .select(col("partition_key"), col("clustering"), col("row_kind"),
-        col("name"), col("cell"), col("deletion_us"), col("sstable"))
-      .as[SinkRow]
+      .select(key.as("_1"), struct(col("partition_key"), col("clustering"),
+        col("row_kind"), col("name"), col("cell"), col("deletion_us"),
+        col("sstable")).as("_2"))
+      .as[(String, SinkRow)]
     // `sources`, when given, replaces the distinct job (a full second
     // decode of the input). It may be a SUPERSET of the frame's
     // distinct set (a driver-side listing of a filtered or scrubbed
@@ -2873,42 +2899,34 @@ object SSTableBinaryV2 {
           bad.mkString(", "))
     }
     val genOf = assignGenerations(sources.getOrElse(
-      selected.select(col("sstable")).distinct().as[String].collect()
-        .toSeq))
+      selected.select(col("_1")).distinct().as[String].collect().toSeq))
     selected
-      .groupByKey(_.sstable)
+      .groupByKey(_._1)
       .mapGroups { (src, it) =>
-        val rows = it.toArray
+        val rows = it.map(_._2).toArray
         val gen = genOf.getOrElse(src, throw new IllegalArgumentException(
           s"writeSSTables: source '$src' appears in the data but not " +
             "in the caller-provided source set — the explicit `sources` " +
             "list must cover the frame's distinct sstable identities"))
         // a kind this sink cannot re-encode must refuse the whole
         // write: dropping it would un-delete data on a later merge
-        rows.iterator.map(_.row_kind).find(k => !SinkRowKinds(k))
-          .foreach(k => throw new UnsupportedOperationException(
-            s"$src: row_kind '$k' not encodable by the binary sink"))
-        val nClust = clusteringArity(src,
-          rows.iterator.flatMap(_.clustering).map(_.size))
-        // Column inventory, tombstone-only columns included. A
-        // bracketed name ("attrs[k1]") is a complex column's
-        // path-bearing cell; a COMPLEX_DELETION names its column bare.
-        val uses = rows.iterator.flatMap { r =>
-          r.row_kind match {
-            case "ROW" | "CELL_DELETION" => r.name.map { n =>
-              val (c, pth) = splitPath(n)
-              (isStaticRow(r), c, pth.isDefined)
+        rows.find(r => !SinkRowKinds(r.row_kind))
+          .foreach(r => throw new UnsupportedOperationException(
+            s"${r.sstable}: row_kind '${r.row_kind}' not encodable by " +
+              "the binary sink"))
+        val byKey = rows.groupBy(_.partition_key).toSeq
+        val (parts, written) =
+          if (!merge) (byKey.map { case (pk, prs) =>
+            framePartition(src, pk, prs) }, rows.length.toLong)
+          else {
+            val merged = byKey.map { case (pk, prs) =>
+              mergePartition(pk, prs.groupBy(_.sstable).toSeq.sortBy(_._1)
+                .map { case (in, vs) => (in, framePartition(in, pk, vs)) })
             }
-            case "COMPLEX_DELETION" => r.name.map((isStaticRow(r), _, true))
-            case _ => None
+            (merged.map(_._1), merged.map(_._2).sum)
           }
-        }
-        val parts = rows.groupBy(_.partition_key).toSeq.map {
-          case (pk, prs) => framePartition(src, pk, prs)
-        }
-        writeGeneration(target, hconf.value.value, src, gen, parts, nClust,
-          uses)
-        (s"$table/nb-$gen-big-Data.db", rows.length.toLong)
+        writeGeneration(target, hconf.value.value, src, gen, parts)
+        (s"$table/nb-$gen-big-Data.db", written)
       }
       .collect().toSeq.sortBy(_._1)
   }
@@ -2959,14 +2977,6 @@ object SSTableBinaryV2 {
       used += gen
       src -> gen
     }.toMap
-  }
-
-  /** The one clustering arity of a generation's clustered atoms. */
-  private def clusteringArity(src: String, sizes: Iterator[Int]): Int = {
-    val arity = sizes.distinct.toSeq
-    require(arity.length <= 1,
-      s"$src: heterogeneous clustering arity ${arity.mkString(",")}")
-    arity.headOption.getOrElse(0)
   }
 
   /** One partition's bridge rows as the atoms they stand for, in frame
@@ -3182,13 +3192,13 @@ object SSTableBinaryV2 {
         .flatten.map(_.toIndexedSeq: Seq[Byte]).toSeq)
   }
 
-  /** Encodes and writes ONE output generation `nb-<gen>` — the encoder
-    * every sink route shares, so the header and ordering rules live in
+  /** Encodes and writes ONE output generation `nb-<gen>` — the step
+    * every sink route ends in, so the header and ordering rules live in
     * one place. `parts` are the generation's partitions as atoms in any
-    * order; `nClust` and `uses` (static?, column, complex?) describe
-    * the source's clustering arity and every column its cells and
-    * collection tombstones name, from which the serialization header is
-    * rebuilt: simple columns first, then complex, each sorted by name
+    * order; no partitions write nothing. The serialization header is
+    * rebuilt from their one clustering arity and every column their
+    * cells and collection tombstones name (tombstone-only columns
+    * included): simple columns first, then complex, each sorted by name
     * (complex columns re-encode as map<text,text> without typing, the
     * value-opaque string carry of the whole cell model). Then, under
     * the output types: cells ordered by header column (a cell
@@ -3199,10 +3209,24 @@ object SSTableBinaryV2 {
     * from that one order. */
   private def writeGeneration(target: SinkTarget,
       conf: org.apache.hadoop.conf.Configuration, src: String, gen: Int,
-      parts: Seq[BigFormat.PartitionData], nClust: Int,
-      uses: Iterator[(Boolean, String, Boolean)]): Unit = {
+      parts: Seq[BigFormat.PartitionData]): Unit = {
+    if (parts.isEmpty) return
     val typing = target.typing
-    val used = uses.toSet
+    def atoms = parts.iterator.flatMap(_.atoms)
+    val arity = atoms.collect {
+      case r: BigFormat.RowAtom if !r.static => r.clustering.size
+      case m: BigFormat.MarkerAtom => m.clustering.size
+    }.distinct.toSeq
+    require(arity.length <= 1,
+      s"$src: heterogeneous clustering arity ${arity.mkString(",")}")
+    val nClust = arity.headOption.getOrElse(0)
+    // (static?, column, complex?) of every cell and collection tombstone
+    val used = atoms.flatMap {
+      case r: BigFormat.RowAtom =>
+        r.cells.iterator.map(c => (r.static, c.name, c.path.isDefined)) ++
+          r.complexDeletions.iterator.map(d => (r.static, d._1, true))
+      case _ => Iterator.empty
+    }.toSet
     def inventory(static: Boolean): Seq[(String, String)] = {
       val side = used.toSeq.filter(_._1 == static)
       val complexCols = side.collect { case (_, c, true) => c }.distinct.sorted
@@ -3345,17 +3369,62 @@ object SSTableBinaryV2 {
     v.startsWith("m") || v.startsWith("n")
   }
 
-  /** The listing of `root` when the file route ([[rewriteGenerations]])
-    * can rewrite it: at least one Data.db, all of them modern-era, and
-    * every identity claiming its own generation
-    * ([[sourceSetViolations]]) — then each input keeps its generation
-    * whether or not it carries rows, exactly as the frame route
-    * assigns. None otherwise. */
-  private[graft] def rewritableLake(spark: SparkSession, root: String)
-      : Option[Seq[(String, SiblingInfo)]] =
-    Some(listLake(root, spark.sessionState.newHadoopConf())).filter(l =>
-      l.nonEmpty && l.forall(f => modernEra(f._1)) &&
-        sourceSetViolations(l.map(f => sstableIdentity(f._1))).isEmpty)
+  /** UTF8/Ascii partition keys render to their own bytes, so the
+    * index's token order is the rendered key's token order. */
+  private def textKey(keyType: String): Boolean =
+    keyType == BigFormat.Utf8Type || keyType == BigFormat.AsciiType
+
+  /** One output generation of the file route: the name it reports, its
+    * generation number, the listing indices it reads, and the ring
+    * bucket `bucket` of `buckets` it reads each of them at. */
+  private[graft] final case class FileTask(name: String, gen: Int,
+      inputs: Seq[Int], bucket: Int, buckets: Int)
+
+  /** The file route's driver-built plan over a lake listing: one task
+    * per output generation, merging each key's versions when `merge`. */
+  private[graft] final case class FilePlan(
+      listing: Seq[(String, SiblingInfo)], tasks: Seq[FileTask],
+      merge: Boolean)
+
+  /** The file route's plan for the lake at `root`, or None when the lake
+    * calls for the frame route. Every Data.db must be modern-era, and
+    * there must be at least one.
+    *  - The rewrite (`merge` false) is one task per input, at bucket 0
+    *    of 1, writing the generation [[assignGenerations]] gives it. It
+    *    needs every identity to claim its own generation
+    *    ([[sourceSetViolations]]), so each input keeps its generation
+    *    whether or not it carries rows, as the frame route assigns.
+    *  - The merge is `outGenerations` tasks; task b reads every input at
+    *    ring bucket b and writes `nb-<b+1>`. One bucket streams each
+    *    input whole. Several seek each input's bucket by its Index.db,
+    *    which stays one contiguous run only where the index token is the
+    *    rendered key's token: so every input must carry an Index.db and
+    *    a UTF8/Ascii partition key (read off its Statistics.db header).
+    *    On other keys a bucket is scattered over the file, one positioned
+    *    open (and, compressed, one chunk decompressed) per partition. */
+  private[graft] def fileRoutePlan(spark: SparkSession, root: String,
+      table: String, merge: Boolean, outGenerations: Int): Option[FilePlan] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val listing = listLake(root, conf)
+    val identities = listing.map(f => sstableIdentity(f._1))
+    val n = math.max(1, outGenerations)
+    def name(gen: Int) = s"$table/nb-$gen-big-Data.db"
+    val takes = listing.nonEmpty && listing.forall(f => modernEra(f._1)) && (
+      if (!merge) sourceSetViolations(identities).isEmpty
+      else n == 1 || listing.forall { case (path, info) =>
+        info.hasIndex && info.hasStats &&
+          textKey(new SSTableOpen(path, conf, Some(info)).header.keyType)
+      })
+    Option.when(takes)(FilePlan(listing,
+      if (merge) (0 until n).map(b =>
+        FileTask(name(b + 1), b + 1, listing.indices, b, n))
+      else {
+        val genOf = assignGenerations(identities)
+        identities.zipWithIndex.map { case (id, i) =>
+          FileTask(name(genOf(id)), genOf(id), Seq(i), 0, 1)
+        }
+      }, merge))
+  }
 
   /** A decoded partition as the frame route writes it after the TTL
     * strip — the bridge model's view, which [[BinPartitionReader]]'s
@@ -3402,74 +3471,67 @@ object SSTableBinaryV2 {
     (p.copy(atoms = atoms.result()), rows)
   }
 
-  /** The FILE route of the unmerged binary rewrite — the reference's
-    * own shape (`Cassandra4TTLRemover.java:74-91`): one Spark task per
-    * listed `*-Data.db` opens the generation ([[SSTableOpen]]: header,
-    * ring check, chunk map, and the digest check when `verify`),
-    * decodes its partitions, strips TTLs on them ([[bridgePartition]])
-    * and writes output generation `nb-<g>` through [[writeGeneration]],
-    * where g is the generation the frame route assigns. No DSv2 scan,
-    * no bridge rows, no shuffle: one job, one task per generation, and
-    * the same bytes as [[writeSSTables]] over the stripped
-    * [[readBinary]] frame. `listing` comes from [[rewritableLake]].
-    * Decoded partitions count into the `partitionsServed` accumulator.
-    * Returns (sstable, bridge rows written) per output file. */
-  private[graft] def rewriteGenerations(spark: SparkSession,
-      listing: Seq[(String, SiblingInfo)], outDir: String,
-      keyspace: String, table: String, compression: Option[String],
-      verify: Boolean): Seq[(String, Long)] = {
-    val identities = listing.map(f => sstableIdentity(f._1))
-    require(listing.forall(f => modernEra(f._1)) &&
-      sourceSetViolations(identities).isEmpty,
-      "rewriteGenerations: the listing must come from rewritableLake")
+  /** The FILE route of `--sink sstable`, shaped like the reference's
+    * rewrite (`Cassandra4TTLRemover.java:74-91`) and like Cassandra's
+    * own compaction: one Spark job of one task per output generation
+    * of `plan` ([[fileRoutePlan]]). A task opens each of its inputs
+    * ([[SSTableOpen]]: header, ring check, chunk map), decodes the
+    * partitions in its ring bucket ([[bucketPartitions]]), strips TTLs
+    * on them ([[bridgePartition]]), merges each key's versions when the
+    * plan merges ([[mergePartition]]) and writes its generation
+    * ([[writeGeneration]]). No DSv2 scan, no bridge rows, no shuffle, no
+    * window plan; a task holds one output generation's partitions. The
+    * bytes equal the frame route's ([[writeSSTables]] over the stripped
+    * [[readBinary]] frame, or [[mergeSSTables]] over it). With
+    * `verify`, task t checks the digest of input i when t ≡ i (mod the
+    * task count), so each input is verified once. Decoded partitions
+    * count into the `partitionsServed` accumulator. Returns (sstable,
+    * bridge rows written) per output file. */
+  private[graft] def writeFileRoute(spark: SparkSession, plan: FilePlan,
+      outDir: String, keyspace: String, table: String,
+      compression: Option[String], verify: Boolean): Seq[(String, Long)] = {
+    val FilePlan(listing, tasks, merge) = plan
     val target = SinkTarget(s"$outDir/$keyspace/$table", None,
       compression, BigFormat.ColumnIndexSize)
-    val genOf = assignGenerations(identities)
     val hconf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val served = spark.sparkContext.longAccumulator(MetricPartitionsServed)
-    val tasks = listing.map { case (path, info) =>
-      (path, info, genOf(sstableIdentity(path)))
-    }
-    spark.sparkContext.parallelize(tasks, math.max(1, tasks.size))
-      .map { case (path, info, gen) =>
-        val src = sstableIdentity(path)
-        val open = new SSTableOpen(path, hconf.value.value, Some(info))
-        if (verify) open.verifyDigest()
-        val in = open.openFullStream()
+    val n = tasks.size
+    spark.sparkContext.parallelize(tasks.zipWithIndex, math.max(1, n))
+      .map { case (task, t) =>
+        val conf = hconf.value.value
+        // the bridged partitions that carry rows, or, merging, each
+        // key's bridged versions, in input order
+        val bridged = Vector.newBuilder[(BigFormat.PartitionData, Long)]
+        val versions = scala.collection.mutable.LinkedHashMap
+          .empty[String, Vector[(String, BigFormat.PartitionData)]]
+        task.inputs.foreach { i =>
+          val (path, info) = listing(i)
+          val src = sstableIdentity(path)
+          val open = new SSTableOpen(path, conf, Some(info))
+          try {
+            if (verify && i % n == t) open.verifyDigest()
+            bucketPartitions(open, path, task.bucket, task.buckets).foreach {
+              p =>
+                served.add(1)
+                val (part, rows) = bridgePartition(src, p)
+                if (rows > 0) {
+                  if (merge) versions(p.key) =
+                    versions.getOrElse(p.key, Vector.empty) :+ ((src, part))
+                  else bridged += ((part, rows))
+                }
+            }
+          } finally open.close()
+        }
         val parts =
-          try BigFormat.partitions(open.header, in, path).map { p =>
-            served.add(1)
-            bridgePartition(src, p)
-          }.filter(_._2 > 0).toVector
-          finally in.close()
-        writeParts(target, hconf.value.value, src, gen, parts.map(_._1))
-        (s"$table/nb-$gen-big-Data.db", parts.map(_._2).sum)
+          if (merge) versions.iterator.map { case (key, vs) =>
+            mergePartition(key, vs) }.toVector
+          else bridged.result()
+        writeGeneration(target, conf, task.name, task.gen, parts.map(_._1))
+        (task.name, parts.map(_._2).sum)
       }
       .collect().filter(_._2 > 0).toSeq.sortBy(_._1)
   }
-
-  /** [[writeGeneration]] over bridged partitions, with the clustering
-    * arity and column inventory read off their atoms (what the frame
-    * route reads off its bridge rows); no partitions write nothing. */
-  private def writeParts(target: SinkTarget,
-      conf: org.apache.hadoop.conf.Configuration, src: String, gen: Int,
-      parts: Seq[BigFormat.PartitionData]): Unit =
-    if (parts.nonEmpty) {
-      def atoms = parts.iterator.flatMap(_.atoms)
-      writeGeneration(target, conf, src, gen, parts,
-        clusteringArity(src, atoms.collect {
-          case r: BigFormat.RowAtom if !r.static => r.clustering.size
-          case m: BigFormat.MarkerAtom => m.clustering.size
-        }),
-        atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.cells.iterator
-              .map(c => (r.static, c.name, c.path.isDefined)) ++
-              r.complexDeletions.iterator.map(d => (r.static, d._1, true))
-          case _ => Iterator.empty
-        })
-    }
 
   /** The ring span 2^64 as a double: a token's ring position is
     * `token / RingSpan + 0.5`, in [0, 1]. */
@@ -3483,94 +3545,12 @@ object SSTableBinaryV2 {
     math.min(n - 1, math.floor((token.toDouble / RingSpan + 0.5) * n)
       .toLong.toInt)
 
-  /** The listing of `root` when the merge route ([[mergeGenerations]])
-    * compacts it into `outGenerations` buckets: at least one Data.db,
-    * every one modern-era. One bucket streams each input whole. Several
-    * buckets seek each input's bucket by its Index.db, which stays one
-    * contiguous run only where the index token is the rendered key's
-    * token: so every input must carry an Index.db and a UTF8/Ascii
-    * partition key (read off its Statistics.db header). On other keys a
-    * bucket is scattered over the file, one positioned open (and, when
-    * compressed, one chunk decompressed) per partition, so those lakes
-    * keep the frame route. None otherwise. */
-  private[graft] def mergeableLake(spark: SparkSession, root: String,
-      outGenerations: Int): Option[Seq[(String, SiblingInfo)]] = {
-    val conf = spark.sessionState.newHadoopConf()
-    Some(listLake(root, conf)).filter(l =>
-      l.nonEmpty && l.forall(f => modernEra(f._1)) &&
-        (outGenerations <= 1 || l.forall { case (path, info) =>
-          info.hasIndex && info.hasStats &&
-            textKey(new SSTableOpen(path, conf, Some(info)).header.keyType)
-        }))
-  }
-
-  /** UTF8/Ascii partition keys render to their own bytes, so the
-    * index's token order is the rendered key's token order. */
-  private def textKey(keyType: String): Boolean =
-    keyType == BigFormat.Utf8Type || keyType == BigFormat.AsciiType
-
-  /** The FILE route of the LWW compaction (`--merge lww
-    * [--out-generations N]`), shaped like Cassandra's own compaction:
-    * one Spark job of N tasks, where task b reads every input at ring
-    * bucket b ([[bucketPartitions]]), merges each key's versions
-    * ([[mergePartition]]) and writes output generation `nb-<b+1>`
-    * through [[writeGeneration]]. No bridge rows, no shuffle, no window
-    * plan; a task holds one bucket's partitions. The bytes equal the
-    * frame route's (`writeSSTables` over the merged bridge-row frame)
-    * whenever range tombstones from different generations do not
-    * overlap within a partition; overlapping ones fail by name on both
-    * routes. With `verify`, task `i mod N` checks input i's digest, so
-    * each input is verified once. `listing` comes from
-    * [[mergeableLake]]. Decoded partitions count into the
-    * `partitionsServed` accumulator. Returns (sstable, bridge rows the
-    * frame route would write) per output file. */
-  private[graft] def mergeGenerations(spark: SparkSession,
-      listing: Seq[(String, SiblingInfo)], outDir: String,
-      keyspace: String, table: String, compression: Option[String],
-      verify: Boolean, outGenerations: Int): Seq[(String, Long)] = {
-    val n = math.max(1, outGenerations)
-    require(listing.nonEmpty && listing.forall(f =>
-      modernEra(f._1) && (n == 1 || f._2.hasIndex)),
-      "mergeGenerations: the listing must come from mergeableLake")
-    val target = SinkTarget(s"$outDir/$keyspace/$table", None,
-      compression, BigFormat.ColumnIndexSize)
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val served = spark.sparkContext.longAccumulator(MetricPartitionsServed)
-    spark.sparkContext.parallelize(0 until n, n)
-      .map { b =>
-        val conf = hconf.value.value
-        val name = s"$table/nb-${b + 1}-big-Data.db"
-        // each key's bridged versions, in input order
-        val versions = scala.collection.mutable.LinkedHashMap
-          .empty[String, Vector[(String, BigFormat.PartitionData)]]
-        listing.zipWithIndex.foreach { case ((path, info), i) =>
-          val src = sstableIdentity(path)
-          val open = new SSTableOpen(path, conf, Some(info))
-          try {
-            if (verify && i % n == b) open.verifyDigest()
-            bucketPartitions(open, path, b, n).foreach { p =>
-              served.add(1)
-              val (bridged, rows) = bridgePartition(src, p)
-              if (rows > 0) versions(p.key) =
-                versions.getOrElse(p.key, Vector.empty) :+ ((src, bridged))
-            }
-          } finally open.close()
-        }
-        val merged = versions.iterator
-          .map { case (key, vs) => mergePartition(key, vs) }.toVector
-        writeParts(target, conf, name, b + 1, merged.map(_._1))
-        (name, merged.map(_._2).sum)
-      }
-      .collect().filter(_._2 > 0).toSeq.sortBy(_._1)
-  }
-
   /** The partitions of one input whose rendered key falls in ring
     * bucket b of n. One bucket is the whole file, streamed from offset
     * 0 through the open's positioned handle (which its `close`
     * releases), with no index read. Otherwise they are decoded at
     * their Index.db positions. The keys are UTF8/Ascii
-    * ([[mergeableLake]]), whose index token is the rendered key's
+    * ([[fileRoutePlan]]), whose index token is the rendered key's
     * token, so the bucket is one contiguous run of entries and the walk
     * stops past it. Each run of bucket entries is one positioned
     * stream. A decoded key must match its index entry. */
@@ -3582,7 +3562,7 @@ object SSTableBinaryV2 {
   private def seekBucket(open: SSTableOpen, path: String, b: Int,
       n: Int): Iterator[BigFormat.PartitionData] = {
     val keyType = open.header.keyType
-    require(textKey(keyType), s"$path: the merge route seeks a bucket " +
+    require(textKey(keyType), s"$path: the file route seeks a bucket " +
       s"by Index.db only on UTF8/Ascii keys, not $keyType")
     // (Data.db position, rendered keys) of each run
     val runs = open.withIndexEntries { entries =>
@@ -3623,8 +3603,8 @@ object SSTableBinaryV2 {
     }
   }
 
-  /** Spark's string order (unsigned UTF-8 bytes) — the order the frame
-    * route's merge compares values and clusterings in. */
+  /** Spark's string order (unsigned UTF-8 bytes) — the order
+    * [[graft.ops.TtlOps.lwwMerge]] compares values and clusterings in. */
   private def compareText(a: String, b: String): Int =
     UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
@@ -3655,12 +3635,11 @@ object SSTableBinaryV2 {
     }
   }
 
-  /** A partition's bound markers (src, bound) paired into ranges as the
-    * frame route's merge pairs them: starts and ends each sorted by
-    * (clustering, inclusive, deletion), then zipped, each range deleted
-    * at the later of its bounds. Unbalanced bounds, and paired ranges
-    * that are not ordered and disjoint, fail with the frame route's
-    * messages. */
+  /** A partition's bound markers (src, bound) paired into ranges as
+    * `lwwMerge` pairs them: starts and ends each sorted by (clustering,
+    * inclusive, deletion), then zipped, each range deleted at the later
+    * of its bounds. Unbalanced bounds, and paired ranges that are not
+    * ordered and disjoint, fail with `lwwMerge`'s messages. */
   private def pairRanges(key: String,
       bounds: Seq[(String, BigFormat.MarkerAtom)]): Seq[PairedRange] = {
     if (bounds.isEmpty) return Nil
@@ -3698,8 +3677,8 @@ object SSTableBinaryV2 {
     ranges
   }
 
-  /** Cassandra's `Cells.reconcile` as the frame route's merge ranks a
-    * cell's versions: the later writetime, then a tombstone over a
+  /** Cassandra's `Cells.reconcile` as `lwwMerge` ranks a cell's
+    * versions: the later writetime, then a tombstone over a
     * write, then the greater value, then the later deletion second.
     * True when `x` beats or ties `y`. */
   private def reconcilesOver(x: BigFormat.CellAtom,
@@ -3722,9 +3701,10 @@ object SSTableBinaryV2 {
     c >= 0
   }
 
-  /** One key's bridged versions (src, partition), merged under the
-    * frame route's LWW rules ([[graft.ops.TtlOps.lwwMerge]] with
-    * markers kept): the greatest partition and row deletion; every
+  /** One key's bridged versions (src, partition), merged under the LWW
+    * rules every `--sink sstable` route runs, the rules
+    * [[graft.ops.TtlOps.lwwMerge]] (with markers kept) also implements
+    * for the other sinks: the greatest partition and row deletion; every
     * range-tombstone bound kept, paired into ranges; each cell (a
     * column, or a collection path) and the primary-key liveness keep
     * only their winning version, and only when it is newer than every

@@ -1487,55 +1487,32 @@ object SSTableMetadata {
       : DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val docs = graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long")).filter(col("doc_id") < 480)
-    require(docs.count() == 480L,
+    require(graft.Tables.load(spark, sfDir, "documents")
+      .filter(col("doc_id") < 480).count() == 480L,
       "redistribute-2x fixture needs the first 480 documents")
-    val src = graft.Scratch.dir("graft-redis2x-src-")
     val out = graft.Scratch.dir("graft-redis2x-out-")
     val act = graft.Scratch.dir("graft-redis2x-act-")
-    val srcStr = src.toString
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val bc = spark.sparkContext.broadcast(hconf)
-    val schema = OldFormat.schemaOfCql(
-      graft.model.CqlSchema.parse(SSTableBinaryV2.Cql2x)
-        .fold(e => throw new IllegalArgumentException(e), identity))
     // two designed ka generations, written executor-side with NO
     // Index.db — 4 partitions per member doc, one cell each
-    docs.as[Long]
-      .groupByKey(d => (d % 2).toInt)
-      .mapGroups { (genId, ds) =>
-        val parts = ds.flatMap { d =>
-          (0 until 4).map { k =>
-            val pid = d * 4 + k
-            OldFormat.Partition2(s"r-$pid", None, Seq(
-              OldFormat.Cell2(Seq("c"), "len",
-                1609459200000000L + pid, None, None, Some("1"),
-                deleted = false, counter = false)))
-          }
-        }.toSeq
-        val gen = genId + 1
-        val (dataBytes, index) =
-          OldFormat.writeDataFileIndexed(parts, schema)
-        val sampled = SSTableComponents.sampleIndex2x(index)
-        val fs = FileSystem.get(
-          java.net.URI.create(srcStr), bc.value.value)
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(
-            s"$srcStr/documents/graft-documents-ka-$gen-$name"), true)
-          try os.write(bytes) finally os.close()
+    val (src, _) = SSTableBinaryV2.buildFixture(spark, sfDir,
+      "graft-redis2x-src-", files = 2) { (fileId, docs, write) =>
+      val parts = docs.filter(_.docId < 480).flatMap { d =>
+        (0 until 4).map { k =>
+          val pid = d.docId * 4 + k
+          OldFormat.Partition2(s"r-$pid", None, Seq(
+            OldFormat.Cell2(Seq("c"), "len",
+              1609459200000000L + pid, None, None, Some("1"),
+              deleted = false, counter = false)))
         }
-        write("Data.db", dataBytes)
-        write("Summary.db", SSTableComponents.writeSummary2x(
-          sampled, index.size.toLong, index.head._1, index.last._1))
-        (gen, index.size, sampled.size)
       }
-      .collect().foreach { case (gen, nParts, marks) =>
-        require(nParts == 960 && marks == 8,
-          s"gen $gen: designed 960 partitions / 8 marks, " +
-            s"got $nParts / $marks")
-      }
+      val index = SSTableBinaryV2.encode2xFixture(write, fileId, parts,
+        SSTableBinaryV2.Cql2x, sidecars = Set("Summary.db"))
+      val marks = SSTableComponents.sampleIndex2x(index).size
+      require(index.size == 960 && marks == 8,
+        s"gen ${fileId + 1}: designed 960 partitions / 8 marks, " +
+          s"got ${index.size} / $marks")
+      index.size
+    }
     Seq(("documents/graft-documents-ka-2-Data.db", 4.0))
       .toDF("sstable", "rate_15m")
       .write.mode("overwrite").parquet(act.toString)

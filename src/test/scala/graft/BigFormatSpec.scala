@@ -1819,13 +1819,45 @@ class SSTableBinarySpec extends SparkSpec {
       "--sink", "sstable") ++ extra)
       .fold(e => fail(s"parse failed: $e"), identity)
 
-  /** The CLI's output against `writeSSTables` run on the same frame
-    * WITHOUT a source set (its own distinct pass): byte-identical. */
+  /** The bridge-row frame the CLI's output is checked against, with
+    * the source set the CLI derives for it: unmerged, the CLI's own
+    * stripped frame; merged (binary input), `lwwMerge`'s survivors
+    * through `SSTableDumpBridge.mergeTree`, reshaped to bridge rows and
+    * named by output generation, so the sink's `mergePartition` is
+    * checked against an independent implementation of the LWW rules. */
+  private def referenceFrame(args: RemoverCli.CliArgs)
+      : (org.apache.spark.sql.DataFrame, Option[Seq[String]]) =
+    if (!args.merge.contains("lww")) RemoverCli.sstableSinkInput(spark, args)
+    else {
+      val merged = SSTableDumpBridge.mergeTree(spark, args.in,
+        (s, p) => SSTableBinaryV2.readBinary(s, p, args.cqlText,
+          args.verify, args.scrub))
+      val live = col("row_kind").isin("ROW", "PK_LIVENESS")
+      val (genName, names) = RemoverCli.mergedGenerations(args)
+      // a surviving cell tombstone keeps its timestamp and its own
+      // local deletion second, as the unmerged rewrite does
+      (merged.select(
+        col("partition_key"), col("clustering"), col("row_kind"),
+        col("name"),
+        when(live, struct(col("value"), col("writetime_us"),
+          lit(null).cast("int").as("ttl_s"),
+          lit(null).cast("long").as("expire_us")))
+          .when(col("row_kind") === "CELL_DELETION",
+            struct(lit(null).cast("string").as("value"),
+              col("writetime_us"), lit(null).cast("int").as("ttl_s"),
+              col("expire_us"))).as("cell"),
+        col("deletion_us"),
+        genName.as("sstable")), Some(names))
+    }
+
+  /** The CLI's output against `writeSSTables` run on the reference
+    * frame WITHOUT a source set (its own distinct pass):
+    * byte-identical. */
   private def assertSameAsDistinctPass(args: RemoverCli.CliArgs,
       compression: Option[String], shape: String): Unit = {
     val ref = Scratch.dir("graft-cli-ref-")
     try {
-      val (frame, _) = RemoverCli.sstableSinkInput(spark, args)
+      val (frame, _) = referenceFrame(args)
       SSTableBinaryV2.writeSSTables(frame, ref.toString, args.keyspace,
         args.table, compression = compression)
       val got = filesUnder(java.nio.file.Paths.get(args.out))
@@ -1833,6 +1865,29 @@ class SSTableBinarySpec extends SparkSpec {
       assert(got.keySet === want.keySet, shape)
       assert(got.keys.filterNot(k => got(k) == want(k)).isEmpty, shape)
     } finally Scratch.delete(ref)
+  }
+
+  /** The physical plans of the Dataset actions `op` runs. */
+  private def physicalPlans(op: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      op
+      org.apache.spark.sql.graftbridge.ListenerFlush
+        .waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
   }
 
   /** What `op` ran, as a listener sees it: jobs, tasks, shuffle bytes
@@ -1909,7 +1964,8 @@ class SSTableBinarySpec extends SparkSpec {
         val out = Scratch.dir("graft-cli-once-")
         try {
           val args = sinkArgs(lake.toString, s"$out/o", extra: _*)
-          if (RemoverCli.mergeRouteLake(spark, args).isDefined) {
+          val plan = RemoverCli.fileRoute(spark, args)
+          if (plan.exists(_.merge)) {
             // the merge route: one job of one task per output
             // generation; the tasks decode each input partition once
             // between them, nothing shuffled
@@ -1917,7 +1973,7 @@ class SSTableBinarySpec extends SparkSpec {
             assert(p === JobProfile(1, args.outGenerations, 0L, partitions),
               s"$shape: one job, one task per output generation, no " +
                 "shuffle, every partition decoded once")
-          } else if (RemoverCli.fileRouteLake(spark, args).isDefined) {
+          } else if (plan.isDefined) {
             // the file route: one job of one task per generation, each
             // decoding its partitions once, nothing shuffled
             val p = profile(RemoverCli.run(spark, args))
@@ -1927,16 +1983,34 @@ class SSTableBinarySpec extends SparkSpec {
           } else {
             assert(RemoverCli.sstableSinkInput(spark, args)._2.nonEmpty,
               shape)
-            assert(rowsDecoded(RemoverCli.run(spark, args)) === rows,
-              s"$shape: the input must be decoded exactly once")
+            var plans = Seq.empty[org.apache.spark.sql.execution.SparkPlan]
+            assert(rowsDecoded {
+              plans = physicalPlans(RemoverCli.run(spark, args))
+            } === rows, s"$shape: the input must be decoded exactly once")
+            if (args.merge.nonEmpty) {
+              // the merge rides the sink's one shuffle, keyed on the
+              // output generation: no window plan, no second exchange
+              val helper = new org.apache.spark.sql.execution.adaptive
+                .AdaptiveSparkPlanHelper {}
+              val shuffles = plans.flatMap(helper.collect(_) {
+                case e: org.apache.spark.sql.execution.exchange
+                  .ShuffleExchangeLike => e
+              })
+              val windows = plans.flatMap(helper.collect(_) {
+                case w: org.apache.spark.sql.execution.window.WindowExec => w
+              })
+              assert(shuffles.size === 1 && windows.isEmpty,
+                s"$shape: ${plans.mkString("\n")}")
+            }
           }
           assertSameAsDistinctPass(args, compression, shape)
         } finally Scratch.delete(out)
       }
       // so the merge shapes above ran on both routes
-      assert(RemoverCli.mergeRouteLake(spark, sinkArgs(indexed.toString,
-        "unused", "--merge", "lww", "--out-generations", "4")).isDefined)
-      assert(RemoverCli.mergeRouteLake(spark, sinkArgs(in.toString,
+      assert(RemoverCli.fileRoute(spark, sinkArgs(indexed.toString,
+        "unused", "--merge", "lww", "--out-generations", "4"))
+        .exists(_.merge))
+      assert(RemoverCli.fileRoute(spark, sinkArgs(in.toString,
         "unused", "--merge", "lww", "--out-generations", "4")).isEmpty)
       // the unmerged split keeps the distinct pass: its "<src>#sK"
       // names share their source's generation by design
@@ -1969,9 +2043,10 @@ class SSTableBinarySpec extends SparkSpec {
           .drop("cell_t")
         SSTableBinaryV2.writeSSTables(frame, collide.toString, "ks", t)
       }
+      // the rewrite plan: one task per input, no merge
       def route(in: java.nio.file.Path, extra: String*): Boolean =
-        RemoverCli.fileRouteLake(spark,
-          sinkArgs(in.toString, s"$in-unused", extra: _*)).isDefined
+        RemoverCli.fileRoute(spark,
+          sinkArgs(in.toString, s"$in-unused", extra: _*)).exists(!_.merge)
       assert(route(in))
       assert(route(in, "--compress", "zstd"))
       assert(route(in, "--verify", "true"))
@@ -1985,7 +2060,7 @@ class SSTableBinarySpec extends SparkSpec {
         "--out", s"$in-unused", "--table", "documents",
         "--format", "sstabledump", "--sink", "sstable"))
         .fold(e => fail(e), identity)
-      assert(RemoverCli.fileRouteLake(spark, dump).isEmpty)
+      assert(RemoverCli.fileRoute(spark, dump).isEmpty)
     } finally {
       Scratch.delete(in); Scratch.delete(ka); Scratch.delete(collide)
     }
@@ -2005,18 +2080,17 @@ class SSTableBinarySpec extends SparkSpec {
     }
   }
 
-  /** Runs `args` (which must take a file route) and the frame route
-    * over the same input (`writeSSTables` on the stripped or merged
-    * `readBinary` frame, with the driver's source set): same bytes in
-    * every file, same row count. */
+  /** Runs `args` (which must take the file route) and `writeSSTables`
+    * over the reference frame of the same input ([[referenceFrame]]:
+    * the stripped `readBinary` frame, or `lwwMerge`'s), with the
+    * driver's source set: same bytes in every file, same row count. */
   private def assertRoutesAgree(args: RemoverCli.CliArgs,
       compression: Option[String], shape: String): Unit = {
-    assert(RemoverCli.fileRouteLake(spark, args).isDefined ||
-      RemoverCli.mergeRouteLake(spark, args).isDefined, shape)
+    assert(RemoverCli.fileRoute(spark, args).isDefined, shape)
     val ref = Scratch.dir("graft-frame-route-")
     try {
       val rows = RemoverCli.run(spark, args)
-      val (frame, sources) = RemoverCli.sstableSinkInput(spark, args)
+      val (frame, sources) = referenceFrame(args)
       val want = SSTableBinaryV2.writeSSTables(frame, ref.toString,
         args.keyspace, args.table, compression = compression,
         sources = sources).map(_._2).sum
@@ -2194,8 +2268,8 @@ class SSTableBinarySpec extends SparkSpec {
           mergeHdr.copy(keyType = BigFormat.Int32Type))
       }
       def merges(in: java.nio.file.Path, extra: String*): Boolean =
-        RemoverCli.mergeRouteLake(spark,
-          sinkArgs(in.toString, s"$in-unused", extra: _*)).isDefined
+        RemoverCli.fileRoute(spark,
+          sinkArgs(in.toString, s"$in-unused", extra: _*)).exists(_.merge)
       assert(merges(in, "--merge", "lww"))
       assert(merges(in, "--merge", "lww", "--out-generations", "3"))
       assert(merges(in, "--merge", "lww", "--compress", "lz4",
@@ -2215,14 +2289,14 @@ class SSTableBinarySpec extends SparkSpec {
       }
       assert(!merges(in))
       assert(!merges(in, "--out-generations", "3"))
-      // the unmerged split takes neither file route
-      assert(RemoverCli.fileRouteLake(spark, sinkArgs(in.toString,
+      // the unmerged split does not take the file route
+      assert(RemoverCli.fileRoute(spark, sinkArgs(in.toString,
         s"$in-unused", "--out-generations", "3")).isEmpty)
       val dump = RemoverCli.parse(Array("--in", in.toString,
         "--out", s"$in-unused", "--table", "documents",
         "--format", "sstabledump", "--sink", "sstable", "--merge", "lww"))
         .fold(e => fail(e), identity)
-      assert(RemoverCli.mergeRouteLake(spark, dump).isEmpty)
+      assert(RemoverCli.fileRoute(spark, dump).isEmpty)
     } finally {
       Scratch.delete(in); Scratch.delete(ka); Scratch.delete(bare)
       Scratch.delete(typed); Scratch.delete(out)
@@ -2331,14 +2405,19 @@ class SSTableBinarySpec extends SparkSpec {
       Seq("1", "3").foreach { n =>
         val args = sinkArgs(overlapping.toString, s"$out/o$n", "--merge",
           "lww", "--out-generations", n)
-        assert(RemoverCli.mergeRouteLake(spark, args).isDefined)
+        assert(RemoverCli.fileRoute(spark, args).exists(_.merge))
         val viaRoute = failure(RemoverCli.run(spark, args))
         val viaFrame = failure {
           val (frame, sources) = RemoverCli.sstableSinkInput(spark, args)
-          SSTableBinaryV2.writeSSTables(frame, s"$out/f$n", args.keyspace,
+          SSTableBinaryV2.mergeSSTables(frame, s"$out/f$n", args.keyspace,
+            args.table, None, None, sources)
+        }
+        val viaOracle = failure {
+          val (frame, sources) = referenceFrame(args)
+          SSTableBinaryV2.writeSSTables(frame, s"$out/r$n", args.keyspace,
             args.table, sources = sources)
         }
-        Seq(viaRoute, viaFrame).foreach { m =>
+        Seq(viaRoute, viaFrame, viaOracle).foreach { m =>
           assert(m.contains("overlapping range tombstones in partition k " +
             "(generations: documents/nb-1-big-Data.db, " +
             "documents/nb-2-big-Data.db)"), m)
@@ -2404,15 +2483,24 @@ class SSTableBinarySpec extends SparkSpec {
     } finally Scratch.delete(in)
   }
 
-  test("--verify on the merge route checks every input's digest; a corrupt one fails by name") {
+  test("--verify on every file-route shape checks every input's digest; a corrupt one fails by name") {
     import scala.jdk.CollectionConverters._
     val in = indexedFixture()
-    val out = Scratch.dir("graft-merge-verify-")
+    val out = Scratch.dir("graft-file-verify-")
+    // (shape, its arguments, whether the plan merges)
+    val shapes = Seq(
+      ("rewrite", Seq.empty[String], false),
+      ("merge lww", Seq("--merge", "lww"), true),
+      ("merge lww, 3 generations",
+        Seq("--merge", "lww", "--out-generations", "3"), true))
     try {
-      def args(o: String) = sinkArgs(in.toString, s"$out/$o", "--merge",
-        "lww", "--out-generations", "3", "--verify", "true")
-      assert(RemoverCli.mergeRouteLake(spark, args("a")).isDefined)
-      assert(RemoverCli.run(spark, args("a")) > 0)
+      def args(extra: Seq[String], o: String) = sinkArgs(in.toString,
+        s"$out/$o", extra ++ Seq("--verify", "true"): _*)
+      shapes.zipWithIndex.foreach { case ((shape, extra, merge), i) =>
+        assert(RemoverCli.fileRoute(spark, args(extra, s"a$i"))
+          .map(_.merge) === Some(merge), shape)
+        assert(RemoverCli.run(spark, args(extra, s"a$i")) > 0, shape)
+      }
       val digests = {
         val walk = java.nio.file.Files.walk(in)
         try walk.iterator().asScala
@@ -2421,13 +2509,16 @@ class SSTableBinarySpec extends SparkSpec {
         finally walk.close()
       }
       assert(digests.size === SSTableDumpBridge.TreeFiles)
-      // the fourth input: inputs outnumber tasks, so task 0 verifies it
-      // beside the first
+      // the fourth input: with 3 output generations, inputs outnumber
+      // tasks, so task 0 verifies it beside the first
       val bad = digests.last
       java.nio.file.Files.write(bad, "12345".getBytes("US-ASCII"))
-      val m = failure(RemoverCli.run(spark, args("b")))
-      assert(m.contains(bad.getFileName.toString.stripSuffix("-Digest.crc32") +
-        "-Data.db: Digest.crc32 mismatch"), m)
+      shapes.zipWithIndex.foreach { case ((shape, extra, _), i) =>
+        val m = failure(RemoverCli.run(spark, args(extra, s"b$i")))
+        assert(m.contains(bad.getFileName.toString
+          .stripSuffix("-Digest.crc32") + "-Data.db: Digest.crc32 mismatch"),
+          s"$shape: $m")
+      }
     } finally { Scratch.delete(in); Scratch.delete(out) }
   }
 
