@@ -50,7 +50,7 @@ import org.apache.spark.sql.SparkSession
   *   graft.RemoverCli --in <dir> --out <dir> --table <name>
   *     [--keyspace <ks>] [--cpus <n>]
   *     [--format parquet|sstabledump|sstable]
-  *     [--merge lww] [--reader json|v2]
+  *     [--merge lww]
   *     [--sink parquet|sstable|sstabledump]
   *     [--compress lz4|snappy|deflate|zstd]   (sstable sink output)
   *     [--out-generations <n>]  (sstable sink: token-bucketed output
@@ -102,7 +102,7 @@ object RemoverCli {
       cells: Seq[String] = Seq.empty,
       writetime: Option[String] = None, ttlKey: Option[String] = None,
       format: String = "parquet", merge: Option[String] = None,
-      reader: String = "json", sink: String = "parquet",
+      sink: String = "parquet",
       cqlSchema: Option[graft.model.CqlSchema.Parsed] = None,
       cqlText: Option[String] = None,
       compress: Option[String] = None,
@@ -153,7 +153,7 @@ object RemoverCli {
 
   private val Flags = Set("in", "out", "table", "keyspace", "cpus",
     "pk", "ck", "cells", "writetime", "ttl-key", "format", "merge",
-    "reader", "sink", "cql", "compress", "verify", "scrub",
+    "sink", "cql", "compress", "verify", "scrub",
     "out-generations", "inventory", "stats", "set-level",
     "set-repaired-at", "summary-budget", "activity", "track-activity")
 
@@ -219,7 +219,6 @@ object RemoverCli {
                   ttlKey = m.get("ttl-key"),
                   format = m.getOrElse("format", "parquet"),
                   merge = m.get("merge"),
-                  reader = m.getOrElse("reader", "json"),
                   sink = m.getOrElse("sink", "parquet"),
                   compress = m.get("compress").map(_.toLowerCase),
                   verify = m.get("verify").exists(_.toBoolean),
@@ -227,7 +226,7 @@ object RemoverCli {
                   outGenerations = og.flatten.getOrElse(1))
                 applyCql(args, m)
                   .flatMap(validateFormat).flatMap(validateMerge)
-                  .flatMap(validateReader).flatMap(validateSink)
+                  .flatMap(validateSink)
                   .flatMap(a =>
                   // dump/binary formats bring their own liveness
                   // model, so the cell-spec rules don't apply to them
@@ -469,21 +468,6 @@ object RemoverCli {
         "(expected parquet, sstabledump or sstable)")
     }
 
-  /** `--reader v2` routes dump ingestion through the streamed
-    * DataSourceV2 connector (partition-bounded memory — the right
-    * choice when single dump files are large); the default `json`
-    * reader is Spark's multiLine source (whole-file parse units).
-    * Only the dump format has a reader to choose. */
-  private def validateReader(a: CliArgs): Either[String, CliArgs] =
-    a.reader match {
-      case "json" => Right(a)
-      case "v2" =>
-        if (a.format == "sstabledump") Right(a)
-        else Left("--reader v2 requires --format sstabledump " +
-          "(--format sstable decodes binary directly and has no reader choice)")
-      case other => Left(s"unknown --reader '$other' (expected json or v2)")
-    }
-
   /** CLI compressor names → Cassandra compressor class simple names
     * (the table-schema `compression.class` values). */
   private val Compressors = Map(
@@ -645,11 +629,11 @@ object RemoverCli {
     else if (isDump(args) && args.merge.contains("lww"))
       graft.sources.SSTableDumpBridge.mergeTtlToDir(
         spark, args.in, args.out, args.keyspace, args.table,
-        reader = dumpReader(args))
+        reader = inputReader(args))
     else if (isDump(args))
       graft.sources.SSTableDumpBridge.removeTtlToDir(
         spark, args.in, args.out, args.keyspace, args.table,
-        reader = dumpReader(args))
+        reader = inputReader(args))
     else if (args.cells.isEmpty) {
       val meta = CellModel.eventsMeta.copy(keyspace = args.keyspace)
       Pipeline.removeTtlFromDir(spark, args.in, args.out, meta)
@@ -735,7 +719,7 @@ object RemoverCli {
     * dump per input SSTable. Returns rows exported. */
   private def runDumpExport(spark: SparkSession, args: CliArgs): Long = {
     import org.apache.spark.sql.functions._
-    val reader = dumpReader(args)
+    val reader = inputReader(args)
     val frame =
       if (args.merge.contains("lww")) {
         val merged = graft.sources.SSTableDumpBridge
@@ -843,14 +827,7 @@ object RemoverCli {
   private[graft] def sstableSinkInput(spark: SparkSession, args: CliArgs)
       : (org.apache.spark.sql.DataFrame, Option[Seq[String]]) = {
     import org.apache.spark.sql.functions._
-    val reader: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      if (args.format == "sstable")
-        (s, p) => graft.sources.SSTableBinaryV2.readBinary(s, p,
-          args.cqlText, args.verify, args.scrub)
-      else if (args.reader == "v2")
-        graft.sources.SSTableDumpBridge.readTreeV2
-      else graft.sources.SSTableDumpBridge.readTree
-    val stripped = reader(spark, args.in).withColumn("cell",
+    val stripped = inputReader(args)(spark, args.in).withColumn("cell",
       graft.model.CellModel.stripCellKeepDeletion(col("cell")))
     if (args.merge.contains("lww")) {
       // the names are fixed by the arguments: each claims its own
@@ -942,17 +919,16 @@ object RemoverCli {
   private def isDump(args: CliArgs): Boolean =
     args.format == "sstabledump" || args.format == "sstable"
 
-  private def dumpReader(args: CliArgs)
+  /** The bridge-row reader every sink takes its input from: binary
+    * input (`--format sstable`, the no-pre-pass path) decodes
+    * `*-Data.db` through the big-format connector, dump input streams
+    * through the sstabledump connector; both carry `sstable`. */
+  private def inputReader(args: CliArgs)
       : (SparkSession, String) => org.apache.spark.sql.DataFrame =
-    // `sstable` is the no-pre-pass path: the big-format connector
-    // decodes *-Data.db directly into the same bridge-row frame
     if (args.format == "sstable")
       (s, p) => graft.sources.SSTableBinaryV2.readBinary(s, p,
         args.cqlText, args.verify, args.scrub)
-    else if (args.reader == "v2") graft.sources.SSTableDumpBridge.readTreeV2
-    else if (args.merge.contains("lww"))
-      graft.sources.SSTableDumpBridge.readTree
-    else graft.sources.SSTableDumpBridge.read
+    else graft.sources.SSTableDumpBridge.readTree
 
   def main(argv: Array[String]): Unit = parse(argv) match {
     case Left(err) =>
@@ -961,7 +937,7 @@ object RemoverCli {
         "usage: graft.RemoverCli --in <dir> --out <dir> --table <name>" +
           " [--keyspace <ks>] [--cpus <n>]" +
           " [--format parquet|sstabledump|sstable]" +
-          " [--merge lww] [--reader json|v2]" +
+          " [--merge lww]" +
           " [--sink parquet|sstable|sstabledump]" +
           " [--compress lz4|snappy|deflate|zstd] [--out-generations <n>]" +
           " [--verify true | --scrub true]" +
@@ -998,10 +974,13 @@ object RemoverCli {
               args.setRepairedAt.map(r => s"repairedAt=$r").toSeq)
               .mkString(", ") + "; originals kept)")
         else {
-          val layout =
-            if (args.sink == "sstable")
+          val layout = args.sink match {
+            case "sstable" =>
               s"${args.out}/${args.keyspace}/${args.table}/ (big-format SSTables)"
-            else s"${args.out}/keyspace=${args.keyspace}/table_name=${args.table}/"
+            case "sstabledump" => s"${args.out}/ (sstabledump JSON tree)"
+            case _ =>
+              s"${args.out}/keyspace=${args.keyspace}/table_name=${args.table}/"
+          }
           println(s"wrote $rows rows to $layout")
         }
       } finally spark.stop()

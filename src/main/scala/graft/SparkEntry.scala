@@ -146,7 +146,9 @@ object SparkEntry {
     "src_jsonl_corrupt" -> (sources.JsonlCorpus.corruptAccounting _),
     // --- sstabledump tree ingestion (sources.SSTableDumpBridge) ---
     "src_sstabledump_tree" -> (sources.SSTableDumpBridge.treeAudit _),
-    "src_sstabledump_v2" -> (sources.SSTableDumpBridge.treeAuditV2 _),
+    // kept under its name and oracle: the DSv2 connector it named is
+    // now the one dump reader, so both names run the same audit
+    "src_sstabledump_v2" -> (sources.SSTableDumpBridge.treeAudit _),
     "src_sstable_binary" -> (sources.SSTableBinaryV2.binaryAudit _),
     "src_sstable_split" -> (sources.SSTableBinaryV2.splitAudit _),
     "src_sstable_binary_3x" -> (sources.SSTableBinaryV2.binaryAudit3x _),
@@ -2829,8 +2831,7 @@ object SparkEntry {
     // the export loop (binary → dump JSON → re-ingest) answers to the
     // SAME tree contract as every direct ingestion path
     "src_sstable_dump_export" -> sstabledumpTreeSql,
-    // same oracle VERBATIM for the V2-connector ingestion path: one
-    // semantic contract, both IO paths held to it
+    // same oracle VERBATIM: the name runs the same connector read
     "src_sstabledump_v2" -> sstabledumpTreeSql,
     // the binary big-format decoder answers to the SAME contract: the
     // fixture content is identical, only the on-disk encoding differs
@@ -4469,8 +4470,8 @@ object SparkEntry {
     "st_dedup_wm" ->
       "SELECT DISTINCT user_id, event_type FROM events",
     // streaming dump ingest: AvailableNow over the tree fixture lands
-    // on the exact batch audit frame — all three ingestion paths
-    // (multiLine, V2 connector, streaming) share this one oracle
+    // on the exact batch audit frame — the batch connector and the
+    // streaming file source share this one oracle
     "st_dump_ingest" -> sstabledumpTreeSql,
     // the stateful streaming merge's final snapshot equals the batch
     // compaction — p_lww_merge's oracle shared verbatim

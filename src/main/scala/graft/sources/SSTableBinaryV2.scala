@@ -22,16 +22,18 @@ import org.apache.spark.util.SerializableConfiguration
   * the 4.x (nb) and 3.x (me/md) eras, batch AND micro-batch streaming
   * — the ingestion paths that need NO `sstabledump` pre-pass: the
   * [[BigFormat]] codec decodes `*-Data.db` partitions
-  * straight into the same bridge-row frame `readTree`/`readTreeV2`
-  * produce, so the whole operator surface (TTL strip, LWW merge,
-  * sorted sink) runs unchanged behind it. This is the reference's own
+  * straight into the same bridge-row frame
+  * [[SSTableDumpBridge.readTree]] produces, so the whole operator
+  * surface (TTL strip, LWW merge, sorted sink) runs unchanged behind
+  * it. This is the reference's own
   * entry point (`Cassandra4TTLRemover.java:45-74` opens the Data.db
   * via the embedded Cassandra runtime) re-expressed as a thin
   * self-contained decoder.
   *
-  * Scale shape matches [[SSTableDumpV2]] exactly: one InputPartition
-  * per Data.db file (the reference's parallelism unit — its CLI loops
-  * files, `TTLRemoverCLI.java:147-163`), partitions streamed
+  * Scale shape: one InputPartition per Data.db file (the reference's
+  * parallelism unit — its CLI loops files,
+  * `TTLRemoverCLI.java:147-163`), or per split of a large indexed
+  * one (`BinScan.planInputPartitions`), partitions streamed
   * sequentially so per-task memory is bounded by the largest Cassandra
   * PARTITION, never the SSTable; the serialization header is one tiny
   * Statistics.db sibling read per file. Column pruning is pushed down
@@ -41,7 +43,7 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Row-kind mapping is the [[SSTableDumpBridge]] contract verbatim —
   * `src_sstable_binary` shares `src_sstabledump_tree`'s DuckDB oracle
-  * word for word, holding all four IO paths to ONE semantic contract:
+  * word for word, holding every IO path to ONE semantic contract:
   *   - partition-level deletion  → one PARTITION_DELETION row
   *   - row with deletion         → ROW_DELETION (tombstones survive)
   *   - live cells                → one ROW row per cell, cell-level
@@ -1895,7 +1897,7 @@ object SSTableBinaryV2 {
     }._1
 
   /** The bridge-row frame off a big-format data directory — the
-    * binary sibling of `readTree`/`readTreeV2`. A declared CQL schema
+    * binary sibling of [[SSTableDumpBridge.readTree]]. A declared CQL schema
     * is REQUIRED for pre-3.0 ("ka"/"la") files, which carry no
     * serialization header. */
   def readBinary(spark: SparkSession, root: String,

@@ -69,9 +69,9 @@ import org.apache.spark.sql.types._
   * `Cassandra3TTLRemover.java:185,189`), and the strip/liveness
   * operators only touch the liveness fields, so a lossless string
   * carry is the honest analogue. Scale shape: one JSON file per
-  * SSTable → the multiLine documents are per-file parse units, so a
-  * dump TREE parallelizes file-per-task ([[readTree]]); everything
-  * after `spark.read.json` is a projection + two explodes
+  * SSTable, streamed one partition object at a time and packed into
+  * tasks by file size ([[readTree]]); everything after the scan is
+  * `from_json`, a projection and two explodes
   * (partitions → entries → cells), no shuffle at all until a
   * downstream operator asks for one.
   */
@@ -111,63 +111,34 @@ object SSTableDumpBridge {
   /** One cell-model row per cell, plus one per deletion marker
     * (row / partition / range-tombstone bound) and one per
     * primary-key-only live row: (partition_key, clustering, row_kind,
-    * name, cell, deletion_us) with `cell` the canonical
+    * name, cell, deletion_us, sstable) with `cell` the canonical
     * `struct<value, writetime_us, ttl_s, expire_us>` every graft
-    * operator consumes.
-    */
-  def read(spark: SparkSession, dumpPath: String): DataFrame =
-    bridgeRows(
-      spark.read.schema(dumpSchema).option("multiLine", "true")
-        .json(dumpPath))
-
-  /** [[read]] over a whole DIRECTORY TREE of dump files (the
-    * `out/<ks>/<table>/<gen>.json` layout a per-SSTable `sstabledump`
-    * sweep produces), with per-file identity: each multiLine JSON
-    * document is a per-file parse unit, so N dump files parse as up
-    * to N parallel tasks (Spark packs small files per
-    * `maxPartitionBytes`/`openCostInBytes`; at one-dump-per-SSTable
-    * scale each file is its own task) — the reference's
-    * directory-walk ingestion (`TTLRemoverCLI.java:147-163`)
-    * re-expressed as a distributed read instead of a serial loop.
-    * Adds `sstable` (the file's last two path components —
-    * `<table>/<gen>.json` in a real dump tree — the S2
+    * operator consumes — over one dump file or a whole DIRECTORY TREE
+    * of them (the `out/<ks>/<table>/<gen>.json` layout a per-SSTable
+    * `sstabledump` sweep produces). The [[SSTableDumpV2]] connector
+    * streams one partition object at a time and packs small files
+    * into shared tasks — the reference's directory-walk ingestion
+    * (`TTLRemoverCLI.java:147-163`) re-expressed as a distributed
+    * read — then `from_json` with [[dumpSchema]] and [[bridgeRows]]
+    * expand each object. `sstable` is the file's last two path
+    * components (`<table>/<gen>.json` in a real dump tree — the S2
     * filename→identity rule applied to dumps; one component alone
-    * could collide across sibling directories) to every bridge row. */
+    * could collide across sibling directories). */
   def readTree(spark: SparkSession, root: String): DataFrame =
-    bridgeTreeFrame(
-      spark.read.schema(dumpSchema)
-        .option("multiLine", "true")
-        .option("recursiveFileLookup", "true")
-        .json(root))
-
-  /** The tree expansion over any dump-schema frame (batch OR
-    * streaming — the projections/explodes in [[bridgeRows]] are
-    * stream-compatible): adds the file identity and expands. Lets the
-    * streaming ingest path reuse the one expansion definition. */
-  private[graft] def bridgeTreeFrame(raw: DataFrame): DataFrame =
-    bridgeRows(
-      raw.withColumn("_src_file",
-        regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1)),
-      srcFile = true)
-
-  /** [[readTree]] through the [[SSTableDumpV2]] connector instead of
-    * the multiLine JSON source: the V2 reader streams one partition
-    * object at a time (per-task memory bounded by the largest
-    * Cassandra partition, not the dump file — the multiLine source
-    * materializes each whole file), then the SAME from_json schema
-    * and the SAME [[bridgeRows]] expression pipeline produce
-    * bit-identical bridge rows. One semantic definition, two IO
-    * paths; SSTableBridgeSpec pins their frame equality and the
-    * one-task-per-file parallelism. */
-  def readTreeV2(spark: SparkSession, root: String): DataFrame =
     bridgeRows(
       spark.read.format("sstabledump").load(root)
-        .select(
-          from_json(col("partition_json"), dumpSchema).as("p"),
-          col("sstable").as("_src_file"))
-        .select(col("p.partition").as("partition"),
-          col("p.rows").as("rows"), col("_src_file")),
-      srcFile = true)
+        .select(from_json(col("partition_json"), dumpSchema).as("p"),
+          col("sstable"))
+        .select(col("p.partition"), col("p.rows"), col("sstable")))
+
+  /** The tree expansion over a streaming dump-schema frame read by
+    * Spark's file source (the connector is batch-only): adds the file
+    * identity from `_metadata.file_path` and expands through the same
+    * [[bridgeRows]] as [[readTree]]. */
+  private[graft] def bridgeTreeFrame(raw: DataFrame): DataFrame =
+    bridgeRows(
+      raw.withColumn("sstable",
+        regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1)))
 
   /** The partition→bridge-row expansion, as ONE expression tree over
     * ONE scan: every input partition computes an ARRAY of output rows
@@ -177,7 +148,7 @@ object SSTableDumpBridge {
     * no subtrees across union branches); here rows are duplicated by
     * explode, never the plan.
     */
-  private def bridgeRows(raw: DataFrame, srcFile: Boolean = false): DataFrame = {
+  private def bridgeRows(raw: DataFrame): DataFrame = {
     val nullCell = lit(null).cast(cellType)
     val nullClust = lit(null).cast("array<string>")
     def out(clustering: Column, rowKind: Column, name: Column,
@@ -190,10 +161,10 @@ object SSTableDumpBridge {
       s"row_kind:string,name:string,cell:$cellType,deletion_us:bigint>>")
 
     val exploded = raw.select(
-      (concat_ws(":", col("partition.key")).as("partition_key") +:
-        col("partition.deletion_info").as("pdel") +:
-        posexplode_outer(col("rows")).as(Seq("pos", "r")) +:
-        (if (srcFile) Seq(col("_src_file").as("sstable")) else Nil)): _*)
+      concat_ws(":", col("partition.key")).as("partition_key"),
+      col("partition.deletion_info").as("pdel"),
+      posexplode_outer(col("rows")).as(Seq("pos", "r")),
+      col("sstable"))
 
     val r = col("r")
     // partition-level deletion: exactly once per partition — on the
@@ -252,20 +223,18 @@ object SSTableDumpBridge {
       .otherwise(emptyOut)
 
     exploded
-      .select(
-        (col("partition_key") +:
-          explode(concat(partDel, rowDel, live, rtDel, unsupported)).as("o") +:
-          (if (srcFile) Seq(col("sstable")) else Nil)): _*)
-      .select(
-        (col("partition_key") +: col("o.clustering") +: col("o.row_kind") +:
-          col("o.name") +: col("o.cell") +: col("o.deletion_us") +:
-          (if (srcFile) Seq(col("sstable")) else Nil)): _*)
+      .select(col("partition_key"),
+        explode(concat(partDel, rowDel, live, rtDel, unsupported)).as("o"),
+        col("sstable"))
+      .select(col("partition_key"), col("o.clustering"), col("o.row_kind"),
+        col("o.name"), col("o.cell"), col("o.deletion_us"), col("sstable"))
   }
 
   /** Convert a dump (file or directory of dumps) to cell-model
     * parquet under `outDir` — the bridge's batch entry point. */
   def convert(spark: SparkSession, dumpPath: String, outDir: String): Unit =
-    read(spark, dumpPath).write.mode("overwrite").parquet(outDir)
+    readTree(spark, dumpPath).drop("sstable")
+      .write.mode("overwrite").parquet(outDir)
 
   /** Fixture epoch for the dump-tree audit: 2021-01-01T00:00:00Z. */
   val TreeBase = 1609459200L
@@ -353,28 +322,18 @@ object SSTableDumpBridge {
     * few thousand rows — the offset sum stays exactly as
     * timestamp-sensitive (a mis-parse shifts it) while bounded by
     * rows × max(doc_id)+10 seconds at any scale. */
-  def treeAudit(spark: SparkSession, sfDir: String): DataFrame =
-    treeAuditWith(spark, sfDir, readTree)
-
-  /** The same audit through the V2 connector path — the oracle is
-    * shared verbatim with `src_sstabledump_tree`: one semantic
-    * contract, both IO paths held to it. */
-  def treeAuditV2(spark: SparkSession, sfDir: String): DataFrame =
-    treeAuditWith(spark, sfDir, readTreeV2)
-
-  private def treeAuditWith(spark: SparkSession, sfDir: String,
-      reader: (SparkSession, String) => DataFrame): DataFrame = {
+  def treeAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val out = writeTreeFixture(spark, sfDir)
-    val audit = auditFrame(reader(spark, out.toString)).localCheckpoint()
+    val audit = auditFrame(readTree(spark, out.toString)).localCheckpoint()
     graft.Scratch.delete(out)
     audit
   }
 
   /** The per-row_kind audit aggregation over any bridge-row frame —
-    * ONE definition shared by all four ingestion paths (JSON tree,
-    * DSv2 dump connector, streaming ingest, and the binary big-format
-    * connector [[SSTableBinaryV2]]), so every path answers to the
-    * same oracle arithmetic. */
+    * ONE definition shared by all three ingestion paths (the dump
+    * connector behind [[readTree]], the streaming ingest, and the
+    * binary big-format connector [[SSTableBinaryV2]]), so every path
+    * answers to the same oracle arithmetic. */
   private[graft] def auditFrame(rows: DataFrame): DataFrame = {
     val baseUs = lit(TreeBase * 1000000L)
     rows
@@ -646,7 +605,7 @@ object SSTableDumpBridge {
   def removeTtlToDir(spark: SparkSession, dumpPath: String, outDir: String,
       keyspace: String, table: String,
       saveMode: String = "errorifexists",
-      reader: (SparkSession, String) => DataFrame = read): Long = {
+      reader: (SparkSession, String) => DataFrame = readTree): Long = {
     val written = org.apache.spark.sql.Observation()
     stripTtl(reader(spark, dumpPath))
       .withColumn("keyspace", lit(keyspace))

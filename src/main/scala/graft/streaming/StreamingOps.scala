@@ -401,15 +401,18 @@ object StreamingOps {
   /** Continuous SSTable-dump ingestion — the live form of the dump
     * bridge: dumps arrive one file per SSTable (a compaction-export
     * feed), the file stream paces them with `maxFilesPerTrigger`, and
-    * the SAME [[graft.sources.SSTableDumpBridge.bridgeTreeFrame]]
-    * expansion used by the batch and V2 paths runs unchanged inside
-    * the stream (projections + explode — no extra state). The
+    * the SAME [[graft.sources.SSTableDumpBridge.bridgeRows]]
+    * expansion the batch read uses runs unchanged inside the stream
+    * (projections + explode — no extra state), through
+    * [[graft.sources.SSTableDumpBridge.bridgeTreeFrame]]: Spark's
+    * file-stream JSON source stays here because the dump connector is
+    * batch-only. The
     * streaming aggregate keeps (row_kind, sstable) partials —
     * bounded by kinds × files, not rows — because streaming forbids
     * countDistinct; the registered query finishes the per-kind
     * rollup batch-side on the sink, landing on the EXACT same audit
-    * frame as `src_sstabledump_tree`, so all THREE ingestion paths
-    * (batch multiLine, V2 connector, streaming) share one oracle.
+    * frame as `src_sstabledump_tree`, so the batch and streaming
+    * ingestion paths share one oracle.
     */
   def dumpIngest(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.SSTableDumpBridge

@@ -1626,8 +1626,7 @@ class SSTableBinarySpec extends SparkSpec {
       // is erased by the strip itself, so the frames must be equal
       assert(viaJson.exceptAll(viaBin).count() === 0)
       assert(viaBin.exceptAll(viaJson).count() === 0)
-      // binary input decodes directly: a --reader choice is a
-      // contradiction and parse-time rejected
+      // there is no reader to choose: --reader is an unknown flag
       assert(RemoverCli.parse(Array("--in", "a", "--out", "b",
         "--table", "t", "--format", "sstable", "--reader", "v2")).isLeft)
     } finally { Scratch.delete(binDir); Scratch.delete(jsonDir) }

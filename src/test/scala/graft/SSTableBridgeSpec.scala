@@ -131,7 +131,7 @@ class SSTableBridgeSpec extends SparkSpec {
   }
 
   test("partition deletions, PK-only rows, and range tombstones survive the bridge") {
-    val df = SSTableDumpBridge.read(spark, writeDeletionDump())
+    val df = SSTableDumpBridge.readTree(spark, writeDeletionDump())
       .localCheckpoint()
 
     // a partition tombstone with an empty rows array does NOT vanish
@@ -189,11 +189,11 @@ class SSTableBridgeSpec extends SparkSpec {
   test("timestamp parse is timezone-explicit (no session mutation)") {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.session.timeZone", "America/New_York")
-    val df = SSTableDumpBridge.read(s2, writeDump())
+    val df = SSTableDumpBridge.readTree(s2, writeDump())
     val aliceScore = df.filter(col("partition_key") === "alice" &&
       col("name") === "score").head()
     val cell = aliceScore.getStruct(aliceScore.fieldIndex("cell"))
-    // same epoch micros as under UTC — the Z suffix wins, and read()
+    // same epoch micros as under UTC — the Z suffix wins, and readTree
     // left the caller's timezone alone
     assert(cell.getAs[Long]("writetime_us") === 1609459200000001L)
     assert(s2.conf.get("spark.sql.session.timeZone") === "America/New_York")
@@ -202,10 +202,10 @@ class SSTableBridgeSpec extends SparkSpec {
   test("dump TREE reads parallelize per file and keep per-file identity") {
     val out = SSTableDumpBridge.writeTreeFixture(spark, sfDir)
     try {
-      // one task per dump file when split packing is disabled: multiLine
-      // documents are non-splittable parse units, so N files can always
-      // fan out to N tasks — the witness that a directory-scale ingest
-      // never serializes through one parser
+      // one task per dump file when split packing is disabled: a dump
+      // is a non-splittable parse unit, so N files can always fan out
+      // to N tasks — the witness that a directory-scale ingest never
+      // serializes through one parser
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.files.maxPartitionBytes", "1")
       s2.conf.set("spark.sql.files.openCostInBytes", "0")
@@ -243,7 +243,7 @@ class SSTableBridgeSpec extends SparkSpec {
   }
 
   test("dump parses to cell-model rows with Cassandra's liveness rules") {
-    val df = SSTableDumpBridge.read(spark, writeDump())
+    val df = SSTableDumpBridge.readTree(spark, writeDump())
     assert(df.count() === 4) // 3 live cells + 1 row tombstone
 
     val aliceScore = df.filter(col("partition_key") === "alice" &&
@@ -283,7 +283,7 @@ class SSTableBridgeSpec extends SparkSpec {
     assert(live.filter(col("cell.ttl_s").isNotNull ||
       col("cell.expire_us").isNotNull).count() === 0,
       "TTL metadata survived the strip")
-    val before = SSTableDumpBridge.read(spark, writeDump())
+    val before = SSTableDumpBridge.readTree(spark, writeDump())
       .filter(col("row_kind") === "ROW")
       .select(col("partition_key"), col("name"),
         col("cell.value"), col("cell.writetime_us"))
@@ -313,6 +313,15 @@ class SSTableBridgeSpec extends SparkSpec {
     assert(back.filter(col("row_kind") === "ROW" &&
       (col("cell.ttl_s").isNotNull || col("cell.expire_us").isNotNull))
       .count() === 0)
+    // --in may name one dump file as well as a directory of them
+    val outFile = graft.Scratch.dir("graft-sstable-cli1-").toString + "/o"
+    val one = RemoverCli.parse(Array(
+      "--in", s"$in/mc-1-big-Data.json", "--out", outFile,
+      "--table", "tbl", "--keyspace", "realks", "--format", "sstabledump"))
+      .fold(e => fail(s"parse failed: $e"), identity)
+    assert(RemoverCli.run(spark, one) === 4L)
+    val backOne = spark.read.parquet(outFile)
+    assert(backOne.exceptAll(back).isEmpty && back.exceptAll(backOne).isEmpty)
     // a cell-model spec alongside the dump format is rejected
     assert(RemoverCli.parse(Array(
       "--in", in, "--out", out, "--table", "tbl",
@@ -356,57 +365,90 @@ class SSTableBridgeSpec extends SparkSpec {
 
   test("RemoverCli --merge lww collapses generations to the effective state") {
     val in = writeTwoGenerations()
-    val out = graft.Scratch.dir("graft-sstable-mrg-").toString + "/o"
-    val args = RemoverCli.parse(Array(
-      "--in", in, "--out", out, "--table", "t",
-      "--format", "sstabledump", "--merge", "lww"))
-      .fold(e => fail(s"parse failed: $e"), identity)
-    RemoverCli.run(spark, args)
-    val back = spark.read.parquet(out).localCheckpoint()
-    def cells(pk: String) = back
-      .filter(col("partition_key") === pk && col("row_kind") === "ROW")
-      .collect().map(r => r.getAs[String]("name") ->
-        (r.getAs[String]("value"), r.getAs[Long]("n_versions"))).toMap
-    // alice: gen-2 score wins over gen-1 (2 versions), note untouched
-    assert(cells("alice") ===
-      Map("score" -> ("43", 2L), "note" -> ("hi", 1L)))
-    // carol: the row tombstone shadows the gen-1 cell AND survives
-    assert(cells("carol").isEmpty, "shadowed carol cell resurrected")
-    assert(back.filter(col("partition_key") === "carol" &&
-      col("row_kind") === "ROW_DELETION").count() === 1)
-    // dave: partition tombstone shadows everything and is preserved
-    assert(cells("dave").isEmpty, "shadowed dave cell resurrected")
-    assert(back.filter(col("partition_key") === "dave" &&
-      col("row_kind") === "PARTITION_DELETION").count() === 1)
-    // --merge outside the dump format is a parse error
-    assert(RemoverCli.parse(Array(
-      "--in", in, "--out", out, "--table", "t", "--merge", "lww")).isLeft)
-    assert(RemoverCli.parse(Array(
-      "--in", in, "--out", out, "--table", "t",
-      "--format", "sstabledump", "--merge", "zzz")).isLeft)
+    val root = graft.Scratch.dir("graft-sstable-mrg-")
+    def runSink(sink: String): String = {
+      val out = s"$root/$sink"
+      val args = RemoverCli.parse(Array(
+        "--in", in, "--out", out, "--table", "t",
+        "--format", "sstabledump", "--merge", "lww", "--sink", sink))
+        .fold(e => fail(s"parse failed: $e"), identity)
+      RemoverCli.run(spark, args)
+      out
+    }
+    /** The effective state every sink must show, over its re-read rows
+      * (`value` already flattened out of the cell struct). */
+    def assertEffective(back: org.apache.spark.sql.DataFrame,
+        sink: String): Unit = {
+      def cells(pk: String) = back
+        .filter(col("partition_key") === pk && col("row_kind") === "ROW")
+        .collect().map(r => r.getAs[String]("name") ->
+          r.getAs[String]("value")).toMap
+      // alice: gen-2 score wins over gen-1, note untouched
+      assert(cells("alice") === Map("score" -> "43", "note" -> "hi"), sink)
+      // carol: the row tombstone shadows the gen-1 cell AND survives
+      assert(cells("carol").isEmpty, s"$sink: shadowed carol cell resurrected")
+      assert(back.filter(col("partition_key") === "carol" &&
+        col("row_kind") === "ROW_DELETION").count() === 1, sink)
+      // dave: partition tombstone shadows everything and is preserved
+      assert(cells("dave").isEmpty, s"$sink: shadowed dave cell resurrected")
+      assert(back.filter(col("partition_key") === "dave" &&
+        col("row_kind") === "PARTITION_DELETION").count() === 1, sink)
+    }
+    try {
+      val back = spark.read.parquet(runSink("parquet")).localCheckpoint()
+      assertEffective(back, "parquet")
+      // the parquet sink also counts versions: alice's score had 2
+      val versions = back
+        .filter(col("partition_key") === "alice" && col("row_kind") === "ROW")
+        .collect().map(r => r.getAs[String]("name") ->
+          r.getAs[Long]("n_versions")).toMap
+      assert(versions === Map("score" -> 2L, "note" -> 1L))
+      assertEffective(graft.sources.SSTableBinaryV2
+        .readBinary(spark, runSink("sstable"))
+        .withColumn("value", col("cell.value")).localCheckpoint(), "sstable")
+      assertEffective(SSTableDumpBridge
+        .readTree(spark, runSink("sstabledump"))
+        .withColumn("value", col("cell.value")).localCheckpoint(),
+        "sstabledump")
+      // --merge outside the dump format is a parse error
+      assert(RemoverCli.parse(Array(
+        "--in", in, "--out", s"$root/x", "--table", "t",
+        "--merge", "lww")).isLeft)
+      assert(RemoverCli.parse(Array(
+        "--in", in, "--out", s"$root/x", "--table", "t",
+        "--format", "sstabledump", "--merge", "zzz")).isLeft)
+    } finally graft.Scratch.delete(root)
   }
+
+  /** The reference read [[SSTableDumpBridge.readTree]] is held to:
+    * Spark's multiLine JSON source over the same tree, expanded by the
+    * same bridge. */
+  private def jsonSourceTree(root: String): org.apache.spark.sql.DataFrame =
+    SSTableDumpBridge.bridgeTreeFrame(
+      spark.read.schema(SSTableDumpBridge.dumpSchema)
+        .option("multiLine", "true")
+        .option("recursiveFileLookup", "true")
+        .json(root))
 
   test("RemoverCli --reader v2 runs the lifecycle through the connector, output-identical") {
     val dumpDir = SSTableDumpBridge.writeTreeFixture(spark, sfDir)
     try {
-      def runWith(reader: String): org.apache.spark.sql.DataFrame = {
-        val out = Scratch.dir("graft-cli-v2-").toString + "/o"
-        val argv = Array("--in", dumpDir.toString, "--out", out,
-          "--table", "t", "--format", "sstabledump",
-          "--reader", reader)
-        val args = RemoverCli.parse(argv)
-          .fold(e => fail(s"parse failed: $e"), identity)
-        RemoverCli.run(spark, args)
-        spark.read.parquet(out).localCheckpoint()
-      }
-      val viaJson = runWith("json")
-      val viaV2 = runWith("v2")
-      assert(viaV2.count() === viaJson.count())
-      assert(viaJson.exceptAll(viaV2).count() === 0)
-      assert(viaV2.exceptAll(viaJson).count() === 0)
-      // the reader choice only exists for the dump format
+      val out = Scratch.dir("graft-cli-v2-").toString + "/o"
+      val args = RemoverCli.parse(Array("--in", dumpDir.toString,
+        "--out", out, "--table", "t", "--format", "sstabledump"))
+        .fold(e => fail(s"parse failed: $e"), identity)
+      RemoverCli.run(spark, args)
+      val viaCli = spark.read.parquet(out)
+        .drop("keyspace", "table_name").localCheckpoint()
+      val reference = SSTableDumpBridge.stripTtl(
+        jsonSourceTree(dumpDir.toString)).localCheckpoint()
+      assert(viaCli.count() === reference.count())
+      assert(reference.exceptAll(viaCli).count() === 0)
+      assert(viaCli.exceptAll(reference).count() === 0)
+      // there is one dump reader: --reader is an unknown flag
       assert(RemoverCli.parse(Array("--in", "a", "--out", "b",
-        "--table", "t", "--reader", "v2")).isLeft)
+        "--table", "t", "--reader", "v2")) ===
+        Left("unknown flag --reader"))
       assert(RemoverCli.parse(Array("--in", "a", "--out", "b",
         "--table", "t", "--format", "sstabledump",
         "--reader", "zzz")).isLeft)
@@ -416,14 +458,66 @@ class SSTableBridgeSpec extends SparkSpec {
   test("V2 connector: streamed tree read is frame-identical to the multiLine path") {
     val out = SSTableDumpBridge.writeTreeFixture(spark, sfDir)
     try {
-      val a = SSTableDumpBridge.readTree(spark, out.toString)
-      val b = SSTableDumpBridge.readTreeV2(spark, out.toString)
-      assert(b.schema === a.schema)
-      // symmetric difference empty = identical multisets (rows are
-      // unique here: every bridge row carries its partition key)
-      assert(a.exceptAll(b).count() === 0)
-      assert(b.exceptAll(a).count() === 0)
+      for (root <- Seq(out.toString, writeDeletionDump())) {
+        val a = jsonSourceTree(root)
+        val b = SSTableDumpBridge.readTree(spark, root)
+        assert(b.schema === a.schema)
+        // symmetric difference empty = identical multisets (rows are
+        // unique here: every bridge row carries its partition key)
+        assert(a.exceptAll(b).count() === 0, root)
+        assert(b.exceptAll(a).count() === 0, root)
+      }
     } finally Scratch.delete(out)
+  }
+
+  test("RemoverCli --sink sstabledump without --merge exports one stripped dump per input") {
+    val in = SSTableDumpBridge.writeTreeFixture(spark, sfDir)
+    val out = Scratch.dir("graft-dumpsink-")
+    try {
+      val args = RemoverCli.parse(Array("--in", in.toString,
+        "--out", s"$out/o", "--table", "t", "--format", "sstabledump",
+        "--sink", "sstabledump"))
+        .fold(e => fail(s"parse failed: $e"), identity)
+      val stripped = SSTableDumpBridge.readTree(spark, in.toString)
+        .withColumn("cell",
+          graft.model.CellModel.stripCellKeepDeletion(col("cell")))
+        .localCheckpoint()
+      assert(RemoverCli.run(spark, args) === stripped.count())
+      // one file per input dump, named after its `sstable` identity
+      val names = stripped.select("sstable").distinct().collect()
+        .map(_.getString(0)).toSet
+      assert(names.size === SSTableDumpBridge.TreeFiles)
+      assert(filesUnder(out.resolve("o")).keySet === names)
+      val back = SSTableDumpBridge.readTree(spark, s"$out/o")
+      assert(back.exceptAll(stripped).count() === 0)
+      assert(stripped.exceptAll(back).count() === 0)
+    } finally { Scratch.delete(in); Scratch.delete(out) }
+  }
+
+  test("a dump cut mid-partition fails with its file named") {
+    val dir = graft.Scratch.dir("graft-sstable-cut-")
+    try {
+      // alice's partition is whole; the cut lands inside bob's
+      val file = dir.resolve("mc-9-big-Data.json")
+      Files.writeString(file, dump.take(dump.indexOf("\"bob\"") + 10))
+      def assertNamed(e: Throwable): Unit = {
+        val messages = Iterator.iterate(e)(_.getCause)
+          .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+          .toSeq
+        assert(messages.exists(_.contains(file.toString)),
+          s"file not named: ${messages.mkString(" | ")}")
+      }
+      assertNamed(intercept[Exception] {
+        SSTableDumpBridge.readTree(spark, dir.toString).count()
+      })
+      val args = RemoverCli.parse(Array("--in", dir.toString,
+        "--out", s"$dir-out/o", "--table", "t", "--format", "sstabledump"))
+        .fold(e => fail(s"parse failed: $e"), identity)
+      assertNamed(intercept[Exception](RemoverCli.run(spark, args)))
+    } finally {
+      Scratch.delete(dir)
+      Scratch.delete(java.nio.file.Paths.get(s"$dir-out"))
+    }
   }
 
   test("dump export: readTree(writeTree(frame)) is the EXACT frame; non-expressible kinds refuse; bytes deterministic") {
@@ -470,9 +564,14 @@ class SSTableBridgeSpec extends SparkSpec {
 
   test("V2 connector: one task per dump file, pruning reaches the reader") {
     val out = SSTableDumpBridge.writeTreeFixture(spark, sfDir)
+    val small = Scratch.dir("graft-dumps-small-")
     try {
-      val raw = spark.read.format("sstabledump").load(out.toString)
-      // per-file parallelism: the fixture writes TreeFiles dump files
+      // per-file parallelism when packing is off: the fixture writes
+      // TreeFiles dump files
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.files.maxPartitionBytes", "1")
+      s2.conf.set("spark.sql.files.openCostInBytes", "0")
+      val raw = s2.read.format("sstabledump").load(out.toString)
       assert(raw.rdd.getNumPartitions === SSTableDumpBridge.TreeFiles)
       // column pruning pushes into the connector: a sstable-only scan
       // must not carry partition_json in its ReadSchema (the reader
@@ -485,6 +584,21 @@ class SSTableBridgeSpec extends SparkSpec {
       assert(scan.scan.readSchema().fieldNames.toSeq === Seq("sstable"),
         "pruning did not reach the connector scan")
       assert(pruned.distinct().count() === SSTableDumpBridge.TreeFiles)
-    } finally Scratch.delete(out)
+
+      // default confs pack files by Spark's file-source rule: the same
+      // task count as Spark's JSON source, on the fixture and on a tree
+      // of more small dumps than cores, which shares tasks
+      for (i <- 1 to 16)
+        Files.writeString(small.resolve(f"mc-$i%02d-big-Data.json"), dump)
+      for (root <- Seq(out.toString, small.toString)) {
+        val tasks = spark.read.format("sstabledump").load(root)
+          .rdd.getNumPartitions
+        assert(tasks === jsonSourceTree(root).rdd.getNumPartitions, root)
+      }
+      val packed = SSTableDumpBridge.readTree(spark, small.toString)
+      assert(packed.rdd.getNumPartitions < 16)
+      assert(packed.select("sstable").distinct().count() === 16)
+      assert(packed.count() === 16 * 4)
+    } finally { Scratch.delete(out); Scratch.delete(small) }
   }
 }
