@@ -39,12 +39,12 @@ import org.apache.spark.sql.SparkSession
   * generations before writing — a directory of SSTables collapses to
   * the table's effective state (highest-writetime cells, tombstone
   * shadowing applied, markers preserved), the step the reference
-  * leaves to the Cassandra server. Bound for `--sink sstable`, every
-  * input merges under one rule set,
-  * `graft.sources.SSTableBinaryV2.mergePartition`, on either route:
-  * the file route for a modern binary lake ([[fileRoute]] says when),
-  * the frame route for the rest. The parquet and `--sink sstabledump`
-  * sinks merge through [[graft.ops.TtlOps.lwwMerge]].
+  * leaves to the Cassandra server. Every sink merges under one rule
+  * set, `graft.sources.SSTableBinaryV2.mergePartition`: `--sink
+  * sstable` on the file route for a modern binary lake ([[fileRoute]]
+  * says when) and on the frame route for the rest; the parquet and
+  * `--sink sstabledump` sinks after one shuffle by partition key
+  * (`SSTableBinaryV2.mergeRows`), rendered back to bridge rows.
   *
   * Usage:
   *   graft.RemoverCli --in <dir> --out <dir> --table <name>
@@ -197,10 +197,7 @@ object RemoverCli {
         case (_, None, _) => Left("--out <dir> is required")
         case (_, _, None) => Left("--table <name> is required")
         case (Some(i), Some(o), Some(t)) =>
-          if (java.nio.file.Paths.get(o).toAbsolutePath ==
-            java.nio.file.Paths.get(i).toAbsolutePath)
-            Left("--out must differ from --in (originals are kept)")
-          else {
+          keepsInput(i, o).flatMap { _ =>
             val cpus = m.getOrElse("cpus", "8")
             val outGens = m.get("out-generations")
               .map(_.toIntOption.filter(_ >= 1))
@@ -227,6 +224,8 @@ object RemoverCli {
                 applyCql(args, m)
                   .flatMap(validateFormat).flatMap(validateMerge)
                   .flatMap(validateSink)
+                  .flatMap(a => keepsInput(a.in, a.out, sinkDir(a))
+                    .map(_ => a))
                   .flatMap(a =>
                   // dump/binary formats bring their own liveness
                   // model, so the cell-spec rules don't apply to them
@@ -236,6 +235,35 @@ object RemoverCli {
           }
       }
     }
+  }
+
+  private def normalized(path: String): java.nio.file.Path =
+    java.nio.file.Paths.get(path).toAbsolutePath.normalize
+
+  /** Refuses an output that would overwrite the input (originals are
+    * kept): `out` equal to `in`, or the directory the sink writes,
+    * `written`, equal to `in`, inside it or holding it. Paths compare
+    * absolute and normalized, so `x` and `./x` are one directory. */
+  private def keepsInput(in: String, out: String,
+      written: Option[String] = None): Either[String, Unit] = {
+    val i = normalized(in)
+    if (normalized(out) == i)
+      Left("--out must differ from --in (originals are kept)")
+    else written.map(normalized)
+      .find(w => w.startsWith(i) || i.startsWith(w)) match {
+      case Some(w) => Left(s"the sink writes $w, which is, holds or lies " +
+        s"inside --in $i (originals are kept)")
+      case None => Right(())
+    }
+  }
+
+  /** The directory a binary or dump sink writes into, the one that must
+    * stay clear of `--in`: `<out>/<ks>/<table>` for `--sink sstable`,
+    * `<out>` for `--sink sstabledump`. */
+  private def sinkDir(a: CliArgs): Option[String] = a.sink match {
+    case "sstable" => Some(s"${a.out}/${a.keyspace}/${a.table}")
+    case "sstabledump" => Some(a.out)
+    case _ => None
   }
 
   /** `--inventory true` validation: a read-only sidecar listing takes
@@ -258,13 +286,9 @@ object RemoverCli {
           case None => Left(s"--cpus must be a positive int, got '$cpus'")
           case Some(c) =>
             val out = m.getOrElse("out", "")
-            if (out.nonEmpty && java.nio.file.Paths.get(out)
-              .toAbsolutePath ==
-              java.nio.file.Paths.get(i).toAbsolutePath)
-              Left("--out must differ from --in (originals are kept)")
-            else Right(CliArgs(i, out, table = "", cpus = c,
-              inventory = true,
-              stats = m.get("stats").exists(_.toBoolean)))
+            (if (out.isEmpty) Right(()) else keepsInput(i, out)).map(_ =>
+              CliArgs(i, out, table = "", cpus = c, inventory = true,
+                stats = m.get("stats").exists(_.toBoolean)))
         }
     }
   }
@@ -299,10 +323,7 @@ object RemoverCli {
           case (_, None) =>
             Left("--out <dir> is required (surgery keeps originals)")
           case (Some(i), Some(o)) =>
-            if (java.nio.file.Paths.get(o).toAbsolutePath ==
-              java.nio.file.Paths.get(i).toAbsolutePath)
-              Left("--out must differ from --in (originals are kept)")
-            else {
+            keepsInput(i, o).flatMap { _ =>
               val cpus = m.getOrElse("cpus", "8")
               cpus.toIntOption.filter(_ > 0) match {
                 case None =>
@@ -340,10 +361,7 @@ object RemoverCli {
             Left("--out <dir> is required (redistribution keeps " +
               "originals)")
           case (Some(i), Some(o)) =>
-            if (java.nio.file.Paths.get(o).toAbsolutePath ==
-              java.nio.file.Paths.get(i).toAbsolutePath)
-              Left("--out must differ from --in (originals are kept)")
-            else {
+            keepsInput(i, o).flatMap { _ =>
               val cpus = m.getOrElse("cpus", "8")
               cpus.toIntOption.filter(_ > 0) match {
                 case None =>
@@ -719,22 +737,14 @@ object RemoverCli {
     * dump per input SSTable. Returns rows exported. */
   private def runDumpExport(spark: SparkSession, args: CliArgs): Long = {
     import org.apache.spark.sql.functions._
-    val reader = inputReader(args)
+    val stripped = strippedInput(spark, args)
     val frame =
-      if (args.merge.contains("lww")) {
-        val merged = graft.sources.SSTableDumpBridge
-          .mergeTree(spark, args.in, reader)
-        val live = col("row_kind").isin("ROW", "PK_LIVENESS")
-        merged.select(
-          col("partition_key"), col("clustering"), col("row_kind"),
-          col("name"),
-          when(live, struct(col("value"), col("writetime_us"),
-            lit(null).cast("int").as("ttl_s"),
-            lit(null).cast("long").as("expire_us"))).as("cell"),
-          col("deletion_us"),
-          lit(s"${args.table}/${args.table}-merged.json").as("sstable"))
-      } else reader(spark, args.in).withColumn("cell",
-        graft.model.CellModel.stripCellKeepDeletion(col("cell")))
+      if (args.merge.contains("lww"))
+        graft.sources.SSTableBinaryV2.mergeRows(stripped)
+          .drop("n_versions")
+          .withColumn("sstable",
+            lit(s"${args.table}/${args.table}-merged.json"))
+      else stripped
     // the row count rides the export's own action (observe) — a
     // localCheckpoint here would cache the whole frame just to count
     // it, and a separate count() would re-scan the source
@@ -827,8 +837,7 @@ object RemoverCli {
   private[graft] def sstableSinkInput(spark: SparkSession, args: CliArgs)
       : (org.apache.spark.sql.DataFrame, Option[Seq[String]]) = {
     import org.apache.spark.sql.functions._
-    val stripped = inputReader(args)(spark, args.in).withColumn("cell",
-      graft.model.CellModel.stripCellKeepDeletion(col("cell")))
+    val stripped = strippedInput(spark, args)
     if (args.merge.contains("lww")) {
       // the names are fixed by the arguments: each claims its own
       // generation, and a bucket no cell lands in writes nothing
@@ -929,6 +938,14 @@ object RemoverCli {
       (s, p) => graft.sources.SSTableBinaryV2.readBinary(s, p,
         args.cqlText, args.verify, args.scrub)
     else graft.sources.SSTableDumpBridge.readTree
+
+  /** The input's bridge rows with TTLs stripped, what every sink but
+    * the parquet one writes or merges. */
+  private def strippedInput(spark: SparkSession, args: CliArgs)
+      : org.apache.spark.sql.DataFrame =
+    inputReader(args)(spark, args.in).withColumn("cell",
+      graft.model.CellModel.stripCellKeepDeletion(
+        org.apache.spark.sql.functions.col("cell")))
 
   def main(argv: Array[String]): Unit = parse(argv) match {
     case Left(err) =>

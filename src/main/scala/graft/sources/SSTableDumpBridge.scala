@@ -370,53 +370,33 @@ object SSTableDumpBridge {
   def removeTtl(spark: SparkSession, cellParquetDir: String): DataFrame =
     stripTtl(spark.read.parquet(cellParquetDir))
 
-  /** Multi-generation merged view of a whole dump tree: the bridge
-    * rows of EVERY dump (SSTable generation) reconcile through
-    * [[graft.ops.TtlOps.lwwMerge]] — highest-writetime-wins per cell,
-    * row/partition tombstones shadowing at-or-before their timestamp,
-    * markers preserved verbatim (they may shadow SSTables outside
-    * this run). This is the step the reference cannot perform: it
-    * rewrites each SSTable in isolation
-    * (`Cassandra3TTLRemover.java:86-103` loops files independently)
-    * and leaves reconciliation to the Cassandra server; here a
-    * directory of generations collapses to the table's effective
-    * state in one shuffle. TTL metadata does not survive (value +
-    * writetime only) — the merge IS the strip. A cell tombstone keeps
-    * its local deletion second (`expire_us`, micros), and `sstable`
-    * names the generation each surviving row came from. */
-  def mergeTree(spark: SparkSession, root: String,
-      reader: (SparkSession, String) => DataFrame = readTree): DataFrame =
-    graft.ops.TtlOps.lwwMerge(
-      reader(spark, root).select(
-        col("partition_key"), col("clustering"), col("row_kind"),
-        col("name"), col("cell.value").as("value"),
-        col("cell.writetime_us").as("writetime_us"), col("deletion_us"),
-        when(col("row_kind") === "CELL_DELETION", col("cell.expire_us"))
-          .as("expire_us"),
-        col("sstable")),
-      keepMarkers = true)
-
-  /** [[mergeTree]] → sorted `out/<ks>/<table>/` layout — the CLI's
-    * `--merge lww` execution path; same write-side `observe` count
-    * discipline as [[removeTtlToDir]]. */
+  /** The CLI's `--merge lww` parquet path: the bridge rows of EVERY
+    * input generation reconcile into the table's effective state —
+    * highest-writetime-wins per cell, tombstones shadowing at or before
+    * their timestamp, markers kept (they may shadow SSTables outside this
+    * run) — the step the reference leaves to the Cassandra server (it
+    * rewrites each SSTable in isolation, `Cassandra3TTLRemover.java:
+    * 86-103`). The merge is [[SSTableBinaryV2.mergeRows]], the rule set
+    * `--sink sstable` writes, over the TTL-stripped rows; the output is
+    * the sorted `out/<ks>/<table>/` layout of (partition_key, clustering,
+    * row_kind, name, value, writetime_us, deletion_us, n_versions).
+    * Returns the rows written. */
   def mergeTtlToDir(spark: SparkSession, dumpPath: String, outDir: String,
       keyspace: String, table: String,
       saveMode: String = "errorifexists",
-      reader: (SparkSession, String) => DataFrame = readTree): Long = {
-    val written = org.apache.spark.sql.Observation()
-    // no repartition here: lwwMerge's output is already
-    // hash-partitioned on partition_key (its one exchange), so the
-    // sorted-sink shape only needs the within-partition sort
-    mergeTree(spark, dumpPath, reader).drop("expire_us", "sstable")
+      reader: (SparkSession, String) => DataFrame = readTree): Long =
+    // no repartition here: the merge's one exchange already brings each
+    // partition key to one task, so the sorted-sink shape only needs the
+    // within-partition sort
+    writeLayout(SSTableBinaryV2.mergeRows(reader(spark, dumpPath)
+      .withColumn("cell",
+        graft.model.CellModel.stripCellKeepDeletion(col("cell"))))
+      .select(col("partition_key"), col("clustering"), col("row_kind"),
+        col("name"), col("cell.value").as("value"),
+        col("cell.writetime_us").as("writetime_us"), col("deletion_us"),
+        col("n_versions"))
       .sortWithinPartitions(col("partition_key"), col("clustering"),
-        col("name"))
-      .withColumn("keyspace", lit(keyspace))
-      .withColumn("table_name", lit(table))
-      .observe(written, count(lit(1)).as("rows"))
-      .write.partitionBy("keyspace", "table_name")
-      .mode(saveMode).parquet(outDir)
-    written.get("rows").asInstanceOf[Long]
-  }
+        col("name")), outDir, keyspace, table, saveMode)
 
   /** EXPORT: bridge-row frame → sstabledump JSON tree — the inverse
     * of [[readTree]], so the engine EMITS the same public format it
@@ -605,9 +585,16 @@ object SSTableDumpBridge {
   def removeTtlToDir(spark: SparkSession, dumpPath: String, outDir: String,
       keyspace: String, table: String,
       saveMode: String = "errorifexists",
-      reader: (SparkSession, String) => DataFrame = readTree): Long = {
+      reader: (SparkSession, String) => DataFrame = readTree): Long =
+    writeLayout(stripTtl(reader(spark, dumpPath)), outDir, keyspace, table,
+      saveMode)
+
+  /** `rows` written as the `out/<ks>/<table>/` parquet layout; returns
+    * the rows written, counted by the write itself (`observe`). */
+  private def writeLayout(rows: DataFrame, outDir: String, keyspace: String,
+      table: String, saveMode: String): Long = {
     val written = org.apache.spark.sql.Observation()
-    stripTtl(reader(spark, dumpPath))
+    rows
       .withColumn("keyspace", lit(keyspace))
       .withColumn("table_name", lit(table))
       .observe(written, count(lit(1)).as("rows"))

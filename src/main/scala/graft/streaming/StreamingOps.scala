@@ -697,6 +697,13 @@ object StreamingOps {
       name: String, value: String, writetime_us: Option[Long],
       n_versions: Long, rev: Long)
 
+  /** Spark's string order, unsigned UTF-8 bytes: the order the batch
+    * merges compare values and clusterings in. Java's `String` order
+    * compares UTF-16 units, which sorts U+E000..U+FFFF above every
+    * character past U+FFFF. */
+  private val Utf8Order: Ordering[String] =
+    graft.sources.SSTableBinaryV2.compareText(_, _)
+
   private val cellSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "partition_key string, clustering string, row_kind string, " +
       "name string, value string, writetime_us bigint, deletion_us bigint")
@@ -788,16 +795,21 @@ object StreamingOps {
               }
               // the batch form's sorted index-wise pairing, verbatim:
               // array_sort on struct(cl, inc, del) = sortBy the tuple
-              // (Booleans order false < true); unbalanced bound sets
+              // (clusterings in UTF-8 byte order, Booleans false <
+              // true); unbalanced bound sets
               // fail LOUDLY rather than half-applying a range
               require(starts.size == ends.size,
                 s"unbalanced range-tombstone bounds in partition $pk")
-              val ranges = starts.sortBy(b => (b.cl, b.inc, b.del))
-                .zip(ends.sortBy(b => (b.cl, b.inc, b.del)))
+              val boundOrder = Ordering.Tuple3(Utf8Order,
+                Ordering.Boolean, Ordering.Long)
+              val ranges = starts.sortBy(b => (b.cl, b.inc, b.del))(boundOrder)
+                .zip(ends.sortBy(b => (b.cl, b.inc, b.del))(boundOrder))
               def rtDel(cl: String): Long = ranges.collect {
                 case (sb, eb)
-                  if (if (sb.inc) cl >= sb.cl else cl > sb.cl) &&
-                    (if (eb.inc) cl <= eb.cl else cl < eb.cl) =>
+                  if (if (sb.inc) Utf8Order.gteq(cl, sb.cl)
+                      else Utf8Order.gt(cl, sb.cl)) &&
+                    (if (eb.inc) Utf8Order.lteq(cl, eb.cl)
+                     else Utf8Order.lt(cl, eb.cl)) =>
                   math.max(sb.del, eb.del)
               }.foldLeft(Long.MinValue)(math.max)
               val live = vers.filter(v => v.wt > partDel &&
@@ -808,11 +820,12 @@ object StreamingOps {
                 live, rev))
               val winners = live.groupBy(v => (v.cl, v.nm)).toSeq
                 .map { case ((cl, nm), vs) =>
-                  // (writetime, value) lexicographic max — the batch
-                  // merge's max(struct(writetime_us, value)) verbatim;
-                  // a null value (PK_LIVENESS) loses any same-writetime
-                  // tie, as DESC null-last window ordering does
-                  val w = vs.maxBy(v => (v.wt, Option(v.v).getOrElse("")))
+                  // (writetime, value) lexicographic max, values in
+                  // UTF-8 byte order — the batch merge's ranking; a null
+                  // value (PK_LIVENESS) loses any same-writetime tie, as
+                  // DESC null-last window ordering does
+                  val w = vs.maxBy(v => (v.wt, Option(v.v).getOrElse("")))(
+                    Ordering.Tuple2(Ordering.Long, Utf8Order))
                   LwwEmit(pk, cl, nm, w.v, Some(w.wt), vs.size.toLong, rev)
                 }
               (LwwEmit(pk, null, null, null, None, 0L, rev) +: winners)

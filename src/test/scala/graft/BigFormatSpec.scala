@@ -1820,17 +1820,22 @@ class SSTableBinarySpec extends SparkSpec {
 
   /** The bridge-row frame the CLI's output is checked against, with
     * the source set the CLI derives for it: unmerged, the CLI's own
-    * stripped frame; merged (binary input), `lwwMerge`'s survivors
-    * through `SSTableDumpBridge.mergeTree`, reshaped to bridge rows and
-    * named by output generation, so the sink's `mergePartition` is
-    * checked against an independent implementation of the LWW rules. */
+    * stripped frame; merged (binary input), the survivors of
+    * `lwwMerge` with markers kept, reshaped to bridge rows and named by
+    * output generation, so the sink's `mergePartition` is checked
+    * against an independent implementation of the LWW rules. */
   private def referenceFrame(args: RemoverCli.CliArgs)
       : (org.apache.spark.sql.DataFrame, Option[Seq[String]]) =
     if (!args.merge.contains("lww")) RemoverCli.sstableSinkInput(spark, args)
     else {
-      val merged = SSTableDumpBridge.mergeTree(spark, args.in,
-        (s, p) => SSTableBinaryV2.readBinary(s, p, args.cqlText,
-          args.verify, args.scrub))
+      val merged = graft.ops.TtlOps.lwwMerge(SSTableBinaryV2.readBinary(spark,
+        args.in, args.cqlText, args.verify, args.scrub).select(
+        col("partition_key"), col("clustering"), col("row_kind"),
+        col("name"), col("cell.value").as("value"),
+        col("cell.writetime_us").as("writetime_us"), col("deletion_us"),
+        when(col("row_kind") === "CELL_DELETION", col("cell.expire_us"))
+          .as("expire_us"),
+        col("sstable")), keepMarkers = true)
       val live = col("row_kind").isin("ROW", "PK_LIVENESS")
       val (genName, names) = RemoverCli.mergedGenerations(args)
       // a surviving cell tombstone keeps its timestamp and its own
@@ -1888,6 +1893,24 @@ class SSTableBinarySpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
     plans.asScala.toSeq
   }
+
+  /** The shuffle exchanges and window operators across `plans`. */
+  private def shufflesAndWindows(
+      plans: Seq[org.apache.spark.sql.execution.SparkPlan]): (Int, Int) = {
+    val helper =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    (plans.map(helper.collect(_) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+    }.size).sum,
+      plans.map(helper.collect(_) {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }.size).sum)
+  }
+
+  /** The shuffle exchanges of `--sink sstabledump --merge lww` over the
+    * binary fixture: the merge's one, and the export's three groupings
+    * (a dump row, a partition, a file). */
+  private val MergedDumpExchanges = 4
 
   /** What `op` ran, as a listener sees it: jobs, tasks, shuffle bytes
     * written, and the partitions the file route decoded (its
@@ -1986,23 +2009,30 @@ class SSTableBinarySpec extends SparkSpec {
             assert(rowsDecoded {
               plans = physicalPlans(RemoverCli.run(spark, args))
             } === rows, s"$shape: the input must be decoded exactly once")
-            if (args.merge.nonEmpty) {
+            if (args.merge.nonEmpty)
               // the merge rides the sink's one shuffle, keyed on the
               // output generation: no window plan, no second exchange
-              val helper = new org.apache.spark.sql.execution.adaptive
-                .AdaptiveSparkPlanHelper {}
-              val shuffles = plans.flatMap(helper.collect(_) {
-                case e: org.apache.spark.sql.execution.exchange
-                  .ShuffleExchangeLike => e
-              })
-              val windows = plans.flatMap(helper.collect(_) {
-                case w: org.apache.spark.sql.execution.window.WindowExec => w
-              })
-              assert(shuffles.size === 1 && windows.isEmpty,
+              assert(shufflesAndWindows(plans) === (1, 0),
                 s"$shape: ${plans.mkString("\n")}")
-            }
           }
           assertSameAsDistinctPass(args, compression, shape)
+        } finally Scratch.delete(out)
+      }
+      // the parquet and dump sinks merge after one shuffle by partition
+      // key, with no window plan either; the dump export's own grouping
+      // adds the exchanges it always ran
+      Seq(("parquet", 1), ("sstabledump", MergedDumpExchanges))
+        .foreach { case (sink, exchanges) =>
+        val out = Scratch.dir("graft-cli-merged-plan-")
+        try {
+          val args = RemoverCli.parse(Array("--in", in.toString,
+            "--out", s"$out/o", "--table", "documents", "--format", "sstable",
+            "--sink", sink, "--merge", "lww"))
+            .fold(e => fail(s"parse failed: $e"), identity)
+          val plans = physicalPlans(RemoverCli.run(spark, args))
+          val (shuffles, windows) = shufflesAndWindows(plans)
+          assert(windows === 0 && shuffles === exchanges,
+            s"--sink $sink: ${plans.mkString("\n")}")
         } finally Scratch.delete(out)
       }
       // so the merge shapes above ran on both routes
@@ -2554,6 +2584,110 @@ class SSTableBinarySpec extends SparkSpec {
     }
     // the lakes exercise what the property is about
     assert(sharedKeys >= 30 && ranges >= 10, (sharedKeys, ranges))
+  }
+
+  test("--merge lww: the parquet, sstable and sstabledump sinks agree on an overlapping lake") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val gens = BigFormatGen.mergeLake
+      .apply(Gen.Parameters.default, Seed(17L))
+      .getOrElse(sys.error("gen failed"))
+    // every sink keeps only the newest of a key's partition deletions
+    // and of a row's row deletions; this lake repeats both
+    def repeated[K](keys: Seq[K]) = keys.groupBy(identity).exists(_._2.size > 1)
+    assert(repeated(gens.flatten.filter(_.deletionUs.isDefined).map(_.key)))
+    assert(repeated(gens.flatten.flatMap(p => p.atoms.collect {
+      case r: BigFormat.RowAtom if r.deletionUs.isDefined =>
+        (p.key, r.clustering)
+    })))
+    // the dump format has no cell or collection tombstones and no static
+    // rows, so the dump sink's lake leaves them out
+    def dumpable(p: BigFormat.PartitionData) = p.copy(atoms = p.atoms.flatMap {
+      case r: BigFormat.RowAtom if r.static => None
+      case r: BigFormat.RowAtom =>
+        val cells = r.cells.filterNot(_.deleted)
+        if (cells.isEmpty && r.livenessTsUs.isEmpty && r.deletionUs.isEmpty)
+          None
+        else Some(r.copy(cells = cells, complexDeletions = Nil))
+      case m => Some(m)
+    })
+    val lake = Scratch.dir("graft-merge-sinks-")
+    val dumpLake = Scratch.dir("graft-merge-sinks-dump-")
+    val out = Scratch.dir("graft-merge-sinks-out-")
+    /** Runs `sink` over `in`, merged or not, into a fresh directory. */
+    def run(in: java.nio.file.Path, sink: String, merge: Boolean): String = {
+      val o = s"$out/${in.getFileName}-$sink-$merge"
+      RemoverCli.run(spark, RemoverCli.parse(Array("--in", in.toString,
+        "--out", o, "--table", "documents", "--format", "sstable",
+        "--sink", sink) ++ (if (merge) Seq("--merge", "lww") else Nil))
+        .fold(e => fail(s"parse failed: $e"), identity))
+      o
+    }
+    /** The bridge columns every sink's rows compare on. */
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(
+      col("partition_key"), col("clustering"), col("row_kind"), col("name"),
+      col("value"), col("writetime_us"), col("deletion_us")).localCheckpoint()
+    def reread(bridge: org.apache.spark.sql.DataFrame) = rows(bridge
+      .withColumn("value", col("cell.value"))
+      .withColumn("writetime_us", col("cell.writetime_us")))
+    def same(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame, what: String): Unit =
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, what)
+    try {
+      gens.zipWithIndex.foreach { case (parts, g) =>
+        writeGeneration(lake, g + 1, parts, BigFormatGen.mergeHeader)
+        writeGeneration(dumpLake, g + 1, parts.map(dumpable),
+          BigFormatGen.mergeHeader)
+      }
+      val input = SSTableBinaryV2.readBinary(spark, lake.toString)
+      val kinds = input.select("row_kind").distinct().collect()
+        .map(_.getString(0)).toSet
+      assert(Set("CELL_DELETION", "ROW_DELETION", "PARTITION_DELETION",
+        "RANGE_TOMBSTONE_BOUND").subsetOf(kinds), kinds)
+      assert(input.groupBy("partition_key").agg(countDistinct("sstable")
+        .as("n")).filter(col("n") > 1).count() > 0, "no key overlaps")
+
+      val parquet = rows(spark.read.parquet(run(lake, "parquet", true)))
+      val sstable = reread(SSTableBinaryV2.readBinary(spark,
+        run(lake, "sstable", true)))
+      // the merge reconciled something
+      assert(parquet.count() <
+        spark.read.parquet(run(lake, "parquet", false)).count())
+      val all = parquet.select("row_kind").distinct().collect()
+        .map(_.getString(0)).toSet ++ kinds
+      (all - "PK_LIVENESS" - "COMPLEX_DELETION").foreach { k =>
+        same(parquet.filter(col("row_kind") === k),
+          sstable.filter(col("row_kind") === k), k)
+      }
+      // the SSTable encoder keeps one collection deletion per column, the
+      // newest; the merged rows keep every generation's
+      def newestComplex(df: org.apache.spark.sql.DataFrame) = df
+        .filter(col("row_kind") === "COMPLEX_DELETION")
+        .groupBy("partition_key", "clustering", "name").agg(max("deletion_us"))
+      same(newestComplex(parquet), newestComplex(sstable), "COMPLEX_DELETION")
+      // the one difference is the reader's liveness FOUND: the SSTable
+      // keeps the liveness of a merged row that also has cells or a row
+      // deletion, and reading it back drops it
+      val live = parquet.filter(col("row_kind") === "PK_LIVENESS")
+      val liveBack = sstable.filter(col("row_kind") === "PK_LIVENESS")
+      assert(liveBack.exceptAll(live).isEmpty)
+      val rowsWithMore = parquet
+        .filter(col("row_kind").isin("ROW", "CELL_DELETION", "ROW_DELETION",
+          "COMPLEX_DELETION"))
+        .select("partition_key", "clustering").distinct()
+      assert(live.exceptAll(liveBack).join(rowsWithMore,
+        Seq("partition_key", "clustering"), "left_anti").isEmpty)
+
+      // the dump sink, on the dump-expressible lake
+      val dumpParquet = rows(spark.read.parquet(run(dumpLake, "parquet", true)))
+      val dump = reread(SSTableDumpBridge.readTree(spark,
+        run(dumpLake, "sstabledump", true)))
+      assert(dumpParquet.count() < spark.read.parquet(
+        run(dumpLake, "parquet", false)).count())
+      same(dumpParquet, dump, "sstabledump")
+    } finally {
+      Scratch.delete(lake); Scratch.delete(dumpLake); Scratch.delete(out)
+    }
   }
 
   test("the generation encoder's bytes do not depend on the order its partitions arrive in") {

@@ -442,6 +442,41 @@ class PipelineSpec extends SparkSpec {
       .exists(_.verify))
   }
 
+  test("RemoverCli.parse refuses an output over its input: ./x is x, and a sink directory over --in") {
+    val differ = Left("--out must differ from --in (originals are kept)")
+    def parse(args: String*) = RemoverCli.parse(args.toArray)
+    assert(parse("--in", "x", "--out", "./x", "--table", "events") === differ)
+    assert(parse("--in", "/r/x/", "--out", "/r/y/../x", "--table",
+      "events") === differ)
+    assert(parse("--inventory", "true", "--in", "x", "--out", "./x") ===
+      differ)
+    assert(parse("--set-level", "0", "--in", "x", "--out", "./x") === differ)
+    assert(parse("--summary-budget", "10", "--in", "x", "--out", "./x") ===
+      differ)
+    // the sstable sink writes <out>/<ks>/<table>: with --out two levels
+    // above a table directory, it would write over that table's files
+    val root = java.nio.file.Paths.get("/r/lake").toString
+    val in = s"$root/graft/documents"
+    assert(parse("--in", in, "--out", root, "--table", "documents",
+      "--format", "sstable", "--sink", "sstable", "--merge", "lww",
+      "--out-generations", "3") === Left(s"the sink writes $in, which " +
+      s"is, holds or lies inside --in $in (originals are kept)"))
+    // ... and over a directory holding the input or inside it alike
+    assert(parse("--in", s"$in/old", "--out", root, "--table", "documents",
+      "--format", "sstable", "--sink", "sstable") ===
+      Left(s"the sink writes $in, which is, holds or lies inside " +
+        s"--in $in/old (originals are kept)"))
+    assert(parse("--in", "/r/dumps", "--out", "/r/dumps/out", "--table",
+      "t", "--format", "sstabledump", "--sink", "sstabledump") ===
+      Left("the sink writes /r/dumps/out, which is, holds or lies inside " +
+        "--in /r/dumps (originals are kept)"))
+    // a sibling is fine, and so is a parquet layout below the input
+    assert(parse("--in", in, "--out", "/r/out", "--table", "documents",
+      "--format", "sstable", "--sink", "sstable").isRight)
+    assert(parse("--in", "/r/dumps", "--out", "/r/dumps/out", "--table",
+      "t", "--format", "sstabledump").isRight)
+  }
+
   test("uuid-keyed CQL schema through the binary lifecycle: real byte encodings, real token order") {
     import spark.implicits._
     import graft.sources.{BigFormat, SSTableBinaryV2, SSTableComponents}

@@ -412,30 +412,6 @@ class PlanSpec extends SparkSpec {
       s"expected exactly one exchange, got ${exchanges.length}:\n$p")
   }
 
-  test("LWW auto-dial: uniform widths pick the window form, a hot partition flips to cell granularity") {
-    import graft.ops.TtlOps
-    val cells = TtlOps.lwwFixture(spark, sfDir)
-    // fixture partitions are ≤4 rows wide → far under the threshold →
-    // the one-exchange window form (its signature: Window operators)
-    val uniform = plan(TtlOps.lwwMergeAuto(cells))
-    assert(uniform.contains("Window"),
-      s"auto-dial did not pick the window form on uniform widths:\n$uniform")
-    // force the hot regime (threshold below the fixture width): the
-    // cell-granularity form has NO window operator — the LWW pick is a
-    // max(struct) aggregation and tombstones arrive via joins
-    val hot = plan(TtlOps.lwwMergeAuto(cells, hotThreshold = 1L))
-    assert(!hot.contains("Window"),
-      s"hot regime still uses a partition-wide window:\n$hot")
-    assert(hot.contains("Join"),
-      s"hot regime lost its tombstone joins:\n$hot")
-    // the dial changes the plan, never the answer
-    val a = TtlOps.lwwMergeAuto(cells).orderBy("partition_key", "name")
-    val b = TtlOps.lwwMergeAuto(cells, hotThreshold = 1L)
-      .orderBy("partition_key", "name")
-    assert(a.exceptAll(b).count() === 0)
-    assert(b.exceptAll(a).count() === 0)
-  }
-
   test("cluster profile: one corpus groupBy; rollups run on the tiny frame") {
     val p = plan(graft.ops.SimilarityOps.clusterProfile(spark, sfDir))
     // both consumers (dominant-source window + per-cell rollup) must

@@ -375,6 +375,37 @@ class StreamingSpec extends SparkSpec {
     } finally Scratch.delete(dir)
   }
 
+  test("streaming LWW merge orders values and clusterings as UTF-8 bytes, as batch") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val replacement = "\uFFFD" // U+FFFD: 0xFFFD in UTF-16, EF BF BD in UTF-8
+    val grin = "\uD83D\uDE00" // U+1F600: 0xD83D... in UTF-16, F0 9F.. in UTF-8
+    val dir = Scratch.dir("graft-lwwstream-utf8-")
+    try {
+      // t: two writes of one cell at one writetime, the greater value
+      // wins; r: a range [a, U+FFFD] that covers no clustering past U+FFFF
+      val rows = Seq(
+        (1, "t", "c", "ROW", Some("v"), Some(replacement), Some(1000L), None),
+        (2, "t", "c", "ROW", Some("v"), Some(grin), Some(1000L), None),
+        (1, "r", grin, "ROW", Some("v"), Some("x"), Some(1000L), None),
+        (2, "r", "a", "RANGE_TOMBSTONE_BOUND", Some("start:inclusive"), None,
+          None, Some(2000L)),
+        (2, "r", replacement, "RANGE_TOMBSTONE_BOUND", Some("end:inclusive"),
+          None, None, Some(2000L)))
+        .toDF("gen", "partition_key", "clustering", "row_kind", "name",
+          "value", "writetime_us", "deletion_us")
+      rows.repartition(col("gen")).write.partitionBy("gen")
+        .mode("overwrite").parquet(dir.toString)
+      val streamed = StreamingOps.collapseLwwStream(
+        StreamingOps.lwwMergeStreamRaw(spark, dir.toString))
+        .localCheckpoint()
+      val batch = graft.ops.TtlOps.lwwMerge(rows.drop("gen"))
+      assert(streamed.select("partition_key", "value").as[(String, String)]
+        .collect().sorted.toSeq === Seq("r" -> "x", "t" -> grin))
+      assertSameRows(streamed, batch)
+    } finally Scratch.delete(dir)
+  }
+
   test("streaming LWW merge: winners revised across micro-batches, final equals batch") {
     import org.apache.spark.sql.functions._
     val dir = StreamingOps.writeLwwStreamFixture(spark, sfDir)

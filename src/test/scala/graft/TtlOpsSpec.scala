@@ -188,22 +188,51 @@ class TtlOpsSpec extends SparkSpec {
     }
   }
 
-  test("skew-safe LWW strategy produces the identical frame on both fixtures") {
+  /** The remover's merge (`SSTableBinaryV2.mergeRows`) over a merge
+    * fixture reshaped to the stripped bridge rows it takes — a scalar
+    * clustering wrapped in an array, the flat value columns in a cell
+    * struct, one sstable when the fixture names none — in `lwwMerge`'s
+    * winners-only shape. */
+  private def removerMerge(cells: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val scalar = !cells.schema("clustering").dataType
+      .isInstanceOf[org.apache.spark.sql.types.ArrayType]
+    def orNull(c: String, t: String) =
+      if (cells.columns.contains(c)) col(c) else lit(null).cast(t)
+    val bridge = cells.select(col("partition_key"),
+      (if (scalar) array(col("clustering")) else col("clustering"))
+        .as("clustering"),
+      col("row_kind"), col("name"),
+      when(col("row_kind").isin("ROW", "PK_LIVENESS", "CELL_DELETION"),
+        struct(col("value"), col("writetime_us"),
+          lit(null).cast("int").as("ttl_s"),
+          orNull("expire_us", "long").as("expire_us"))).as("cell"),
+      col("deletion_us"),
+      coalesce(orNull("sstable", "string"), lit("fixture")).as("sstable"))
+    graft.sources.SSTableBinaryV2.mergeRows(bridge)
+      .filter(col("row_kind").isin("ROW", "PK_LIVENESS"))
+      .select(col("partition_key"),
+        (if (scalar) col("clustering")(0) else col("clustering"))
+          .as("clustering"),
+        col("name"), col("cell.value").as("value"),
+        col("cell.writetime_us").as("writetime_us"), col("n_versions"))
+  }
+
+  test("the remover's merge produces lwwMerge's frame on both fixtures") {
     def same(a: org.apache.spark.sql.DataFrame,
         b: org.apache.spark.sql.DataFrame): Unit = {
       assert(a.count() === b.count(), "row counts differ")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        "row sets differ between merge strategies")
+        "row sets differ between the merges")
     }
     same(TtlOps.lwwMergeAudit(spark, sfDir),
-      TtlOps.lwwSkewAudit(spark, sfDir))
-    // the range path too: bound pairing + coverage via the joined
-    // aggregate must match the window-collected form
+      removerMerge(TtlOps.lwwFixture(spark, sfDir)))
+    // the range path too: bound pairing and coverage
     same(TtlOps.lwwRangeAudit(spark, sfDir),
-      TtlOps.lwwMergeSkewSafe(TtlOps.lwwRangeFixture(spark, sfDir)))
+      removerMerge(TtlOps.lwwRangeFixture(spark, sfDir)))
   }
 
-  test("lwwMerge: a cell tombstone contends for its cell in both strategies; overlapping ranges fail by name") {
+  test("a cell tombstone contends in both merges; overlaps fail by name") {
     import spark.implicits._
     def frame(rows: LwwRow*) = rows.toDF()
     def w(pk: String, v: String, ts: Long, src: String): LwwRow =
@@ -217,12 +246,12 @@ class TtlOpsSpec extends SparkSpec {
       w("tie", "w", 2000L, "g1"), t("tie", 2000L, 7000000L, "g2"),
       t("two-tombs", 2000L, 5000000L, "g1"), t("two-tombs", 2000L, 9000000L, "g2"))
     // winners only: a write survives iff no tombstone of its cell is as
-    // new; both strategies agree
+    // new; the remover's merge agrees
     val winners = TtlOps.lwwMerge(cells)
     assert(winners.select("partition_key", "value").as[(String, String)]
       .collect().toSeq === Seq("newer-write" -> "new"))
-    assert(winners.exceptAll(TtlOps.lwwMergeSkewSafe(cells)).isEmpty &&
-      TtlOps.lwwMergeSkewSafe(cells).exceptAll(winners).isEmpty)
+    assert(winners.exceptAll(removerMerge(cells)).isEmpty &&
+      removerMerge(cells).exceptAll(winners).isEmpty)
     // markers kept: each cell keeps exactly its winner, a tombstone
     // with its own deletion second (the later one of a tie)
     val kept = TtlOps.lwwMerge(cells, keepMarkers = true)
@@ -233,7 +262,7 @@ class TtlOpsSpec extends SparkSpec {
       ("newer-write", "ROW", None, "g2"),
       ("tie", "CELL_DELETION", Some(7000000L), "g2"),
       ("two-tombs", "CELL_DELETION", Some(9000000L), "g2")))
-    // [c1, c5] from g1 and [c2, c3] from g2 overlap: both strategies fail
+    // [c1, c5] from g1 and [c2, c3] from g2 overlap: both merges fail
     // naming the partition and the generations, even with no write
     def rt(cl: String, bound: String, del: Long, src: String): LwwRow =
       LwwRow("k", Seq(cl), "RANGE_TOMBSTONE_BOUND", bound, None, None,
@@ -243,7 +272,7 @@ class TtlOpsSpec extends SparkSpec {
       rt("c2", "start:inclusive", 20L, "g2"), rt("c3", "end:inclusive", 20L, "g2"))
     Seq[() => Any](
       () => TtlOps.lwwMerge(overlapping, keepMarkers = true).collect(),
-      () => TtlOps.lwwMergeSkewSafe(overlapping.union(
+      () => removerMerge(overlapping.union(
         frame(w("k", "x", 15L, "g3")))).collect()).foreach { run =>
       val e = intercept[Exception](run())
       val m = Iterator.iterate[Throwable](e)(_.getCause)
