@@ -182,14 +182,47 @@ object RemoverCli {
           !v.equalsIgnoreCase("false")) =>
           s"--$k must be true or false, got '${m(k)}'"
       }
+      // a tool mode's own value flag, absent or read by `read`
+      def value[A](flag: String, read: String => Option[A], must: String)
+          : Either[String, Option[A]] = m.get(flag) match {
+        case None => Right(None)
+        case Some(v) =>
+          read(v).map(Some(_)).toRight(s"--$flag must be $must, got '$v'")
+      }
       if (badBool.nonEmpty) Left(badBool.get)
-      else if (m.get("inventory").exists(_.toBoolean)) parseInventory(m)
+      else if (m.get("inventory").exists(_.toBoolean))
+        parseTool(m, Set("inventory", "in", "out", "cpus", "stats"),
+          "--inventory lists generations from sidecars (read-only)")(
+          Right((i, o, c) => CliArgs(i, o, table = "", cpus = c,
+            inventory = true, stats = m.get("stats").exists(_.toBoolean))))
       else if (m.contains("stats"))
         Left("--stats applies to --inventory only")
       else if (m.contains("set-level") || m.contains("set-repaired-at"))
-        parseSurgery(m)
-      else if (m.contains("summary-budget")) parseSummaryBudget(m)
-      else if (m.contains("track-activity")) parseTrackActivity(m)
+        parseTool(m, Set("set-level", "set-repaired-at", "in", "out", "cpus"),
+          "--set-level/--set-repaired-at rewrite Statistics.db only",
+          Some("surgery keeps originals"))(for {
+          level <- value("set-level", _.toIntOption.filter(_ >= 0),
+            "a non-negative int")
+          repaired <- value("set-repaired-at", _.toLongOption.filter(_ >= 0),
+            "epoch millis >= 0")
+        } yield (i, o, c) => CliArgs(i, o, table = "", cpus = c,
+          setLevel = level, setRepairedAt = repaired))
+      else if (m.contains("summary-budget"))
+        parseTool(m, Set("summary-budget", "activity", "in", "out", "cpus"),
+          "--summary-budget rewrites Summary.db files only",
+          Some("redistribution keeps originals"))(
+          value("summary-budget", _.toLongOption.filter(_ > 0),
+            "a positive mark count").map(budget => (i, o, c) =>
+            CliArgs(i, o, table = "", cpus = c, summaryBudget = budget,
+              activity = m.get("activity"))))
+      else if (m.contains("track-activity"))
+        // --cql declares a pre-3.0 lake's schema (its files carry no
+        // serialization header); the flag's value is the table's path
+        parseTool(m, Set("track-activity", "in", "cpus", "cql"),
+          "--track-activity is a read-only metered scan")(
+          Right((i, _, c) => CliArgs(i, out = "", table = "", cpus = c,
+            cqlText = m.get("cql"),
+            trackActivityOut = m.get("track-activity"))))
       else if (m.contains("activity"))
         Left("--activity applies to --summary-budget only")
       else (m.get("in"), m.get("out"), m.get("table")) match {
@@ -266,138 +299,37 @@ object RemoverCli {
     case _ => None
   }
 
-  /** `--inventory true` validation: a read-only sidecar listing takes
-    * `--in` (required), `--out` (optional parquet persist) and
-    * `--cpus`; every transform flag beside it is a contradiction the
-    * user should hear about, not a silently ignored intent. */
-  private def parseInventory(m: Map[String, String])
+  /** The parser every tool mode (`--inventory`, `--set-level` /
+    * `--set-repaired-at`, `--summary-budget`, `--track-activity`) runs.
+    * In order, it refuses:
+    *   - a flag outside `allowed`: a contradiction the user should hear
+    *     about, not a silently ignored intent (`role` leads the message);
+    *   - a bad value of the mode's own flags (`values`);
+    *   - a missing `--in`, and a missing `--out` where `outMissing` says
+    *     why the mode needs one;
+    *   - an `--out` over `--in`, then a bad `--cpus`.
+    * `values`' builder then makes the arguments from in, out and cpus. */
+  private def parseTool(m: Map[String, String], allowed: Set[String],
+      role: String, outMissing: Option[String] = None)(
+      values: => Either[String, (String, String, Int) => CliArgs])
       : Either[String, CliArgs] = {
-    val allowed = Set("inventory", "in", "out", "cpus", "stats")
     val stray = (m.keySet -- allowed).toSeq.sorted
     if (stray.nonEmpty)
-      Left(s"--inventory lists generations from sidecars (read-only); " +
-        s"${stray.map("--" + _).mkString("/")} do" +
+      Left(s"$role; ${stray.map("--" + _).mkString("/")} do" +
         (if (stray.size == 1) "es" else "") + " not apply")
-    else m.get("in") match {
-      case None => Left("--in <dir> is required")
-      case Some(i) =>
-        val cpus = m.getOrElse("cpus", "8")
-        cpus.toIntOption.filter(_ > 0) match {
-          case None => Left(s"--cpus must be a positive int, got '$cpus'")
-          case Some(c) =>
-            val out = m.getOrElse("out", "")
-            (if (out.isEmpty) Right(()) else keepsInput(i, out)).map(_ =>
-              CliArgs(i, out, table = "", cpus = c, inventory = true,
-                stats = m.get("stats").exists(_.toBoolean)))
-        }
-    }
-  }
-
-  /** `--set-level` / `--set-repaired-at` validation: metadata
-    * surgery takes `--in` and `--out` (both required — the rewrite is
-    * non-destructive, originals are kept) plus `--cpus`; any
-    * transform flag beside them is a contradiction. */
-  private def parseSurgery(m: Map[String, String])
-      : Either[String, CliArgs] = {
-    val allowed = Set("set-level", "set-repaired-at", "in", "out", "cpus")
-    val stray = (m.keySet -- allowed).toSeq.sorted
-    if (stray.nonEmpty)
-      return Left("--set-level/--set-repaired-at rewrite Statistics.db " +
-        s"only; ${stray.map("--" + _).mkString("/")} do" +
-        (if (stray.size == 1) "es" else "") + " not apply")
-    val level = m.get("set-level").map(v => v.toIntOption match {
-      case Some(l) if l >= 0 => Right(l)
-      case _ => Left(s"--set-level must be a non-negative int, got '$v'")
-    })
-    val repaired = m.get("set-repaired-at").map(v => v.toLongOption match {
-      case Some(r) if r >= 0 => Right(r)
-      case _ =>
-        Left(s"--set-repaired-at must be epoch millis >= 0, got '$v'")
-    })
-    (level, repaired) match {
-      case (Some(Left(e)), _) => Left(e)
-      case (_, Some(Left(e))) => Left(e)
-      case _ =>
-        (m.get("in"), m.get("out")) match {
-          case (None, _) => Left("--in <dir> is required")
-          case (_, None) =>
-            Left("--out <dir> is required (surgery keeps originals)")
-          case (Some(i), Some(o)) =>
-            keepsInput(i, o).flatMap { _ =>
-              val cpus = m.getOrElse("cpus", "8")
-              cpus.toIntOption.filter(_ > 0) match {
-                case None =>
-                  Left(s"--cpus must be a positive int, got '$cpus'")
-                case Some(c) => Right(CliArgs(i, o, table = "",
-                  cpus = c,
-                  setLevel = level.map(_.toOption.get),
-                  setRepairedAt = repaired.map(_.toOption.get)))
-              }
-            }
-        }
-    }
-  }
-
-  /** `--summary-budget <marks>` validation: redistribution takes
-    * `--in` and `--out` (non-destructive, originals kept), optional
-    * `--activity <parquet>` and `--cpus`; any transform flag beside
-    * them is a contradiction. */
-  private def parseSummaryBudget(m: Map[String, String])
-      : Either[String, CliArgs] = {
-    val allowed = Set("summary-budget", "activity", "in", "out", "cpus")
-    val stray = (m.keySet -- allowed).toSeq.sorted
-    if (stray.nonEmpty)
-      return Left("--summary-budget rewrites Summary.db files only; " +
-        s"${stray.map("--" + _).mkString("/")} do" +
-        (if (stray.size == 1) "es" else "") + " not apply")
-    m("summary-budget").toLongOption.filter(_ > 0) match {
-      case None =>
-        Left("--summary-budget must be a positive mark count, got " +
-          s"'${m("summary-budget")}'")
-      case Some(budget) =>
-        (m.get("in"), m.get("out")) match {
-          case (None, _) => Left("--in <dir> is required")
-          case (_, None) =>
-            Left("--out <dir> is required (redistribution keeps " +
-              "originals)")
-          case (Some(i), Some(o)) =>
-            keepsInput(i, o).flatMap { _ =>
-              val cpus = m.getOrElse("cpus", "8")
-              cpus.toIntOption.filter(_ > 0) match {
-                case None =>
-                  Left(s"--cpus must be a positive int, got '$cpus'")
-                case Some(c) => Right(CliArgs(i, o, table = "",
-                  cpus = c, summaryBudget = Some(budget),
-                  activity = m.get("activity")))
-              }
-            }
-        }
-    }
-  }
-
-  /** `--track-activity <parquet>` validation: a read-only tracked
-    * scan takes `--in` (and `--cql` for a pre-3.0 lake, whose files
-    * carry no serialization header); the flag's value is the
-    * activity table's destination. Any transform flag is a
-    * contradiction. */
-  private def parseTrackActivity(m: Map[String, String])
-      : Either[String, CliArgs] = {
-    val allowed = Set("track-activity", "in", "cpus", "cql")
-    val stray = (m.keySet -- allowed).toSeq.sorted
-    if (stray.nonEmpty)
-      return Left("--track-activity is a read-only metered scan; " +
-        s"${stray.map("--" + _).mkString("/")} do" +
-        (if (stray.size == 1) "es" else "") + " not apply")
-    m.get("in") match {
-      case None => Left("--in <dir> is required")
-      case Some(i) =>
-        val cpus = m.getOrElse("cpus", "8")
-        cpus.toIntOption.filter(_ > 0) match {
-          case None => Left(s"--cpus must be a positive int, got '$cpus'")
-          case Some(c) => Right(CliArgs(i, out = "", table = "",
-            cpus = c, cqlText = m.get("cql"),
-            trackActivityOut = Some(m("track-activity"))))
-        }
+    else values.flatMap { build =>
+      val cpus = m.getOrElse("cpus", "8")
+      (m.get("in"), m.get("out"), outMissing) match {
+        case (None, _, _) => Left("--in <dir> is required")
+        case (_, None, Some(why)) => Left(s"--out <dir> is required ($why)")
+        case (Some(i), o, _) =>
+          val out = o.getOrElse("")
+          (if (out.isEmpty && outMissing.isEmpty) Right(())
+           else keepsInput(i, out)).flatMap(_ =>
+            cpus.toIntOption.filter(_ > 0)
+              .toRight(s"--cpus must be a positive int, got '$cpus'"))
+            .map(build(i, out, _))
+      }
     }
   }
 
@@ -587,21 +519,7 @@ object RemoverCli {
       val plan = graft.sources.SSTableMetadata.redistributeLake(spark,
         args.in, args.out, args.summaryBudget.get, args.activity)
         .orderBy("sstable").localCheckpoint()
-      val n = plan.count()
-      // same capped-print contract as the inventory: the plan is one
-      // row per generation, and a million-file lake must not format
-      // the whole catalog to scroll it past a terminal
-      val head = plan.limit(InventoryPrintCap).collect()
-      val rendered = formatInventory(plan.columns,
-        head.toSeq.map(_.toSeq.map {
-          case null => "-"
-          case v => v.toString
-        }))
-      println(
-        if (n > InventoryPrintCap)
-          rendered + s"\n… $n generations total; showing the first " +
-            s"$InventoryPrintCap"
-        else rendered)
+      val n = printCapped(plan)
       // an unmeetable budget (everything at the max factor, pool
       // still over) must be SAID, not discovered by summing a column
       val after = plan.agg(org.apache.spark.sql.functions
@@ -626,16 +544,7 @@ object RemoverCli {
         epoch, clock, args.trackActivityOut.get)
         .orderBy("sstable").localCheckpoint()
       graft.sources.ActivityRegistry.drop(epoch)
-      val n = table.count()
-      val head = table.limit(InventoryPrintCap).collect()
-      println(formatInventory(table.columns,
-        head.toSeq.map(_.toSeq.map {
-          case null => "-"
-          case v => v.toString
-        })))
-      if (n > InventoryPrintCap)
-        println(s"… $n generations total; showing the first " +
-          s"$InventoryPrintCap")
+      val n = printCapped(table)
       println(s"scanned $scanned rows; $n generations metered → " +
         args.trackActivityOut.get)
       n
@@ -695,27 +604,33 @@ object RemoverCli {
     val df = joined.orderBy("sstable").localCheckpoint()
     if (args.out.nonEmpty)
       df.coalesce(1).write.mode("overwrite").parquet(args.out)
+    printCapped(df, " (pass --out for the full inventory)")
+  }
+
+  /** Most generations a terminal print renders; `--out` is the
+    * full-fidelity surface. */
+  val InventoryPrintCap = 50
+
+  /** Prints a tool mode's table, one row per generation, NULLs as `-`,
+    * and returns its row count. The print is CAPPED at
+    * [[InventoryPrintCap]] rows: on a million-file lake a tool must not
+    * format (or even collect) the whole catalog just to scroll it past
+    * a terminal; a longer table ends with the total and `more`. */
+  private def printCapped(df: org.apache.spark.sql.DataFrame,
+      more: String = ""): Long = {
     val n = df.count()
-    // terminal print is CAPPED: on a million-file lake the read-only
-    // tool must not format (or even collect) the whole catalog just
-    // to scroll it past a terminal — full fidelity lives in --out
-    val head = df.limit(InventoryPrintCap).collect()
-    val rendered = formatInventory(
-      df.columns, head.toSeq.map(_.toSeq.map {
+    val rendered = formatInventory(df.columns.toSeq,
+      df.limit(InventoryPrintCap).collect().toSeq.map(_.toSeq.map {
         case null => "-"
         case v => v.toString
       }))
     println(
       if (n > InventoryPrintCap)
         rendered + s"\n… $n generations total; showing the first " +
-          s"$InventoryPrintCap (pass --out for the full inventory)"
+          s"$InventoryPrintCap$more"
       else rendered)
     n
   }
-
-  /** Most generations a terminal print renders; `--out` is the
-    * full-fidelity surface. */
-  val InventoryPrintCap = 50
 
   /** Pure aligned-table rendering for [[runInventory]] (testable
     * without capturing stdout). */
@@ -903,26 +818,18 @@ object RemoverCli {
     * token the sink itself sorts by; a rendered-string token would
     * put typed tables' generations off the real ring). Deterministic,
     * zero extra passes; Murmur3 uniformity balances bucket sizes at
-    * any scale. The file route buckets with
-    * [[graft.sources.SSTableBinaryV2.ringBucket]], the same arithmetic
-    * over the same rendered-key token. */
+    * any scale. The arithmetic is the file route's own,
+    * [[graft.sources.SSTableBinaryV2.ringBucket]]. */
   private[graft] def ringBucket(args: CliArgs)
       : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
+    import graft.sources.{BigFormat, SSTableBinaryV2}
     val n = args.outGenerations
-    val tok = args.cqlSchema match {
-      case Some(p) => graft.functions.GraftFunctions
-        .murmur3_token_typed(col("partition_key"),
-          graft.sources.SSTableBinaryV2.resolveTyping(p).keyType)
-      case None => graft.functions.GraftFunctions
-        .murmur3_token(col("partition_key"))
-    }
-    // ring position in [0,1): token/2^64 + 0.5; double rounding only
-    // nudges bucket BOUNDARIES (still deterministic and
-    // token-contiguous — the write path sorts within each)
-    val ringPos = tok.cast("double") /
-      lit(graft.sources.SSTableBinaryV2.RingSpan) + lit(0.5)
-    least(lit(n - 1), floor(ringPos * lit(n)).cast("int"))
+    val keyType = args.cqlSchema.map(SSTableBinaryV2.resolveTyping(_).keyType)
+    org.apache.spark.sql.functions.udf((key: String) =>
+      SSTableBinaryV2.ringBucket(BigFormat.murmur3Token(keyType.fold(
+        key.getBytes(java.nio.charset.StandardCharsets.UTF_8))(
+        BigFormat.encodeValue(_, key))), n))
+      .apply(org.apache.spark.sql.functions.col("partition_key"))
   }
 
   private def isDump(args: CliArgs): Boolean =

@@ -385,6 +385,12 @@ object SSTableBinaryV2 {
     else parts(parts.length - 3)
   }
 
+  /** Whether a format version is a pre-3.0 era ("ka"/"la"/"jb"…): a
+    * different storage engine, with no serialization header and the
+    * 2.x layouts of every sidecar. */
+  private[graft] def isOldEra(version: String): Boolean =
+    version.nonEmpty && version.charAt(0) < 'm'
+
   private[graft] def generationSortKey(path: String): (String, Long, String) = {
     val slash = path.lastIndexOf('/')
     val dir = if (slash < 0) "" else path.substring(0, slash)
@@ -393,32 +399,41 @@ object SSTableBinaryV2 {
     (dir, gen, name)
   }
 
-  /** One recursive listing yields the data files AND their sibling
-    * component sets WITH lengths (no per-file exists()/status RPCs
-    * at plan time — and, because the result ships inside each
-    * [[BinFilePartition]], none in the TASKS either: at a 100k-file
-    * lake, per-reader exists() probes are pure namenode chatter the
-    * planner's listing already answered). The scan plans its
-    * partitions from this listing and [[dataSourceIdentities]]
-    * renders the sink's source set from it, so the two cannot drift
-    * apart. */
-  private[sources] def listLake(root: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Seq[(String, SiblingInfo)] = {
+  /** Every lake file under `root` with its length, from ONE recursive
+    * walk: [[listLake]] and the sidecar tools' [[lakeGenerations]] both
+    * list through it. A name starting with `.` or `_` is not a lake file
+    * (Spark's file-source rule, the dump connector's too): checksum side
+    * files, hidden copies and `_SUCCESS` markers are never generations
+    * or components. */
+  private def walkLake(root: String,
+      conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] = {
     val fs = FileSystem.get(java.net.URI.create(root), conf)
     val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val seen = scala.collection.mutable.Map.empty[String, Long]
     val it = fs.listFiles(new HPath(root), true)
     while (it.hasNext) {
       val f = it.next()
-      if (f.isFile) {
-        seen(f.getPath.toString) = f.getLen
-        if (f.getPath.getName.endsWith("-Data.db"))
-          files += ((f.getPath.toString, f.getLen))
-      }
+      val name = f.getPath.getName
+      if (f.isFile && !name.startsWith(".") && !name.startsWith("_"))
+        files += ((f.getPath.toString, f.getLen))
     }
-    files.sortBy(f => generationSortKey(f._1)).toSeq.map {
-      case (p, len) =>
+    files.toSeq
+  }
+
+  /** The data files AND their sibling component sets WITH lengths, from
+    * the one walk (no per-file exists()/status RPCs at plan time — and,
+    * because the result ships inside each [[BinFilePartition]], none in
+    * the TASKS either: at a 100k-file lake, per-reader exists() probes
+    * are pure namenode chatter the planner's listing already answered).
+    * The scan plans its partitions from this listing and
+    * [[dataSourceIdentities]] renders the sink's source set from it, so
+    * the two cannot drift apart; the sidecar tools group the same walk
+    * ([[lakeGenerations]]). */
+  private[sources] def listLake(root: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : Seq[(String, SiblingInfo)] = {
+    val seen = walkLake(root, conf).toMap
+    seen.toSeq.filter(_._1.endsWith("-Data.db"))
+      .sortBy(f => generationSortKey(f._1)).map { case (p, len) =>
         val base = p.stripSuffix("-Data.db")
         (p, SiblingInfo(len,
           hasIndex = seen.contains(base + "-Index.db"),
@@ -428,8 +443,21 @@ object SSTableBinaryV2 {
           indexLen = seen.getOrElse(base + "-Index.db", -1L),
           hasDigest = seen.contains(base + "-Digest.crc32"),
           hasStats = seen.contains(base + "-Statistics.db")))
-    }
+      }
   }
+
+  /** The one walk grouped by generation, in path order: each `*-Data.db`
+    * with every file that shares its `<base>-` prefix (its components,
+    * Data.db included, sorted) — the sidecar tools' unit of work. */
+  private[sources] def lakeGenerations(root: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : Seq[(String, Seq[String])] =
+    walkLake(root, conf).map(_._1).groupBy { p =>
+      p.stripSuffix("-" + p.split('/').last.split('-').last)
+    }.collect {
+      case (base, comps) if comps.exists(_.endsWith("-Data.db")) =>
+        (base + "-Data.db", comps.sorted)
+    }.toSeq.sortBy(_._1)
 
   /** The `sstable` column's rendering of a Data.db path: its last two
     * components, `<table dir>/<basename>`. */
@@ -515,7 +543,7 @@ object SSTableBinaryV2 {
       * via the `cql` option (2.x files carry no serialization
       * header; the reference's cassandra-2 module loads live system
       * tables instead, `Cassandra2TTLRemover.java:48`). */
-    protected val oldEra = version.nonEmpty && version.charAt(0) < 'm'
+    protected val oldEra = isOldEra(version)
     /** Open-time ring validation (`SSTableReader.open` refuses a
       * file whose Statistics.db declares a foreign partitioner — the
       * C2 fork keeps the check, `NoTTLReader.java:357-408`): serving
@@ -2798,7 +2826,8 @@ object SSTableBinaryV2 {
   /** The sstable identities ([[sstableIdentity]]) of every
     * `*-Data.db` under `root`: a DRIVER-side listing, no Spark job,
     * taken by the same [[listLake]] the scan plans its partitions
-    * from. For a [[writeSSTables]] call whose input frame is a
+    * from, so a hidden (`.`/`_`-prefixed) file is in neither. For a
+    * [[writeSSTables]] call whose input frame is a
     * [[readBinary]] of `root` (filtered or not, scrubbed or not) this
     * is a superset of the frame's distinct `sstable` set, so passing
     * it as `sources` spares the sink its generation-assignment pass
@@ -3310,11 +3339,7 @@ object SSTableBinaryV2 {
       r.copy(
         cells = r.cells.sortBy(c =>
           2 * order(c.name) + (if (c.deleted) 0 else 1)),
-        complexDeletions =
-          if (r.complexDeletions.size < 2) r.complexDeletions
-          else r.complexDeletions.groupBy(_._1)
-            .map { case (c, ds) => (c, ds.map(_._2).max) }
-            .toSeq.sortBy(_._1))
+        complexDeletions = newestPerColumn(r.complexDeletions))
     }
     def encPrefix(cl: Seq[Option[String]]): Seq[Option[Array[Byte]]] =
       cl.zipWithIndex.map { case (v, i) =>
@@ -3563,12 +3588,12 @@ object SSTableBinaryV2 {
 
   /** The ring span 2^64 as a double: a token's ring position is
     * `token / RingSpan + 0.5`, in [0, 1]. */
-  private[graft] val RingSpan: Double = 1.8446744073709552E19
+  private val RingSpan: Double = 1.8446744073709552E19
 
   /** Output bucket in [0, n) of a Murmur3 token by fixed ring division:
-    * the ring position times n, floored, capped at n - 1. The same
-    * double arithmetic as `RemoverCli.ringBucket`'s Column, so a merged
-    * partition lands in the same output generation on either route. */
+    * the ring position times n, floored, capped at n - 1. Both routes
+    * bucket through it (`RemoverCli.ringBucket` on the frame route), so
+    * a merged partition lands in the same output generation on either. */
   private[graft] def ringBucket(token: Long, n: Int): Int =
     math.min(n - 1, math.floor((token.toDouble / RingSpan + 0.5) * n)
       .toLong.toInt)
@@ -3734,12 +3759,14 @@ object SSTableBinaryV2 {
     * the parquet and sstabledump sinks through [[mergeRows]].
     * [[graft.ops.TtlOps.lwwMerge]] implements the same rules
     * independently; the tests hold this merge to it. The rules: the
-    * greatest partition and row deletion; every range-tombstone bound
+    * greatest partition and row deletion, and the greatest collection
+    * deletion of each column of a row; every range-tombstone bound
     * kept, paired into ranges; each cell (a column, or a collection
     * path) and the primary-key liveness keep only their winning version,
     * and only when it is newer than every deletion covering it (a static
-    * row answers to the partition deletion only); every other deletion
-    * marker kept. Returns the merged partition, its bridge-row count and,
+    * row answers to the partition deletion only). Returns the merged
+    * partition, the bridge rows it renders to (a liveness counted with
+    * every row that keeps one) and,
     * when `countLive`, the live versions newer than every deletion
     * covering them, per (clustering, bridge-row name) of each live cell
     * and liveness: a static row's clustering is None, a liveness's name
@@ -3753,14 +3780,14 @@ object SSTableBinaryV2 {
       p.atoms.collect { case m: BigFormat.MarkerAtom => (src, m) }
     }
     val ranges = pairRanges(key, bounds)
-    var rows = versions.map(_._2.deletionUs.size.toLong).sum + bounds.size
+    var rows = partDel.size.toLong + bounds.size
     var counts = Map.empty[LiveKey, Long]
     val groups = versions.flatMap(_._2.atoms.collect {
       case r: BigFormat.RowAtom => r
     }).groupBy(r => (r.static, r.clustering))
     val rowAtoms = groups.toSeq.flatMap { case ((static, cl), rs) =>
       val rowDel = rs.flatMap(_.deletionUs).maxOption
-      val complexDels = rs.flatMap(_.complexDeletions)
+      val complexDels = newestPerColumn(rs.flatMap(_.complexDeletions))
       val shadow = (partDel.toSeq ++ rowDel ++ (
         if (static) Nil
         else ranges.filter(_.covers(cl)).map(_.del))).maxOption
@@ -3777,8 +3804,7 @@ object SSTableBinaryV2 {
         survivors.filterNot(_.deleted).groupBy(bridgeName).foreach {
           case (n, vs) => counts += (at, Some(n)) -> vs.size.toLong }
       }
-      rows += rs.count(_.deletionUs.isDefined) + complexDels.size +
-        cells.size + live.size
+      rows += rowDel.size + complexDels.size + cells.size + live.size
       if (static) {
         if (cells.isEmpty && complexDels.isEmpty) None
         else Some(BigFormat.RowAtom(Nil, None, None, None, None, cells,
@@ -3791,6 +3817,14 @@ object SSTableBinaryV2 {
     (BigFormat.PartitionData(key, partDel, bounds.map(_._2) ++ rowAtoms),
       rows, counts)
   }
+
+  /** A row's collection deletions with one per column, the newest, as
+    * Cassandra keeps them, in column order; fewer than two pass as they
+    * are. */
+  private def newestPerColumn(dels: Seq[(String, Long)]): Seq[(String, Long)] =
+    if (dels.size < 2) dels
+    else dels.groupBy(_._1).map { case (c, ds) => (c, ds.map(_._2).max) }
+      .toSeq.sortBy(_._1)
 
   /** A live cell's or liveness's place in a merged partition, as
     * [[mergePartition]] counts its versions: the clustering (None on a

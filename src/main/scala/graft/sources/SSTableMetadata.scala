@@ -1,16 +1,20 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 /** `sstablemetadata`'s role re-expressed for a lake: one inventory row
   * per generation, read from SIDECARS ONLY — Data.db is never opened,
   * so a 100 TB table inventories at the cost of its metadata (~1-2%
-  * of bytes, and only the index among those). The driver does ONE
-  * recursive listing (catalog-sized — the same contract as the
-  * connector's planner, `SSTableBinaryV2` listing); every component
-  * read happens executor-side, one task wave across the lake.
+  * of bytes, and only the index among those). Every sidecar tool here
+  * (the inventory and its stats panel, key counts, token-range
+  * estimates, expired blockers, summary redistribution, metadata
+  * surgery) runs one job shape, [[Lake]]: the driver lists the lake
+  * ONCE, through the walk the connector's planner lists with
+  * ([[SSTableBinaryV2.lakeGenerations]], catalog-sized), and one task
+  * wave hands each task a [[Generation]]; every component read happens
+  * executor-side.
   *
   * Columns and their sources:
   *   - `sstable`         dir/name, the connector frames' identity
@@ -83,27 +87,75 @@ object SSTableMetadata {
       min_clustering: Option[String] = None,
       max_clustering: Option[String] = None)
 
-  /** One recursive driver-side listing grouped into generations —
-    * catalog-sized, the same contract as the connector's planner. */
-  private def listGenerations(root: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Seq[(String, Seq[String])] = {
-    val fs = FileSystem.get(java.net.URI.create(root), conf)
-    val all = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(new HPath(root), true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && !f.getPath.getName.startsWith("."))
-        all += f.getPath.toString
+  /** One generation as a sidecar task sees it: its Data.db `path`, the
+    * listed `components` (Data.db included), the `sstable` identity, the
+    * format `version` and its era. Built executor-side; reads go through
+    * [[readAll]]. */
+  private[sources] final class Generation(val path: String,
+      val components: Seq[String],
+      val conf: org.apache.hadoop.conf.Configuration) {
+    val fs: FileSystem = FileSystem.get(java.net.URI.create(path), conf)
+    val version: String = SSTableBinaryV2.versionOf(path.split('/').last)
+    val oldEra: Boolean = SSTableBinaryV2.isOldEra(version)
+    val sstable: String = SSTableBinaryV2.sstableIdentity(path)
+    /** The path of component `suffix` (`-Summary.db`), listed or not. */
+    def sibling(suffix: String): String =
+      path.stripSuffix("-Data.db") + suffix
+    /** Component `suffix`'s path when the listing holds it. */
+    def comp(suffix: String): Option[String] =
+      Some(sibling(suffix)).filter(components.contains)
+    /** Whole sidecar into memory — the ONE read path every sidecar tool
+      * shares (sidecars are KB-to-MB by construction; a length past
+      * Int.MaxValue is a corrupt listing and refuses loudly rather than
+      * silently truncating the allocation). */
+    def readAll(p: String): Array[Byte] = {
+      val st = fs.getFileStatus(new HPath(p))
+      require(st.getLen <= Int.MaxValue,
+        s"$p: sidecar too large to materialize (${st.getLen} bytes)")
+      val buf = new Array[Byte](st.getLen.toInt)
+      val in = fs.open(new HPath(p))
+      try in.readFully(0, buf) finally in.close()
+      buf
     }
-    all.groupBy { p =>
-      val name = p.split('/').last
-      val comp = name.split('-').last
-      p.stripSuffix("-" + comp)
-    }.collect {
-      case (base, comps) if comps.exists(_.endsWith("-Data.db")) =>
-        (base + "-Data.db", comps.toSeq.sorted)
-    }.toSeq.sortBy(_._1)
+  }
+
+  /** The generations under `root`, listed once on the driver, and the
+    * one job every sidecar tool runs over them: the Hadoop conf
+    * broadcast once, one task per generation up to the default
+    * parallelism, each task handed its [[Generation]]. */
+  private final class Lake(spark: SparkSession, root: String) {
+    private val hconf = new SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    /** (Data.db path, component paths) per generation, in path order. */
+    val generations: Seq[(String, Seq[String])] =
+      SSTableBinaryV2.lakeGenerations(root, hconf.value)
+    private lazy val bc = spark.sparkContext.broadcast(hconf)
+
+    def job[T: Encoder](f: Generation => IterableOnce[T]): Dataset[T] = {
+      import spark.implicits._
+      val conf = bc
+      spark.createDataset(generations)
+        .repartition(math.min(generations.size.max(1),
+          spark.sparkContext.defaultParallelism))
+        .flatMap { case (p, comps) =>
+          f(new Generation(p, comps, conf.value.value)) }(
+          implicitly[Encoder[T]])
+    }
+
+    /** Refuses a lake spanning several table directories before a tool
+      * that copies generations FLAT by component name ([[copyGeneration]]
+      * — one table directory is the tools' unit of operation): a keyspace
+      * root, or a table with snapshots/backups subdirs, could hold
+      * same-named generations whose flat copies would clobber each
+      * other. */
+    def requireOneTable(tool: String): Unit = {
+      val parents = generations.map(_._1.split('/').dropRight(1)
+        .mkString("/")).distinct
+      require(parents.size <= 1,
+        s"$tool targets ONE table directory; $root spans " +
+          s"${parents.size} (run per directory): " +
+          parents.sorted.take(3).mkString(", "))
+    }
   }
 
   /** With `audit` (the registered query's mode), every generation's
@@ -117,31 +169,17 @@ object SSTableMetadata {
   def describe(spark: SparkSession, root: String,
       audit: Boolean = false): DataFrame = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        describeOne(dataPath, comps, bc.value.value, audit)
-      }
-      .toDF()
+    new Lake(spark, root).job(g => Some(describeOne(g, audit)._1)).toDF()
   }
 
-  private def describeOne(dataPath: String, comps: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration,
-      audit: Boolean = false): GenerationMeta = {
-    val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-    val name = dataPath.split('/').last
-    val version = SSTableBinaryV2.versionOf(name)
-    val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-    val base = dataPath.stripSuffix("-Data.db")
-    def comp(suffix: String): Option[String] =
-      comps.find(_ == base + suffix)
+  /** One generation's inventory row, and the raw bytes of its
+    * Statistics.db COMPACTION component (the HLL++ sketch) when it has
+    * one — Statistics.db is read once for both. */
+  private def describeOne(g: Generation, audit: Boolean = false)
+      : (GenerationMeta, Option[Array[Byte]]) = {
+    val (dataPath, version, oldEra) = (g.path, g.version, g.oldEra)
     val statsBytes: Option[(String, Array[Byte])] =
-      comp("-Statistics.db").map(p => (p, readAll(fs, p)))
+      g.comp("-Statistics.db").map(p => (p, g.readAll(p)))
     val header: Option[BigFormat.Header] =
       if (oldEra) None
       else statsBytes.map { case (_, b) => BigFormat.readStats(
@@ -156,8 +194,12 @@ object SSTableMetadata {
     // the COMPACTION component's HLL++ sketch — both eras carry it in
     // the same TOC'd container; absence or corrupt bytes degrade to
     // NULL, the reference's own fallback posture (CASSANDRA-10676)
-    val compactionComp: Option[Array[Byte]] = statsBytes
-      .flatMap { case (p, b) => compactionBytes(b, p, version, oldEra) }
+    val compactionComp: Option[Array[Byte]] = statsBytes.flatMap {
+      case (p, b) =>
+        if (oldEra) OldFormat.readCompaction2x(b, p)
+        else BigFormat.readCompaction(
+          b, BigFormat.versionHasMetadataChecksum(version))
+    }
     val estHll: Option[Long] = compactionComp
       .flatMap(KeyCardinality.readComponent(_, oldEra))
       .map(_.cardinality())
@@ -182,8 +224,8 @@ object SSTableMetadata {
     // the audit mode's independent ground truth for the Summary facts
     var idxFirst: Option[Array[Byte]] = None
     var idxLast: Option[Array[Byte]] = None
-    val nPartitions: Option[Long] = comp("-Index.db").map { p =>
-      val in = fs.open(new HPath(p))
+    val nPartitions: Option[Long] = g.comp("-Index.db").map { p =>
+      val in = g.fs.open(new HPath(p))
       try {
         val din = new java.io.DataInputStream(
           new java.io.BufferedInputStream(in))
@@ -200,23 +242,12 @@ object SSTableMetadata {
         n
       } finally in.close()
     }
-    val compressor: Option[String] = comp("-CompressionInfo.db").map {
-      p => CompressedData.readMeta(readAll(fs, p),
+    val compressor: Option[String] = g.comp("-CompressionInfo.db").map {
+      p => CompressedData.readMeta(g.readAll(p),
         CompressedData.versionHasMaxCompressedSize(version), p,
         CompressedData.versionUsesAdler32(version)).compressor
     }
-    // era dispatch on the summary layout: modern files use the 3.0
-    // serializer, pre-3.0 files the 2.1 `IndexSummary` layout
-    // ([[SSTableComponents.readSummary2x]] — `loadSummary`'s literal
-    // read); a malformed 2.x summary degrades to no summary facts,
-    // the reference's own corrupted-summary posture
-    val summary =
-      if (oldEra)
-        comp("-Summary.db").flatMap(p =>
-          scala.util.Try(
-            SSTableComponents.readSummary2x(readAll(fs, p))).toOption)
-      else comp("-Summary.db").map(p =>
-        SSTableComponents.readSummary(readAll(fs, p)))
+    val summary = summaryOf(g)
     if (audit) summary.foreach { s =>
       def eq(a: Option[Array[Byte]], b: Array[Byte]) =
         a.exists(java.util.Arrays.equals(_, b))
@@ -256,21 +287,14 @@ object SSTableMetadata {
       }
     val clTypes: Seq[String] =
       header.map(_.clusteringTypes).getOrElse(Nil)
-    def renderBoundList(vs: Seq[Seq[Byte]]): Option[String] =
-      if (vs.isEmpty) None
-      else Some(vs.zipWithIndex.map { case (v, i) =>
-        scala.util.Try(BigFormat.renderValue(
-          clTypes.lift(i).getOrElse(BigFormat.Utf8Type), v.toArray))
-          .getOrElse(v.map("%02x".format(_)).mkString)
-      }.mkString(":"))
-    val minClustering = renderBoundList(
+    val minClustering = renderClustering(clTypes,
       statsModern.map(_.minClusteringValues)
         .orElse(stats2x.map(_.minColumnNames)).getOrElse(Nil))
-    val maxClustering = renderBoundList(
+    val maxClustering = renderClustering(clTypes,
       statsModern.map(_.maxClusteringValues)
         .orElse(stats2x.map(_.maxColumnNames)).getOrElse(Nil))
-    GenerationMeta(
-      sstable = SSTableBinaryV2.sstableIdentity(dataPath),
+    (GenerationMeta(
+      sstable = g.sstable,
       n_partitions = nPartitions,
       min_writetime_us =
         header.map(_.minTimestampUs).orElse(stats2x.map(_.minTimestampUs)),
@@ -279,7 +303,7 @@ object SSTableMetadata {
       // inventory surfaces the sentinel as NULL, not as a minimum
       min_ttl_s = header.map(_.minTtlS).filter(_ != 0),
       compressor = compressor,
-      n_components = comps.size,
+      n_components = g.components.size,
       first_key = summary.flatMap(s => renderKey(s.firstKey)),
       last_key = summary.flatMap(s => renderKey(s.lastKey)),
       est_keys_max = summary.map(s =>
@@ -289,46 +313,34 @@ object SSTableMetadata {
       partitioner = validation.map(_._1),
       bloom_fp_chance = validation.map(_._2),
       min_clustering = minClustering,
-      max_clustering = maxClustering)
+      max_clustering = maxClustering), compactionComp)
   }
 
-  /** Registered `src_sstable_metadata`: the sidecar-only inventory
-    * over sink-written generation sets — uncompressed, compressed
-    * (the lz4 rewrite shows its compressor and one extra component),
-    * and a pre-3.0 ka set (whose 2.x StatsMetadata supplies
-    * `min_writetime_us` where the era has no serialization header).
-    * The oracle replays the fixture arithmetic per generation: exact
-    * partition counts, stats minima, component census. The
-    * no-Data.db property is ORACLE-GATED, not just spec-gated: every
-    * Data.db is garbled before describing, so a describe() that ever
-    * starts opening data files fails the correctness run loudly.
-    * The token-order columns (`first_key`/`last_key`/`est_keys_max`)
-    * are ALSO oracle-gated — audit mode requires each Summary fact to
-    * match the independently streamed Index.db ground truth while the
-    * row is produced — then dropped, since DuckDB cannot replay the
-    * key rendering itself. */
-  /** Whole sidecar into memory — the ONE read path every inventory
-    * surface shares (sidecars are KB-to-MB by construction; a length
-    * past Int.MaxValue is a corrupt listing and refuses loudly rather
-    * than silently truncating the allocation). */
-  private def readAll(fs: FileSystem, p: String): Array[Byte] = {
-    val st = fs.getFileStatus(new HPath(p))
-    require(st.getLen <= Int.MaxValue,
-      s"$p: sidecar too large to materialize (${st.getLen} bytes)")
-    val buf = new Array[Byte](st.getLen.toInt)
-    val in = fs.open(new HPath(p))
-    try in.readFully(0, buf) finally in.close()
-    buf
-  }
+  /** The generation's Summary.db, era-dispatched: modern files use the
+    * 3.0 serializer, pre-3.0 files the 2.1 `IndexSummary` layout
+    * ([[SSTableComponents.readSummary2x]] — `loadSummary`'s literal
+    * read); a 2.x summary that does not read or parse degrades to
+    * None, the reference's own corrupted-summary posture. None without
+    * a Summary.db. */
+  private def summaryOf(g: Generation): Option[SSTableComponents.Summary] =
+    g.comp("-Summary.db").flatMap { p =>
+      if (g.oldEra) scala.util.Try(
+        SSTableComponents.readSummary2x(g.readAll(p))).toOption
+      else Some(SSTableComponents.readSummary(g.readAll(p)))
+    }
 
-  /** The COMPACTION component's raw bytes out of a Statistics.db —
-    * the era-dispatched extraction [[describeOne]] and
-    * [[gatherSketches]] share. */
-  private def compactionBytes(stats: Array[Byte], file: String,
-      version: String, oldEra: Boolean): Option[Array[Byte]] =
-    if (oldEra) OldFormat.readCompaction2x(stats, file)
-    else BigFormat.readCompaction(
-      stats, BigFormat.versionHasMetadataChecksum(version))
+  /** Clustering-value bounds rendered under the declared clustering
+    * `types` (UTF-8 past their end), ':'-joined; a value whose bytes do
+    * not parse under its type renders as hex — it is still the file's
+    * truth. None when the file declares no bounds. */
+  private def renderClustering(types: Seq[String],
+      vs: Seq[Seq[Byte]]): Option[String] =
+    if (vs.isEmpty) None
+    else Some(vs.zipWithIndex.map { case (v, i) =>
+      scala.util.Try(BigFormat.renderValue(
+        types.lift(i).getOrElse(BigFormat.Utf8Type), v.toArray))
+        .getOrElse(v.map("%02x".format(_)).mkString)
+    }.mkString(":"))
 
   // private[sources], not private: a plain-private nested case class
   // compiles to a non-public classfile, and Janino (whole-stage
@@ -352,25 +364,10 @@ object SSTableMetadata {
   private def gatherSketches(spark: SparkSession, root: String)
       : Seq[(Option[Array[Byte]], Option[Long], Option[Long])] = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val m = describeOne(dataPath, comps, bc.value.value)
-        val conf = bc.value.value
-        val fsx = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val version = SSTableBinaryV2.versionOf(dataPath.split('/').last)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        val sketchBytes = comps.find(_ == base + "-Statistics.db")
-          .flatMap(p =>
-            compactionBytes(readAll(fsx, p), p, version, oldEra))
-        SketchRow(m.sstable, sketchBytes, m.est_keys_max, m.n_partitions)
-      }
+    new Lake(spark, root).job { g =>
+      val (m, sketch) = describeOne(g)
+      Some(SketchRow(m.sstable, sketch, m.est_keys_max, m.n_partitions))
+    }
       .collect()
       .toSeq
       .map(r => (r.sketch, r.est_keys_max, r.n_exact))
@@ -399,10 +396,6 @@ object SSTableMetadata {
   def describeRange(spark: SparkSession, root: String,
       tokenLo: Long, tokenHi: Long, downsample: Int = 1): DataFrame = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
     // inclusive [lo, hi] as the reference's (start-exclusive,
     // end-inclusive] ranges: (lo-1, hi], MIN-open when lo is the ring
     // minimum (no Murmur3Partitioner key carries token MIN — the
@@ -413,36 +406,14 @@ object SSTableMetadata {
       else Seq((
         if (tokenLo == Long.MinValue) Long.MinValue else tokenLo - 1,
         tokenHi))
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .flatMap { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        // era-dispatched summary read: the 2.x layout parses via
-        // [[SSTableComponents.readSummary2x]] (malformed degrades to
-        // a skipped row, never a killed inventory)
-        comps.find(_ == base + "-Summary.db")
-          .flatMap { p =>
-            val bytes = readAll(fs, p)
-            if (oldEra)
-              scala.util.Try(
-                SSTableComponents.readSummary2x(bytes)).toOption
-            else Some(SSTableComponents.readSummary(bytes))
-          }
-          .map { s0 =>
-            val s = SSTableComponents.downsampleSummary(s0, downsample)
-            RangeEstimate(
-              SSTableBinaryV2.sstableIdentity(dataPath),
-              SSTableComponents.estimatedKeysForRanges(s, ranges),
-              s.sampled.size)
-          }
+    new Lake(spark, root).job { g =>
+      summaryOf(g).map { s0 =>
+        val s = SSTableComponents.downsampleSummary(s0, downsample)
+        RangeEstimate(g.sstable,
+          SSTableComponents.estimatedKeysForRanges(s, ranges),
+          s.sampled.size)
       }
-      .toDF()
+    }.toDF()
   }
 
   /** Registered `src_sstable_droppable` — the reference's
@@ -461,20 +432,10 @@ object SSTableMetadata {
   def droppableAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val outKa = SSTableBinaryV2.writeOldFixture(spark, sfDir)
-    val root = outKa.resolve("documents").toString
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    val rows = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val base = dataPath.stripSuffix("-Data.db")
-        val p = base + "-Statistics.db"
-        val s = OldFormat.readStats2x(readAll(fs, p), p)
+    val rows = new Lake(spark, outKa.resolve("documents").toString).job {
+      g =>
+        val p = g.sibling("-Statistics.db")
+        val s = OldFormat.readStats2x(g.readAll(p), p)
         val beforeAll = OldFormat.droppableTombstonesBefore(
           s, s.minTimestampUs / 1000000.0 - 1.0)
         val afterAll = OldFormat.droppableTombstonesBefore(
@@ -482,17 +443,31 @@ object SSTableMetadata {
         val mid = OldFormat.droppableTombstonesBefore(s,
           (s.minTimestampUs / 1000000.0 + s.maxLocalDeletionTimeS) / 2.0)
         require(mid >= beforeAll && mid <= afterAll,
-          s"$dataPath: histogram sum not monotone " +
+          s"${g.path}: histogram sum not monotone " +
             s"($beforeAll, $mid, $afterAll)")
-        (SSTableBinaryV2.sstableIdentity(dataPath),
-          beforeAll, afterAll, s.estColumnsTotal,
+        Some((g.sstable, beforeAll, afterAll, s.estColumnsTotal,
           OldFormat.estimatedDroppableTombstoneRatio(
-            s, s.maxLocalDeletionTimeS + 1.0))
-      }
+            s, s.maxLocalDeletionTimeS + 1.0)))
+    }
       .collect().toSeq.sortBy(_._1)
     graft.Scratch.delete(outKa)
     spark.createDataset(rows).toDF("sstable", "droppable_before",
       "droppable_total", "est_columns", "ratio")
+  }
+
+  /** The generation's modern Summary.db resampled to interval 8, streamed
+    * from its Index.db — finer than the written ladder, so
+    * [[SSTableComponents.resampleSummary]] takes its rebuild branch. The
+    * fixture regime of the summary-budget and read-meter audits. */
+  private def resampledTo8(g: Generation): SSTableComponents.Summary = {
+    val current = SSTableComponents.readSummary(
+      g.readAll(g.sibling("-Summary.db")))
+    val idx = g.fs.open(new HPath(g.sibling("-Index.db")))
+    try SSTableComponents.resampleSummary(current, 8,
+      new java.io.DataInputStream(
+        new java.io.BufferedInputStream(idx, 64 * 1024)),
+      oldEra = false, g.path)
+    finally idx.close()
   }
 
   /** Registered `src_sstable_summary_budget` — the
@@ -513,38 +488,17 @@ object SSTableMetadata {
   def summaryBudgetAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // read-only consumer of the shared plain set (summaries are
-    // resampled IN MEMORY; nothing on disk changes)
-    val root = SSTableBinaryV2.plainGenSetShared(spark, sfDir)
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    // executor-side: resample each generation to interval 8 — finer
-    // than the written ladder, so the decision tree MUST take the
-    // streamed-rebuild branch (the downsample branch would refuse)
-    val fine: Seq[(String, Array[Byte])] = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val base = dataPath.stripSuffix("-Data.db")
-        val current = SSTableComponents.readSummary(
-          readAll(fs, base + "-Summary.db"))
-        val idx = fs.open(new HPath(base + "-Index.db"))
-        val s = try SSTableComponents.resampleSummary(current, 8,
-          new java.io.DataInputStream(
-            new java.io.BufferedInputStream(idx, 64 * 1024)),
-          oldEra = false, dataPath)
-        finally idx.close()
-        (SSTableBinaryV2.sstableIdentity(dataPath),
-          SSTableComponents.writeSummary(s.sampled,
-            s.sizeAtFullSampling.toLong * s.minIndexInterval,
-            s.firstKey, s.lastKey, s.minIndexInterval))
+    // resampled IN MEMORY, executor-side; nothing on disk changes)
+    val fine: Seq[(String, Array[Byte])] = new Lake(spark,
+      SSTableBinaryV2.plainGenSetShared(spark, sfDir)).job { g =>
+        val s = resampledTo8(g)
+        Some((g.sstable, SSTableComponents.writeSummary(s.sampled,
+          s.sizeAtFullSampling.toLong * s.minIndexInterval,
+          s.firstKey, s.lastKey, s.minIndexInterval)))
       }
       .collect().toSeq.sortBy(_._1)
     def genOf(name: String): Int =
-      "\\d+".r.findFirstIn(name.split('/').last).get.toInt
+      SSTableBinaryV2.claimedGeneration(name).get
     val withRate = fine.map { case (name, bytes) =>
       val s = SSTableComponents.readSummary(bytes)
       (name, s, 1.0 + genOf(name) % 3)
@@ -623,36 +577,16 @@ object SSTableMetadata {
   def readMeterAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // read-only consumer of the shared plain set (in-memory
-    // resample, meters, the activity-table roundtrip)
-    val root = SSTableBinaryV2.plainGenSetShared(spark, sfDir)
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    // the budget regime needs marks the written ladder is too coarse
-    // for at small SFs: resample to interval 8 executor-side, the
-    // same streamed-rebuild branch the summary-budget audit drives
-    val fine: Seq[(String, Int)] = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val base = dataPath.stripSuffix("-Data.db")
-        val current = SSTableComponents.readSummary(
-          readAll(fs, base + "-Summary.db"))
-        val idx = fs.open(new HPath(base + "-Index.db"))
-        val s = try SSTableComponents.resampleSummary(current, 8,
-          new java.io.DataInputStream(
-            new java.io.BufferedInputStream(idx, 64 * 1024)),
-          oldEra = false, dataPath)
-        finally idx.close()
-        (SSTableBinaryV2.sstableIdentity(dataPath),
-          s.sampled.size)
+    // resample, meters, the activity-table roundtrip); the budget
+    // regime needs marks the written ladder is too coarse for at small
+    // SFs, so summaries resample as in the summary-budget audit
+    val fine: Seq[(String, Int)] = new Lake(spark,
+      SSTableBinaryV2.plainGenSetShared(spark, sfDir)).job { g =>
+        Some((g.sstable, resampledTo8(g).sampled.size))
       }
       .collect().toSeq.sortBy(_._1)
     def genOf(name: String): Int =
-      "\\d+".r.findFirstIn(name.split('/').last).get.toInt
+      SSTableBinaryV2.claimedGeneration(name).get
     val tick = RestorableMeter.TickIntervalNanos
     val d15 = math.exp(-5.0 / 900.0)
     val d120 = math.exp(-5.0 / 7200.0)
@@ -722,6 +656,23 @@ object SSTableMetadata {
       "marks_before", "factor", "marks_after")
   }
 
+  /** Applies `edit` to every `*<suffix>` file of the local directory
+    * `dir` (a fixture's generations), then drops the file's `.crc`
+    * side file, which would no longer match it. */
+  private def editComponents(dir: java.nio.file.Path, suffix: String)(
+      edit: java.nio.file.Path => Unit): Unit = {
+    import scala.jdk.CollectionConverters._
+    val ls = java.nio.file.Files.list(dir)
+    val files = try ls.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(suffix)).toSeq.sorted
+    finally ls.close()
+    files.foreach { f =>
+      edit(f)
+      java.nio.file.Files.deleteIfExists(
+        f.getParent.resolve("." + f.getFileName + ".crc"))
+    }
+  }
+
   /** Registered `src_sstable_keycount` — the reference's whole
     * key-count-estimation surface exercised SIDECAR-ONLY over three
     * generation sets of the same content:
@@ -767,33 +718,13 @@ object SSTableMetadata {
         "graft", "documents", sources = Some(srcIds))))
     val dirB = outB.resolve("graft").resolve("documents")
     val dirC = outC.resolve("graft").resolve("documents")
-    import scala.jdk.CollectionConverters._
-    locally {
-      val ls = java.nio.file.Files.list(dirB)
-      try ls.iterator().asScala
-        .filter(_.getFileName.toString.endsWith("-Index.db"))
-        .toSeq.foreach { f =>
-          java.nio.file.Files.delete(f)
-          java.nio.file.Files.deleteIfExists(
-            f.getParent.resolve("." + f.getFileName + ".crc"))
-        }
-      finally ls.close()
-    }
+    editComponents(dirB, "-Index.db")(java.nio.file.Files.delete)
     // set C: strip the COMPACTION component from every Statistics.db
     // by re-serializing just the header — the file a pre-sketch
     // Cassandra (or a CASSANDRA-10676 casualty) actually has
-    locally {
-      val ls = java.nio.file.Files.list(dirC)
-      try ls.iterator().asScala
-        .filter(_.getFileName.toString.endsWith("-Statistics.db"))
-        .toSeq.foreach { f =>
-          val header = BigFormat.readStats(
-            java.nio.file.Files.readAllBytes(f))
-          java.nio.file.Files.write(f, BigFormat.writeStats(header))
-          java.nio.file.Files.deleteIfExists(
-            f.getParent.resolve("." + f.getFileName + ".crc"))
-        }
-      finally ls.close()
+    editComponents(dirC, "-Statistics.db") { f =>
+      java.nio.file.Files.write(f, BigFormat.writeStats(
+        BigFormat.readStats(java.nio.file.Files.readAllBytes(f))))
     }
     // three independent sidecar-census jobs — overlap them too
     val Seq(rowsA, rowsB, rowsC) = graft.Par.all(Seq(
@@ -901,44 +832,21 @@ object SSTableMetadata {
   def describeStats(spark: SparkSession, root: String,
       sizes: Map[String, Long] = Map.empty): DataFrame = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
     val bcSizes = spark.sparkContext.broadcast(sizes)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .flatMap { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        val statsPath = base + "-Statistics.db"
-        if (oldEra || !comps.contains(statsPath)) None
-        else {
-        val statsBytes = readAll(fs, statsPath)
+    new Lake(spark, root).job { g =>
+      val dataPath = g.path
+      g.comp("-Statistics.db").filter(_ => !g.oldEra).flatMap { statsPath =>
+        val statsBytes = g.readAll(statsPath)
         // the serialization header's clustering types render the
-        // bound values; a foreign file whose value bytes don't parse
-        // under the declared type serves hex rather than refusing
-        // the whole panel (the value is still the file's truth)
+        // bound values ([[renderClustering]])
         val clTypes = scala.util.Try(
           BigFormat.readStats(statsBytes).clusteringTypes)
           .getOrElse(Nil)
-        def renderBounds(vs: Seq[Seq[Byte]]): Option[String] =
-          if (vs.isEmpty) None
-          else Some(vs.zipWithIndex.map { case (v, i) =>
-            scala.util.Try(BigFormat.renderValue(
-              clTypes.lift(i).getOrElse(BigFormat.Utf8Type), v.toArray))
-              .getOrElse(v.map("%02x".format(_)).mkString)
-          }.mkString(":"))
-        BigFormat.readStatsModern(statsBytes, version)
+        BigFormat.readStatsModern(statsBytes, g.version)
           .map { s =>
-          val key = SSTableBinaryV2.sstableIdentity(dataPath)
+          val key = g.sstable
           bcSizes.value.get(key).foreach { dataLen =>
-            val compressed = comps.contains(base + "-CompressionInfo.db")
+            val compressed = g.comp("-CompressionInfo.db").isDefined
             if (compressed) {
               require(s.compressionRatio ==
                 dataLen.toDouble / s.partitionSizeTotal,
@@ -988,12 +896,11 @@ object SSTableMetadata {
             commitlog_upper_position = s.commitLogUpper._2,
             commitlog_lower_segment = s.commitLogLower._1,
             commitlog_lower_position = s.commitLogLower._2,
-            min_clustering = renderBounds(s.minClusteringValues),
-            max_clustering = renderBounds(s.maxClusteringValues))
-        }
+            min_clustering = renderClustering(clTypes, s.minClusteringValues),
+            max_clustering = renderClustering(clTypes, s.maxClusteringValues))
         }
       }
-      .toDF()
+    }.toDF()
   }
 
   final case class ExpiredBlocker(
@@ -1010,31 +917,12 @@ object SSTableMetadata {
     * treated as overlapping by callers. */
   private def tokenSpans(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        val sum = comps.find(_ == base + "-Summary.db").flatMap { p =>
-          scala.util.Try {
-            if (oldEra) SSTableComponents.readSummary2x(readAll(fs, p))
-            else SSTableComponents.readSummary(readAll(fs, p))
-          }.toOption
-        }
-        (SSTableBinaryV2.sstableIdentity(dataPath),
-          sum.map(s => BigFormat.murmur3Token(s.firstKey)),
-          sum.map(s => BigFormat.murmur3Token(s.lastKey)))
-      }
-      .toDF("sstable", "first_token", "last_token")
+    new Lake(spark, root).job { g =>
+      val sum = scala.util.Try(summaryOf(g)).toOption.flatten
+      Some((g.sstable,
+        sum.map(s => BigFormat.murmur3Token(s.firstKey)),
+        sum.map(s => BigFormat.murmur3Token(s.lastKey))))
+    }.toDF("sstable", "first_token", "last_token")
   }
 
   /** The `sstableexpiredblockers` tool's role, sidecar-only: a
@@ -1194,22 +1082,38 @@ object SSTableMetadata {
     out
   }
 
-  /** 1 MiB buffered stream copy through Hadoop filesystems — the
-    * multi-GB-Data.db-safe copy both offline surgeries share. */
-  private def streamCopy(fs: FileSystem, src: String,
-      outFs: FileSystem, dst: HPath): Unit = {
-    val in = fs.open(new HPath(src))
-    try {
-      val os = outFs.create(dst, true)
-      try {
-        val buf = new Array[Byte](1024 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (n > 0) os.write(buf, 0, n)
-          n = in.read(buf)
-        }
-      } finally os.close()
-    } finally in.close()
+  /** The copy step both offline surgeries share: generation `g` copied
+    * FLAT by component name into `outDir` (one table directory is the
+    * tools' unit, [[Lake.requireOneTable]]), every component
+    * byte-verbatim except `replaced`, a component path and the bytes
+    * written in its place. The rest stream through a 1 MiB buffer: a
+    * multi-GB Data.db must neither materialize on-heap nor trip
+    * [[Generation.readAll]]'s sidecar bound. */
+  private def copyGeneration(g: Generation, outDir: String,
+      replaced: Option[(String, Array[Byte])]): Unit = {
+    val out = outDir.stripSuffix("/")
+    val outFs = FileSystem.get(java.net.URI.create(out), g.conf)
+    g.components.foreach { src =>
+      val dst = new HPath(s"$out/${src.split('/').last}")
+      replaced.filter(_._1 == src) match {
+        case Some((_, bytes)) =>
+          val os = outFs.create(dst, true)
+          try os.write(bytes) finally os.close()
+        case None =>
+          val in = g.fs.open(new HPath(src))
+          try {
+            val os = outFs.create(dst, true)
+            try {
+              val buf = new Array[Byte](1024 * 1024)
+              var n = in.read(buf)
+              while (n >= 0) {
+                if (n > 0) os.write(buf, 0, n)
+                n = in.read(buf)
+              }
+            } finally os.close()
+          } finally in.close()
+      }
+    }
   }
 
   /** The `IndexSummaryManager` role as an OFFLINE lake operation
@@ -1241,16 +1145,10 @@ object SSTableMetadata {
     import spark.implicits._
     require(budgetMarks > 0,
       s"summary budget must be positive, got $budgetMarks")
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
+    val lake = new Lake(spark, root)
+    val gens = lake.generations
     require(gens.nonEmpty, s"$root holds no generations")
-    val parents = gens.map(_._1.split('/').dropRight(1).mkString("/"))
-      .distinct
-    require(parents.size <= 1,
-      s"summary redistribution targets ONE table directory; $root " +
-        s"spans ${parents.size} (run per directory): " +
-        parents.sorted.take(3).mkString(", "))
+    lake.requireOneTable("summary redistribution")
     def keyOf(p: String): String = SSTableBinaryV2.sstableIdentity(p)
     // duplicate sstable rows (an activity table appended over time)
     // collapse by MAX — deterministic, and "was recently hot" is the
@@ -1284,31 +1182,20 @@ object SSTableMetadata {
           "not actually cold, check the key shape: expected " +
           s"'${keyOf(gens.head._1)}', table has: " +
           s"${rates.keys.take(3).mkString(", ")}")
-    val bc = spark.sparkContext.broadcast(hconf)
     // pass 1: marks per generation — one Summary.db header each.
     // The third column is the 2.x samplingLevel (-1 on modern files,
     // whose summaries ladder by INTERVAL instead)
-    val marks: Seq[(String, Int, Int)] = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        val sumPath = comps.find(_ == base + "-Summary.db")
-          .getOrElse(throw new IllegalStateException(
-            s"$dataPath: no Summary.db to redistribute"))
-        val bytes = readAll(fs, sumPath)
-        if (oldEra)
-          (dataPath, SSTableComponents.readSummary2x(bytes).sampled.size,
+    val marks: Seq[(String, Int, Int)] = lake.job { g =>
+      val bytes = g.readAll(g.comp("-Summary.db")
+        .getOrElse(throw new IllegalStateException(
+          s"${g.path}: no Summary.db to redistribute")))
+      Some(
+        if (g.oldEra)
+          (g.path, SSTableComponents.readSummary2x(bytes).sampled.size,
             SSTableComponents.readSummaryLevel2x(bytes))
         else
-          (dataPath, SSTableComponents.readSummary(bytes).sampled.size,
-            -1)
-      }
+          (g.path, SSTableComponents.readSummary(bytes).sampled.size, -1))
+    }
       .collect().toSeq.sortBy(_._1)
     val factors = SSTableComponents.redistributeSummaries(
       marks.map { case (p, m, _) =>
@@ -1318,66 +1205,77 @@ object SSTableMetadata {
     val bcMarks = spark.sparkContext.broadcast(
       marks.map { case (p, m, lvl) => p -> ((m, lvl)) }.toMap)
     // pass 2: copy every generation, re-emitting only Summary.db
-    val plan = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val f = bcFactors.value(dataPath)
-        val base = dataPath.stripSuffix("-Data.db")
-        val sumPath = base + "-Summary.db"
-        val outFs = FileSystem.get(
-          java.net.URI.create(outDir.stripSuffix("/")), conf)
-        val (passMarks, level2x) = bcMarks.value(dataPath)
-        var after = 0
-        comps.foreach { src =>
-          val dst = new HPath(
-            s"${outDir.stripSuffix("/")}/${src.split('/').last}")
-          if (src == sumPath && f > 1) {
-            val bytes = readAll(fs, src)
-            val os = outFs.create(dst, true)
-            try {
-              if (level2x >= 0) {
-                // the 2.x era coarsens by SAMPLING LEVEL in the
-                // literal Downsampling-pattern order — the
-                // reference's own 2.x redistribution branch
-                // (cassandra-2 cloneWithNewSummarySamplingLevel →
-                // IndexSummaryBuilder.downsample); interval and
-                // sizeAtFullSampling stay untouched
-                val cur = SSTableComponents.readSummary2x(bytes)
-                val (thinned, newLevel) = SSTableComponents
-                  .downsampleSummary2x(cur, level2x, f)
-                after = thinned.sampled.size
-                os.write(SSTableComponents.writeSummary2x(
-                  thinned.sampled,
-                  thinned.sizeAtFullSampling.toLong *
-                    thinned.minIndexInterval,
-                  thinned.firstKey, thinned.lastKey,
-                  thinned.minIndexInterval, newLevel))
-              } else {
-                val s = SSTableComponents.downsampleSummary(
-                  SSTableComponents.readSummary(bytes), f)
-                after = s.sampled.size
-                os.write(SSTableComponents.writeSummary(s.sampled,
-                  s.sizeAtFullSampling.toLong * s.minIndexInterval,
-                  s.firstKey, s.lastKey, s.minIndexInterval))
-              }
-            } finally os.close()
-          } else {
-            // a factor-1 summary's mark count is pass 1's — no second
-            // sidecar parse for the (typical) untouched majority
-            if (src == sumPath) after = passMarks
-            streamCopy(fs, src, outFs, dst)
-          }
+    val plan = lake.job { g =>
+      val f = bcFactors.value(g.path)
+      val (passMarks, level2x) = bcMarks.value(g.path)
+      val sumPath = g.sibling("-Summary.db")
+      // a factor-1 summary copies verbatim with pass 1's mark count —
+      // no second sidecar parse for the (typical) untouched majority
+      val (after, rewritten) =
+        if (f == 1) (passMarks, None)
+        else if (level2x >= 0) {
+          // the 2.x era coarsens by SAMPLING LEVEL in the literal
+          // Downsampling-pattern order — the reference's own 2.x
+          // redistribution branch (cassandra-2
+          // cloneWithNewSummarySamplingLevel →
+          // IndexSummaryBuilder.downsample); interval and
+          // sizeAtFullSampling stay untouched
+          val cur = SSTableComponents.readSummary2x(g.readAll(sumPath))
+          val (thinned, newLevel) = SSTableComponents
+            .downsampleSummary2x(cur, level2x, f)
+          (thinned.sampled.size, Some(SSTableComponents.writeSummary2x(
+            thinned.sampled,
+            thinned.sizeAtFullSampling.toLong * thinned.minIndexInterval,
+            thinned.firstKey, thinned.lastKey,
+            thinned.minIndexInterval, newLevel)))
+        } else {
+          val s = SSTableComponents.downsampleSummary(
+            SSTableComponents.readSummary(g.readAll(sumPath)), f)
+          (s.sampled.size, Some(SSTableComponents.writeSummary(s.sampled,
+            s.sizeAtFullSampling.toLong * s.minIndexInterval,
+            s.firstKey, s.lastKey, s.minIndexInterval)))
         }
-        (keyOf(dataPath), f, after)
-      }
+      copyGeneration(g, outDir, rewritten.map(sumPath -> _))
+      Some((g.sstable, f, after))
+    }
       .collect().toSeq.sortBy(_._1)
     val byPath = marks.map { case (p, m, _) => keyOf(p) -> m }.toMap
     spark.createDataset(plan.map { case (k, f, after) =>
       (k, rates.getOrElse(k, 0.0), byPath(k).toLong, f, after.toLong) })
       .toDF("sstable", "rate", "marks_before", "factor", "marks_after")
+  }
+
+  /** A designed generation set's frame and its source identities, at
+    * any SF: each of the first 480 documents becomes `perDoc`
+    * single-cell partitions `r-<pid>` (pid = doc_id × perDoc + k,
+    * written at 2021-01-01 + pid µs, no TTL), and document d lands in
+    * generation `nb-<d % gens + 1>`. `what` names the audit whose
+    * fixture needs the 480 documents. */
+  private def designedGenerations(spark: SparkSession, sfDir: String,
+      what: String, perDoc: Int, gens: Int): (DataFrame, Seq[String]) = {
+    import org.apache.spark.sql.functions._
+    val docs = graft.Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id").cast("long")).filter(col("doc_id") < 480)
+    require(docs.count() == 480L,
+      s"$what fixture needs the first 480 documents")
+    val frame = docs
+      .withColumn("k", explode(array((0 until perDoc).map(i =>
+        lit(i.toLong)): _*)))
+      .withColumn("pid", col("doc_id") * perDoc + col("k"))
+      .withColumn("partition_key", concat(lit("r-"), col("pid")))
+      .withColumn("clustering", array(lit("c")))
+      .withColumn("row_kind", lit("ROW"))
+      .withColumn("name", lit("v"))
+      .withColumn("cell", struct(
+        lit("x").as("value"),
+        (lit(1609459200000000L) + col("pid")).as("writetime_us"),
+        lit(null).cast("int").as("ttl_s"),
+        lit(null).cast("bigint").as("expire_us")))
+      .withColumn("deletion_us", lit(null).cast("bigint"))
+      .withColumn("sstable", concat(lit("documents/nb-"),
+        (col("doc_id") % gens + 1).cast("string"), lit("-big-Data.db")))
+      .drop("doc_id", "k", "pid")
+    (frame, (1 to gens).map(g => s"documents/nb-$g-big-Data.db"))
   }
 
   /** Registered `src_sstable_redistribute` — [[redistributeLake]]
@@ -1398,28 +1296,10 @@ object SSTableMetadata {
   def redistributeAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val docs = graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long")).filter(col("doc_id") < 480)
-    require(docs.count() == 480L,
-      "redistribute fixture needs the first 480 documents")
     // 4 partitions per member doc → 960 per generation → exactly 8
     // summary marks each at the written interval (128), at any SF
-    val frame = docs
-      .withColumn("k", explode(array(lit(0L), lit(1L), lit(2L), lit(3L))))
-      .withColumn("pid", col("doc_id") * 4 + col("k"))
-      .withColumn("partition_key", concat(lit("r-"), col("pid")))
-      .withColumn("clustering", array(lit("c")))
-      .withColumn("row_kind", lit("ROW"))
-      .withColumn("name", lit("v"))
-      .withColumn("cell", struct(
-        lit("x").as("value"),
-        (lit(1609459200000000L) + col("pid")).as("writetime_us"),
-        lit(null).cast("int").as("ttl_s"),
-        lit(null).cast("bigint").as("expire_us")))
-      .withColumn("deletion_us", lit(null).cast("bigint"))
-      .withColumn("sstable", concat(lit("documents/nb-"),
-        (col("doc_id") % 2 + 1).cast("string"), lit("-big-Data.db")))
-      .drop("doc_id", "k", "pid")
+    val (frame, sources) =
+      designedGenerations(spark, sfDir, "redistribute", perDoc = 4, gens = 2)
     val src = graft.Scratch.dir("graft-redisaudit-src-")
     val out = graft.Scratch.dir("graft-redisaudit-out-")
     val act = graft.Scratch.dir("graft-redisaudit-act-")
@@ -1427,10 +1307,7 @@ object SSTableMetadata {
     // are independent sink jobs — overlap them (guide §2.6)
     graft.Par.all(Seq(
       () => { SSTableBinaryV2.writeSSTables(frame, src.toString,
-        "graft", "documents",
-        // designed frame: identities are doc_id%2+1 ⇒ exactly nb-1/nb-2
-        sources = Some(Seq("documents/nb-1-big-Data.db",
-          "documents/nb-2-big-Data.db"))); () },
+        "graft", "documents", sources = Some(sources)); () },
       () => Seq(("documents/nb-2-big-Data.db", 4.0))
         .toDF("sstable", "rate_15m")
         .write.mode("overwrite").parquet(act.toString)))
@@ -1622,37 +1499,17 @@ object SSTableMetadata {
       : DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val docs = graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long")).filter(col("doc_id") < 480)
-    require(docs.count() == 480L,
-      "track-activity fixture needs the first 480 documents")
     // 10 partitions per member doc → 1200 per generation → 10 summary
     // marks each at the written interval (128), at any SF; ≥9 equal
     // marks is the rank-closed-form regime the read-meter audit pins
-    val frame = docs
-      .withColumn("k", explode(array((0 until 10).map(i =>
-        lit(i.toLong)): _*)))
-      .withColumn("pid", col("doc_id") * 10 + col("k"))
-      .withColumn("partition_key", concat(lit("r-"), col("pid")))
-      .withColumn("clustering", array(lit("c")))
-      .withColumn("row_kind", lit("ROW"))
-      .withColumn("name", lit("v"))
-      .withColumn("cell", struct(
-        lit("x").as("value"),
-        (lit(1609459200000000L) + col("pid")).as("writetime_us"),
-        lit(null).cast("int").as("ttl_s"),
-        lit(null).cast("bigint").as("expire_us")))
-      .withColumn("deletion_us", lit(null).cast("bigint"))
-      .withColumn("sstable", concat(lit("documents/nb-"),
-        (col("doc_id") % 4 + 1).cast("string"), lit("-big-Data.db")))
-      .drop("doc_id", "k", "pid")
+    val (frame, sources) = designedGenerations(spark, sfDir,
+      "track-activity", perDoc = 10, gens = 4)
     val src = graft.Scratch.dir("graft-trackact-src-")
     val act = graft.Scratch.dir("graft-trackact-act-")
     val out = graft.Scratch.dir("graft-trackact-out-")
     SSTableBinaryV2.writeSSTables(frame, src.toString,
       "graft", "documents",
-      // designed frame: doc_id%4+1 over docs 0..479 ⇒ exactly nb-1..4
-      sources = Some((1 to 4).map(g => s"documents/nb-$g-big-Data.db")))
+      sources = Some(sources))
     val root = s"$src/graft/documents"
     val epoch = java.util.UUID.randomUUID().toString
     val tick = RestorableMeter.TickIntervalNanos
@@ -1748,72 +1605,31 @@ object SSTableMetadata {
     import spark.implicits._
     require(level.isDefined || repairedAt.isDefined,
       "rewriteMetadata: nothing to set")
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    // the output is FLAT by component name (one table directory is
-    // the tools' unit of operation) — a recursive listing spanning
-    // several directories (a keyspace root, or a table with
-    // snapshots/backups subdirs) could hold same-named generations
-    // whose flat copies would clobber each other, so that shape
-    // refuses up front instead of interleaving silently
-    val parents = gens.map(_._1.split('/').dropRight(1).mkString("/"))
-      .distinct
-    require(parents.size <= 1,
-      s"metadata surgery targets ONE table directory; $root spans " +
-        s"${parents.size} (run per directory): " +
-        parents.sorted.take(3).mkString(", "))
-    val bc = spark.sparkContext.broadcast(hconf)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        require(version.nonEmpty && version.charAt(0) >= 'm',
-          s"$dataPath: metadata surgery serves modern-era " +
-            "generations only (2.x StatsMetadata has its own layout)")
-        val checksummed = BigFormat.versionHasMetadataChecksum(version)
-        val base = dataPath.stripSuffix("-Data.db")
-        val statsPath = base + "-Statistics.db"
-        require(comps.contains(statsPath),
-          s"$dataPath: no Statistics.db to rewrite")
-        val bytes = readAll(fs, statsPath)
-        val stats = BigFormat.readStatsModern(bytes, version)
-          .getOrElse(throw new IllegalStateException(
-            s"$dataPath: Statistics.db carries no STATS component — " +
-              "nothing to set a level/repairedAt on"))
-        // BYTE-SURGICAL: only the two fields' bytes change (and the
-        // n-series component CRC) — clustering-value lists,
-        // commit-log intervals, pending-repair sessions and any
-        // other fields a real cluster's file carries survive
-        // bit-exact, which is the whole "only level/repairedAt
-        // replaced" contract
-        val rewritten = BigFormat.patchStatsFields(bytes, checksummed,
-          level, repairedAt)
-        val outFs = FileSystem.get(
-          java.net.URI.create(outDir.stripSuffix("/")), conf)
-        comps.foreach { src =>
-          // flat copy by component name: a surgery run targets ONE
-          // table directory (guarded above)
-          val dst = new HPath(
-            s"${outDir.stripSuffix("/")}/${src.split('/').last}")
-          if (src == statsPath) {
-            val os = outFs.create(dst, true)
-            try os.write(rewritten) finally os.close()
-          } else {
-            // Data.db streams — a multi-GB data file must neither
-            // materialize on-heap nor trip readAll's sidecar bound
-            streamCopy(fs, src, outFs, dst)
-          }
-        }
-        1L
-      }
-      .toDF("one").agg(org.apache.spark.sql.functions.sum("one"))
-      .collect().headOption.flatMap(r =>
-        Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(0L)
+    val lake = new Lake(spark, root)
+    lake.requireOneTable("metadata surgery")
+    lake.job { g =>
+      require(g.version.nonEmpty && !g.oldEra,
+        s"${g.path}: metadata surgery serves modern-era " +
+          "generations only (2.x StatsMetadata has its own layout)")
+      val statsPath = g.sibling("-Statistics.db")
+      require(g.comp("-Statistics.db").isDefined,
+        s"${g.path}: no Statistics.db to rewrite")
+      val bytes = g.readAll(statsPath)
+      BigFormat.readStatsModern(bytes, g.version)
+        .getOrElse(throw new IllegalStateException(
+          s"${g.path}: Statistics.db carries no STATS component — " +
+            "nothing to set a level/repairedAt on"))
+      // BYTE-SURGICAL: only the two fields' bytes change (and the
+      // n-series component CRC) — clustering-value lists,
+      // commit-log intervals, pending-repair sessions and any
+      // other fields a real cluster's file carries survive
+      // bit-exact, which is the whole "only level/repairedAt
+      // replaced" contract
+      copyGeneration(g, outDir, Some(statsPath -> BigFormat.patchStatsFields(
+        bytes, BigFormat.versionHasMetadataChecksum(g.version), level,
+        repairedAt)))
+      Some(1L)
+    }.collect().sum
   }
 
   /** Registered `src_sstable_relevel` — the surgery end-to-end: the
@@ -1886,62 +1702,37 @@ object SSTableMetadata {
     // while the lz4 leg keeps the sink's own tail (no session, not
     // transient, no host: the offline-writer truth), so one query
     // serves both the present and the absent paths of the tail parse
-    locally {
-      val dir = out.resolve("graft").resolve("documents")
-      val ls = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        ls.iterator().asScala
-          .filter(_.getFileName.toString.endsWith("-Statistics.db"))
-          .foreach { p =>
-            val name = p.getFileName.toString
-            val f = name.split('-')(1).toInt - 1 // nb-<gen>-big-…
-            val bytes = java.nio.file.Files.readAllBytes(p)
-            val header = BigFormat.readStats(bytes)
-            val sketch = BigFormat.readCompaction(bytes)
-            val validation =
-              BigFormat.readValidation(bytes, checksummed = true)
-            val s = BigFormat.readStatsModern(bytes, "nb")
-              .getOrElse(throw new IllegalStateException(
-                s"$p: sink wrote no STATS component"))
-            java.nio.file.Files.write(p, BigFormat.writeStats(
-              header, "nb",
-              compaction = sketch,
-              stats = Some(s.copy(
-                pendingRepair = Some(new java.util.UUID(f + 1L, 17L)),
-                isTransient = f % 2 == 0,
-                originatingHostId =
-                  Some(new java.util.UUID(f + 2L, 33L)),
-                // gen designed interval sets: count = gen, replayable
-                commitLogIntervals = Seq.tabulate(f + 1)(i =>
-                  ((i.toLong, i * 10), (i + 1L, i * 10 + 5))),
-                // designed replay bounds, all f-arithmetic
-                commitLogUpper = (100L + f, 4096 + f),
-                commitLogLower = (f.toLong, 10 * f))),
-              validation = validation))
-            java.nio.file.Files.deleteIfExists(
-              p.getParent.resolve(s".$name.crc"))
-          }
-      } finally ls.close()
+    editComponents(out.resolve("graft").resolve("documents"),
+        "-Statistics.db") { p =>
+      val f = p.getFileName.toString.split('-')(1).toInt - 1 // nb-<gen>-…
+      val bytes = java.nio.file.Files.readAllBytes(p)
+      val s = BigFormat.readStatsModern(bytes, "nb")
+        .getOrElse(throw new IllegalStateException(
+          s"$p: sink wrote no STATS component"))
+      java.nio.file.Files.write(p, BigFormat.writeStats(
+        BigFormat.readStats(bytes), "nb",
+        compaction = BigFormat.readCompaction(bytes),
+        stats = Some(s.copy(
+          pendingRepair = Some(new java.util.UUID(f + 1L, 17L)),
+          isTransient = f % 2 == 0,
+          originatingHostId = Some(new java.util.UUID(f + 2L, 33L)),
+          // gen designed interval sets: count = gen, replayable
+          commitLogIntervals = Seq.tabulate(f + 1)(i =>
+            ((i.toLong, i * 10), (i + 1L, i * 10 + 5))),
+          // designed replay bounds, all f-arithmetic
+          commitLogUpper = (100L + f, 4096 + f),
+          commitLogLower = (f.toLong, 10 * f))),
+        validation = BigFormat.readValidation(bytes, checksummed = true)))
     }
     // capture real Data.db lengths for the audit gates (per layout —
     // plain and lz4 share generation NAMES but not lengths), THEN
     // junk the data files so a peeking implementation fails loudly
     def captureAndJunk(dir: java.nio.file.Path): Map[String, Long] = {
       val sizes = scala.collection.mutable.Map.empty[String, Long]
-      val ls = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        ls.iterator().asScala
-          .filter(_.getFileName.toString.endsWith("-Data.db"))
-          .foreach { f =>
-            sizes += s"documents/${f.getFileName}" ->
-              java.nio.file.Files.size(f)
-            java.nio.file.Files.write(f, Array.fill[Byte](16)(0x22))
-            java.nio.file.Files.deleteIfExists(
-              f.getParent.resolve("." + f.getFileName + ".crc"))
-          }
-      } finally ls.close()
+      editComponents(dir, "-Data.db") { f =>
+        sizes += s"documents/${f.getFileName}" -> java.nio.file.Files.size(f)
+        java.nio.file.Files.write(f, Array.fill[Byte](16)(0x22))
+      }
       sizes.toMap
     }
     val sizesPlain = captureAndJunk(
@@ -1960,6 +1751,21 @@ object SSTableMetadata {
     described
   }
 
+  /** Registered `src_sstable_metadata`: the sidecar-only inventory
+    * over sink-written generation sets — uncompressed, compressed
+    * (the lz4 rewrite shows its compressor and one extra component),
+    * and a pre-3.0 ka set (whose 2.x StatsMetadata supplies
+    * `min_writetime_us` where the era has no serialization header).
+    * The oracle replays the fixture arithmetic per generation: exact
+    * partition counts, stats minima, component census. The
+    * no-Data.db property is ORACLE-GATED, not just spec-gated: every
+    * Data.db is garbled before describing, so a describe() that ever
+    * starts opening data files fails the correctness run loudly.
+    * The token-order columns (`first_key`/`last_key`/`est_keys_max`)
+    * are ALSO oracle-gated — audit mode requires each Summary fact to
+    * match the independently streamed Index.db ground truth while the
+    * row is produced — then dropped, since DuckDB cannot replay the
+    * key rendering itself. */
   def metadataAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val in = SSTableBinaryV2.binaryFixtureShared(spark, sfDir)
@@ -1983,19 +1789,8 @@ object SSTableMetadata {
       out.resolve("graft").resolve("documents"),
       outLz4.resolve("graft").resolve("documents"),
       outKa.resolve("documents"))
-    genDirs.foreach { dir =>
-      val ls = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        ls.iterator().asScala
-          .filter(_.getFileName.toString.endsWith("-Data.db"))
-          .foreach { f =>
-            java.nio.file.Files.write(f, Array.fill[Byte](16)(0x11))
-            java.nio.file.Files.deleteIfExists(
-              f.getParent.resolve("." + f.getFileName + ".crc"))
-          }
-      } finally ls.close()
-    }
+    genDirs.foreach(editComponents(_, "-Data.db")(f =>
+      java.nio.file.Files.write(f, Array.fill[Byte](16)(0x11))))
     val described = describe(spark, s"$out/graft/documents",
         audit = true)
       .withColumn("layout", lit("plain"))

@@ -1823,7 +1823,12 @@ class SSTableBinarySpec extends SparkSpec {
     * stripped frame; merged (binary input), the survivors of
     * `lwwMerge` with markers kept, reshaped to bridge rows and named by
     * output generation, so the sink's `mergePartition` is checked
-    * against an independent implementation of the LWW rules. */
+    * against an independent implementation of the LWW rules. `lwwMerge`
+    * keeps every generation's deletion markers; Cassandra keeps one
+    * partition deletion per partition, one row deletion per row and one
+    * collection deletion per column of a row, the newest, so the merged
+    * frame keeps only those. The encoder writes the same bytes either
+    * way; the rows a sink reports count only what it keeps. */
   private def referenceFrame(args: RemoverCli.CliArgs)
       : (org.apache.spark.sql.DataFrame, Option[Seq[String]]) =
     if (!args.merge.contains("lww")) RemoverCli.sstableSinkInput(spark, args)
@@ -1838,9 +1843,15 @@ class SSTableBinarySpec extends SparkSpec {
         col("sstable")), keepMarkers = true)
       val live = col("row_kind").isin("ROW", "PK_LIVENESS")
       val (genName, names) = RemoverCli.mergedGenerations(args)
+      val newest = org.apache.spark.sql.expressions.Window
+        .partitionBy("partition_key", "clustering", "row_kind", "name")
+        .orderBy(col("deletion_us").desc)
+      val kept = merged.withColumn("rank", row_number().over(newest))
+        .filter(!col("row_kind").isin("PARTITION_DELETION", "ROW_DELETION",
+          "COMPLEX_DELETION") || col("rank") === 1)
       // a surviving cell tombstone keeps its timestamp and its own
       // local deletion second, as the unmerged rewrite does
-      (merged.select(
+      (kept.select(
         col("partition_key"), col("clustering"), col("row_kind"),
         col("name"),
         when(live, struct(col("value"), col("writetime_us"),
@@ -2332,28 +2343,57 @@ class SSTableBinarySpec extends SparkSpec {
     }
   }
 
+  test("one walk, one rule: the scan, the file route and the inventory skip hidden files and _SUCCESS") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    def part(k: String) = BigFormat.PartitionData(k, None,
+      Seq(BigFormat.RowAtom(Seq(Some("c0")), None, None, None, None,
+        Seq(BigFormat.CellAtom("v", BigFormatGen.epoch + 1000L, None, None,
+          Some(k), deleted = false)))))
+    val lake = Scratch.dir("graft-hidden-")
+    try {
+      writeGeneration(lake, 1, Seq(part("a"), part("b")), mergeHdr)
+      writeGeneration(lake, 2, Seq(part("c")), mergeHdr)
+      val dir = lake.resolve("graft").resolve("documents")
+      // a hidden copy of generation 1: every component, '.'-prefixed
+      val gen1 = java.nio.file.Files.list(dir)
+      try gen1.iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("nb-1-"))
+        .foreach(f => java.nio.file.Files.copy(f,
+          dir.resolve("." + f.getFileName)))
+      finally gen1.close()
+      java.nio.file.Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+      val visible = Seq("documents/nb-1-big-Data.db",
+        "documents/nb-2-big-Data.db")
+      val scan = SSTableBinaryV2.readBinary(spark, lake.toString)
+      assert(scan.select("sstable").distinct().as[String].collect().sorted
+        .toSeq === visible)
+      assert(scan.count() === 3L)
+      val plan = SSTableBinaryV2.fileRoutePlan(spark, lake.toString,
+        "documents", merge = true, outGenerations = 1)
+      assert(plan.map(_.listing.map(f => SSTableBinaryV2.sstableIdentity(
+        f._1))) === Some(visible))
+      val inventory = graft.sources.SSTableMetadata.describe(spark,
+        lake.toString).select("sstable", "n_partitions").as[(String, Long)]
+        .collect().sorted.toSeq
+      assert(inventory === visible.zip(Seq(2L, 1L)))
+    } finally Scratch.delete(lake)
+  }
+
   test("the merge route's ring bucket agrees bit for bit with the frame route's bucket column") {
     import spark.implicits._
-    val rnd = new scala.util.Random(6)
-    val alphabet = "az09-_ :éß→雪∅😀".codePoints().toArray
-    val keys = Seq.fill(12000) {
-      val n = rnd.nextInt(24)
-      new String(Array.fill(n)(alphabet(rnd.nextInt(alphabet.length))), 0, n)
-    }.distinct
-    assert(keys.size >= 10000)
-    val frame = keys.toDF("partition_key")
-    Seq(2, 3, 4, 7, 64, 1000).foreach { n =>
+    // both routes bucket through SSTableBinaryV2.ringBucket; the frame
+    // route's column feeds it the key's UTF-8 bytes, or the CQL key
+    // type's encoding
+    val keys = Seq("", "k", "éß→雪😀")
+    Seq(2, 3, 1000).foreach { n =>
       val args = sinkArgs("a", "b", "--merge", "lww",
         "--out-generations", n.toString)
-      val got = frame.select(col("partition_key"),
+      val got = keys.toDF("partition_key").select(col("partition_key"),
         RemoverCli.ringBucket(args).as("b")).collect()
-      assert(got.length === keys.size)
-      got.foreach { r =>
-        val tok = BigFormat.murmur3Token(r.getString(0)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        assert(SSTableBinaryV2.ringBucket(tok, n) === r.getInt(1),
-          s"key '${r.getString(0)}', $n buckets")
-      }
+      assert(got.map(r => r.getString(0) -> r.getInt(1)).toMap ===
+        keys.map(k => k -> SSTableBinaryV2.ringBucket(BigFormat.murmur3Token(
+          k.getBytes(java.nio.charset.StandardCharsets.UTF_8)), n)).toMap)
       assert(SSTableBinaryV2.ringBucket(Long.MinValue, n) === 0)
       assert(SSTableBinaryV2.ringBucket(Long.MaxValue, n) === n - 1)
     }
@@ -2592,13 +2632,19 @@ class SSTableBinarySpec extends SparkSpec {
     val gens = BigFormatGen.mergeLake
       .apply(Gen.Parameters.default, Seed(17L))
       .getOrElse(sys.error("gen failed"))
-    // every sink keeps only the newest of a key's partition deletions
-    // and of a row's row deletions; this lake repeats both
+    // every sink keeps only the newest of a key's partition deletions,
+    // of a row's row deletions and of a row column's collection
+    // deletions; this lake repeats all three
     def repeated[K](keys: Seq[K]) = keys.groupBy(identity).exists(_._2.size > 1)
     assert(repeated(gens.flatten.filter(_.deletionUs.isDefined).map(_.key)))
     assert(repeated(gens.flatten.flatMap(p => p.atoms.collect {
       case r: BigFormat.RowAtom if r.deletionUs.isDefined =>
         (p.key, r.clustering)
+    })))
+    assert(repeated(gens.flatten.flatMap(p => p.atoms.flatMap {
+      case r: BigFormat.RowAtom =>
+        r.complexDeletions.map(d => (p.key, r.static, r.clustering, d._1))
+      case _ => Nil
     })))
     // the dump format has no cell or collection tombstones and no static
     // rows, so the dump sink's lake leaves them out
@@ -2615,11 +2661,13 @@ class SSTableBinarySpec extends SparkSpec {
     val dumpLake = Scratch.dir("graft-merge-sinks-dump-")
     val out = Scratch.dir("graft-merge-sinks-out-")
     /** Runs `sink` over `in`, merged or not, into a fresh directory. */
+    var lastCount = 0L
     def run(in: java.nio.file.Path, sink: String, merge: Boolean): String = {
       val o = s"$out/${in.getFileName}-$sink-$merge"
-      RemoverCli.run(spark, RemoverCli.parse(Array("--in", in.toString,
-        "--out", o, "--table", "documents", "--format", "sstable",
-        "--sink", sink) ++ (if (merge) Seq("--merge", "lww") else Nil))
+      lastCount = RemoverCli.run(spark, RemoverCli.parse(Array("--in",
+        in.toString, "--out", o, "--table", "documents", "--format",
+        "sstable", "--sink", sink) ++
+        (if (merge) Seq("--merge", "lww") else Nil))
         .fold(e => fail(s"parse failed: $e"), identity))
       o
     }
@@ -2650,21 +2698,18 @@ class SSTableBinarySpec extends SparkSpec {
       val parquet = rows(spark.read.parquet(run(lake, "parquet", true)))
       val sstable = reread(SSTableBinaryV2.readBinary(spark,
         run(lake, "sstable", true)))
+      // the SSTable sink reports the rows of the merged parquet, whose
+      // partition, row and collection deletions are the newest only
+      assert(lastCount === parquet.count())
       // the merge reconciled something
       assert(parquet.count() <
         spark.read.parquet(run(lake, "parquet", false)).count())
       val all = parquet.select("row_kind").distinct().collect()
         .map(_.getString(0)).toSet ++ kinds
-      (all - "PK_LIVENESS" - "COMPLEX_DELETION").foreach { k =>
+      (all - "PK_LIVENESS").foreach { k =>
         same(parquet.filter(col("row_kind") === k),
           sstable.filter(col("row_kind") === k), k)
       }
-      // the SSTable encoder keeps one collection deletion per column, the
-      // newest; the merged rows keep every generation's
-      def newestComplex(df: org.apache.spark.sql.DataFrame) = df
-        .filter(col("row_kind") === "COMPLEX_DELETION")
-        .groupBy("partition_key", "clustering", "name").agg(max("deletion_us"))
-      same(newestComplex(parquet), newestComplex(sstable), "COMPLEX_DELETION")
       // the one difference is the reader's liveness FOUND: the SSTable
       // keeps the liveness of a merged row that also has cells or a row
       // deletion, and reading it back drops it

@@ -442,6 +442,103 @@ class PipelineSpec extends SparkSpec {
       .exists(_.verify))
   }
 
+  test("RemoverCli.parse: every tool-mode refusal, word for word, and what each mode builds") {
+    val inv = "--inventory lists generations from sidecars (read-only); "
+    val surgery = "--set-level/--set-repaired-at rewrite Statistics.db only; "
+    val budget = "--summary-budget rewrites Summary.db files only; "
+    val track = "--track-activity is a read-only metered scan; "
+    val noIn = "--in <dir> is required"
+    Seq(
+      // --inventory
+      Seq("--inventory", "true", "--in", "/a", "--table", "t") ->
+        s"$inv--table does not apply",
+      Seq("--inventory", "true", "--in", "/a", "--scrub", "true", "--merge",
+        "lww") -> s"$inv--merge/--scrub do not apply",
+      Seq("--inventory", "true", "--in", "/a", "--activity", "/p") ->
+        s"$inv--activity does not apply",
+      Seq("--inventory", "true") -> noIn,
+      Seq("--inventory", "true", "--out", "/b") -> noIn,
+      Seq("--inventory", "true", "--in", "/a", "--cpus", "0") ->
+        "--cpus must be a positive int, got '0'",
+      Seq("--inventory", "true", "--in", "/a", "--out", "/a") ->
+        "--out must differ from --in (originals are kept)",
+      // --set-level / --set-repaired-at
+      Seq("--set-level", "1", "--in", "/a", "--out", "/b", "--table", "t") ->
+        s"$surgery--table does not apply",
+      Seq("--set-repaired-at", "5", "--in", "/a", "--out", "/b", "--sink",
+        "sstable", "--merge", "lww") -> s"$surgery--merge/--sink do not apply",
+      Seq("--set-level", "1", "--in", "/a", "--out", "/b", "--activity",
+        "/p") -> s"$surgery--activity does not apply",
+      Seq("--set-level", "-1", "--in", "/a", "--out", "/b") ->
+        "--set-level must be a non-negative int, got '-1'",
+      Seq("--set-level", "x", "--set-repaired-at", "-5") ->
+        "--set-level must be a non-negative int, got 'x'",
+      Seq("--set-repaired-at", "-5", "--in", "/a", "--out", "/b") ->
+        "--set-repaired-at must be epoch millis >= 0, got '-5'",
+      Seq("--set-level", "0", "--set-repaired-at", "soon") ->
+        "--set-repaired-at must be epoch millis >= 0, got 'soon'",
+      Seq("--set-level", "1", "--out", "/b") -> noIn,
+      Seq("--set-level", "1", "--in", "/a") ->
+        "--out <dir> is required (surgery keeps originals)",
+      Seq("--set-level", "1", "--in", "/a", "--out", "/b", "--cpus", "x") ->
+        "--cpus must be a positive int, got 'x'",
+      // --summary-budget
+      Seq("--summary-budget", "10", "--in", "/a", "--out", "/b", "--table",
+        "t") -> s"$budget--table does not apply",
+      Seq("--summary-budget", "10", "--in", "/a", "--out", "/b", "--table",
+        "t", "--format", "sstable") -> s"$budget--format/--table do not apply",
+      Seq("--summary-budget", "0", "--in", "/a", "--out", "/b") ->
+        "--summary-budget must be a positive mark count, got '0'",
+      Seq("--summary-budget", "many") ->
+        "--summary-budget must be a positive mark count, got 'many'",
+      Seq("--summary-budget", "10", "--out", "/b") -> noIn,
+      Seq("--summary-budget", "10", "--in", "/a", "--activity", "/p") ->
+        "--out <dir> is required (redistribution keeps originals)",
+      Seq("--summary-budget", "10", "--in", "/a", "--out", "/b", "--cpus",
+        "-2") -> "--cpus must be a positive int, got '-2'",
+      // --track-activity
+      Seq("--track-activity", "/p", "--in", "/a", "--out", "/b") ->
+        s"$track--out does not apply",
+      Seq("--track-activity", "/p", "--in", "/a", "--out", "/b", "--table",
+        "t") -> s"$track--out/--table do not apply",
+      Seq("--track-activity", "/p", "--in", "/a", "--activity", "/q") ->
+        s"$track--activity does not apply",
+      Seq("--track-activity", "/p", "--cql", "CREATE TABLE t (k text " +
+        "PRIMARY KEY)") -> noIn,
+      Seq("--track-activity", "/p", "--in", "/a", "--cpus", "none") ->
+        "--cpus must be a positive int, got 'none'",
+      // --activity and --stats outside their modes
+      Seq("--in", "/a", "--out", "/b", "--table", "t", "--activity", "/p") ->
+        "--activity applies to --summary-budget only",
+      Seq("--in", "/a", "--out", "/b", "--table", "t", "--stats", "true") ->
+        "--stats applies to --inventory only",
+      Seq("--set-level", "1", "--in", "/a", "--out", "/b", "--stats",
+        "true") -> "--stats applies to --inventory only",
+      Seq("--inventory", "false", "--in", "/a", "--stats", "true") ->
+        "--stats applies to --inventory only"
+    ).foreach { case (argv, want) =>
+      assert(RemoverCli.parse(argv.toArray) === Left(want), argv.mkString(" "))
+    }
+    Seq(
+      Seq("--inventory", "true", "--in", "/a", "--stats", "true", "--out",
+        "/o", "--cpus", "2") -> RemoverCli.CliArgs("/a", "/o", table = "",
+        cpus = 2, inventory = true, stats = true),
+      Seq("--set-level", "2", "--set-repaired-at", "7", "--in", "/a", "--out",
+        "/b", "--cpus", "3") -> RemoverCli.CliArgs("/a", "/b", table = "",
+        cpus = 3, setLevel = Some(2), setRepairedAt = Some(7L)),
+      Seq("--set-repaired-at", "0", "--in", "/a", "--out", "/b") ->
+        RemoverCli.CliArgs("/a", "/b", table = "", setRepairedAt = Some(0L)),
+      Seq("--summary-budget", "10", "--in", "/a", "--out", "/b",
+        "--activity", "/p") -> RemoverCli.CliArgs("/a", "/b", table = "",
+        summaryBudget = Some(10L), activity = Some("/p")),
+      Seq("--track-activity", "/p", "--in", "/a", "--cql", "c", "--cpus",
+        "5") -> RemoverCli.CliArgs("/a", "", table = "", cpus = 5,
+        cqlText = Some("c"), trackActivityOut = Some("/p"))
+    ).foreach { case (argv, want) =>
+      assert(RemoverCli.parse(argv.toArray) === Right(want), argv.mkString(" "))
+    }
+  }
+
   test("RemoverCli.parse refuses an output over its input: ./x is x, and a sink directory over --in") {
     val differ = Left("--out must differ from --in (originals are kept)")
     def parse(args: String*) = RemoverCli.parse(args.toArray)

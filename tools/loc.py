@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Lines of main source per package and in total.
 
-Usage: python3 tools/loc.py [src_dir]   (default: src/main of this repo)
+Usage: python3 tools/loc.py [--files] [src_dir]
+       (default src_dir: src/main of this repo)
 
 For every package directory under src_dir it prints the number of
 files, the physical lines, and the code lines: lines holding at least
-one character outside a comment. Blank lines, `//` comments and
+one character outside a comment. With --files it prints the same
+figures per file instead, by path under src_dir. Blank lines, `//` comments and
 `/* ... */` blocks (scaladoc included, nesting as Scala nests them)
 are not code; a line with code before or after a comment is.
 """
@@ -68,28 +70,36 @@ def code_lines(text):
 
 
 def main(argv):
+    args = argv[1:]
+    per_file = "--files" in args
+    args = [a for a in args if a != "--files"]
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    root = argv[1] if len(argv) > 1 else os.path.join(here, "src", "main")
-    per_pkg = {}
+    root = args[0] if args else os.path.join(here, "src", "main")
+    rows = {}
     for dirpath, _, files in os.walk(root):
         for f in files:
             if not f.endswith((".scala", ".java")):
                 continue
-            rel = os.path.relpath(dirpath, root).split(os.sep)
-            if rel and rel[0] in ("scala", "java"):
-                rel = rel[1:]
-            pkg = ".".join(p for p in rel if p not in ("", ".")) or "<root>"
-            with open(os.path.join(dirpath, f), encoding="utf-8") as fh:
+            path = os.path.join(dirpath, f)
+            if per_file:
+                key = os.path.relpath(path, root)
+            else:
+                rel = os.path.relpath(dirpath, root).split(os.sep)
+                if rel and rel[0] in ("scala", "java"):
+                    rel = rel[1:]
+                key = ".".join(p for p in rel if p not in ("", ".")) or "<root>"
+            with open(path, encoding="utf-8") as fh:
                 text = fh.read()
             physical = text.count("\n") + (not text.endswith("\n") and text != "")
-            n, lines, code = per_pkg.get(pkg, (0, 0, 0))
-            per_pkg[pkg] = (n + 1, lines + physical, code + code_lines(text))
-    width = max([len(p) for p in per_pkg] + [len("package")])
-    print(f"{'package':<{width}} {'files':>6} {'lines':>8} {'code':>8}")
-    for pkg in sorted(per_pkg):
-        n, lines, code = per_pkg[pkg]
-        print(f"{pkg:<{width}} {n:>6} {lines:>8} {code:>8}")
-    total = [sum(v[i] for v in per_pkg.values()) for i in range(3)]
+            n, lines, code = rows.get(key, (0, 0, 0))
+            rows[key] = (n + 1, lines + physical, code + code_lines(text))
+    label = "file" if per_file else "package"
+    width = max([len(k) for k in rows] + [len(label)])
+    print(f"{label:<{width}} {'files':>6} {'lines':>8} {'code':>8}")
+    for key in sorted(rows):
+        n, lines, code = rows[key]
+        print(f"{key:<{width}} {n:>6} {lines:>8} {code:>8}")
+    total = [sum(v[i] for v in rows.values()) for i in range(3)]
     print(f"{'total':<{width}} {total[0]:>6} {total[1]:>8} {total[2]:>8}")
 
 
