@@ -362,15 +362,6 @@ object SSTableBinaryV2 {
     override def stop(): Unit = ()
   }
 
-  /** Listing order for SSTable paths: by directory, then NUMERIC
-    * generation, then name. Plain lexicographic order breaks the
-    * streaming source's "new files land strictly after seen names"
-    * contract the moment a directory reaches generation 10
-    * (`nb-10-big-Data.db` sorts before `nb-2-big-Data.db` as strings),
-    * which would shift positional offsets — re-reading processed files
-    * and skipping the new one. Generation-numeric order restores it:
-    * a compaction feed's generations are monotonically increasing, so
-    * every new file sorts strictly after all seen ones. */
   /** Format-version token of an SSTable filename. New-style (2.2+)
     * names are `<version>-<gen>-big-<Component>`; OLD-style (≤2.1,
     * the "ka"/"jb" eras) are `<ks>-<cf>-<version>-<gen>-<Component>`
@@ -391,32 +382,62 @@ object SSTableBinaryV2 {
   private[graft] def isOldEra(version: String): Boolean =
     version.nonEmpty && version.charAt(0) < 'm'
 
+  /** A format-version token as Cassandra writes one: two lowercase
+    * letters. */
+  private val VersionToken = "[a-z]{2}".r
+
+  /** Refuses a `*-Data.db` whose name is not a Cassandra data-file
+    * name, naming the path and the two shapes Cassandra writes. A
+    * visible `copy-of-nb-1-big-Data.db` would otherwise read as a
+    * `copy`-era 2.x file. */
+  private def requireDataFileName(path: String): Unit =
+    require(VersionToken.matches(versionOf(path.split('/').last)),
+      s"$path: not an SSTable data file " +
+      "name. Cassandra names one <version>-<generation>-big-Data.db " +
+      "(2.2 and later, e.g. nb-1-big-Data.db) or " +
+      "<keyspace>-<table>-<version>-<generation>-Data.db (2.1 and " +
+      "earlier, e.g. ks-t-ka-1-Data.db), where <version> is two " +
+      "lowercase letters")
+
+  private val Digits = "\\d+".r
+
+  /** Listing order for SSTable paths: by directory, then NUMERIC
+    * generation, then name. Plain lexicographic order breaks the
+    * streaming source's "new files land strictly after seen names"
+    * contract the moment a directory reaches generation 10
+    * (`nb-10-big-Data.db` sorts before `nb-2-big-Data.db` as strings),
+    * which would shift positional offsets — re-reading processed files
+    * and skipping the new one. Generation-numeric order restores it:
+    * a compaction feed's generations are monotonically increasing, so
+    * every new file sorts strictly after all seen ones. */
   private[graft] def generationSortKey(path: String): (String, Long, String) = {
     val slash = path.lastIndexOf('/')
     val dir = if (slash < 0) "" else path.substring(0, slash)
     val name = path.substring(slash + 1)
-    val gen = "\\d+".r.findFirstIn(name).map(_.toLong).getOrElse(Long.MaxValue)
+    val gen = Digits.findFirstIn(name).map(_.toLong).getOrElse(Long.MaxValue)
     (dir, gen, name)
   }
 
   /** Every lake file under `root` with its length, from ONE recursive
-    * walk: [[listLake]] and the sidecar tools' [[lakeGenerations]] both
-    * list through it. A name starting with `.` or `_` is not a lake file
-    * (Spark's file-source rule, the dump connector's too): checksum side
-    * files, hidden copies and `_SUCCESS` markers are never generations
-    * or components. */
-  private def walkLake(root: String,
+    * walk: [[listLake]], the sidecar tools' [[lakeGenerations]] and the
+    * sstabledump connector all list through it. A name starting with
+    * `.` or `_` is not a lake file (Spark's file-source rule): checksum
+    * side files, hidden copies and `_SUCCESS` markers are never
+    * generations, components or dumps. The walk is `listStatus` per
+    * directory, depth first. `listFiles` would build located statuses,
+    * whose permissions Hadoop's local filesystem reads by forking a
+    * process per file when the native library is absent. */
+  private[graft] def walkLake(root: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] = {
     val fs = FileSystem.get(java.net.URI.create(root), conf)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val it = fs.listFiles(new HPath(root), true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith(".") && !name.startsWith("_"))
-        files += ((f.getPath.toString, f.getLen))
-    }
-    files.toSeq
+    def walk(p: HPath): Seq[(String, Long)] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        val name = f.getPath.getName
+        if (f.isDirectory) walk(f.getPath)
+        else if (name.startsWith(".") || name.startsWith("_")) Nil
+        else Seq(f.getPath.toString -> f.getLen)
+      }
+    walk(new HPath(root))
   }
 
   /** The data files AND their sibling component sets WITH lengths, from
@@ -427,13 +448,15 @@ object SSTableBinaryV2 {
     * The scan plans its partitions from this listing and
     * [[dataSourceIdentities]] renders the sink's source set from it, so
     * the two cannot drift apart; the sidecar tools group the same walk
-    * ([[lakeGenerations]]). */
+    * ([[lakeGenerations]]). Both refuse a `*-Data.db` that is not named
+    * the way Cassandra names one ([[requireDataFileName]]). */
   private[sources] def listLake(root: String,
       conf: org.apache.hadoop.conf.Configuration)
       : Seq[(String, SiblingInfo)] = {
     val seen = walkLake(root, conf).toMap
     seen.toSeq.filter(_._1.endsWith("-Data.db"))
       .sortBy(f => generationSortKey(f._1)).map { case (p, len) =>
+        requireDataFileName(p)
         val base = p.stripSuffix("-Data.db")
         (p, SiblingInfo(len,
           hasIndex = seen.contains(base + "-Index.db"),
@@ -456,6 +479,7 @@ object SSTableBinaryV2 {
       p.stripSuffix("-" + p.split('/').last.split('-').last)
     }.collect {
       case (base, comps) if comps.exists(_.endsWith("-Data.db")) =>
+        requireDataFileName(base + "-Data.db")
         (base + "-Data.db", comps.sorted)
     }.toSeq.sortBy(_._1)
 
@@ -3261,7 +3285,9 @@ object SSTableBinaryV2 {
     * tombstones merged per column, the static row first and every
     * other unfiltered in clustering-comparator order, partitions in
     * token order; stats, Data/Index and the other components follow
-    * from that one order. */
+    * from that one order. Each component is written whole through
+    * [[OutputFiles]]: on the local filesystem that is `java.nio`, with
+    * Hadoop's file and directory modes and no `.crc` side file. */
   private def writeGeneration(target: SinkTarget,
       conf: org.apache.hadoop.conf.Configuration, src: String, gen: Int,
       parts: Seq[BigFormat.PartitionData]): Unit = {
@@ -3384,18 +3410,9 @@ object SSTableBinaryV2 {
     val header = BigFormat.Header(minTs, minLdt, minTtl, keyType = keyType,
       clusteringTypes = clTypes, staticColumns = statics,
       regularColumns = regulars)
-    // the local FS's raw layer (the cached checksummed instance stays
-    // as it is): Cassandra components only, no `.crc` side files, and
-    // each byte is CRC'd once, by the components that carry checksums.
-    // Readers still open through the checksummed instance, so a stale
-    // `.crc` an earlier checksummed writer left beside a component is
-    // deleted before the component is rewritten: it would fail the read
-    val (fs, checksums) =
-      FileSystem.get(java.net.URI.create(target.dir), conf) match {
-        case local: org.apache.hadoop.fs.LocalFileSystem =>
-          (local.getRawFileSystem, Some(local))
-        case other => (other, None)
-      }
+    // no `.crc` side files: each byte is CRC'd once, by the components
+    // that carry checksums
+    val fs = FileSystem.get(java.net.URI.create(target.dir), conf)
     // the FULL loadable component set — primary index, bloom filter,
     // sampled summary, digest and TOC alongside Data/Statistics (the
     // reference's bulk-load-back contract,
@@ -3406,10 +3423,8 @@ object SSTableBinaryV2 {
       compression = target.compression,
       stats = Some(collectStats(sorted, clTypes)))
       .foreach { case (comp, bytes) =>
-        val path = new HPath(s"${target.dir}/nb-$gen-big-$comp")
-        checksums.foreach(local => fs.delete(local.getChecksumFile(path), false))
-        val os = fs.create(path, true)
-        try os.write(bytes) finally os.close()
+        OutputFiles.write(fs, new HPath(s"${target.dir}/nb-$gen-big-$comp"),
+          bytes)
       }
   }
 

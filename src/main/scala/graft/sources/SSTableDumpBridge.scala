@@ -543,10 +543,9 @@ object SSTableDumpBridge {
       .flatMapSortedGroups(col("partition_key")) { (sst, it) =>
         val fs = org.apache.hadoop.fs.FileSystem.get(
           java.net.URI.create(outStr), hconf.value.value)
-        val os = fs.create(
-          new org.apache.hadoop.fs.Path(s"$outStr/$sst"), true)
         var n = 0L
-        try {
+        OutputFiles.stream(fs,
+            new org.apache.hadoop.fs.Path(s"$outStr/$sst")) { os =>
           os.write('[')
           it.foreach { case (_, _, pj) =>
             if (n > 0) os.write(',')
@@ -554,7 +553,7 @@ object SSTableDumpBridge {
             n += 1
           }
           os.write(']')
-        } finally os.close()
+        }
         Iterator.single((sst, n))
       }
       .collect()

@@ -5,7 +5,7 @@ import java.util.{Map => JMap}
 import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException,
   JsonToken}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -120,20 +120,9 @@ object SSTableDumpV2 {
       * it past the target. Path order keeps partition ids
       * deterministic. */
     override def planInputPartitions(): Array[InputPartition] = {
-      val fs = FileSystem.get(java.net.URI.create(path), hconf.value)
-      // listStatus, not listFiles: the located statuses listFiles builds
-      // read each file's permissions, which the local filesystem does by
-      // forking a process per file
-      def walk(p: HPath): Seq[FileStatus] =
-        fs.listStatus(p).toSeq.flatMap(f =>
-          if (f.isDirectory) walk(f.getPath) else Seq(f))
-      val files = walk(new HPath(path)).collect {
-        // same data-file filter as Spark's file sources: metadata
-        // (_SUCCESS, _committed) and hidden files are not dumps
-        case f if !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".") =>
-          f.getPath.toString -> f.getLen
-      }
+      // the binary lake's walk: same hidden-file rule as Spark's file
+      // sources (_SUCCESS, _committed and hidden files are not dumps)
+      val files = SSTableBinaryV2.walkLake(path, hconf.value)
       val total = files.map(_._2 + openCost).sum
       val target = math.min(maxBytes, math.max(openCost, total / minParts))
       // (files, cost) per task: a file joins the last task unless it

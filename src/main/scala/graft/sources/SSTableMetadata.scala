@@ -1088,7 +1088,9 @@ object SSTableMetadata {
     * byte-verbatim except `replaced`, a component path and the bytes
     * written in its place. The rest stream through a 1 MiB buffer: a
     * multi-GB Data.db must neither materialize on-heap nor trip
-    * [[Generation.readAll]]'s sidecar bound. */
+    * [[Generation.readAll]]'s sidecar bound. Every copy is written
+    * through [[OutputFiles]], so the output directory holds the
+    * components only, with no `.crc` side files. */
   private def copyGeneration(g: Generation, outDir: String,
       replaced: Option[(String, Array[Byte])]): Unit = {
     val out = outDir.stripSuffix("/")
@@ -1096,21 +1098,16 @@ object SSTableMetadata {
     g.components.foreach { src =>
       val dst = new HPath(s"$out/${src.split('/').last}")
       replaced.filter(_._1 == src) match {
-        case Some((_, bytes)) =>
-          val os = outFs.create(dst, true)
-          try os.write(bytes) finally os.close()
+        case Some((_, bytes)) => OutputFiles.write(outFs, dst, bytes)
         case None =>
           val in = g.fs.open(new HPath(src))
-          try {
-            val os = outFs.create(dst, true)
-            try {
-              val buf = new Array[Byte](1024 * 1024)
-              var n = in.read(buf)
-              while (n >= 0) {
-                if (n > 0) os.write(buf, 0, n)
-                n = in.read(buf)
-              }
-            } finally os.close()
+          try OutputFiles.stream(outFs, dst) { os =>
+            val buf = new Array[Byte](1024 * 1024)
+            var n = in.read(buf)
+            while (n >= 0) {
+              if (n > 0) os.write(buf, 0, n)
+              n = in.read(buf)
+            }
           } finally in.close()
       }
     }

@@ -2552,6 +2552,172 @@ class SSTableBinarySpec extends SparkSpec {
     } finally Scratch.delete(in)
   }
 
+  test("a remover file-route job starts no OS process") {
+    import scala.jdk.CollectionConverters._
+    val in = indexedFixture()
+    val out = Scratch.dir("graft-no-fork-")
+    // the class's own set-up probes (`setsid`) run once per JVM, at its
+    // initialization: finish it before the recording starts
+    Class.forName("org.apache.hadoop.util.Shell")
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      try {
+        RemoverCli.run(spark, sinkArgs(in.toString, s"$out/lz4",
+          "--compress", "lz4"))
+        RemoverCli.run(spark, sinkArgs(in.toString, s"$out/merged",
+          "--merge", "lww", "--out-generations", "2"))
+      } finally rec.stop()
+      val dump = out.resolve("run.jfr")
+      rec.dump(dump)
+      val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala
+          .exists(_.getMethod.getType.getName ==
+            "org.apache.hadoop.util.Shell")))
+      assert(forks.map(_.getString("command")) === Nil)
+    } finally {
+      rec.close(); Scratch.delete(out); Scratch.delete(in)
+    }
+  }
+
+  test("walkLake lists exactly what a recursive listFiles walk lists") {
+    val root = Scratch.dir("graft-walk-")
+    try {
+      def put(rel: String): Unit = {
+        val f = root.resolve(rel)
+        java.nio.file.Files.createDirectories(f.getParent)
+        java.nio.file.Files.write(f, rel.getBytes("UTF-8"))
+      }
+      Seq("ks1/t1/nb-1-big-Data.db", "ks1/t1/nb-1-big-Index.db",
+        "ks1/t1/.nb-1-big-Data.db.crc", "ks1/t1/_SUCCESS",
+        "ks1/t2/nb-2-big-Data.db", "ks1/t2/deep/nb-3-big-Data.db",
+        "ks2/t1/ks2-t1-ka-4-Data.db", "ks2/.hidden/nb-5-big-Data.db",
+        "ks2/_temporary/nb-6-big-Data.db", "README.txt").foreach(put)
+      java.nio.file.Files.createDirectories(root.resolve("ks3/empty"))
+      val conf = spark.sessionState.newHadoopConf()
+      // the former walk, kept here as the oracle
+      def listFilesWalk(at: String): Seq[(String, Long)] = {
+        val fs = org.apache.hadoop.fs.FileSystem.get(
+          java.net.URI.create(at), conf)
+        val files = Seq.newBuilder[(String, Long)]
+        val it = fs.listFiles(new org.apache.hadoop.fs.Path(at), true)
+        while (it.hasNext) {
+          val f = it.next()
+          val name = f.getPath.getName
+          if (f.isFile && !name.startsWith(".") && !name.startsWith("_"))
+            files += ((f.getPath.toString, f.getLen))
+        }
+        files.result()
+      }
+      Seq(root.toString, root.toUri.toString,
+        root.resolve("ks1").toString,
+        root.resolve("ks1/t1/nb-1-big-Data.db").toString,
+        root.resolve("ks3").toString).foreach { at =>
+        val expected = listFilesWalk(at)
+        assert(SSTableBinaryV2.walkLake(at, conf) === expected, at)
+      }
+      assert(listFilesWalk(root.toString).size === 8)
+    } finally Scratch.delete(root)
+  }
+
+  test("output files carry Hadoop's modes: components rw-r--r--, created directories rwxr-xr-x") {
+    import scala.jdk.CollectionConverters._
+    val in = indexedFixture()
+    val out = Scratch.dir("graft-modes-")
+    def mode(p: java.nio.file.Path) = java.nio.file.attribute
+      .PosixFilePermissions.toString(
+        java.nio.file.Files.getPosixFilePermissions(p))
+    // every file and directory from `top` down, by mode
+    def modes(top: java.nio.file.Path): Map[String, Set[String]] = {
+      val walk = java.nio.file.Files.walk(top)
+      try walk.iterator().asScala.toSeq.groupBy(p =>
+          if (java.nio.file.Files.isDirectory(p)) "dir" else "file")
+        .map { case (k, ps) => k -> ps.map(mode).toSet }
+      finally walk.close()
+    }
+    try {
+      val sstable = out.resolve("sstable")
+      RemoverCli.run(spark, sinkArgs(in.toString, sstable.toString,
+        "--compress", "lz4"))
+      val dump = out.resolve("dump")
+      RemoverCli.run(spark, RemoverCli.parse(Array("--in", in.toString,
+        "--out", dump.toString, "--table", "documents", "--format",
+        "sstable", "--sink", "sstabledump"))
+        .fold(e => fail(s"parse failed: $e"), identity))
+      val copy = out.resolve("copy/level")
+      graft.sources.SSTableMetadata.rewriteMetadata(spark,
+        in.resolve("graft/documents").toString, copy.toString,
+        Some(1), None)
+      Seq(sstable, dump, out.resolve("copy")).foreach { top =>
+        assert(modes(top) === Map("dir" -> Set("rwxr-xr-x"),
+          "file" -> Set("rw-r--r--")), top)
+      }
+    } finally {
+      Scratch.delete(out); Scratch.delete(in)
+    }
+  }
+
+  test("the sidecar copy and the sstabledump sink leave no .crc side files") {
+    import scala.jdk.CollectionConverters._
+    val in = indexedFixture()
+    val out = Scratch.dir("graft-no-crc-")
+    def names(dir: java.nio.file.Path): Seq[String] = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(_.getFileName.toString).toSeq.sorted
+      finally walk.close()
+    }
+    try {
+      val docs = in.resolve("graft/documents")
+      val copy = out.resolve("copy")
+      assert(graft.sources.SSTableMetadata.rewriteMetadata(spark,
+        docs.toString, copy.toString, Some(1), None) > 0)
+      assert(names(copy) === names(docs))
+      val dump = out.resolve("dump")
+      RemoverCli.run(spark, RemoverCli.parse(Array("--in", in.toString,
+        "--out", dump.toString, "--table", "documents", "--format",
+        "sstable", "--sink", "sstabledump"))
+        .fold(e => fail(s"parse failed: $e"), identity))
+      assert(names(dump).nonEmpty)
+      assert(names(dump).filter(_.endsWith(".crc")) === Nil)
+    } finally {
+      Scratch.delete(out); Scratch.delete(in)
+    }
+  }
+
+  test("an oddly named *-Data.db fails by name on the scan, the file route and the sidecar tools") {
+    val in = indexedFixture()
+    val out = Scratch.dir("graft-odd-name-")
+    try {
+      val docs = in.resolve("graft/documents")
+      val odd = docs.resolve("copy-of-nb-1-big-Data.db")
+      java.nio.file.Files.copy(docs.resolve("nb-1-big-Data.db"), odd)
+      def refusal(run: => Any): String = {
+        val e = intercept[Exception](run)
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(_.getMessage).filter(_ != null).mkString(" | ")
+      }
+      Seq(
+        refusal(SSTableBinaryV2.readBinary(spark, in.toString).count()),
+        refusal(RemoverCli.run(spark, sinkArgs(in.toString, s"$out/o"))),
+        // with a declared table the copy would otherwise decode as 2.x
+        refusal(RemoverCli.run(spark, sinkArgs(in.toString, s"$out/c",
+          "--cql", SSTableBinaryV2.Cql2x))),
+        refusal(graft.sources.SSTableMetadata.rewriteMetadata(spark,
+          docs.toString, s"$out/copy", Some(1), None))).foreach { msg =>
+        assert(msg.contains(s"$odd: not an SSTable data file name"), msg)
+        assert(msg.contains("<version>-<generation>-big-Data.db"), msg)
+        assert(msg.contains(
+          "<keyspace>-<table>-<version>-<generation>-Data.db"), msg)
+        assert(!msg.contains("declare the table"), msg)
+      }
+    } finally {
+      Scratch.delete(out); Scratch.delete(in)
+    }
+  }
+
   test("--verify on every file-route shape checks every input's digest; a corrupt one fails by name") {
     import scala.jdk.CollectionConverters._
     val in = indexedFixture()
